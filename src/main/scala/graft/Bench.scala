@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 import scala.util.control.NonFatal
 object Bench {
@@ -29,23 +29,16 @@ object Bench {
     * One untimed warm-up run absorbs codegen compilation.
     */
   private def calibrate(spark: SparkSession): Seq[Double] =
-    (0 to CalibReps).map { rep =>
-      val t0 = System.nanoTime()
+    (0 to CalibReps).map { _ =>
       // hash mod 2^20 keeps the ANSI-mode sum far from int64 overflow
       // (2^25 rows × 2^20 max ≪ 2^63); a raw xxhash64 sum overflowed
       // and killed the whole bench on first ship
-      // NonFatal ONLY: a fatal error (OOM, linkage) must kill the
-      // bench loudly, not masquerade as one slow calibration rep
-      val ok = try {
+      timeRun(spark)(
         spark.range(0L, CalibRows, 1L, 16)
           .select((xxhash64(col("id")) % 1048576).as("h"),
             (col("id") % 256).as("g"))
           .groupBy(col("g")).agg(sum(col("h")).as("s"))
-          .agg(sum(col("s")), count(lit(1)))
-          .queryExecution.toRdd.count()
-        true
-      } catch { case NonFatal(_) => false }
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+          .agg(sum(col("s")), count(lit(1)))).getOrElse(-1.0)
     }.drop(1) // rep 0 is the untimed-in-spirit codegen warm-up
 
   /** min/median over the VALID samples only — a failed rep's -1.0
@@ -58,57 +51,54 @@ object Bench {
     if (so.isEmpty) (-1.0, -1.0) else (so.head, so(so.size / 2))
   }
 
+  /** The timing primitive Bench and ScaleSoak share: seconds for one
+    * build + full materialization of `df`, or the failure. toRdd.count()
+    * computes every InternalRow with all its columns — a bare
+    * df.count() lets Catalyst prune the aggregate and projection
+    * expressions the query exists to measure. NonFatal only: a fatal
+    * error (OOM, linkage) must kill the run loudly, not pass for one
+    * failed query. The cache is cleared after each run (outside the
+    * timed region) so a query that caches (dd_minhash_lsh,
+    * dd_simhash_pairs) cannot leak it into the next one's memory
+    * budget or timing.
+    */
+  def timeRun(spark: SparkSession)(df: => DataFrame): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    val r = try { df.queryExecution.toRdd.count(); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case NonFatal(e) => Left(e) }
+    spark.catalog.clearCache()
+    r
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same timestamp semantics as Verify: events' NTZ→LTZ cast must
-      // resolve against UTC, not the host TZ, for stable timings/plans
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // dev-only experiment knob (the driver never sets it): extra confs
-    // as "k=v;k=v" — used by the SCALE.md skew measurements to toggle
-    // AQE skew handling / broadcast thresholds without forking the
-    // harness, so A/B numbers come from the IDENTICAL timing loop
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").filter(_.contains("=")))
-      .getOrElse(Array.empty)
-      .foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
+    // a failed run must NOT enter the samples (a fast crash would
+    // masquerade as a speedup); its cause goes to stderr once per name
+    val failed = scala.collection.mutable.Set.empty[String]
+    def run(name: String)(df: => DataFrame): Option[Double] =
+      timeRun(spark)(df) match {
+        case Right(dt) => Some(dt)
+        case Left(e) =>
+          if (failed.add(name)) System.err.println(s"[bench] $name failed: $e")
+          None
       }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen/shuffle paths and the bench SF's parquet
     // footers so the first timed query doesn't absorb one-time setup.
     // Each step is isolated: one failure must not skip the rest.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    run("warmup_entry")(SparkEntry.entry(spark))
     Seq("orders", "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      run(s"warmup_$t")(spark.read.parquet(s"$sfDir/$t.parquet"))
     }
     // events needs the nanos conf, which its reader sets
-    try graft.streaming.StreamingStats.events(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    run("warmup_events")(graft.streaming.StreamingStats.events(spark, sfDir))
     // dev-only: SPARK_GRAFT_ONLY=a,b,c restricts the timed set for
     // single-query iteration; the driver never sets it
     val raw = sys.env.get("SPARK_GRAFT_ONLY") match {
       case Some(o) => SparkEntry.queries.keys.toSeq.filter(o.split(",").toSet)
       case None => SparkEntry.queries.keys.toSeq
     }
-    // Deterministic sweep order, parity tier FIRST (round-16 verdict:
-    // the graded parity_sec must not ride at the mercy of wherever Map
-    // key order drops q01–q15 inside a 240+-query sweep — early
-    // placement keeps the baseline-comparable numbers clear of any
-    // late-session JVM pressure, and the A/B knob below measured the
-    // orders against each other; SCALE.md records the result).
-    // Dev-only A/B knob (driver never sets it): parity_last inverts
-    // the order so the session-pressure hypothesis is testable with
-    // the IDENTICAL loop.
-    val parityLast = sys.env.get("SPARK_GRAFT_TIER_ORDER")
-      .contains("parity_last")
     // decomposition: the reference's own query surface (baseline-
     // comparable) vs the extension tier it has no counterpart for.
     // NOT k.startsWith("q"): that would misfile qf_decide/qf_redact.
@@ -118,8 +108,13 @@ object Bench {
     val isParity = (k: String) =>
       (k.matches("q\\d\\d_.*") && k != "q16_thread_depth") ||
         k == "stats_daily" || k == "transform_posts"
+    // Deterministic sweep order, parity tier FIRST (round-16 verdict):
+    // the baseline-comparable parity_sec must not ride at the mercy of
+    // wherever Map key order drops q01–q15 inside a 240+-query sweep.
+    // The parity_last A/B that confirmed this order is SCALE.md's
+    // "Round-17: the bench box-state instrument" section.
     val (pNames, xNames) = raw.sorted.partition(isParity)
-    val names = if (parityLast) xNames ++ pNames else pNames ++ xNames
+    val names = pNames ++ xNames
     // Contention telemetry (round-8 verdict: a contended artifact must
     // be self-identifying): host 1/5/15-min load captured before and
     // after the timed loop, plus per-query min/median/max across the
@@ -134,24 +129,9 @@ object Bench {
     val calibStart = calibrate(spark)
     val samples = scala.collection.mutable
       .Map.empty[String, List[Double]].withDefaultValue(Nil)
-    for (_ <- 1 to Iters; name <- names) {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      // toRdd.count() materializes every InternalRow with all columns
-      // computed — a bare df.count() lets Catalyst prune the aggregate
-      // and projection expressions the query exists to measure.
-      val ok =
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // a failed iteration must NOT enter the samples — a fast crash
-      // would masquerade as a speedup; a never-succeeding query
-      // reports -1
-      if (ok) samples(name) = dt :: samples(name)
-      // queries that cache (dd_minhash_lsh, dd_simhash_pairs) must not
-      // leak their cache into the next query's memory budget or timing
-      spark.catalog.clearCache()
-    }
+    for (_ <- 1 to Iters; name <- names)
+      run(name)(SparkEntry.queries(name)(spark, sfDir))
+        .foreach(dt => samples(name) = dt :: samples(name))
     val calibEnd = calibrate(spark)
     val loadAfter = loadavg()
     val (csMin, csMed) = minMed(calibStart)
@@ -196,8 +176,7 @@ object Bench {
       s"\"" + k + "\":" + nv
     }.mkString("{", ",", "}")
     val calib = s""""calib_start":{"min":$csMin,"med":$csMed},"calib_end":{"min":$ceMin,"med":$ceMed},"calib_anchor":$anchor,"calib_fails":$calibFails"""
-    val order = if (parityLast) "parity_last" else "parity_first"
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","parity_sec":$parity,"parity_sec_med":$parityMed,"ext_sec":${total - parity},"iters":$Iters,"order":"$order",$calib,"load_before":"$loadBefore","load_after":"$loadAfter","queries":$qs,"queries_norm":$qsNorm,"stats":$stats,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","parity_sec":$parity,"parity_sec_med":$parityMed,"ext_sec":${total - parity},"iters":$Iters,"order":"parity_first",$calib,"load_before":"$loadBefore","load_after":"$loadAfter","queries":$qs,"queries_norm":$qsNorm,"stats":$stats,"sf":"$sfDir"}"""
     println(full)
     // The one-line-with-per-query-map contract stands, but bounded log
     // tails truncated it two rounds running (BENCH_r06/r07 "parsed":
@@ -222,7 +201,7 @@ object Bench {
     }
     // Repeat the headline numbers on their own short FINAL line so any
     // tail capture parses them directly.
-    println(s"""{"metric":"summary","value":$total,"unit":"sec","parity_sec":$parity,"parity_sec_med":$parityMed,"ext_sec":${total - parity},"iters":$Iters,"n_queries":${results.size},"order":"$order",$calib,"load_before":"$loadBefore","load_after":"$loadAfter","sf":"$sfDir"}""")
+    println(s"""{"metric":"summary","value":$total,"unit":"sec","parity_sec":$parity,"parity_sec_med":$parityMed,"ext_sec":${total - parity},"iters":$Iters,"n_queries":${results.size},"order":"parity_first",$calib,"load_before":"$loadBefore","load_after":"$loadAfter","sf":"$sfDir"}""")
     spark.stop()
   }
 }

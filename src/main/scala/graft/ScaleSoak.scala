@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Measured scaling exponents for the top-cost query tier — the
-  * SketchCrossover fixture-derivation methodology generalized to every
-  * table: the local[32] bench can time queries at one SF, but cannot by
+  * fixture derivation of SCALE.md's exact-vs-sketch crossover ("The
+  * crossover, measured") generalized to every table: the local[32] bench can time queries at one SF, but cannot by
   * itself say whether a plan's cost grows like m or like m² when the
   * data does — this main measures it.
   *
@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   *     every join still matches within a copy), values untouched.
   *
   * Per (query, multiplier): min of `iters` wall-clock runs of the full
-  * plan (toRdd.count — no result materialization on the driver). A
+  * plan through Bench's timing primitive ([[Bench.timeRun]]). A
   * query whose last measured time exceeds `cutoffSec` skips larger
   * multipliers WITH AN EXPLICIT skip line (no silent caps) — the
   * superlinear finding is already made by then.
@@ -61,7 +61,8 @@ object ScaleSoak {
     * measured, not argued. Each takes the multiplier m and picks its
     * granularity from it; the `_fixed`/shipped twins at the same probe
     * dial are the comparators. Timing-only: the recall side of each
-    * dial is measured by ClusterProbeSweep / dd_lsh_tuning — the
+    * dial is measured by dd_lsh_tuning and SCALE.md's cluster-grain
+    * probe dial ("Round-11 additions") — the
     * shipped pinned queries remain the oracle-hashed exactness proof.
     */
   val AdaptiveQueries: Map[String, (SparkSession, String, Int) => DataFrame] =
@@ -214,24 +215,7 @@ object ScaleSoak {
     val queries = if (args.length > 3) args(3).split(",").map(_.trim).toSeq
       else SoakQueries
     val cutoffSec = 150.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "4g")
-    // dev-only experiment knob (same contract as Bench's): extra confs
-    // as "k=v;k=v" so mechanism A/Bs (AQE on/off etc.) run through the
-    // IDENTICAL timing loop
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").filter(_.contains("=")))
-      .getOrElse(Array.empty)
-      .foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(extra = Seq("spark.driver.maxResultSize" -> "4g"))
 
     val caesarFrom = ('a' to 'z').mkString + ('A' to 'Z').mkString
     def rot(s: String, k: Int): String = {
@@ -304,12 +288,17 @@ object ScaleSoak {
       dir
     }
 
-    def time(fn: => DataFrame): Double =
-      (1 to iters).map { _ =>
-        val t0 = System.nanoTime()
-        fn.queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+    // a failed run is excluded, so a crash cannot pass for a fast run;
+    // its class goes into the JSON stream and its cause to stderr
+    def run(q: String, at: String)(fn: => DataFrame): Option[Double] =
+      Bench.timeRun(spark)(fn) match {
+        case Right(t) => Some(t)
+        case Left(e) =>
+          println(s"""{"metric":"scale_soak","query":"$q",$at,""" +
+            s""""err":"${e.getClass.getName}"}""")
+          System.err.println(s"[soak] $q failed: $e")
+          None
+      }
 
     def resolve(q: String, dir: String, m: Int): DataFrame =
       SparkEntry.queries.get(q).map(_(spark, dir))
@@ -319,12 +308,7 @@ object ScaleSoak {
       .empty[String, List[(Int, Double)]].withDefaultValue(Nil)
     // absorb session/codegen warm-up before the first timed run: one
     // untimed pass of every soaked query at the base SF
-    queries.foreach { q =>
-      try resolve(q, sfDir, 1).queryExecution.toRdd.count()
-      catch { case e: Exception =>
-        println(s"""{"metric":"scale_soak","query":"$q","warmup_err":""" +
-          s""""${e.getClass.getSimpleName}"}""") }
-    }
+    queries.foreach(q => run(q, "\"warmup\":true")(resolve(q, sfDir, 1)))
     mults.sorted.foreach { m =>
       val dir = derive(m)
       queries.foreach { q =>
@@ -334,10 +318,12 @@ object ScaleSoak {
             s""""skipped":true,"reason":"t(${last.get._1}x)=""" +
             f"${last.get._2}%.1f" + "s > cutoff\"}")
         } else {
-          val t = time(resolve(q, dir, m))
-          results(q) = (m, t) :: results(q)
-          println(s"""{"metric":"scale_soak","query":"$q","mult":$m,""" +
-            f""""sec":$t%.3f}""")
+          (1 to iters).flatMap(_ =>
+            run(q, s""""mult":$m""")(resolve(q, dir, m))).minOption.foreach { t =>
+            results(q) = (m, t) :: results(q)
+            println(s"""{"metric":"scale_soak","query":"$q","mult":$m,""" +
+              f""""sec":$t%.3f}""")
+          }
         }
       }
     }

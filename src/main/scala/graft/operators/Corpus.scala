@@ -1758,7 +1758,8 @@ ORDER BY t.split"""
   /** [[cpSplitLeakage]] on the bucket-capped pair stream — the shipped
     * form of [[cpSplitLeakageCfg]]: the train/eval leakage audit a
     * mega-bucket corpus can actually afford to run (the uncapped
-    * stream is the PairGuardSoak blowup). Reading discipline: a
+    * stream is the family-size blowup measured in SCALE.md's
+    * "Round-14: the pair-tier bucket guard"). Reading discipline: a
     * dropped mega-family no longer counts as leakage here — exact-hash
     * decontamination upstream owns byte-identical overlap, so the
     * capped audit reads strictly as NEAR-dup leakage.

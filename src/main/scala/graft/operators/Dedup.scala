@@ -2024,8 +2024,8 @@ ORDER BY source_a, source_b"""
     * for the mega-bucket semantics): the cross-source duplication
     * census a 100 TB deployment actually runs, since the uncapped
     * stream is exactly what mega-bucket corpora blow up
-    * (PairGuardSoak: 62 s uncapped vs 1.2 s capped at a 16 384-doc
-    * template family).
+    * (62 s uncapped vs 1.2 s capped at a 16 384-doc template family,
+    * SCALE.md "Round-14: the pair-tier bucket guard").
     */
   def ddDupSourcesCapped(spark: SparkSession, sfDir: String): DataFrame =
     ddDupSourcesCfg(spark, sfDir, Some(LshMaxBucket))

@@ -231,8 +231,9 @@ ORDER BY side, deg"""
     * never knows the edges weren't derived. `nodes0` supplies the node
     * universe (`doc_id`) — rank mass is injected per NODE, so isolated
     * documents still hold teleport mass. GraphSpec runs this over a
-    * hand-built edge fixture; GraphSkewSoak feeds it Zipf-degree
-    * graphs the text derivation cannot produce.
+    * hand-built edge fixture; the hub graphs of SCALE.md's "Round-15:
+    * the graph tier under degree skew" entered here, a degree
+    * distribution the text derivation cannot produce.
     */
   private[graft] def grPagerankFromEdges(nodes0: DataFrame,
       e0: DataFrame): DataFrame = {
@@ -669,8 +670,9 @@ ORDER BY d.doc_id"""
     grTrianglesFromEdges(d0, grEdgesFrom(d0))
 
   /** [[grTriangles]] over an explicit edge set — the real-link seam
-    * and GraphSkewSoak's entry for graphs whose degree distribution
-    * the text derivation cannot produce.
+    * and the entry for graphs whose degree distribution the text
+    * derivation cannot produce (SCALE.md "Round-15: the graph tier
+    * under degree skew").
     */
   private[graft] def grTrianglesFromEdges(nodes0: DataFrame,
       e0: DataFrame): DataFrame = {
@@ -755,8 +757,9 @@ FROM nn CROSS JOIN ne CROSS JOIN wj CROSS JOIN tri"""
     * it) instead of ~D²/2. The id-ordered a<b<c plan's wedge fan-out
     * at a node is governed by where its ID happens to fall relative to
     * its neighbors'; on a power-law graph with hubs at high ids that
-    * is Σ deg² at a single join key — GraphSkewSoak measures the
-    * id-ordered plan riding the hub's D² while this plan stays flat
+    * is Σ deg² at a single join key — SCALE.md "Round-15: the graph
+    * tier under degree skew" measured the id-ordered plan riding the
+    * hub's D² while this plan stays flat
     * (the classic Σ out-deg² ≤ O(m^{3/2}) bound of degree-ordered
     * triangle counting). Identical one-row output BY THEOREM — a total
     * order on nodes gives every triangle exactly one node with two
@@ -769,7 +772,8 @@ FROM nn CROSS JOIN ne CROSS JOIN wj CROSS JOIN tri"""
     grTrianglesDegFromEdges(docs(spark, sfDir), grEdges(spark, sfDir))
 
   /** [[grTrianglesDeg]] over an explicit edge set (real-link seam;
-    * GraphSkewSoak's measured side).
+    * the measured side of SCALE.md "Round-15: the graph tier under
+    * degree skew").
     */
   private[graft] def grTrianglesDegFromEdges(nodes0: DataFrame,
       e0: DataFrame): DataFrame = {
@@ -817,8 +821,9 @@ FROM nn CROSS JOIN ne CROSS JOIN wj CROSS JOIN tri"""
     * Plan: the DEGREE-ORIENTED wedge join (the [[grTrianglesDeg]]
     * plan — mandatory here, not optional: a per-node census must
     * survive exactly the hub-heavy graphs it exists to flag, and
-    * GraphSkewSoak measured the id-ordered plan riding the hub's F²
-    * while this one stays flat), each found triangle (u, v, w)
+    * the id-ordered plan rides the hub's F² while this one stays flat,
+    * SCALE.md "Round-15: the graph tier under degree skew"), each
+    * found triangle (u, v, w)
     * exploded to its three members, one corpus-keyed groupBy. The
     * oracle mirrors the orientation verbatim — same (deg, id) order,
     * same three-way explode — so the per-node counts are

@@ -2825,8 +2825,8 @@ ORDER BY l.vec_id"""
 
   /** The IVF-discovered threshold-surviving pair graph at a given
     * probe dial — the shipped entry runs it EXHAUSTIVE ([[KnnProbe]]);
-    * [[graft.ClusterProbeSweep]] measures the edge recall each
-    * smaller dial retains (SCALE.md's table), so the production
+    * the edge recall each smaller dial retains is measured in SCALE.md
+    * "Round-11 additions" (cluster-grain probe dial), so the production
     * probe ≪ cells choice is a measured trade, not a guess.
     */
   private[graft] def semanticClusterPairsAnn(spark: SparkSession,
@@ -2864,7 +2864,7 @@ ORDER BY l.vec_id"""
     * candidate work from n/cells (linear at pinned cells) into
     * ~probe·√n. Timing-only by design: a non-exhaustive probe trades
     * edge recall, and that trade is measured separately
-    * ([[graft.ClusterProbeSweep]], sim_ivf_tuning) — the soak
+    * (SCALE.md "Round-11 additions", sim_ivf_tuning) — the soak
     * measures the COST side of the same dial.
     */
   private[graft] def simSemanticClustersAnnCfg(spark: SparkSession,
@@ -2897,7 +2897,7 @@ ORDER BY l.vec_id"""
     * join + threshold + the shared recursive closure) means the
     * recall TRADE of the dial — which edges the shallow probe keeps —
     * is now itself driver-hash-pinned every round, not only measured
-    * in aggregate by ClusterProbeSweep.
+    * in aggregate (SCALE.md "Round-11 additions").
     *
     * Scale shape: identical to the exhaustive twin except the
     * candidate join touches probe/cells of the corpus per vector —

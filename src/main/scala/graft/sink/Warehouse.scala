@@ -54,10 +54,10 @@ object Warehouse {
     * promoted from evaluation to sink (the round-14 verdict's "close
     * the loop"): lay `df` out as `files` parquet files z-ordered on
     * two integral dimensions, so range predicates on EITHER dim prune
-    * by min/max footers (wh_zorder quantifies the trade; ZorderBench
-    * validates it through Spark's real scanner: the z layout read
-    * 11.6% of rows on the two-dim workload vs 26.2% for either
-    * single-dim sort).
+    * by min/max footers (wh_zorder quantifies the trade; measured
+    * through Spark's real scanner, the z layout read 11.6% of rows on
+    * the two-dim workload vs 26.2% for either single-dim sort —
+    * SCALE.md "Round-14 (cont.): the graph tier and the layout tier").
     *
     * Mechanics — the balanced-file form of wh_zorder's equal-width
     * model, identical geometry: both dims bucket to

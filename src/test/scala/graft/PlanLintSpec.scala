@@ -211,6 +211,15 @@ class PlanLintSpec extends SparkSpec {
       s"allowlisted but no global window planned (stale): $stale")
   }
 
+  test("summary counts q01_overview's static plan and restores AQE") {
+    // one scan → partial/final hash aggregate (one shuffle) → the
+    // presentation sort (one range exchange), in three codegen stages
+    val got = PlanLint.summary(SparkEntry.queries("q01_overview")(spark, sf()))
+    assert(got == Seq("scans" -> 1, "exchanges" -> 2, "reused" -> 0,
+      "windows" -> 0, "sorts" -> 1, "wholestage" -> 3))
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+  }
+
   test("hot-path interpreted expressions are the designed per-row customs") {
     val bad = findings.toSeq.flatMap { case (n, fs) =>
       fs.collect {

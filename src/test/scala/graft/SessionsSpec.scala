@@ -1,0 +1,50 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** [[Sessions]] is the one session factory: it gives Bench exactly the
+  * settings Bench has always timed under, and no other main builds a
+  * session of its own (per-main copies are how the settings drifted).
+  */
+class SessionsSpec extends SparkSpec {
+
+  test("the factory gives Bench its five settings and builds the suite's session") {
+    assert(Sessions.settings(32).toMap == Map(
+      "spark.master" -> "local[32]",
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false"))
+    Sessions.settings(4).foreach { case (k, v) =>
+      assert(spark.conf.get(k) == v, k)
+    }
+  }
+
+  test("SPARK_GRAFT_EXTRA_CONF parses k=v pairs and skips malformed entries") {
+    assert(Sessions.extraConf(None).isEmpty)
+    assert(Sessions.extraConf(Some("a.b=1;junk;c=x=y;")) ==
+      Seq("a.b" -> "1", "c" -> "x=y"))
+  }
+
+  test("Bench.timeRun returns a failure with its cause and clears the cache") {
+    import org.apache.spark.sql.functions.{col, raise_error, lit}
+    val cached = spark.range(10).toDF("id").cache()
+    cached.count()
+    val ok = Bench.timeRun(spark)(cached.select(col("id") * 2))
+    assert(ok.exists(_ >= 0.0))
+    assert(spark.sharedState.cacheManager.isEmpty, "cache left behind")
+    val bad = Bench.timeRun(spark)(spark.range(1).select(raise_error(lit("boom"))))
+    assert(bad.left.exists(_.getMessage.contains("boom")), bad)
+  }
+
+  test("no file under src/main but Sessions.scala builds a SparkSession") {
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.endsWith("Sessions.scala")),
+      "the guard must actually see the source tree")
+    val builders = files.filterNot(_.endsWith("Sessions.scala"))
+      .filter(f => Files.readString(f).contains("SparkSession.builder("))
+    assert(builders.isEmpty, builders.mkString("\n"))
+  }
+}

@@ -62,7 +62,7 @@ class WarehouseSpec extends SparkSpec {
   test("writeZordered: the real parquet reader scans fewer rows than " +
     "either single-dim sort on the two-dim workload grid") {
     import org.apache.spark.sql.Row
-    // the wh_zorder/ZorderBench table and grid, through the PRODUCTION
+    // the wh_zorder table and workload grid, through the PRODUCTION
     // write path: pruning is measured off FileSourceScan's
     // numOutputRows — what the scanner actually read, not a model
     val base = spark.read.parquet(s"${sf("sf0.01")}/orders.parquet")
@@ -102,8 +102,9 @@ class WarehouseSpec extends SparkSpec {
     }
     val (rz, rt, rk) = (rowsRead(s"$root/z"), rowsRead(s"$root/t"),
       rowsRead(s"$root/k"))
-    // ZorderBench measured 11.6% vs ~26% at sf0.1/64 files; the pin
-    // here is the ordering, which must hold at any granularity
+    // 11.6% vs ~26% was measured at sf0.1/64 files (SCALE.md "Round-14
+    // (cont.): the graph tier and the layout tier"); the pin here is
+    // the ordering, which must hold at any granularity
     assert(rz < rt && rz < rk,
       s"z-order read $rz rows vs time $rt / key $rk on the 2-dim grid")
   }
