@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 import scala.util.control.NonFatal
+import graft.schema.Tables
 object Bench {
 
   /** Iterations per query; the reported number is the per-query MIN, so
@@ -88,11 +89,8 @@ object Bench {
     // footers so the first timed query doesn't absorb one-time setup.
     // Each step is isolated: one failure must not skip the rest.
     run("warmup_entry")(SparkEntry.entry(spark))
-    Seq("orders", "lineitem", "documents", "embeddings").foreach { t =>
-      run(s"warmup_$t")(spark.read.parquet(s"$sfDir/$t.parquet"))
-    }
-    // events needs the nanos conf, which its reader sets
-    run("warmup_events")(graft.streaming.StreamingStats.events(spark, sfDir))
+    Seq("orders", "lineitem", "documents", "embeddings", "events")
+      .foreach(t => run(s"warmup_$t")(Tables.read(spark, sfDir, t)))
     // dev-only: SPARK_GRAFT_ONLY=a,b,c restricts the timed set for
     // single-query iteration; the driver never sets it
     val raw = sys.env.get("SPARK_GRAFT_ONLY") match {

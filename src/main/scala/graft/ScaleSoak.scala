@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.Tables
 
 /** Measured scaling exponents for the top-cost query tier — the
   * fixture derivation of SCALE.md's exact-vs-sketch crossover ("The
@@ -199,7 +200,7 @@ object ScaleSoak {
     * onto [0, m·n₀), so the gr_* mod-n edge targets resolve again.
     */
   private def soakDenseDocs(s: SparkSession, dir: String): DataFrame = {
-    val d = s.read.parquet(s"$dir/documents.parquet")
+    val d = Tables.read(s, dir, "documents")
     val n0 = d.where(col("doc_id") < 1000000000L).count()
     d.select(
       expr(s"(doc_id div 1000000000) * $n0 + doc_id % 1000000000")
@@ -228,7 +229,7 @@ object ScaleSoak {
       val done = new java.io.File(s"$dir/_SOAK_DONE")
       if (done.exists()) return dir
       def copies(table: String)(f: (DataFrame, Int) => DataFrame): Unit = {
-        val base = spark.read.parquet(s"$sfDir/$table.parquet")
+        val base = Tables.read(spark, sfDir, table)
         (0 until m).map(i => f(base, i)).reduce(_.unionByName(_))
           .write.mode("overwrite").parquet(s"$dir/$table.parquet")
       }
@@ -244,7 +245,7 @@ object ScaleSoak {
           .withColumn("text", text)
           .withColumn("n_chars", length(text).cast("long"))
       }
-      val dim = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val dim = Tables.read(spark, sfDir, "embeddings")
         .select(size(col("embedding"))).head().getInt(0)
       copies("embeddings") { (d, i) =>
         val s = i % dim
@@ -281,7 +282,7 @@ object ScaleSoak {
         d.withColumn("s_suppkey", col("s_suppkey") + i * off)
       }
       Seq("region", "nation").foreach { t =>
-        spark.read.parquet(s"$sfDir/$t.parquet")
+        Tables.read(spark, sfDir, t)
           .write.mode("overwrite").parquet(s"$dir/$t.parquet")
       }
       done.createNewFile()

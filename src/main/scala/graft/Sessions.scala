@@ -12,15 +12,13 @@ object Sessions {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
 
   /** The settings every session gets: one shuffle partition per core,
-    * UTC so the events' NTZ→LTZ cast does not follow the host zone,
-    * `nanosAsLong` for events.parquet's TIMESTAMP(NANOS) column, and
+    * UTC so the events' NTZ→LTZ cast does not follow the host zone, and
     * no UI.
     */
   def settings(cpus: Int): Seq[(String, String)] = Seq(
     "spark.master" -> s"local[$cpus]",
     "spark.sql.shuffle.partitions" -> cpus.toString,
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.ui.enabled" -> "false")
 
   /** Dev-only experiment confs as "k=v;k=v" (no test or benchmark sets

@@ -2,6 +2,7 @@ package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.Tables
 import graft.transform.Enrich
 
 /** Deterministic Reddit-shaped relational model derived from the driver's
@@ -28,14 +29,11 @@ import graft.transform.Enrich
   */
 object RedditModel {
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
-
   /** Raw (pre-transform) posts: the 15 extracted fields of
     * reference script.py:131-147.
     */
   def rawPosts(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = table(spark, sfDir, "orders")
+    val o = Tables.read(spark, sfDir, "orders")
     val k = col("o_orderkey")
     val kStr = k.cast("string")
     o.select(
@@ -75,7 +73,7 @@ object RedditModel {
 
   /** Comments (reference script.py:169-178 projection shape). */
   def comments(spark: SparkSession, sfDir: String): DataFrame = {
-    val l = table(spark, sfDir, "lineitem")
+    val l = Tables.read(spark, sfDir, "lineitem")
     l.filter(col("l_partkey") % 4 =!= 0)
       .select(
         (col("l_orderkey") * 10 + col("l_linenumber")).as("id"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.functions.Determinism.{r6, r6Sql}
+import graft.schema.Tables
 import graft.streaming.StreamingStats
 
 /** Relational/warehouse analytics the reference's SQLite layer never
@@ -128,7 +129,7 @@ ORDER BY 1, 2"""
     * order event.
     */
   private def scd2Orders(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/orders.parquet")
+    Tables.read(spark, sfDir, "orders")
       .select(col("o_custkey").as("custkey"),
         col("o_orderstatus").as("status"),
         col("o_orderdate").cast("timestamp").as("od"),
@@ -417,7 +418,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     * exact form ships.
     */
   def profSummary(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
     require(ProfiledCols.forall(li.columns.contains),
       s"lineitem is missing one of $ProfiledCols")
     ProfiledCols.map { c =>
@@ -460,7 +461,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     * one pruned scan per column, and no Expand.
     */
   def profSummaryApprox(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
     require(ProfiledCols.forall(li.columns.contains),
       s"lineitem is missing one of $ProfiledCols")
     ProfiledCols.map { c =>
@@ -506,7 +507,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     * q12 exact-moment posture generalized to a matrix.)
     */
   def profCorr(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
     val cents = CorrCols.map(c =>
       round(col(c) * 100).cast("long").cast(M38).as(s"v_$c"))
     val pairs = CorrPairs
@@ -553,7 +554,7 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     * at any corpus size). Integer-only until the bin label.
     */
   def profHist(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
     val cents = HistCols.map { case (c, _) =>
       round(col(c) * 100).cast("long").as(s"v_$c") }
     // both engines TRUNCATE toward zero (Spark `div` ≡ DuckDB `//` —
@@ -642,7 +643,7 @@ ORDER BY pair"""
     * null-ordering convention difference stays out of play).
     */
   def profTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
     require(TopValCols.forall(li.columns.contains),
       s"lineitem is missing one of $TopValCols")
     val counts = TopValCols.map { c =>
@@ -688,11 +689,11 @@ FROM r WHERE rank <= $TopValK ORDER BY column_name, rank"""
     * stages.
     */
   def whDq(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    val o = Tables.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey"))
-    val c = spark.read.parquet(s"$sfDir/customer.parquet")
+    val c = Tables.read(spark, sfDir, "customer")
       .select(col("c_custkey"))
     val nOrders = o.agg(count(lit(1)).as("n_orders"),
       countDistinct(col("o_orderkey")).as("n_distinct_orderkeys"))
@@ -1005,7 +1006,7 @@ FROM t ORDER BY event_type"""
     * total broadcast back. The corpus is scanned once.
     */
   def profMi(spark: SparkSession, sfDir: String): DataFrame = {
-    val cells = spark.read.parquet(s"$sfDir/documents.parquet")
+    val cells = Tables.read(spark, sfDir, "documents")
       .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("n_xy"))
     val nx = cells.groupBy(col("lang")).agg(sum(col("n_xy")).as("n_x"))
     val ny = cells.groupBy(col("source")).agg(sum(col("n_xy")).as("n_y"))
@@ -1069,7 +1070,7 @@ ORDER BY c.lang, c.source"""
     */
   def profFd(spark: SparkSession, sfDir: String): DataFrame = {
     val audits = FdPairs.map { case (table, det, dep) =>
-      spark.read.parquet(s"$sfDir/$table.parquet").agg(
+      Tables.read(spark, sfDir, table).agg(
         count(lit(1)).as("n_rows"),
         countDistinct(col(det)).as("n_det"),
         countDistinct(col(det), col(dep)).as("n_pairs"))
@@ -1139,7 +1140,7 @@ SELECT
     * magnitudes), same shape.
     */
   def profMoments(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
     val cents = MomentCols.map(c =>
       round(col(c) * 100).cast("long").cast(M38).as(s"v_$c"))
     val sums = count(lit(1)).cast(M38).as("n") +:
@@ -1239,7 +1240,7 @@ ORDER BY column_name"""
   def profColEntropy(spark: SparkSession, sfDir: String): DataFrame = {
     val scale = graft.operators.TextAnalysis.LmScale
     EntropyCols.map { case (tab, c) =>
-      val g = auditTable(spark, sfDir, tab)
+      val g = Tables.read(spark, sfDir, tab)
         .select(col(c).cast("string").as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("c"))
       val ent = log(col("n").cast("double")) -
@@ -1282,16 +1283,6 @@ FROM (
     ("lineitem", "l_extendedprice"), ("orders", "o_totalprice"),
     ("events", "value"))
 
-  /** Audit-table reader: `events` must route through
-    * [[StreamingStats.events]] (the TIMESTAMP(NANOS) fixture needs its
-    * nanos-as-long handling — a direct parquet read only works if some
-    * earlier caller already set the session conf).
-    */
-  private def auditTable(spark: SparkSession, sfDir: String,
-      tab: String): DataFrame =
-    if (tab == "events") StreamingStats.events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$tab.parquet")
-
   /** Benford expected proportions log10(1 + 1/d), d = 1..9 — computed
     * ONCE here and embedded as shortest-repr double literals in the
     * oracle SQL, so both engines consume the identical 64-bit
@@ -1325,7 +1316,7 @@ FROM (
     val wAll = Window.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
     BenfordCols.map { case (tab, c) =>
-      val counts = auditTable(spark, sfDir, tab)
+      val counts = Tables.read(spark, sfDir, tab)
         .select(round(col(c) * 100).cast("long").as("cents"))
         .filter(col("cents") > 0)
         .select(substring(col("cents").cast("string"), 1, 1)
@@ -1379,7 +1370,7 @@ FROM (
       // the (value, count) relation feeds the quartile pass AND the
       // fence-count pass — cache it rather than scan the table per
       // branch (measured: 3 scans → 1); n rides the rank window
-      val g = auditTable(spark, sfDir, tab)
+      val g = Tables.read(spark, sfDir, tab)
         .select(round(col(c) * 100).cast("long").as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
         .cache()
@@ -1494,7 +1485,7 @@ CROSS JOIN (
     * SAME per-status window pass.
     */
   def whAging(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    val o = Tables.read(spark, sfDir, "orders")
       .select(col("o_orderstatus").as("status"),
         unix_date(to_date(col("o_orderdate"))).as("day"))
     val anchor = o.agg(max(col("day")).as("anchor"))
@@ -1583,7 +1574,7 @@ FROM cw GROUP BY status ORDER BY status"""
     // sf0.1 max 17), so the per-order pair array is bounded. The pair
     // stream, the marginals and the order total all read the one
     // cached basket relation.
-    val baskets = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val baskets = Tables.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .groupBy(col("o"))
       .agg(sort_array(collect_set(col("p"))).as("parts"))
@@ -1733,7 +1724,7 @@ FROM g ORDER BY event_type"""
     * months²-bounded triangle — orders are scanned once.
     */
   def whLtv(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    val o = Tables.read(spark, sfDir, "orders")
       .select(col("o_custkey"),
         (year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1)
           .as("m"),
@@ -1811,7 +1802,7 @@ FROM w ORDER BY cohort_month, month_offset"""
     * prof_outliers' posture); cents moments sum in decimal(38,0).
     */
   def whPareto(spark: SparkSession, sfDir: String): DataFrame = {
-    val per = spark.read.parquet(s"$sfDir/orders.parquet")
+    val per = Tables.read(spark, sfDir, "orders")
       .groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
     val g = per.groupBy(col("cents")).agg(count(lit(1)).as("cnt"))
@@ -1902,10 +1893,7 @@ FROM a ORDER BY decile"""
     */
   def profSkew(spark: SparkSession, sfDir: String): DataFrame =
     SkewKeys.map { case (table, key) =>
-      val base =
-        if (table == "events") StreamingStats.events(spark, sfDir)
-        else spark.read.parquet(s"$sfDir/$table.parquet")
-      base.groupBy(col(key)).agg(count(lit(1)).as("cnt"))
+      Tables.read(spark, sfDir, table).groupBy(col(key)).agg(count(lit(1)).as("cnt"))
         .agg(count(lit(1)).as("n_groups"), sum(col("cnt")).as("n_rows"),
           max(col("cnt")).as("max_rows"))
         .select(lit(s"$table.$key").as("entity"), col("n_groups"),
@@ -2035,7 +2023,7 @@ ORDER BY lang"""
     * full-scan-one-reduce query whole-stage codegen exists for.
     */
   def whPricing(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
       .select(col("l_returnflag"), col("l_linestatus"),
         unix_date(to_date(col("l_shipdate"))).as("sday"),
         round(col("l_quantity")).cast("long").as("qty"),
@@ -2132,10 +2120,10 @@ FROM g ORDER BY l_returnflag, l_linestatus"""
     * not by line items.
     */
   def whShipLag(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey"),
         unix_date(to_date(col("l_shipdate"))).as("sday"))
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    val o = Tables.read(spark, sfDir, "orders")
       .select(col("o_orderkey"),
         unix_date(to_date(col("o_orderdate"))).as("oday"),
         date_format(to_date(col("o_orderdate")), "yyyy-MM").as("month"))
@@ -2223,20 +2211,20 @@ FROM cw GROUP BY month ORDER BY month"""
     * few-hundred-row relation at any SF.
     */
   def whRegional(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"),
         (round(col("l_extendedprice") * 100).cast("long").cast(M38) *
           (lit(100) - round(col("l_discount") * 100).cast("long")))
           .as("rev_e4"))
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    val o = Tables.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         year(to_date(col("o_orderdate"))).as("year"))
-    val c = spark.read.parquet(s"$sfDir/customer.parquet")
+    val c = Tables.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
-    val s = spark.read.parquet(s"$sfDir/supplier.parquet")
+    val s = Tables.read(spark, sfDir, "supplier")
       .select(col("s_suppkey"), col("s_nationkey"))
-    val n = spark.read.parquet(s"$sfDir/nation.parquet")
-    val r = spark.read.parquet(s"$sfDir/region.parquet")
+    val n = Tables.read(spark, sfDir, "nation")
+    val r = Tables.read(spark, sfDir, "region")
     li.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(c, col("c_custkey") === col("o_custkey"))
       .join(s, col("s_suppkey") === col("l_suppkey"))
@@ -2303,12 +2291,12 @@ FROM f GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""
     * items.
     */
   def whHhi(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"),
         (round(col("l_extendedprice") * 100).cast("long").cast(M38) *
           (lit(100) - round(col("l_discount") * 100).cast("long")))
           .as("rev_e4"))
-    val p = spark.read.parquet(s"$sfDir/part.parquet")
+    val p = Tables.read(spark, sfDir, "part")
       .select(col("p_partkey"), col("p_type"))
     val perSupp = li.join(p, col("p_partkey") === col("l_partkey"))
       .groupBy(col("p_type"), col("l_suppkey"))
@@ -2374,7 +2362,7 @@ FROM g ORDER BY p_type"""
     * count downstream.
     */
   def whReturns(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
       .select(col("l_suppkey"),
         (col("l_returnflag") === "R").cast("int").as("ret"),
         (round(col("l_extendedprice") * 100).cast("long").cast(M38) *
@@ -2386,9 +2374,9 @@ FROM g ORDER BY p_type"""
       sum(col("rev_e4")).as("rev"),
       sum(when(col("ret") === 1, col("rev_e4"))
         .otherwise(lit(0L).cast(M38))).as("ret_rev"))
-    val s = spark.read.parquet(s"$sfDir/supplier.parquet")
+    val s = Tables.read(spark, sfDir, "supplier")
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
-    val n = spark.read.parquet(s"$sfDir/nation.parquet")
+    val n = Tables.read(spark, sfDir, "nation")
       .select(col("n_nationkey"), col("n_name"))
     g.join(s, col("s_suppkey") === col("l_suppkey"))
       .join(broadcast(n), col("n_nationkey") === col("s_nationkey"))
@@ -2467,10 +2455,7 @@ ORDER BY suppkey"""
     */
   def profGini(spark: SparkSession, sfDir: String): DataFrame = {
     val perCol = GiniCols.map { case (table, c) =>
-      val src =
-        if (table == "events") StreamingStats.events(spark, sfDir)
-        else spark.read.parquet(s"$sfDir/$table.parquet")
-      val vals = src.select(round(col(c) * 100).cast("long").as("v"))
+      val vals = Tables.read(spark, sfDir, table).select(round(col(c) * 100).cast("long").as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("c"))
       val w = Window.orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2713,13 +2698,13 @@ FROM g ORDER BY event_type"""
     * rows; the window runs on the years-bounded relation.
     */
   def whYoy(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    val o = Tables.read(spark, sfDir, "orders")
       .select(col("o_custkey"),
         year(to_date(col("o_orderdate"))).as("year"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
-    val c = spark.read.parquet(s"$sfDir/customer.parquet")
+    val c = Tables.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
-    val n = spark.read.parquet(s"$sfDir/nation.parquet")
+    val n = Tables.read(spark, sfDir, "nation")
       .select(col("n_nationkey"), col("n_name"))
     val g = o.join(c, col("c_custkey") === col("o_custkey"))
       .join(broadcast(n), col("n_nationkey") === col("c_nationkey"))
@@ -2795,7 +2780,7 @@ FROM lagged ORDER BY nation, year"""
     */
   def profHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.MisraGries.register(spark)
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    Tables.read(spark, sfDir, "lineitem")
       .select(col("l_partkey"))
       .agg(count(lit(1)).as("n"),
         graft.functions.MisraGries.sketch(col("l_partkey"), HhCap)
@@ -2838,13 +2823,13 @@ FROM lagged ORDER BY nation, year"""
     * decorrelation IS the plan.
     */
   def whSmallOrders(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
       .select(col("l_partkey"),
         round(col("l_quantity") * 100).cast("long").as("q100"),
         round(col("l_extendedprice") * 100).cast("long").as("cents"))
     val pq = li.groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n"), sum(col("q100")).cast("long").as("sum_q"))
-    val p = spark.read.parquet(s"$sfDir/part.parquet")
+    val p = Tables.read(spark, sfDir, "part")
       .select(col("p_partkey"), col("p_brand"))
     li.join(pq, "l_partkey")
       .filter(col("q100") * col("n") * 5 < col("sum_q"))
@@ -2911,13 +2896,13 @@ FROM g ORDER BY p_brand"""
     * explodes, a non-match just passes through.
     */
   def whIdleCustomers(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    val o = Tables.read(spark, sfDir, "orders")
       .select(col("o_custkey"), to_date(col("o_orderdate")).as("od"))
     val mx = o.agg(max(col("od")).as("mxd"))
     val recent = o.crossJoin(broadcast(mx))
       .filter(col("od") > date_sub(col("mxd"), IdleDays))
       .select(col("o_custkey")).distinct()
-    spark.read.parquet(s"$sfDir/customer.parquet")
+    Tables.read(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"),
         round(col("c_acctbal") * 100).cast("long").as("bal_cents"))
       .filter(col("bal_cents") > 0)
@@ -2982,10 +2967,10 @@ FROM g ORDER BY c_mktsegment"""
     * not line items, after partial aggregation.
     */
   def whPrioritySla(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = spark.read.parquet(s"$sfDir/orders.parquet")
+    val o = Tables.read(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         unix_date(to_date(col("o_orderdate"))).as("oday"))
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.read(spark, sfDir, "lineitem")
       .select(col("l_orderkey"),
         unix_date(to_date(col("l_shipdate"))).as("sday"))
     o.join(li, col("l_orderkey") === col("o_orderkey"))
@@ -3057,7 +3042,7 @@ FROM g ORDER BY priority"""
     */
   def profHeavyHittersExact(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.MisraGries.register(spark)
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    Tables.read(spark, sfDir, "lineitem")
       .select(col("l_partkey"))
       .agg(count(lit(1)).as("n"),
         graft.functions.MisraGries.sketch(col("l_partkey"), HhExactCap)
@@ -3211,7 +3196,7 @@ FROM m ORDER BY event_type"""
     * 24 queries, PlanLint-allowlisted).
     */
   def whZorder(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = spark.read.parquet(s"$sfDir/orders.parquet")
+    val base = Tables.read(spark, sfDir, "orders")
       .select(col("o_custkey").as("c"),
         datediff(to_date(col("o_orderdate")), lit("1995-01-01")).cast("long")
           .as("d"))
@@ -3380,7 +3365,7 @@ ORDER BY layout, workload"""
     */
   def whCompaction(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Determinism.r6
-    val files = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val files = Tables.read(spark, sfDir, "lineitem")
       .select(to_date(col("l_shipdate")).as("day"))
       .groupBy(col("day")).agg(count(lit(1)).as("rows"))
     val w = Window.orderBy(col("day"))

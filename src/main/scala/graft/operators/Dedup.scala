@@ -9,6 +9,7 @@ import graft.functions.Determinism.{r6, r6Sql}
 import graft.model.RedditModel
 import graft.operators.TextAnalysis.{docs, tokens}
 import graft.queries.RefOracle
+import graft.schema.Tables
 
 /** Deduplication operator family for a training-data pipeline: exact,
   * MinHash+LSH, SimHash, char-n-gram Jaccard, embedding-cosine.
@@ -1424,7 +1425,7 @@ ORDER BY i.doc_a, i.doc_b"""
   // ------------------------------------------------------------------
 
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
+    Tables.read(spark, sfDir, "embeddings")
 
   /** Block count for the block-matrix pair enumeration. At 100 TB pick
     * B ≈ sqrt(2 × desired tasks): replication per row is ~B copies

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.CrossHash
 import graft.functions.CrossHash.{md5ModSql, P}
 import graft.functions.Determinism.{r6, r6Sql}
+import graft.schema.Tables
 
 /** Text-analysis operators for a large-scale training-data pipeline,
   * over the `documents` fixture (doc_id, text, lang, source, n_chars).
@@ -26,7 +27,7 @@ import graft.functions.Determinism.{r6, r6Sql}
 object TextAnalysis {
 
   def docs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Tables.read(spark, sfDir, "documents")
 
   /** Whitespace tokenization, identical in Java regex and RE2. */
   def tokens(c: Column): Column = split(trim(c), "\\s+")

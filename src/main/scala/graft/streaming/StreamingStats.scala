@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Determinism.{r6, r6Sql}
+import graft.schema.Tables
 
 /** Structured-Streaming tier: the reference's daily-stats pattern
   * (SURVEY.md §2.9/§2.12) as an incremental computation over the
@@ -86,56 +87,21 @@ object StreamingStats {
       }
       .start()
 
+  /** The events fixture through [[Tables.read]], with `ts` (declared
+    * TIMESTAMP_NTZ) cast to the session-zone TIMESTAMP every
+    * downstream operator expects. Every session pins UTC, so the cast
+    * keeps the wall clock and matches the DuckDB oracle's instants.
+    */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.read(spark, sfDir, "events")
+      .withColumn("ts", col("ts").cast("timestamp"))
+
   /** Batch twin over the parquet fixture — the backfill path, and the
     * oracle-checked correctness anchor for the streaming transform
     * (same plan minus watermark). `approx_users` is exact here so the
     * oracle can check it; the streaming variant returns the HLL sketch
     * approximation (documented divergence: sketches are for streams).
     */
-  /** Schema-adaptive events reader. The fixture's `ts` physical type
-    * has varied across data generations: TIMESTAMP(NANOS) (which
-    * Spark's parquet reader only accepts as INT64 via the
-    * `nanosAsLong` legacy conf — converted with integer `div`, since a
-    * double division would lose precision past 2^53 nanos),
-    * TIMESTAMP(MICROS) without tz (read as TIMESTAMP_NTZ — cast to
-    * session-TZ TIMESTAMP; every session pins UTC so the wall clock is
-    * preserved), and plain TIMESTAMP. All converge to the same LTZ
-    * `ts` column so every downstream operator and its DuckDB oracle
-    * (which reads the file natively) see identical instants.
-    *
-    * The `nanosAsLong` legacy conf is needed only during SCHEMA
-    * INFERENCE (the illegal-type check lives in the parquet→Spark
-    * schema converter; an already-built DataFrame executes fine after
-    * the conf reverts — probed empirically on this Spark build), so
-    * the reader scopes it: set before the footer read, RESTORED to its
-    * prior state in a finally. A session that did not opt in at build
-    * time is left exactly as it was — any OTHER nanos parquet it reads
-    * later fails with the standard PARQUET_TYPE_ILLEGAL instead of
-    * silently becoming longs (round-8 advice: no global side effect in
-    * a shared reader). Builder-time opt-ins (Verify/Bench) see their
-    * value preserved. Concurrent readers on one session could observe
-    * the transient set (the usual session-conf caveat) — the window is
-    * one footer inference, not the query's lifetime.
-    */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    val raw =
-      try spark.read.parquet(s"$sfDir/events.parquet")
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
-  }
-
   def evDailyStats(spark: SparkSession, sfDir: String): DataFrame =
     events(spark, sfDir)
       .groupBy(to_date(col("ts")).cast("string").as("day"), col("event_type"))

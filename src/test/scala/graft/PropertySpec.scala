@@ -155,7 +155,8 @@ class PropertySpec extends SparkSpec {
     }
     val dir = Files.createTempDirectory("graft_prop_sess_").toString
     events.toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withColumn("ts", col("ts") * 1000L) // micros -> the fixture's nanos
+      // micros -> the fixture's TIMESTAMP_NTZ
+      .withColumn("ts", expr("timestamp_micros(ts)").cast("timestamp_ntz"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val batch = graft.streaming.StreamingStats.evSessions(spark, dir)
       .select(col("user_id"), col("session_id"), col("n_events"),

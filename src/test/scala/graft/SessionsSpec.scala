@@ -9,16 +9,21 @@ import scala.jdk.CollectionConverters._
   */
 class SessionsSpec extends SparkSpec {
 
-  test("the factory gives Bench its five settings and builds the suite's session") {
+  test("the factory gives Bench its four settings and builds the suite's session") {
     assert(Sessions.settings(32).toMap == Map(
       "spark.master" -> "local[32]",
       "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.ui.enabled" -> "false"))
     Sessions.settings(4).foreach { case (k, v) =>
       assert(spark.conf.get(k) == v, k)
     }
+    // fixture reads declare their schema, so no session needs the
+    // legacy nanos conf: it is not set at build time and reads its
+    // default
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(!spark.sparkContext.getConf.contains(nanos))
+    assert(spark.conf.get(nanos) == "false")
   }
 
   test("SPARK_GRAFT_EXTRA_CONF parses k=v pairs and skips malformed entries") {

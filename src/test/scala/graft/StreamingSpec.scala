@@ -572,26 +572,33 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("events reader normalizes long-nanos, NTZ, and LTZ ts fixtures identically") {
+  test("events reader reads NTZ and LTZ ts fixtures identically and rejects long nanos") {
     // the fixture's physical ts type has changed across driver data
-    // generations (r8: NANOS→MICROS broke 75 specs); pin the reader's
-    // dispatch on all three encodings it claims to handle
-    import spark.implicits._
+    // generations (r8: NANOS→MICROS broke 75 specs). The declared
+    // schema says TIMESTAMP_NTZ: an LTZ file reads as the same instants
+    // in the UTC session, and a long-nanos file fails on the action
+    // instead of reading as silent values
     val base = StreamingStats.events(spark, sf())
       .orderBy(col("event_id")).limit(50)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))
     val want = base.collect().map(_.toSeq.toList).toList
     val dir = java.nio.file.Files.createTempDirectory("evts").toString
-    // long nanos (the nanosAsLong shape rounds 1-7 read)
+    // long nanos (the shape rounds 1-7 read)
     base.withColumn("ts", expr("unix_micros(ts) * 1000L"))
       .write.mode("overwrite").parquet(s"$dir/nanos/events.parquet")
+    val e = intercept[Exception] {
+      StreamingStats.events(spark, s"$dir/nanos").collect()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => String.valueOf(c.getMessage)
+      .contains("PARQUET_COLUMN_DATA_TYPE_MISMATCH")), e)
     // NTZ micros (the r8 fixture shape)
     base.withColumn("ts", col("ts").cast("timestamp_ntz"))
       .write.mode("overwrite").parquet(s"$dir/ntz/events.parquet")
     // native LTZ timestamp
     base.write.mode("overwrite").parquet(s"$dir/ltz/events.parquet")
-    Seq("nanos", "ntz", "ltz").foreach { enc =>
+    Seq("ntz", "ltz").foreach { enc =>
       val got = StreamingStats.events(spark, s"$dir/$enc")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -713,12 +720,10 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("events reader leaves the session nanosAsLong conf as it found it") {
-    // the r8-advice fix: the shared reader must not leak the legacy
-    // conf session-wide (a leaked `true` silently turns every OTHER
-    // nanos-annotated parquet in the session into longs). The conf is
-    // only needed during footer inference (probed: an already-built
-    // DataFrame executes after the conf reverts), so events() scopes
-    // set/restore around the read.
+    // the shared reader must not change the legacy conf session-wide
+    // (a leaked `true` silently turns every OTHER nanos-annotated
+    // parquet in the session into longs); events() reads with the
+    // declared schema and touches no conf at all
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val before = spark.conf.get(key)
     StreamingStats.events(spark, sf()).count()
