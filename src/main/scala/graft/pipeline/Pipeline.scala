@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -17,11 +18,19 @@ import graft.transform.Enrich
   * Stage shape per subreddit:
   *   extract (source fetch) → guard → transform (Enrich, lazy Catalyst
   *   plan) → load posts (K1) → top-10 by score → per-post comment fetch
-  *   → load comments (K2) → daily stats agg → upsert (K3).
+  *   (sequential, isolated, collected on the driver) → one K2 load per
+  *   subreddit → daily stats agg → upsert (K3).
   *
   * The per-post comment fan-out is driver-side by design, mirroring the
   * API's sequential pagination (reference script.py:310-317); everything
-  * else is distributed.
+  * else is distributed. Each post's comments are collected inside that
+  * post's fail-soft guard and loaded together after the loop: one K2
+  * load costs a fixed handful of Spark jobs (existing-id scan, anti-join,
+  * write) whatever its size, and the rows are tiny — at most
+  * `topPosts × commentLimit` per subreddit. This deviates from the
+  * reference, which loads after every post (script.py:316): a crash
+  * mid-loop loads none of that subreddit's comments, and K2's keyed,
+  * idempotent append makes a re-run exact.
   */
 class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
 
@@ -62,15 +71,26 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
           val top = posts.orderBy(col("score").desc, col("id"))
             .limit(topPosts).select(col("id")).collect()
             .map(_.get(0).toString)
-          top.foreach { postId =>
+          // the collect is the post's one job, inside its guard: a
+          // failure that only surfaces at the action still skips just
+          // this post
+          val fetched = top.flatMap { postId =>
             Try {
               val c = source.fetchComments(spark, postId, commentLimit)
-              if (!c.isEmpty) {
-                Load.appendComments(
-                  c.withColumn("extracted_at", Enrich.extractedAt()),
-                  warehouse)
-              }
-            }.failed.foreach(e => log(s"comments for $postId failed: $e"))
+              (c.schema, c.collect())
+            } match {
+              case Success(r) => Some(r)
+              case Failure(e) => log(s"comments for $postId failed: $e"); None
+            }
+          }
+          val rows = fetched.flatMap(_._2)
+          if (rows.nonEmpty) { // the reference's `if comments:` guard
+            Try {
+              Load.appendComments(
+                spark.createDataFrame(rows.toSeq.asJava, fetched.head._1)
+                  .withColumn("extracted_at", Enrich.extractedAt()),
+                warehouse)
+            }.failed.foreach(e => log(s"$subreddit: comment load failed: $e"))
           }
         }
         // stats (reference script.py:320 → §2.9) + upsert K3

@@ -93,7 +93,9 @@ object Load {
       path: String)(write: DataFrame => Unit): Unit = {
     val staging = s"$path._staging"
     merged.write.mode(SaveMode.Overwrite).parquet(staging)
-    write(spark.read.parquet(staging))
+    // the staging files were just written from `merged`: declare its
+    // schema rather than infer it again
+    write(spark.read.schema(merged.schema).parquet(staging))
     val sp = new org.apache.hadoop.fs.Path(staging)
     sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(sp, true)

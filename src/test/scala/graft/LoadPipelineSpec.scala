@@ -1,8 +1,16 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.model.RedditModel
 import graft.pipeline.Pipeline
 import graft.sink.Load
 import graft.source.FixtureSource
@@ -220,6 +228,100 @@ class LoadPipelineSpec extends SparkSpec {
     val comments = spark.read.parquet(s"$wh/comments")
     assert(comments.count() > 0)
     assert(comments.select("extracted_at").collect().forall(!_.isNullAt(0)))
+  }
+
+  /** Fixture source that records the post ids its comments were asked
+    * for, in call order, and lets a test rewrite each post's frame.
+    */
+  private class RecordingSource(
+      rewrite: (Int, DataFrame) => DataFrame = (_, c) => c)
+      extends FixtureSource(sf()) {
+    val asked = ArrayBuffer.empty[String]
+    override def fetchComments(spark: SparkSession, postId: String,
+        limit: Int): DataFrame = {
+      asked += postId
+      rewrite(asked.size - 1, super.fetchComments(spark, postId, limit))
+    }
+  }
+
+  /** K2's contract for the comments of posts `ids`: the stored ids are
+    * exactly the distinct ids that `fetchComments` returns for them (the
+    * fixture repeats some comment ids, and the keyed append keeps one
+    * row per id), and every stored row is one of those posts' fixture
+    * comments.
+    */
+  private def assertStoredComments(wh: String, ids: Seq[String],
+      limit: Int): Unit = {
+    val src = new FixtureSource(sf())
+    val fetched = ids.flatMap(id => src.fetchComments(spark, id, limit)
+      .select("id").collect().map(_.get(0).toString)).distinct.sorted
+    assert(fetched.nonEmpty)
+    val stored = spark.read.parquet(s"$wh/comments").drop("extracted_at")
+    assert(stored.select("id").collect().map(_.get(0).toString)
+      .toSeq.sorted == fetched)
+    val fixture = RedditModel.comments(spark, sf())
+      .filter(col("post_id").cast("string").isin(ids: _*))
+      .select(stored.columns.map(col): _*)
+    assert(stored.except(fixture).isEmpty)
+  }
+
+  test("pipeline skips a post whose comment fetch fails, eagerly or at the action") {
+    val wh = tmpDir()
+    // call 0 throws before returning a frame; call 1 returns a frame of
+    // the same schema whose action fails
+    val src = new RecordingSource({
+      case (0, _) => throw new RuntimeException("comment api down")
+      case (1, c) => c.withColumn("body",
+          raise_error(lit("comment page failed")).cast(c.schema("body").dataType))
+      case (_, c) => c
+    })
+    val p = new Pipeline(spark, src, wh)
+    assert(p.runPipeline("1-URGENT", limit = 40, extractComments = true,
+      topPosts = 6, commentLimit = 5).isSuccess)
+    assert(src.asked.size == 6)
+    // the failure fires only on a row: the second post must have one
+    assert(!new FixtureSource(sf()).fetchComments(spark, src.asked(1), 5).isEmpty)
+    assertStoredComments(wh, src.asked.drop(2).toSeq, 5)
+    assert(spark.read.parquet(s"$wh/subreddit_stats").count() > 0)
+  }
+
+  test("pipeline loads the top posts' comments in one keyed write") {
+    val wh = tmpDir()
+    val writes = ArrayBuffer.empty[String]
+    val statsWritten = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = qe.analyzed.foreach {
+        case i: InsertIntoHadoopFsRelationCommand =>
+          val path = i.outputPath.toUri.getPath
+          writes.synchronized(writes += path)
+          if (path == s"$wh/subreddit_stats") statsWritten.countDown()
+        case _ =>
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val src = new RecordingSource()
+    spark.listenerManager.register(listener)
+    try {
+      new Pipeline(spark, src, wh).runPipeline("1-URGENT", limit = 40,
+        extractComments = true, topPosts = 3, commentLimit = 5).get
+      // the stats upsert writes last; the listener bus delivers in order
+      assert(statsWritten.await(60, TimeUnit.SECONDS), "stats write not seen")
+    } finally spark.listenerManager.unregister(listener)
+    assert(src.asked.size == 3)
+    assertStoredComments(wh, src.asked.toSeq, 5)
+    assert(writes.synchronized(writes.count(_ == s"$wh/comments")) == 1)
+  }
+
+  test("pipeline writes no comments table when every comment frame is empty") {
+    val wh = tmpDir()
+    val src = new RecordingSource((_, c) => c.limit(0))
+    new Pipeline(spark, src, wh).runPipeline("1-URGENT", limit = 40,
+      extractComments = true, topPosts = 3, commentLimit = 5).get
+    assert(src.asked.size == 3)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$wh/comments")))
+    assert(spark.read.parquet(s"$wh/subreddit_stats").count() > 0)
   }
 
   test("pipeline isolates per-subreddit failures (fail-soft, §2.14)") {
