@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.Pipeline
+import graft.schema.Schemas
 import graft.source.FixtureSource
 
 /** Runnable ETL entry point — the reference's `main()` driver loop
@@ -33,7 +34,8 @@ object Main {
       println(s"$sub -> ${r.fold(e => s"FAILED: $e", n => s"$n posts")}")
     }
     println("subreddit_stats:")
-    spark.read.parquet(s"$warehouse/subreddit_stats")
+    spark.read.schema(Schemas.subredditStats)
+      .parquet(s"$warehouse/subreddit_stats")
       .orderBy("subreddit", "date")
       .show(20, truncate = false)
     spark.stop()

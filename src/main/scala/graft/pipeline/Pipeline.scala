@@ -3,7 +3,7 @@ package graft.pipeline
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Determinism.r6
 import graft.sink.Load
@@ -114,15 +114,10 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
           col("created_utc") < lit(to).cast("timestamp"))
       case None => posts
     }
+    val aggs = Pipeline.dailyAggregates
     inRange.filter(col("subreddit") === subreddit)
       .groupBy(col("subreddit"), to_date(col("created_utc")).as("date"))
-      .agg(
-        count(lit(1)).as("total_posts"),
-        r6(sum(col("score")).cast("double") / count(col("score")))
-          .as("avg_score"),
-        r6(sum(col("num_comments")).cast("double") / count(col("num_comments")))
-          .as("avg_comments"),
-        max(col("score")).as("top_post_score"))
+      .agg(aggs.head, aggs.tail: _*)
   }
 
   /** The reference's `main()` driver loop (reference script.py:328-356). */
@@ -131,4 +126,20 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
     subreddits.map { sub =>
       sub -> runPipeline(sub, limit, extractComments = extractComments)
     }.toMap
+}
+
+object Pipeline {
+
+  /** The four §2.9 daily aggregates (reference script.py:264-276), shared
+    * by [[Pipeline.dailyStats]] and the `stats_daily` query. The means
+    * are exact: a Long sum divided once, matching the oracle's
+    * `CAST(SUM(x) AS DOUBLE)/COUNT(x)`.
+    */
+  def dailyAggregates: Seq[Column] = {
+    def mean(c: String) = r6(sum(col(c)).cast("double") / count(col(c)))
+    Seq(count(lit(1)).as("total_posts"),
+      mean("score").as("avg_score"),
+      mean("num_comments").as("avg_comments"),
+      max(col("score")).as("top_post_score"))
+  }
 }

@@ -314,23 +314,13 @@ object RefQueries {
           * 100.0 / count(lit(1))).as("oc_percentage"))
       .orderBy($"subreddit")
 
-  /** Q15 — the `post_performance` view (analysis.sql:172-183): left-closed
-    * tiering CASE (distinct from T7's bins — do not unify, §7.4.2) + the
-    * only window function, RANK per subreddit. Also registered as a temp
-    * view (K4).
+  /** Q15 — the `post_performance` view (analysis.sql:172-183), built
+    * and registered as a temp view by the K4 sink
+    * ([[graft.sink.Load.createPerformanceView]]).
     */
-  def q15PerformanceView(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy($"subreddit").orderBy($"score".desc)
-    val v = posts(spark, sfDir)
-      .select($"id", $"subreddit", $"score",
-        when($"score" >= 1000, "Viral")
-          .when($"score" >= 100, "Popular")
-          .when($"score" >= 10, "Good")
-          .otherwise("Low").as("performance_tier"),
-        rank().over(w).as("rank_in_subreddit"))
-    v.createOrReplaceTempView("post_performance")
-    v.orderBy($"subreddit", $"rank_in_subreddit", $"id")
-  }
+  def q15PerformanceView(spark: SparkSession, sfDir: String): DataFrame =
+    graft.sink.Load.createPerformanceView(spark, posts(spark, sfDir))
+      .orderBy($"subreddit", $"rank_in_subreddit", $"id")
 
   /** Climb cap — generous over any real thread (Reddit's own UI nests
     * ~10 levels); a cycle in a corrupted feed terminates here instead
@@ -488,19 +478,19 @@ object RefQueries {
   val statsTo = "1996-01-01 00:00:00"
 
   /** The pipeline's flagship aggregation (script.py:264-276): filter +
-    * 2-key groupBy + 4 aggregates; feeds the upsert sink (K3).
+    * 2-key groupBy + the four aggregates of
+    * [[graft.pipeline.Pipeline.dailyAggregates]]; feeds the upsert sink
+    * (K3).
     */
-  def statsDaily(spark: SparkSession, sfDir: String): DataFrame =
+  def statsDaily(spark: SparkSession, sfDir: String): DataFrame = {
+    val aggs = graft.pipeline.Pipeline.dailyAggregates
     posts(spark, sfDir)
       .filter($"created_utc" >= tsNtz(statsFrom) &&
         $"created_utc" < tsNtz(statsTo))
       .groupBy($"subreddit", to_date($"created_utc").cast("string").as("date"))
-      .agg(
-        count(lit(1)).as("total_posts"),
-        avgI($"score").as("avg_score"),
-        avgI($"num_comments").as("avg_comments"),
-        max($"score").as("top_post_score"))
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy($"subreddit", $"date")
+  }
 
   /** The full derived-column surface (T1..T11) exposed directly so the
     * oracle hash-checks every transform formula row-by-row.

@@ -3,25 +3,43 @@ package graft.sink
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The L of the ETL: the reference's three load paths re-expressed as
   * Spark write-path algorithms (SURVEY.md §2.2).
   *
   * Warehouse layout: one parquet directory per table under a base dir.
   * At 100 TB the same code runs against a table format (Delta/Iceberg)
-  * where [[upsertStats]] becomes a `MERGE INTO`; on plain parquet the
-  * upsert is implemented as union + latest-wins window, which is the
-  * same algorithm a MERGE executes without a transaction log.
+  * where [[upsertStats]] becomes a `MERGE INTO`; on plain parquet every
+  * keyed rewrite is a null-safe key anti-join plus a union
+  * ([[replaceOnKey]]), the same algorithm a MERGE executes without a
+  * transaction log.
   */
 object Load {
 
-  /** True iff the table directory exists (vs. any transient read
-    * error, which must NOT be treated as "table absent" — that would
-    * silently drop or duplicate data).
+  /** True iff the table directory holds a data file: one with no path
+    * component below the table that a Spark read skips (`_SUCCESS`,
+    * `.crc`, `_temporary`; partition directories like `_c=1` count). A
+    * write that fails leaves its directory without one; such a table is
+    * absent, so the next write replaces the directory instead of
+    * failing its read of the stored rows. A listing error still throws:
+    * a transient read error must NOT be treated as "table absent" —
+    * that would silently drop or duplicate data.
     */
   private def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rootPath = fs.makeQualified(root).toUri.getPath
+    def hidden(n: String) =
+      n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    fs.exists(root) && {
+      val files = fs.listFiles(root, true)
+      var found = false
+      while (!found && files.hasNext)
+        found = !files.next().getPath.toUri.getPath.stripPrefix(rootPath)
+          .split('/').exists(hidden)
+      found
+    }
   }
 
   /** K1 — append posts (reference script.py:226-239). The reference's
@@ -42,44 +60,15 @@ object Load {
   private def appendKeyed(df: DataFrame, spark: SparkSession,
       path: String): Unit = {
     val batch = df.dropDuplicates("id")
+    // the stored ids are read with the batch's declared id type: no
+    // schema-inference job, and a stored id of another type fails here
+    // instead of being cast
     val fresh =
       if (!tableExists(spark, path)) batch
-      else batch.join(spark.read.parquet(path).select(col("id")),
+      else batch.join(
+        spark.read.schema(StructType(Seq(df.schema("id")))).parquet(path),
         Seq("id"), "left_anti")
     fresh.write.mode(SaveMode.Append).parquet(path)
-  }
-
-  /** K3 — upsert daily stats on PK (subreddit, date), the parquet
-    * equivalent of the reference's `INSERT OR REPLACE`
-    * (reference script.py:264-280): union the incoming batch with the
-    * current table, keep the newest row per key (incoming rows carry a
-    * later `loaded_at`), rewrite. Latest-wins makes re-running the same
-    * day idempotent — the reference's observable PK-replace semantics.
-    *
-    * Scale note: rewriting the whole table is correct but O(table); at
-    * scale the same window runs per (subreddit, date) partition with
-    * dynamic partition overwrite, touching only dirty partitions.
-    */
-  /** Monotonic batch sequence: wall-clock micros, bumped if two batches
-    * land in the same microsecond (nanoTime has no cross-JVM meaning).
-    */
-  private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def nextSeq(): Long = {
-    val now = System.currentTimeMillis() * 1000L
-    seq.updateAndGet(prev => math.max(prev + 1, now))
-  }
-
-  /** Newest row per (subreddit, date); stored rows merge at seq 0 —
-    * by definition older than any incoming batch.
-    */
-  private def latestWins(existing: DataFrame, stamped: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("subreddit"), col("date"))
-      .orderBy(col("loaded_at").desc)
-    existing.withColumn("loaded_at", lit(0L))
-      .unionByName(stamped)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
   }
 
   /** Parquet has no transactional overwrite-while-reading, and a
@@ -101,54 +90,50 @@ object Load {
       .delete(sp, true)
   }
 
+  /** The one conflict policy of every keyed rewrite — replace on key,
+    * null-safe: stored rows whose key matches a row of `keys` are
+    * dropped by a `<=>` left-anti join (a NULL key component matches a
+    * NULL, so a NULL-keyed row is replaced, never duplicated), then the
+    * `upserts` are appended by name. `unionByName` is also the schema
+    * check: it fails when the stored columns differ from the batch's.
+    */
+  private def replaceOnKey(stored: DataFrame, keys: DataFrame,
+      upserts: DataFrame, keyCols: Seq[String]): DataFrame =
+    stored.join(keys, keyCols.map(k => stored(k) <=> keys(k)).reduce(_ && _),
+        "left_anti")
+      .unionByName(upserts)
+
+  /** K3 — upsert daily stats on PK (subreddit, date), the parquet
+    * equivalent of the reference's `INSERT OR REPLACE`
+    * (reference script.py:264-280): replace on key, null-safe
+    * ([[replaceOnKey]]), then rewrite the table. Re-running the same
+    * day is idempotent — the reference's observable PK-replace
+    * semantics. The batch holds at most one row per key, as
+    * `Pipeline.dailyStats` and `StreamingStats.dailyEventStats` do by
+    * grouping on it.
+    *
+    * Rewriting the whole table is O(table); [[upsertStatsPartitioned]]
+    * is the layout that rewrites only the batch's date partitions.
+    */
   def upsertStats(batch: DataFrame, spark: SparkSession, warehouse: String): Unit = {
     val path = s"$warehouse/subreddit_stats"
-    val stamped = batch.withColumn("loaded_at", lit(nextSeq()))
-    val merged =
-      if (!tableExists(spark, path)) stamped
-      else latestWins(spark.read.parquet(path), stamped)
-    stageThenRewrite(merged.drop("loaded_at"), spark, path)(
-      _.write.mode(SaveMode.Overwrite).parquet(path))
+    if (!tableExists(spark, path))
+      batch.write.mode(SaveMode.Overwrite).parquet(path)
+    else
+      stageThenRewrite(replaceOnKey(spark.read.parquet(path), batch, batch,
+        Seq("subreddit", "date")), spark, path)(
+        _.write.mode(SaveMode.Overwrite).parquet(path))
   }
 
   /** The 100 TB layout of [[upsertStats]]: the stats table partitioned
-    * by `date`, upserted with dynamic partition overwrite, so a batch
-    * rewrites ONLY its own date partitions instead of O(table):
-    *
-    *  1. the batch's distinct dates are collected (a batch covers a
-    *     handful of days — driver traffic is ids, not data) and pushed
-    *     as an `isin` filter, so the existing-rows scan statically
-    *     prunes to dirty partitions;
-    *  2. latest-wins merge (same window as [[upsertStats]]) over dirty
-    *     partitions only;
-    *  3. staged to a sibling dir (parquet cannot overwrite a path being
-    *     read), then written with `partitionOverwriteMode=dynamic` —
-    *     partitions absent from the batch are never touched, their
-    *     files stay byte-identical (pinned by LoadPipelineSpec).
+    * by `date`, merged on (subreddit, date) by [[mergeInto]], so a batch
+    * rewrites ONLY its own date partitions; the others keep their files
+    * byte-identical (pinned by LoadPipelineSpec).
     */
   def upsertStatsPartitioned(batch: DataFrame, spark: SparkSession,
-      warehouse: String): Unit = {
-    val path = s"$warehouse/subreddit_stats_by_date"
-    val stamped = batch.withColumn("loaded_at", lit(nextSeq()))
-    val merged =
-      if (!tableExists(spark, path)) stamped
-      else {
-        val dates = batch.select(col("date")).distinct().collect()
-          .map(_.get(0)).toSeq
-        // normalize read-back types: partition-column discovery may
-        // infer a different type than the batch carries
-        val existing = spark.read.parquet(path)
-          .filter(col("date").isin(dates: _*))
-          .select(batch.schema.fields
-            .map(f => col(f.name).cast(f.dataType)): _*)
-        latestWins(existing, stamped)
-      }
-    stageThenRewrite(merged.drop("loaded_at"), spark, path)(
-      _.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date")
-        .parquet(path))
-  }
+      warehouse: String): Unit =
+    mergeInto(spark, s"$warehouse/subreddit_stats_by_date", batch,
+      Seq("subreddit", "date"), "date")
 
   /** General MERGE over a `partitionCol`-partitioned parquet table —
     * the library-API form of `MERGE INTO target USING source ON key`
@@ -163,8 +148,9 @@ object Load {
     *  - ONLY partitions named by the source rewrite: the target scan
     *    statically prunes to the source's distinct partition values
     *    (driver traffic is partition ids, never data), survivors come
-    *    from a key anti-join (keys are non-null by the PK contract) on `keyCols`, and the staged result
-    *    writes back with dynamic partition overwrite — untouched
+    *    from the null-safe key anti-join of [[replaceOnKey]] on
+    *    `keyCols` (a NULL key component matches a NULL), and the staged
+    *    result writes back with dynamic partition overwrite — untouched
     *    partitions stay byte-identical (spec-pinned);
     *  - a partition whose rows are ALL deleted vanishes: dynamic
     *    overwrite cannot rewrite an empty partition, so emptied dirty
@@ -200,8 +186,7 @@ object Load {
       .filter(dirtyPred)
       .select(upserts.schema.fields
         .map(f => col(f.name).cast(f.dataType)): _*)
-    val survivors = existing.join(allKeys, keyCols, "left_anti")
-    val merged = survivors.unionByName(upserts)
+    val merged = replaceOnKey(existing, allKeys, upserts, keyCols)
     // partitions all of whose rows were deleted won't appear in the
     // dynamic overwrite output — collect them for explicit removal
     val liveDirty = merged.select(col(partitionCol)).distinct()
@@ -227,15 +212,20 @@ object Load {
     }
   }
 
-  /** K4 — the `post_performance` view (reference analysis.sql:173-183). */
-  def createPerformanceView(spark: SparkSession, posts: DataFrame): Unit = {
+  /** K4 — the `post_performance` view (reference analysis.sql:173-183):
+    * left-closed tiering CASE (distinct from T7's bins — do not unify,
+    * §7.4.2) + the reference's only window function, RANK per
+    * subreddit. Registers the view and returns its frame.
+    */
+  def createPerformanceView(spark: SparkSession, posts: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("subreddit")).orderBy(col("score").desc)
-    posts.select(col("id"), col("subreddit"), col("score"),
-        when(col("score") >= 1000, "Viral")
-          .when(col("score") >= 100, "Popular")
-          .when(col("score") >= 10, "Good")
-          .otherwise("Low").as("performance_tier"),
-        rank().over(w).as("rank_in_subreddit"))
-      .createOrReplaceTempView("post_performance")
+    val v = posts.select(col("id"), col("subreddit"), col("score"),
+      when(col("score") >= 1000, "Viral")
+        .when(col("score") >= 100, "Popular")
+        .when(col("score") >= 10, "Good")
+        .otherwise("Low").as("performance_tier"),
+      rank().over(w).as("rank_in_subreddit"))
+    v.createOrReplaceTempView("post_performance")
+    v
   }
 }

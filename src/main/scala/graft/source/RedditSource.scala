@@ -37,6 +37,22 @@ trait RedditSource {
   def fetchComments(spark: SparkSession, postId: String, limit: Int): DataFrame
 }
 
+private object RedditSource {
+
+  /** The offline listing of S1: `raw` in `sort` order, id-tiebroken,
+    * cut to `limit` rows. "hot" has no offline definition; engagement
+    * is the stand-in.
+    */
+  def listing(raw: DataFrame, sort: String, limit: Int): DataFrame = {
+    val key = sort match {
+      case "new" => col("created_utc")
+      case "top" => col("score")
+      case _ => col("num_comments")
+    }
+    raw.orderBy(key.desc, col("id")).limit(limit)
+  }
+}
+
 /** Reads newline-JSON dumps (one file/dir per table) with the declared
   * schema — malformed records become nulls rather than schema drift.
   */
@@ -51,13 +67,8 @@ class JsonDumpSource(postsPath: String, commentsPath: String)
       .schema(Schemas.rawPosts)
       .json(postsPath)
       .filter(col("subreddit") === subreddit)
-    val sorted = sort match {
-      case "new" => raw.orderBy(col("created_utc").desc, col("id"))
-      case "top" => raw.orderBy(col("score").desc, col("id"))
-      // "hot" has no offline definition; engagement is the stand-in
-      case _ => raw.orderBy(col("num_comments").desc, col("id"))
-    }
-    sorted.limit(limit).select(rawPostFields.map(col): _*)
+    RedditSource.listing(raw, sort, limit)
+      .select(rawPostFields.map(col): _*)
   }
 
   override def fetchComments(spark: SparkSession, postId: String,
@@ -74,16 +85,9 @@ class JsonDumpSource(postsPath: String, commentsPath: String)
 class FixtureSource(sfDir: String) extends RedditSource {
 
   override def fetchPosts(spark: SparkSession, subreddit: String, limit: Int,
-      sort: String): DataFrame = {
-    val raw = RedditModel.rawPosts(spark, sfDir)
-      .filter(col("subreddit") === subreddit)
-    val sorted = sort match {
-      case "new" => raw.orderBy(col("created_utc").desc, col("id"))
-      case "top" => raw.orderBy(col("score").desc, col("id"))
-      case _ => raw.orderBy(col("num_comments").desc, col("id"))
-    }
-    sorted.limit(limit)
-  }
+      sort: String): DataFrame =
+    RedditSource.listing(RedditModel.rawPosts(spark, sfDir)
+      .filter(col("subreddit") === subreddit), sort, limit)
 
   override def fetchComments(spark: SparkSession, postId: String,
       limit: Int): DataFrame =

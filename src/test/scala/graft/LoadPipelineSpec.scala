@@ -43,6 +43,60 @@ class LoadPipelineSpec extends SparkSpec {
       .getAs[Long]("total_posts") == 99L)
   }
 
+  test("K3 upsert replaces a NULL-date row instead of duplicating it") {
+    import spark.implicits._
+    val wh = tmpDir()
+    Load.upsertStats(Seq(("r/a", Option.empty[String], 1L),
+        ("r/a", Option("2025-01-01"), 2L))
+      .toDF("subreddit", "date", "total_posts"), spark, wh)
+    Load.upsertStats(Seq(("r/a", Option.empty[String], 7L))
+      .toDF("subreddit", "date", "total_posts"), spark, wh)
+    val out = spark.read.parquet(s"$wh/subreddit_stats")
+    assert(out.count() == 2)
+    assert(out.filter(col("date").isNull).collect()
+      .map(_.getAs[Long]("total_posts")).toSeq == Seq(7L))
+  }
+
+  test("K3 upsert keeps a batch's own loaded_at column") {
+    import spark.implicits._
+    val wh = tmpDir()
+    def batch(total: Long, loadedAt: Long) =
+      Seq(("r/a", "2025-01-01", total, loadedAt))
+        .toDF("subreddit", "date", "total_posts", "loaded_at")
+    def stored() = spark.read.parquet(s"$wh/subreddit_stats").collect()
+      .map(r => (r.getAs[Long]("total_posts"), r.getAs[Long]("loaded_at")))
+      .toSeq
+    Load.upsertStats(batch(5L, 42L), spark, wh)
+    assert(stored() == Seq((5L, 42L)))
+    Load.upsertStats(batch(6L, 43L), spark, wh)
+    assert(stored() == Seq((6L, 43L)))
+  }
+
+  test("K3 upserts and mergeInto succeed after a failed first write") {
+    import spark.implicits._
+    val good = Seq(("r/a", "2025-01-01", 1L))
+      .toDF("subreddit", "date", "total_posts")
+    // same schema, but the action fails in its tasks
+    val bad = spark.range(3).select(lit("r/a").as("subreddit"),
+      lit("2025-01-01").as("date"),
+      raise_error(lit("stats batch failed")).cast("long").as("total_posts"))
+    def stored(table: String) = spark.read.parquet(table)
+      .select("subreddit", "total_posts").as[(String, Long)].collect().toSeq
+    val wh = tmpDir()
+    intercept[Exception](Load.upsertStats(bad, spark, wh))
+    assert(new java.io.File(s"$wh/subreddit_stats").isDirectory)
+    Load.upsertStats(good, spark, wh)
+    assert(stored(s"$wh/subreddit_stats") == Seq(("r/a", 1L)))
+    intercept[Exception](Load.upsertStatsPartitioned(bad, spark, wh))
+    Load.upsertStatsPartitioned(good, spark, wh)
+    assert(stored(s"$wh/subreddit_stats_by_date") == Seq(("r/a", 1L)))
+    val table = s"$wh/items"
+    intercept[Exception](Load.mergeInto(spark, table, bad,
+      Seq("subreddit", "date"), "date"))
+    Load.mergeInto(spark, table, good, Seq("subreddit", "date"), "date")
+    assert(stored(table) == Seq(("r/a", 1L)))
+  }
+
   test("K3-partitioned upsert rewrites only dirty date partitions") {
     import spark.implicits._
     val wh = tmpDir()
@@ -212,6 +266,34 @@ class LoadPipelineSpec extends SparkSpec {
     Load.appendPosts(Seq(("p2", 9), ("p3", 1)).toDF("id", "score"), wh)
     val out = spark.read.parquet(s"$wh/posts")
     assert(out.count() == 3)
+  }
+
+  test("K2 append succeeds after a failed write left the table without data files") {
+    val wh = tmpDir()
+    val good = RedditModel.comments(spark, sf()).orderBy(col("id")).limit(20)
+      .withColumn("extracted_at", current_timestamp())
+    // same schema, but the action fails on the first row
+    val bad = good.withColumn("body",
+      raise_error(lit("comment page failed")).cast(good.schema("body").dataType))
+    intercept[Exception](Load.appendComments(bad, wh))
+    val dir = new java.io.File(s"$wh/comments")
+    assert(dir.isDirectory)
+    assert(!dir.listFiles().exists(_.getName.endsWith(".parquet")))
+    Load.appendComments(good.union(good), wh)
+    def ids(df: DataFrame) =
+      df.select("id").distinct().collect().map(_.getLong(0)).toSeq.sorted
+    val stored = spark.read.parquet(s"$wh/comments")
+    assert(stored.count() == ids(good).size)
+    assert(ids(stored) == ids(good))
+  }
+
+  test("K1 append fails loudly on a stored id of another type") {
+    import spark.implicits._
+    val wh = tmpDir()
+    Load.appendPosts(Seq((1L, 5)).toDF("id", "score"), wh)
+    intercept[Exception](
+      Load.appendPosts(Seq(("2", 7)).toDF("id", "score"), wh))
+    assert(spark.read.parquet(s"$wh/posts").count() == 1)
   }
 
   test("pipeline runs end-to-end on the fixture source") {

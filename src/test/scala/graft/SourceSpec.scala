@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.source.{HttpApiSource, JsonDumpSource}
+import graft.source.{FixtureSource, HttpApiSource, JsonDumpSource}
 
 /** The JSON-dump source binding: schema enforcement + sort/limit
   * semantics of the extract contract (S1/S2).
@@ -36,6 +36,25 @@ class SourceSpec extends SparkSpec {
     val df = src.fetchPosts(spark, "r/x", 10, "new")
     assert(df.schema("score").dataType.typeName == "integer")
     assert(df.schema("created_utc").dataType.typeName == "timestamp")
+  }
+
+  test("fetchPosts orders every sort by its key, descending, then id") {
+    val (p, c) = writeDump()
+    assert(new JsonDumpSource(p, c).fetchPosts(spark, "r/x", 10, "new")
+      .collect().map(_.getAs[String]("id")).toSeq == Seq("p2", "p1"))
+    // the fixture source lists through the same order
+    val fixture = new FixtureSource(sf())
+    Seq("new" -> "created_utc", "top" -> "score", "hot" -> "num_comments")
+      .foreach { case (sort, key) =>
+        val rows = fixture.fetchPosts(spark, "1-URGENT", 15, sort).collect()
+        assert(rows.length == 15)
+        val keys = rows.map(r =>
+          (r.getAs[Comparable[Any]](key), r.getAs[Any]("id").toString.toLong))
+        keys.sliding(2).foreach { case Array((k1, i1), (k2, i2)) =>
+          val cmp = k1.compareTo(k2)
+          assert(cmp > 0 || (cmp == 0 && i1 < i2), s"$sort: $k1/$i1 before $k2/$i2")
+        }
+      }
   }
 
   test("fetchComments drops body-less rows (P9 guard) and limits") {
