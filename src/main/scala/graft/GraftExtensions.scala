@@ -7,91 +7,27 @@ import graft.functions.{CharGramHashSet, DotProduct, MinHash16, NfcNormalize,
   RepetitionStats, SimHash60, SortedIntersectCount, SortedJaccardGE,
   TokenRollingHash, WordGramHashes, WordShingleHashSet}
 
-/** Spark extensions entry point: registers the engine's custom
-  * Catalyst expressions so ANY session created with
+/** Spark extensions entry point: gives the engine's custom Catalyst
+  * expressions SQL-text names in ANY session created with
   *
   * {{{
   * spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * (or `.withExtensions(new GraftExtensions)`) can call them from SQL
-  * text — `SELECT graft_dot(a, b)` — as well as via the Column API.
-  * The per-session `register(spark)` helpers on each function object
-  * remain for sessions created without extensions (the driver's
-  * Verify/Bench path).
+  * (or `.withExtensions(new GraftExtensions)`), so `SELECT graft_dot(a,
+  * b)` works from SQL text. The Column API needs no session setup:
+  * each function object's handle builds its expression directly, so
+  * building a query never writes to the function registry.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    def info(name: String, usage: String) =
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-        "", "", "", "", "", "", "built-in")
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - dot product of two array<double>"),
-      { args: Seq[Expression] => DotProduct(args.head, args(1)) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_intersect_sorted"),
-      info("graft_intersect_sorted",
-        "graft_intersect_sorted(a, b) - set-intersection count of sorted array<bigint>"),
-      { args: Seq[Expression] => SortedIntersectCount(args.head, args(1)) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_gram_hashes"),
-      info("graft_gram_hashes",
-        "graft_gram_hashes(s) - sorted distinct md5-derived 5-gram hash set"),
-      { args: Seq[Expression] => CharGramHashSet(args.head) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaccard_ge"),
-      info("graft_jaccard_ge",
-        "graft_jaccard_ge(a, b, min) - Jaccard of sorted array<bigint> sets, NULL below min"),
-      { args: Seq[Expression] => SortedJaccardGE(args.head, args(1), args(2)) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      info("graft_nfc", "graft_nfc(s) - Unicode NFC normalization"),
-      { args: Seq[Expression] => NfcNormalize(args.head) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_rolling_fp"),
-      info("graft_rolling_fp",
-        "graft_rolling_fp(s) - rolling md5-token fingerprint mod P"),
-      { args: Seq[Expression] => TokenRollingHash(args.head) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "graft_simhash(s) - 60-bit token SimHash"),
-      { args: Seq[Expression] => SimHash60(args.head) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes",
-        "graft_shingle_hashes(s) - sorted distinct word-3-gram hash set"),
-      { args: Seq[Expression] => WordShingleHashSet(args.head) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash16"),
-      info("graft_minhash16",
-        "graft_minhash16(hs) - 16 MinHash values of a mod-P hash set " +
-          "(e.g. graft_shingle_hashes output; full 60-bit hashes rejected)"),
-      { args: Seq[Expression] => MinHash16(args.head) }))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_word_gram_hashes"),
-      info("graft_word_gram_hashes",
-        "graft_word_gram_hashes(s, n, modded[, dedup]) - word-n-gram " +
-          "hashes; dedup=false keeps every gram in position order"),
-      WordGramHashes.build _))
-
-    ext.injectFunction((
-      FunctionIdentifier("graft_rep_stats"),
-      info("graft_rep_stats",
-        "graft_rep_stats(s) - [n_tokens, top_count, n_2grams, " +
-          "distinct_2grams, n_3grams, distinct_3grams] of a string"),
-      RepetitionStats.build _))
+    GraftExtensions.SqlFunctions.foreach { case (name, usage, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name,
+          usage, "", "", "", "", "", "", "built-in"),
+        build))
+    }
 
     // whole-operator planning: logical TopKPerGroup → partial+final
     // bounded-heap execs (plans/TopKPerGroup.scala). Sessions built
@@ -102,4 +38,53 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (plans/RankFilterToTopK.scala)
     ext.injectOptimizerRule(_ => graft.plans.RankFilterToTopK)
   }
+}
+
+object GraftExtensions {
+
+  /** The one list of SQL-text names: (name, usage, builder). */
+  val SqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    fixed("graft_dot", 2,
+      "graft_dot(a, b) - dot product of two array<double>")(
+      a => DotProduct(a(0), a(1))),
+    fixed("graft_intersect_sorted", 2,
+      "graft_intersect_sorted(a, b) - set-intersection count of sorted array<bigint>")(
+      a => SortedIntersectCount(a(0), a(1))),
+    fixed("graft_gram_hashes", 1,
+      "graft_gram_hashes(s) - sorted distinct md5-derived 5-gram hash set")(
+      a => CharGramHashSet(a(0))),
+    fixed("graft_jaccard_ge", 3,
+      "graft_jaccard_ge(a, b, min) - Jaccard of sorted array<bigint> sets, NULL below min")(
+      a => SortedJaccardGE(a(0), a(1), a(2))),
+    fixed("graft_nfc", 1, "graft_nfc(s) - Unicode NFC normalization")(
+      a => NfcNormalize(a(0))),
+    fixed("graft_rolling_fp", 1,
+      "graft_rolling_fp(s) - rolling md5-token fingerprint mod P")(
+      a => TokenRollingHash(a(0))),
+    fixed("graft_simhash", 1, "graft_simhash(s) - 60-bit token SimHash")(
+      a => SimHash60(a(0))),
+    fixed("graft_shingle_hashes", 1,
+      "graft_shingle_hashes(s) - sorted distinct word-3-gram hash set")(
+      a => WordShingleHashSet(a(0))),
+    fixed("graft_minhash16", 1,
+      "graft_minhash16(hs) - 16 MinHash values of a mod-P hash set " +
+        "(e.g. graft_shingle_hashes output; full 60-bit hashes rejected)")(
+      a => MinHash16(a(0))),
+    ("graft_word_gram_hashes",
+      "graft_word_gram_hashes(s, n, modded[, dedup]) - word-n-gram " +
+        "hashes; dedup=false keeps every gram in position order",
+      WordGramHashes.build),
+    fixed("graft_rep_stats", 1,
+      "graft_rep_stats(s) - [n_tokens, top_count, n_2grams, " +
+        "distinct_2grams, n_3grams, distinct_3grams] of a string")(
+      a => RepetitionStats(a(0))))
+
+  /** An entry whose builder takes exactly `arity` arguments. */
+  private def fixed(name: String, arity: Int, usage: String)(
+      f: Seq[Expression] => Expression) =
+    (name, usage, { args: Seq[Expression] =>
+      require(args.length == arity,
+        s"$name expects $arity argument(s), got ${args.length}")
+      f(args)
+    })
 }

@@ -1,16 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions.call_function
 
 /** DataFrame access to Spark's own bloom-filter runtime-filter pair
   * (`BloomFilterAggregate` builds the bitmap, the codegen'd
   * `BloomFilterMightContain` probes it — the expressions the
   * `InjectRuntimeFilter` optimizer rule plants). Neither has a PUBLIC
   * SQL name (`bloom_filter_agg` lives only in the internal registry),
-  * so this registers both, letting declarative plans build explicit
+  * so this wraps both as Columns, letting declarative plans build explicit
   * semi-join pre-filters: aggregate the small side's join keys into a
   * bloom bitmap (constant-size, broadcastable), probe it map-side on
   * the big side, and let the exact join that FOLLOWS remove the false
@@ -20,33 +20,12 @@ import org.apache.spark.sql.functions.call_function
   */
 object BloomMightContain {
 
-  private val FnName = "graft_might_contain"
-  private val AggName = "graft_bloom_agg"
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 2, s"$FnName expects (bloom, value)")
-        BloomFilterMightContain(args.head, args(1))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AggName,
-      { args: Seq[Expression] =>
-        require(args.length == 3, s"$AggName expects (value, items, bits)")
-        new BloomFilterAggregate(args.head, args(1), args(2))
-      },
-      "built-in")
-  }
-
   /** Bloom bitmap of a long column (constant-size, mergeable). */
   def bloomAgg(v: Column, items: Long, bits: Long): Column =
-    call_function(AggName, v,
-      org.apache.spark.sql.functions.lit(items),
-      org.apache.spark.sql.functions.lit(bits))
+    column(new BloomFilterAggregate(expressionOf(v), Literal(items),
+      Literal(bits)).toAggregateExpression())
 
   /** Probe `bloom` (a [[bloomAgg]] binary) for long `v`. */
   def mightContain(bloom: Column, v: Column): Column =
-    call_function(FnName, bloom, v)
+    column(BloomFilterMightContain(expressionOf(bloom), expressionOf(v)))
 }

@@ -2,12 +2,12 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Sorted distinct md5-derived hash set of a string's character n-grams
@@ -99,17 +99,6 @@ object CharGramHashSet {
   def hash(md: MessageDigest, s: String): Long =
     hash60(md, s) % CrossHash.P
 
-  private val FnName = "graft_gram_hashes"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 1, s"$FnName expects 1 argument")
-        CharGramHashSet(args.head)
-      },
-      "built-in")
-
   /** Sorted distinct 5-gram hash set of a string column. */
-  def gramHashes(c: Column): Column = call_function(FnName, c)
+  def gramHashes(c: Column): Column = column(CharGramHashSet(expressionOf(c)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Codegen'd dot product of two `array<double>` columns.
@@ -73,20 +73,7 @@ case class DotProduct(left: Expression, right: Expression)
 
 object DotProduct {
 
-  private val FnName = "graft_dot"
-
-  /** Idempotently registers the expression in the session's function
-    * registry and returns a Column-level handle.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 2, s"$FnName expects 2 arguments")
-        DotProduct(args.head, args(1))
-      },
-      "built-in")
-
-  /** `dot(a, b)` over `array<double>` columns; [[register]] first. */
-  def dot(a: Column, b: Column): Column = call_function(FnName, a, b)
+  /** `dot(a, b)` over `array<double>` columns. */
+  def dot(a: Column, b: Column): Column =
+    column(DotProduct(expressionOf(a), expressionOf(b)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
 /** Row-local nearest-centroid argmin over an `array<struct<id:bigint,
@@ -157,27 +157,12 @@ case class KmArgmin(first: Expression, second: Expression,
 
 object KmArgmin {
 
-  private val FnName = "graft_km_argmin"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 4, s"$FnName expects 4 arguments")
-        val metric = args(3) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"$FnName metric must be an int literal, got $other")
-        }
-        KmArgmin(args.head, args(1), args(2), metric)
-      },
-      "built-in")
-
   /** 0-based index of the argmin/argmax centroid in `cents`
     * (array<struct<id, cv, cn>>), NULL on an empty table;
-    * metric 0 = squared-euclid min, 1 = cosine max. [[register]] first.
+    * metric 0 = squared-euclid min, 1 = cosine max.
     */
   def argminIdx(v: Column, nrm: Column, cents: Column,
       metric: Int): Column =
-    call_function(FnName, v, nrm, cents, lit(metric))
+    column(KmArgmin(expressionOf(v), expressionOf(nrm), expressionOf(cents),
+      metric))
 }

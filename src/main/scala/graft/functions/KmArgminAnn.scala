@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
 /** Row-local TWO-LEVEL (coarse-quantized) nearest-centroid argmin —
@@ -253,26 +253,11 @@ case class KmArgminAnn(first: Expression, second: Expression,
 
 object KmArgminAnn {
 
-  private val FnName = "graft_km_argmin_ann"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 5, s"$FnName expects 5 arguments")
-        val probe = args(4) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"$FnName probe must be an int literal, got $other")
-        }
-        KmArgminAnn(args.head, args(1), args(2), args(3), probe)
-      },
-      "built-in")
-
   /** 0-based index of the two-level argmin winner in `grouped`, NULL
-    * when no probed group has a member. [[register]] first.
+    * when no probed group has a member.
     */
   def argminIdx(v: Column, nrm: Column, anchors: Column,
       grouped: Column, probe: Int): Column =
-    call_function(FnName, v, nrm, anchors, grouped, lit(probe))
+    column(KmArgminAnn(expressionOf(v), expressionOf(nrm),
+      expressionOf(anchors), expressionOf(grouped), probe))
 }

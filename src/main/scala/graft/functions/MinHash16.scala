@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.functions.call_function
 
 /** The 16 MinHash values `min((a_i·h + b_i) mod P)` of a hash-set
   * column — bitwise identical to the 16 `min(...)` aggregates of the
@@ -74,17 +74,6 @@ object MinHash16 {
   private[functions] val AsArr: Array[Long] = CrossHash.MinHashAs.toArray
   private[functions] val BsArr: Array[Long] = CrossHash.MinHashBs.toArray
 
-  private val FnName = "graft_minhash16"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 1, s"$FnName expects 1 argument")
-        MinHash16(args.head)
-      },
-      "built-in")
-
   /** 16 MinHash values of a sorted-or-not hash-set column. */
-  def mins(c: Column): Column = call_function(FnName, c)
+  def mins(c: Column): Column = column(MinHash16(expressionOf(c)))
 }

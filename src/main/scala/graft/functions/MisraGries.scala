@@ -2,13 +2,13 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
 /** Misra–Gries heavy-hitters sketch over a `bigint` key column — the
@@ -145,20 +145,9 @@ case class MisraGries(child: Expression, capExpr: Expression,
 
 object MisraGries {
 
-  private val FnName = "graft_misra_gries"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 2, s"$FnName expects 2 arguments")
-        MisraGries(args.head, args(1)).toAggregateExpression()
-      },
-      "built-in")
-
   /** Heavy-hitters sketch aggregate: `array<struct<key, count>>`
     * sorted count-desc, key-asc.
     */
   def sketch(c: Column, cap: Int): Column =
-    call_function(FnName, c, lit(cap))
+    column(MisraGries(expressionOf(c), Literal(cap)).toAggregateExpression())
 }

@@ -2,11 +2,11 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -39,16 +39,5 @@ case class NfcNormalize(child: Expression)
 
 object NfcNormalize {
 
-  private val FnName = "graft_nfc"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 1, s"$FnName expects 1 argument")
-        NfcNormalize(args.head)
-      },
-      "built-in")
-
-  def nfc(c: Column): Column = call_function(FnName, c)
+  def nfc(c: Column): Column = column(NfcNormalize(expressionOf(c)))
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Symmetric int8 quantization statistics of an `array<double>` vector
@@ -88,17 +88,6 @@ case class QuantizeStats(child: Expression)
 
 object QuantizeStats {
 
-  private val FnName = "graft_quantize_stats"
-
-  private[graft] def build(args: Seq[Expression]): QuantizeStats = {
-    require(args.length == 1, s"$FnName expects 1 argument")
-    QuantizeStats(args.head)
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, build _, "built-in")
-
   /** `struct(scale, q_checksum, recon_mse)` of an array<double>. */
-  def stats(c: Column): Column = call_function(FnName, c)
+  def stats(c: Column): Column = column(QuantizeStats(expressionOf(c)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 
 /** Within-document repetition counters over the whitespace tokens of a
@@ -82,17 +82,6 @@ case class RepetitionStats(child: Expression)
 
 object RepetitionStats {
 
-  private val FnName = "graft_rep_stats"
-
-  private[graft] def build(args: Seq[Expression]): RepetitionStats = {
-    require(args.length == 1, s"$FnName expects 1 argument")
-    RepetitionStats(args.head)
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, build _, "built-in")
-
   /** `[n_tokens, top_count, n2, d2, n3, d3]` of a string column. */
-  def stats(c: Column): Column = call_function(FnName, c)
+  def stats(c: Column): Column = column(RepetitionStats(expressionOf(c)))
 }

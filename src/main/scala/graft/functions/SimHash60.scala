@@ -2,11 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
 /** 60-bit token SimHash of a string: per token, the 60-bit md5 hash
@@ -69,17 +69,6 @@ object SimHash60 {
   /** Signature width — md5Long's 60 bits (matches Dedup.SimhashBits). */
   val Bits = 60
 
-  private val FnName = "graft_simhash"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 1, s"$FnName expects 1 argument")
-        SimHash60(args.head)
-      },
-      "built-in")
-
   /** 60-bit token SimHash of a string column. */
-  def sig(c: Column): Column = call_function(FnName, c)
+  def sig(c: Column): Column = column(SimHash60(expressionOf(c)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Codegen'd set-intersection COUNT of two ascending-sorted
@@ -95,18 +95,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
 object SortedIntersectCount {
 
-  private val FnName = "graft_intersect_sorted"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 2, s"$FnName expects 2 arguments")
-        SortedIntersectCount(args.head, args(1))
-      },
-      "built-in")
-
   /** Intersection count of two sorted `array<bigint>` columns. */
   def intersectCount(a: Column, b: Column): Column =
-    call_function(FnName, a, b)
+    column(SortedIntersectCount(expressionOf(a), expressionOf(b)))
 }

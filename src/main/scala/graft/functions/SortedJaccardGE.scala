@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Thresholded Jaccard of two ascending-sorted `array<bigint>` sets in
@@ -129,18 +129,7 @@ case class SortedJaccardGE(first: Expression, second: Expression,
 
 object SortedJaccardGE {
 
-  private val FnName = "graft_jaccard_ge"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 3, s"$FnName expects 3 arguments")
-        SortedJaccardGE(args.head, args(1), args(2))
-      },
-      "built-in")
-
   /** Jaccard of sorted `array<bigint>` sets, or null below `minJac`. */
   def jaccardGE(a: Column, b: Column, minJac: Double): Column =
-    call_function(FnName, a, b, lit(minJac))
+    column(SortedJaccardGE(expressionOf(a), expressionOf(b), Literal(minJac)))
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** All ascending (a < b) element pairs of an ascending-sorted
@@ -92,17 +92,6 @@ case class SortedPairs(child: Expression) extends UnaryExpression {
 
 object SortedPairs {
 
-  private val FnName = "graft_sorted_pairs"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 1, s"$FnName expects 1 argument")
-        SortedPairs(args.head)
-      },
-      "built-in")
-
   /** Ascending (a, b) pairs of a sorted `array<bigint>`. */
-  def pairs(arr: Column): Column = call_function(FnName, arr)
+  def pairs(arr: Column): Column = column(SortedPairs(expressionOf(arr)))
 }

@@ -2,12 +2,12 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Whole-thread tree rollup as ONE aggregation — the engine shape for
@@ -161,20 +161,10 @@ case class ThreadRollup(idExpr: Expression, scoreExpr: Expression,
 
 object ThreadRollup {
 
-  private val FnName = "graft_thread_rollup"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 2, s"$FnName expects 2 arguments")
-        ThreadRollup(args.head, args(1)).toAggregateExpression()
-      },
-      "built-in")
-
   /** Per-group thread rollup:
     * `struct<n_comments, max_depth, n_leaves, deepest_id>`.
     */
   def rollup(id: Column, score: Column): Column =
-    call_function(FnName, id, score)
+    column(ThreadRollup(expressionOf(id), expressionOf(score))
+      .toAggregateExpression())
 }

@@ -2,11 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
 /** Polynomial rolling hash of a string's whitespace token stream:
@@ -77,17 +77,6 @@ object TokenRollingHash {
     SplitRe.split(raw.substring(b, e), -1)
   }
 
-  private val FnName = "graft_rolling_fp"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 1, s"$FnName expects 1 argument")
-        TokenRollingHash(args.head)
-      },
-      "built-in")
-
   /** Rolling token-stream fingerprint of a string column. */
-  def fp(c: Column): Column = call_function(FnName, c)
+  def fp(c: Column): Column = column(TokenRollingHash(expressionOf(c)))
 }

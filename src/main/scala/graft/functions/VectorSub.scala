@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Codegen'd element-wise difference of two `array<double>` columns —
@@ -89,20 +89,7 @@ case class VectorSub(left: Expression, right: Expression)
 
 object VectorSub {
 
-  private val FnName = "graft_vsub"
-
-  /** Idempotently registers the expression in the session's function
-    * registry and returns a Column-level handle.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 2, s"$FnName expects 2 arguments")
-        VectorSub(args.head, args(1))
-      },
-      "built-in")
-
-  /** `a − b` element-wise over `array<double>`; [[register]] first. */
-  def sub(a: Column, b: Column): Column = call_function(FnName, a, b)
+  /** `a − b` element-wise over `array<double>`. */
+  def sub(a: Column, b: Column): Column =
+    column(VectorSub(expressionOf(a), expressionOf(b)))
 }

@@ -2,12 +2,12 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Hashes of a string's DISTINCT word-n-grams, in first-occurrence
@@ -30,9 +30,11 @@ case class WordGramHashes(child: Expression, n: Int, modded: Boolean,
     extends UnaryExpression with CodegenFallback {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
+    if (child.dataType != StringType) TypeCheckResult.TypeCheckFailure(
       s"$prettyName expects a string argument, got ${child.dataType.simpleString}")
+    else if (n < 1) TypeCheckResult.TypeCheckFailure(
+      s"$prettyName: n must be >= 1, got $n")
+    else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -78,10 +80,8 @@ object WordGramHashes {
 
   private val FnName = "graft_word_gram_hashes"
 
-  /** SQL-facing builder — shared by [[register]] and
-    * `GraftExtensions` so both paths validate identically: 3 or 4
-    * args, n a foldable integer literal, modded/dedup foldable
-    * booleans.
+  /** SQL-text builder (`GraftExtensions`' entry): 3 or 4 args, n a
+    * foldable integer literal, modded/dedup foldable booleans.
     */
   def build(args: Seq[Expression]): WordGramHashes = {
     require(args.length == 3 || args.length == 4,
@@ -95,7 +95,6 @@ object WordGramHashes {
       case other => throw new IllegalArgumentException(
         s"$FnName: n must be an integer literal, got $other")
     }
-    require(n >= 1, s"$FnName: n must be >= 1, got $n")
     def bool(e: Expression, what: String): Boolean = e.eval() match {
       case b: Boolean => b
       case other => throw new IllegalArgumentException(
@@ -106,15 +105,11 @@ object WordGramHashes {
     WordGramHashes(args.head, n, modded, dedup)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, build _, "built-in")
-
   /** Distinct word-n-gram hashes of a string column. */
   def grams(c: Column, n: Int, modded: Boolean): Column =
-    call_function(FnName, c, lit(n), lit(modded))
+    column(WordGramHashes(expressionOf(c), n, modded))
 
   /** EVERY word-n-gram hash in position order (index ⇒ start token). */
   def gramsAll(c: Column, n: Int, modded: Boolean): Column =
-    call_function(FnName, c, lit(n), lit(modded), lit(false))
+    column(WordGramHashes(expressionOf(c), n, modded, dedup = false))
 }

@@ -2,13 +2,13 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanApi.{column, expressionOf}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.sql.functions.call_function
 
 /** Sorted distinct md5Mod hash set of a string's word-3-gram shingles —
   * the same values as the declarative
@@ -75,17 +75,6 @@ object WordShingleHashSet {
   /** Shingle width (word 3-grams — Dedup's MinHash contract). */
   val N = 3
 
-  private val FnName = "graft_shingle_hashes"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      { args: Seq[Expression] =>
-        require(args.length == 1, s"$FnName expects 1 argument")
-        WordShingleHashSet(args.head)
-      },
-      "built-in")
-
   /** Sorted distinct word-3-gram hash set of a string column. */
-  def hs(c: Column): Column = call_function(FnName, c)
+  def hs(c: Column): Column = column(WordShingleHashSet(expressionOf(c)))
 }

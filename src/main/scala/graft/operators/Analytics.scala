@@ -1562,7 +1562,6 @@ FROM cw GROUP BY status ORDER BY status"""
     * part marginals broadcast back onto the top pairs.
     */
   def whBasket(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SortedPairs.register(spark)
     // Round-19 restructure (guide §2.4/§3, verdict item 6): the pair
     // generator was a SELF-JOIN of the distinct (order, part) relation
     // on the order key — the distinct's exchange plus two join-side
@@ -2779,7 +2778,6 @@ FROM lagged ORDER BY nation, year"""
     * counts in AnalyticsSpec, including under a repartition.
     */
   def profHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.MisraGries.register(spark)
     Tables.read(spark, sfDir, "lineitem")
       .select(col("l_partkey"))
       .agg(count(lit(1)).as("n"),
@@ -3041,7 +3039,6 @@ FROM g ORDER BY priority"""
     * a calibration baseline, not the production path.
     */
   def profHeavyHittersExact(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.MisraGries.register(spark)
     Tables.read(spark, sfDir, "lineitem")
       .select(col("l_partkey"))
       .agg(count(lit(1)).as("n"),

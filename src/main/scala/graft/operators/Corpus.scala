@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{CrossHash, NfcNormalize}
+import graft.functions.{BloomMightContain, CrossHash, NfcNormalize}
 import graft.functions.CrossHash.{md5LongSql, md5ModSql}
 import graft.operators.TextAnalysis.docs
 
@@ -74,7 +74,6 @@ FROM documents ORDER BY doc_id"""
     "regexp_replace(trim(lower(nfc_normalize(text))), '\\s+', ' ', 'g')"
 
   def cpNormalize(spark: SparkSession, sfDir: String): DataFrame = {
-    NfcNormalize.register(spark)
     docs(spark, sfDir)
       .select(col("doc_id"), normExpr(col("text")).as("norm"))
       .select(
@@ -114,7 +113,6 @@ FROM n ORDER BY doc_id"""
     * dup_count aggregate reuses the same digest partitioning.
     */
   def cpElect(spark: SparkSession, sfDir: String): DataFrame = {
-    NfcNormalize.register(spark)
     cpElectOf(docs(spark, sfDir)
       .select(col("doc_id"),
         md5(normExpr(col("text"))).as("dg"),
@@ -354,7 +352,6 @@ FROM r WHERE rank <= $VocabTopN ORDER BY rank"""
     // filters sit below the Generate, so the eval branch re-hashes
     // only ~1/EvalMod of the corpus — caching would cost more than it
     // saves.
-    graft.functions.WordGramHashes.register(spark)
     val gramRows = docs(spark, sfDir)
       .select(col("doc_id"), explode(graft.functions.WordGramHashes
         .grams(lower(col("text")), DecontamN, modded = true)).as("h"))
@@ -428,25 +425,19 @@ ORDER BY d.doc_id"""
     * structural.
     */
   def cpDecontamBloom(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.WordGramHashes.register(spark)
-    graft.functions.BloomMightContain.register(spark)
     val gramRows = docs(spark, sfDir)
       .select(col("doc_id"), explode(graft.functions.WordGramHashes
         .grams(lower(col("text")), DecontamN, modded = true)).as("h"))
     val evalGrams = gramRows.filter(col("doc_id") % EvalMod === 0)
       .select(col("h")).distinct()
     // `might_contain` requires its bloom side as a scalar subquery
-    // (enforced by its type check) — express exactly that through
-    // temp views; the subquery evaluates once and broadcasts as a
-    // literal into the codegen'd probe
-    evalGrams.createOrReplaceTempView("graft_decontam_eval_grams")
-    gramRows.filter(col("doc_id") % EvalMod =!= 0)
-      .createOrReplaceTempView("graft_decontam_corpus_grams")
-    val pre = spark.sql(
-      s"""SELECT doc_id, h FROM graft_decontam_corpus_grams
-WHERE graft_might_contain(
-  (SELECT graft_bloom_agg(h, ${DecontamBloomItems}L, ${DecontamBloomBits}L)
-   FROM graft_decontam_eval_grams), h)""")
+    // (enforced by its type check) — `Dataset.scalar()` is exactly
+    // that; the subquery evaluates once and broadcasts as a literal
+    // into the codegen'd probe
+    val bloom = evalGrams.select(BloomMightContain.bloomAgg(col("h"),
+      DecontamBloomItems, DecontamBloomBits)).scalar()
+    val pre = gramRows.filter(col("doc_id") % EvalMod =!= 0)
+      .filter(BloomMightContain.mightContain(bloom, col("h")))
     val hits = pre
       .join(broadcast(evalGrams), Seq("h"))
       .groupBy(col("doc_id"))
@@ -855,7 +846,6 @@ FROM r WHERE rk <= quota ORDER BY doc_id"""
     * sources).
     */
   def cpCurate(spark: SparkSession, sfDir: String): DataFrame = {
-    NfcNormalize.register(spark)
     val base = docs(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"),
         TextAnalysis.tokens(lower(col("text"))).as("toks"),
@@ -946,7 +936,6 @@ GROUP BY b.split, b.source ORDER BY b.split, b.source"""
     // per-gram concat lambda + post-explode md5 alternative measured
     // 1.84 s vs 1.28 s at sf0.1 (the cp_decontam promotion,
     // positional variant; CorpusSpec pins the twin)
-    graft.functions.WordGramHashes.register(spark)
     val gramRows = docs(spark, sfDir).select(col("doc_id"),
       posexplode(graft.functions.WordGramHashes
         .gramsAll(lower(col("text")), n, modded = false))
@@ -1536,7 +1525,6 @@ FROM g ORDER BY ctx_len"""
     */
   def cpDecontamEmbed(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Determinism.r6
-    graft.functions.DotProduct.register(spark)
     val gdot = graft.functions.DotProduct.dot _
     val e = Dedup.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))

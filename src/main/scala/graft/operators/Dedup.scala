@@ -113,8 +113,6 @@ FROM comments GROUP BY md5(body) ORDER BY body_key"""
     * agreement.
     */
   private def signature(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.WordShingleHashSet.register(spark)
-    graft.functions.MinHash16.register(spark)
     docs(spark, sfDir)
       // shingle-less docs (< 3 tokens) drop BEFORE the expensive
       // expression, on a cheap split-only predicate: a post-hoc
@@ -210,7 +208,6 @@ FROM hashed WHERE len(s) > 0 ORDER BY doc_id"""
     * declarative sort_array(array_distinct(transform(...))) twin).
     */
   private def hashSets(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.WordShingleHashSet.register(spark)
     docs(spark, sfDir)
       .select(col("doc_id"),
         graft.functions.WordShingleHashSet.hs(lower(col("text"))).as("hs"))
@@ -231,7 +228,6 @@ FROM hashed WHERE len(s) > 0 ORDER BY doc_id"""
     */
   private[graft] def ddMinhashLshCfg(spark: SparkSession, sfDir: String,
       nBands: Int, nRows: Int, maxBucket: Option[Int] = None): DataFrame = {
-    graft.functions.SortedJaccardGE.register(spark)
     val base = hashSets(spark, sfDir)
     // cached: both candidate self-join branches would rerun the full
     // signature pass; the cached band table is 4 short rows per doc
@@ -404,7 +400,6 @@ WHERE ${r6Sql("(CAST(i AS DOUBLE) / (na + nb - i))")} >= $MinhashJaccardMin"""
     * its candidate sets.
     */
   def ddLshTuning(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SortedJaccardGE.register(spark)
     val sig = signature(spark, sfDir).cache()
     val base = hashSets(spark, sfDir).cache()
     val sa = base.select(col("doc_id").as("doc_a"), col("hs").as("ha"))
@@ -527,7 +522,6 @@ ORDER BY s.bands"""
     */
   private[graft] def ddIncrementalCfg(spark: SparkSession, sfDir: String,
       maxBucket: Option[Int]): DataFrame = {
-    graft.functions.SortedJaccardGE.register(spark)
     // `%`, not pmod: DuckDB's % keeps the sign, so pmod would diverge
     // on negative ids (cpDecontam set the precedent)
     val isBatch = (id: Column) => (id % BatchMod) === BatchRem
@@ -891,7 +885,6 @@ ORDER BY l.doc_id"""
     * saving is an entire shuffle stage). DedupSpec pins sig equality.
     */
   def ddSimhash(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SimHash60.register(spark)
     docs(spark, sfDir).select(
       col("doc_id"),
       size(tokens(lower(col("text")))).cast("int").as("n_tokens"),
@@ -1025,8 +1018,6 @@ ORDER BY doc_a, doc_b"""
     (NgramJaccardMin * 1e7 - 5).toLong / 1e7
 
   def ddNgramJaccard(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SortedJaccardGE.register(spark)
-    graft.functions.CharGramHashSet.register(spark)
     // cached: BOTH join sides consume the gram-set frame, and the
     // per-char md5 gram hashing is the query's dominant map cost —
     // uncached it runs once per side (the ta_vocab_overlap lesson;
@@ -1156,9 +1147,6 @@ ORDER BY doc_a, doc_b"""
       nBands: Int = NgramLshBands, nRows: Int = NgramLshRows): DataFrame = {
     require(nBands * nRows <= K,
       s"banding $nBands x $nRows exceeds the K=$K signature")
-    graft.functions.SortedJaccardGE.register(spark)
-    graft.functions.CharGramHashSet.register(spark)
-    graft.functions.MinHash16.register(spark)
     // gram-less docs (< 5 chars ⇔ empty gram set) drop on the cheap
     // length predicate BEFORE the hash-set expression (the signature()
     // pushdown note); they cannot appear in the exact twin's output.
@@ -1342,8 +1330,6 @@ ORDER BY doc_a, doc_b"""
     * orientations evaluated independently.
     */
   def ddContainment(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.WordShingleHashSet.register(spark)
-    graft.functions.SortedIntersectCount.register(spark)
     val boundary7 = (ContainBoundary * 1e7).toLong // 7999995
     val base = docs(spark, sfDir)
       // the signature() guard: < 3 tokens ⇔ no shingles, filtered on
@@ -1464,7 +1450,6 @@ ORDER BY i.doc_a, i.doc_b"""
     */
   private def cosinePairs(spark: SparkSession, sfDir: String,
       minCos: Double): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val gdot = graft.functions.DotProduct.dot _
     import spark.implicits._
     val B = CosineBlocks
@@ -1503,7 +1488,6 @@ ORDER BY i.doc_a, i.doc_b"""
     * plans a BroadcastNestedLoopJoin).
     */
   def ddEmbedCosineAllPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val gdot = graft.functions.DotProduct.dot _
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -1596,7 +1580,6 @@ ORDER BY vec_a, vec_b"""
     */
   private[graft] def ddSemDedupCfg(spark: SparkSession, sfDir: String,
       cells: Int): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val gdot = graft.functions.DotProduct.dot _
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -1705,7 +1688,6 @@ ORDER BY vec_a, vec_b"""
     */
   private[graft] def ddSemDedupAnnCfg(spark: SparkSession, sfDir: String,
       cells: Int, nCoarse: Int, probe: Int): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val gdot = graft.functions.DotProduct.dot _
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -1894,7 +1876,6 @@ ORDER BY t.threshold"""
     // distinct grams per doc (string-level dedup inside the custom
     // expression, mirroring gramStrings), so count(*) per hash IS the
     // doc frequency; modded=false → full 60-bit hashes (see above)
-    graft.functions.WordGramHashes.register(spark)
     val gramRows = docs(spark, sfDir)
       .select(col("doc_id"), explode(graft.functions.WordGramHashes
         .grams(lower(col("text")), SpanN, modded = false)).as("h"))
@@ -2186,7 +2167,6 @@ FROM counts"""
     * join by doc key; output is ≤ K+1 rows.
     */
   def ddMinhashError(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.SortedJaccardGE.register(spark)
     val sig = signature(spark, sfDir).cache()
     val bands = bandRows(sig)
     val cands = bands.as("a").join(bands.as("b"),

@@ -131,7 +131,6 @@ FROM documents ORDER BY doc_id"""
     * grams (nothing to judge), and the flag treats NULL as not-flagged.
     */
   def qfRepetition(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.RepetitionStats.register(spark)
     val st = docs(spark, sfDir).select(col("doc_id"),
       graft.functions.RepetitionStats.stats(lower(col("text"))).as("st"))
     val Seq(n, top, n2, d2, n3, d3) =

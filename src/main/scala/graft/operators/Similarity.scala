@@ -64,7 +64,6 @@ object Similarity {
     }.reduce(_ + _)
 
   private def base(spark: SparkSession, sfDir: String): DataFrame = {
-    DotProduct.register(spark)
     embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", DotProduct.dot(col("v"), col("v")))
@@ -260,7 +259,6 @@ ORDER BY query_id, rank"""
     // full v, for the first(v) carry-along) once per assignment
     // (guide §2.4). Same dot products, same tie-breaks — DedupSpec
     // pins equality with the declarative form.
-    KmArgmin.register(e.sparkSession)
     val centsArr = cents
       .agg(collect_list(struct(col("cent_id"), col("cv"), col("cn")))
         .as("cs"))
@@ -535,7 +533,6 @@ ORDER BY nprobe"""
     * reconstruction MSE rather than 64 code columns.
     */
   def simQuantize(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.QuantizeStats.register(spark)
     // the whole per-vector bundle is ONE primitive pass
     // (graft_quantize_stats) — the declarative six-HOF chain it is
     // bit-identical to lives in SimilaritySpec as the pinned twin
@@ -636,8 +633,6 @@ FROM q ORDER BY vec_id"""
     // association the loop scored it with, so values are bitwise
     // identical to the declarative form (DedupSpec pins it; the
     // oracle twin is unchanged).
-    KmArgmin.register(vecs.sparkSession)
-    DotProduct.register(vecs.sparkSession)
     val centsArr = cents
       .agg(collect_list(struct(col("cent_id"), col("cv"), col("cn")))
         .as("cs"))
@@ -706,10 +701,6 @@ FROM q ORDER BY vec_id"""
     */
   def kmAssignAnn(vecs: DataFrame, cents: DataFrame, nCoarse: Int,
       probe: Int): DataFrame = {
-    val sp = vecs.sparkSession
-    KmArgmin.register(sp)
-    KmArgminAnn.register(sp)
-    DotProduct.register(sp)
     val anchors = cents.orderBy(col("cent_id")).limit(nCoarse)
       .select(col("cent_id").as("anchor_id"), col("cv").as("av"),
         col("cn").as("an"))
@@ -1558,7 +1549,6 @@ ORDER BY query_id, rank"""
     * the q·c_cell term.
     */
   private def ivfPqResidScored(vecs: DataFrame, probe: Int): DataFrame = {
-    graft.functions.VectorSub.register(vecs.sparkSession)
     // TRAINED coarse quantizer (the FAISS deployment): residuals are
     // only small — and residual codes only pay — against cell MEANS.
     // Against sampled raw-vector anchors the residual norm ‖x−c‖ is
@@ -2067,7 +2057,6 @@ ORDER BY probe, rerank_c"""
 
   def simResidualGain(spark: SparkSession, sfDir: String): DataFrame = {
     val vecs = base(spark, sfDir).cache()
-    graft.functions.VectorSub.register(spark)
     val q = vecs.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val exact = q
@@ -2279,7 +2268,6 @@ ORDER BY variant"""
     */
   def simOpqGain(spark: SparkSession, sfDir: String): DataFrame = {
     val vecs = base(spark, sfDir).cache()
-    graft.functions.VectorSub.register(spark)
     val q = vecs.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val exact = q
@@ -3462,7 +3450,6 @@ ORDER BY query_id, rank"""
     * self-joined.
     */
   def simHardNegatives(spark: SparkSession, sfDir: String): DataFrame = {
-    DotProduct.register(spark)
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -3654,7 +3641,6 @@ ORDER BY c.prefix_dim, c.query_id"""
   def simKcenter(spark: SparkSession, sfDir: String): DataFrame = {
     val e = embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    DotProduct.register(spark)
     val n = e.select(col("vec_id"), col("v"),
       DotProduct.dot(col("v"), col("v")).as("nrm"))
       .localCheckpoint(true)

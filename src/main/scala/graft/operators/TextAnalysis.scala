@@ -247,7 +247,6 @@ FROM w ORDER BY lang, predicted_lang"""
     * the oracle matches exactly.
     */
   def taFingerprint(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.TokenRollingHash.register(spark)
     val toks = tokens(lower(col("text")))
     // one custom-expression eval per row (TextAnalysisSpec pins it to
     // the declarative aggregate/transform twin — the md5-per-lambda-
@@ -901,7 +900,6 @@ FROM a ORDER BY source"""
   FROM toks GROUP BY source"""
 
   def taDupNgrams(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.WordGramHashes.register(spark)
     val byGram = docs(spark, sfDir)
       .select(col("source"), explode(graft.functions.WordGramHashes
         .grams(lower(col("text")), DupGramN, modded = true)).as("h"))
@@ -1050,7 +1048,6 @@ ORDER BY i.source_a, i.source_b"""
     * partial-agg'd exchange; everything after is vocab-sized.
     */
   def taNgramCoverage(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.WordGramHashes.register(spark)
     val counts = docs(spark, sfDir)
       .select(col("source"), explode(graft.functions.WordGramHashes
         .gramsAll(lower(col("text")), DupGramN, modded = true)).as("h"))

@@ -375,7 +375,6 @@ object RefQueries {
     // pass — one shuffle total, no per-level jobs. The frontier-walk
     // twin below is spec-pinned equal and remains the shape for
     // genuinely cross-group graphs.
-    graft.functions.ThreadRollup.register(spark)
     comments(spark, sfDir)
       .select($"post_id", $"id", $"score")
       .groupBy($"post_id")

@@ -419,9 +419,6 @@ ORDER BY day, event_type"""
       corpusDir: String, horizon: String = "1 hour"): DataFrame = {
     import graft.operators.Dedup
     import graft.functions.{MinHash16, SortedJaccardGE, WordShingleHashSet}
-    SortedJaccardGE.register(spark)
-    WordShingleHashSet.register(spark)
-    MinHash16.register(spark)
     val index = Dedup
       .servingBandIndex(spark, corpusDir, Some(Dedup.LshMaxBucket))
       .select(col("band"), col("key"), col("doc_id").as("corpus_doc"))

@@ -2,13 +2,13 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Access point for building a DataFrame from a custom LogicalPlan —
-  * the established public pattern for third-party plan nodes (used by
-  * Qbeast's DatasetFactory and Pathling's ColumnDataset, see
-  * SNIPPETS.md [1]/[3]): a one-method object placed in
-  * `org.apache.spark.sql` so the `private[sql]` Dataset factory is
-  * reachable, keeping everything else of the engine outside Spark's
-  * namespace.
+/** Access point for building a DataFrame from a custom LogicalPlan
+  * and a Column from a custom Expression — the established public
+  * pattern for third-party plan nodes (used by Qbeast's DatasetFactory
+  * and Pathling's ColumnDataset, see SNIPPETS.md [1]/[3]): a small
+  * object placed in `org.apache.spark.sql` so the `private[sql]`
+  * Dataset factory and Column converters are reachable, keeping
+  * everything else of the engine outside Spark's namespace.
   */
 object GraftPlanApi {
 
@@ -20,4 +20,10 @@ object GraftPlanApi {
     */
   def expressionOf(c: Column): catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** Catalyst Expression → Column: how a custom expression's handle
+    * reaches the Column API without a function-registry entry.
+    */
+  def column(e: catalyst.expressions.Expression): Column =
+    classic.ExpressionUtils.column(e)
 }

@@ -1065,7 +1065,6 @@ class AnalyticsSpec extends SparkSpec {
     // the degenerate regime is partition-independent: an adversarial
     // repartition routes through different update/merge orders and
     // must still produce the identical table
-    graft.functions.MisraGries.register(spark)
     val rep = spark.read.parquet(sf("sf0.01") + "/lineitem.parquet")
       .select(col("l_partkey")).repartition(7)
       .agg(graft.functions.MisraGries
@@ -1077,7 +1076,6 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("MisraGries guarantees survive an adversarial repartition") {
-    graft.functions.MisraGries.register(spark)
     val df = spark.read.parquet(sf("sf0.01") + "/lineitem.parquet")
       .select(col("l_partkey")).repartition(7)
     val sk = df.agg(graft.functions.MisraGries

@@ -22,7 +22,6 @@ class CorpusSpec extends SparkSpec {
 
   test("cp_normalize canonicalizes case/whitespace/NFC to one digest") {
     import spark.implicits._
-    graft.functions.NfcNormalize.register(spark)
     // é as precomposed U+00E9 vs e + combining acute U+0301
     val df = Seq("Café  World", "café world").toDF("text")
     val norm = regexp_replace(
@@ -350,7 +349,6 @@ class CorpusSpec extends SparkSpec {
   test("gramsAll equals the positional declarative gram hashes") {
     import spark.implicits._
     import graft.functions.{CrossHash, WordGramHashes}
-    WordGramHashes.register(spark)
     val adversarial = Seq("", " ", "one", "a b", "a b c d e f g h",
       "a b c d e f g h i j", "dup dup dup dup dup dup dup dup dup",
       "a  b\tc d e f g h i")

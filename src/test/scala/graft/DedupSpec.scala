@@ -11,7 +11,6 @@ class DedupSpec extends SparkSpec {
 
   test("CharGramHashSet equals the declarative md5/conv formulation") {
     import spark.implicits._
-    CharGramHashSet.register(spark)
     val texts = Seq("hello world, this is a gram test", "abcde", "abcd",
       "", "ααβγδε unicode γράμματα", "aaaaaaaa")
     val df = texts.toDF("t")
@@ -25,7 +24,6 @@ class DedupSpec extends SparkSpec {
 
   test("DotProduct equals the declarative zip_with/aggregate fold") {
     import spark.implicits._
-    DotProduct.register(spark)
     val df = Seq((Seq(1.5, -2.0, 3.25), Seq(0.5, 4.0, -1.0)))
       .toDF("a", "b")
       .select(col("a").cast("array<double>"), col("b").cast("array<double>"))
@@ -39,7 +37,6 @@ class DedupSpec extends SparkSpec {
 
   test("SortedIntersectCount equals size(array_intersect) on sorted sets") {
     import spark.implicits._
-    SortedIntersectCount.register(spark)
     val cases = Seq(
       (Seq(1L, 3L, 5L, 9L), Seq(2L, 3L, 9L, 11L)), // partial overlap
       (Seq.empty[Long], Seq(1L, 2L)), // empty side
@@ -106,7 +103,6 @@ class DedupSpec extends SparkSpec {
 
   test("WordShingleHashSet + MinHash16 equal the declarative signature") {
     import spark.implicits._
-    graft.functions.WordShingleHashSet.register(spark)
     // hash sets: custom expression vs sort_array(array_distinct(transform))
     val texts = graft.operators.TextAnalysis.docs(spark, sf("sf0.01"))
       .select(col("doc_id"), lower(col("text")).as("t"))
@@ -124,7 +120,6 @@ class DedupSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (1 to 16).map(r.getLong).toSeq).toMap
     assert(sigC == sigD)
     // the expression's private coefficient copies match Dedup's
-    graft.functions.MinHash16.register(spark)
     val minsOfOne = Seq(123456789L).toDF("h")
       .select(graft.functions.MinHash16.mins(array(col("h"))).as("m"))
       .collect()(0).getSeq[Long](0)
@@ -135,7 +130,6 @@ class DedupSpec extends SparkSpec {
 
   test("WordGramHashes equals the gramStrings + hash declarative twin") {
     import spark.implicits._
-    graft.functions.WordGramHashes.register(spark)
     val adversarial = Seq("", " ", "one", "a b c d e f g h i j",
       "\ta  b\tc d e f g h", ("tok " * 50).trim)
     val fixture = graft.operators.TextAnalysis.docs(spark, sf("sf0.01"))
@@ -226,7 +220,6 @@ class DedupSpec extends SparkSpec {
 
   test("kmeans: Lloyd rounds never increase inertia; cells partition") {
     import org.apache.spark.sql.functions._
-    graft.functions.DotProduct.register(spark)
     val vecs = Dedup.embeddings(spark, sf("sf0.01"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", graft.functions.DotProduct.dot(col("v"), col("v")))
@@ -252,7 +245,6 @@ class DedupSpec extends SparkSpec {
 
   test("kmeans-trained centroids plug into the IVF serving plan") {
     import org.apache.spark.sql.functions._
-    graft.functions.DotProduct.register(spark)
     val vecs = Dedup.embeddings(spark, sf("sf0.01"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", graft.functions.DotProduct.dot(col("v"), col("v")))
@@ -813,7 +805,6 @@ class DedupSpec extends SparkSpec {
     // over a candidate SUBSET, so its dist can never beat the exact
     // minimum and must itself be a real centroid distance
     import org.apache.spark.sql.functions.{col => c}
-    graft.functions.DotProduct.register(spark)
     val gdot = graft.functions.DotProduct.dot _
     val e = spark.read.parquet(sf("sf0.01") + "/embeddings.parquet")
       .select(c("vec_id"), c("embedding").cast("array<double>").as("v"))
@@ -890,7 +881,6 @@ class DedupSpec extends SparkSpec {
     // declarative pre-round-19 forms live HERE as the pinned twins.
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{col => c}
-    graft.functions.DotProduct.register(spark)
     val gdot = graft.functions.DotProduct.dot _
     def refKmAssign(vecs: DataFrame, cents: DataFrame): DataFrame = {
       val dist = c("nrm") - lit(2.0) * gdot(c("v"), c("cv")) + c("cn")
@@ -963,7 +953,6 @@ class DedupSpec extends SparkSpec {
     }
     // cosine argmax (the ivfAssign metric): max(struct(cs, -cent_id))
     // vs KmArgmin metric 1 over the collected table
-    graft.functions.KmArgmin.register(spark)
     val centsArr = cents
       .agg(collect_list(struct(c("cent_id"), c("cv"), c("cn"))).as("cs"))
     val win = element_at(c("cs"), c("ci") + 1)
@@ -988,7 +977,6 @@ class DedupSpec extends SparkSpec {
 
   test("SortedPairs equals the (i < j) self-join enumeration") {
     import spark.implicits._
-    graft.functions.SortedPairs.register(spark)
     val cases = Seq(
       Seq(1L, 3L, 7L, 9L), // normal basket
       Seq(5L), // singleton: no pairs

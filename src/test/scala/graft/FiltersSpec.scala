@@ -22,7 +22,6 @@ class FiltersSpec extends SparkSpec {
 
   test("RepetitionStats equals the declarative counters (adversarial + fixture)") {
     import spark.implicits._
-    graft.functions.RepetitionStats.register(spark)
     val adversarial = Seq("", " ", "one", "a a a a", "a b a b a b",
       "x y z x y z x y", ("tok " * 40).trim, "a  b\t c d")
     val fixture = graft.operators.TextAnalysis.docs(spark, sf("sf0.01"))

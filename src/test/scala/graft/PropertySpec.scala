@@ -399,7 +399,6 @@ class PropertySpec extends SparkSpec {
 
   test("graft_quantize_stats equals a local recompute on random vectors") {
     import spark.implicits._
-    graft.functions.QuantizeStats.register(spark)
     val vecs = (1 to 60).map { i =>
       val r = new Random(i)
       (i.toLong, Seq.fill(1 + r.nextInt(80))(r.nextDouble() * 4 - 2))

@@ -108,7 +108,6 @@ class QueriesSpec extends SparkSpec {
         rnd.nextInt(241) - 120)
     }
     assert(rows.exists(_._3 < -20), "must exercise the sub--20 branch")
-    graft.functions.ThreadRollup.register(spark)
     val got = rows.toDF("post_id", "id", "score")
       .repartition(8) // partial buffers must merge across partitions
       .groupBy(col("post_id"))
@@ -140,7 +139,6 @@ class QueriesSpec extends SparkSpec {
     // the positional oracle gives a null-score row a row_number
     // position (an orphaned child, not a removed one) — so the
     // aggregate must refuse nulls rather than silently diverge
-    graft.functions.ThreadRollup.register(spark)
     val df = Seq((1L, Some(10L), Some(5)), (1L, Some(11L), None))
       .toDF("post_id", "id", "score")
     val ex = intercept[Exception] {

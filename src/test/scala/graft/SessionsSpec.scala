@@ -43,13 +43,27 @@ class SessionsSpec extends SparkSpec {
     assert(bad.left.exists(_.getMessage.contains("boom")), bad)
   }
 
-  test("no file under src/main but Sessions.scala builds a SparkSession") {
+  private def mainSources: Seq[java.nio.file.Path] = {
     val files = Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.exists(_.endsWith("Sessions.scala")),
       "the guard must actually see the source tree")
-    val builders = files.filterNot(_.endsWith("Sessions.scala"))
+    files
+  }
+
+  test("no file under src/main but Sessions.scala builds a SparkSession") {
+    val builders = mainSources.filterNot(_.endsWith("Sessions.scala"))
       .filter(f => Files.readString(f).contains("SparkSession.builder("))
     assert(builders.isEmpty, builders.mkString("\n"))
+  }
+
+  // custom expressions reach the Column API through GraftPlanApi.column;
+  // SQL-text names come only from GraftExtensions' list
+  test("no file under src/main registers a session function or calls one by name") {
+    val writers = mainSources.filter { f =>
+      val src = Files.readString(f)
+      src.contains("createOrReplaceTempFunction") || src.contains("call_function(")
+    }
+    assert(writers.isEmpty, writers.mkString("\n"))
   }
 }

@@ -142,7 +142,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("graft_quantize_stats is bit-identical to the declarative HOF twin") {
     // the six-HOF chain QuantizeStats replaced — kept here as the pin
-    graft.functions.QuantizeStats.register(spark)
     val e = graft.operators.Dedup.embeddings(spark, sf("sf0.01"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("s", aggregate(col("v"), lit(0.0),

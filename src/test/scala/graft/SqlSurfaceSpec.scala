@@ -7,6 +7,27 @@ import org.apache.spark.sql.SparkSession
   */
 class SqlSurfaceSpec extends SparkSpec {
 
+  /** One session built `.withExtensions(new GraftExtensions)` on the
+    * suite's running context: the custom functions' SQL-text names
+    * exist only there. With the active and default sessions cleared
+    * the builder makes a new session (a cold start, as a fresh
+    * application's would be); both are restored afterwards.
+    */
+  private lazy val ext: SparkSession = {
+    val (active, default) = (SparkSession.getActiveSession,
+      SparkSession.getDefaultSession)
+    spark // the suite's session owns the SparkContext
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+    finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      active.foreach(SparkSession.setActiveSession)
+      default.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
   test("catalog views answer reference-style SQL (analysis.sql shapes)") {
     Catalog.registerAll(spark, sf())
     val overview = spark.sql(
@@ -24,10 +45,7 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("custom expressions are callable from SQL text") {
-    graft.functions.DotProduct.register(spark)
-    graft.functions.SortedIntersectCount.register(spark)
-    graft.functions.CharGramHashSet.register(spark)
-    val r = spark.sql(
+    val r = ext.sql(
       """SELECT graft_dot(CAST(array(1.0, 2.0) AS ARRAY<DOUBLE>),
         |                 CAST(array(3.0, 4.0) AS ARRAY<DOUBLE>)) AS d,
         |  graft_intersect_sorted(CAST(array(1, 2, 3) AS ARRAY<BIGINT>),
@@ -40,12 +58,7 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("round-4 expressions are callable and guarded from SQL text") {
-    graft.functions.TokenRollingHash.register(spark)
-    graft.functions.SimHash60.register(spark)
-    graft.functions.WordShingleHashSet.register(spark)
-    graft.functions.MinHash16.register(spark)
-    graft.functions.WordGramHashes.register(spark)
-    val r = spark.sql(
+    val r = ext.sql(
       """SELECT graft_rolling_fp('a b c') AS fp,
         |  graft_simhash('a b c') AS sh,
         |  size(graft_shingle_hashes('a b c d')) AS ns,
@@ -58,60 +71,50 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(r.getInt(4) == 3) // 4 tokens → 3 bigrams
     // guards: bad arity / non-mod-P minhash input fail loudly
     intercept[Exception](
-      spark.sql("SELECT graft_word_gram_hashes('x')").collect())
+      ext.sql("SELECT graft_word_gram_hashes('x')").collect())
     intercept[Exception](
-      spark.sql("SELECT graft_minhash16(" +
+      ext.sql("SELECT graft_minhash16(" +
         "graft_word_gram_hashes('a b c d', 2, false))").collect())
   }
 
   test("graft_rep_stats is callable and guarded from SQL text") {
-    graft.functions.RepetitionStats.register(spark)
-    val r = spark.sql("SELECT graft_rep_stats('a b a') AS st")
+    val r = ext.sql("SELECT graft_rep_stats('a b a') AS st")
       .collect().head.getSeq[Int](0)
     // 3 tokens, 'a' twice; bigrams 'a b','b a' both unique; 1 trigram
     assert(r == Seq(3, 2, 2, 2, 1, 1))
     intercept[Exception](
-      spark.sql("SELECT graft_rep_stats('x', 'y')").collect())
+      ext.sql("SELECT graft_rep_stats('x', 'y')").collect())
     intercept[Exception](
-      spark.sql("SELECT graft_rep_stats(1)").collect())
+      ext.sql("SELECT graft_rep_stats(1)").collect())
   }
 
   test("graft_word_gram_hashes dedup arg is callable and guarded") {
-    graft.functions.WordGramHashes.register(spark)
-    val r = spark.sql(
+    val r = ext.sql(
       "SELECT size(graft_word_gram_hashes('a b a b', 2, false, false)) AS all," +
         " size(graft_word_gram_hashes('a b a b', 2, false, true)) AS ded")
       .collect().head
     assert(r.getInt(0) == 3) // a b, b a, a b — positions kept
     assert(r.getInt(1) == 2) // first-occurrence distinct
-    intercept[Exception](spark.sql(
+    intercept[Exception](ext.sql(
       "SELECT graft_word_gram_hashes('x', 2, false, 'nope')").collect())
   }
 
   test("GraftExtensions injects all functions at session build time") {
-    // a genuinely fresh session would pick these up via
-    // spark.sql.extensions; here the injection itself is exercised
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // must not throw, covers the wiring
-    // and a cold-start session proves end-to-end SQL callability
-    val active = SparkSession.getActiveSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
-      assert(s2.sql("SELECT graft_dot(CAST(array(2.0) AS ARRAY<DOUBLE>), " +
-        "CAST(array(3.0) AS ARRAY<DOUBLE>)) AS d").collect().head
-        .getDouble(0) == 6.0)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      active.foreach(SparkSession.setActiveSession)
-      active.foreach(SparkSession.setDefaultSession)
+    val names = GraftExtensions.SqlFunctions.map(_._1)
+    assert(names.size == 11 && names.distinct == names)
+    names.foreach { n =>
+      assert(ext.catalog.functionExists(n), n)
+      assert(!spark.catalog.functionExists(n), s"$n leaked into the shared session")
     }
+    val r = ext.sql("SELECT graft_dot(CAST(array(2.0) AS ARRAY<DOUBLE>), " +
+      "CAST(array(3.0) AS ARRAY<DOUBLE>)) AS d, " +
+      "graft_jaccard_ge(CAST(array(1, 2, 3) AS ARRAY<BIGINT>), " +
+      "CAST(array(2, 3, 4) AS ARRAY<BIGINT>), 0.4D) AS j, " +
+      "graft_nfc('e\u0301') AS n").collect().head
+    assert(r.getDouble(0) == 6.0)
+    assert(r.getDouble(1) == 0.5) // |{2,3}| / |{1,2,3,4}|
+    assert(r.getString(2) == "\u00e9")
+    // fixed-arity builders reject a wrong argument count
+    intercept[Exception](ext.sql("SELECT graft_dot(array(1.0D))").collect())
   }
 }

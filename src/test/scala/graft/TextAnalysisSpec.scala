@@ -11,7 +11,6 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("TokenRollingHash equals the declarative aggregate/transform fold") {
     import spark.implicits._
-    TokenRollingHash.register(spark)
     // adversarial whitespace: Spark's trim strips only ' ', split keeps
     // a leading empty token after a leading tab and trailing empties
     // after a trailing tab;   is NOT regex-\s (ASCII classes)
