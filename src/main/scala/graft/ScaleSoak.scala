@@ -90,12 +90,12 @@ object ScaleSoak {
       // similarity, not corpus density (comparator: the shipped
       // dd_clusters_star at pinned 4×4)
       "dd_clusters_star_adaptive" -> ((s, dir, m) =>
-        graft.operators.Dedup.ddClustersStarCfg(s, dir,
+        graft.operators.Dedup.ddClustersCfg(s, dir,
           nBands = if (m >= 10) 2 else 4, nRows = if (m >= 10) 8 else 4)),
       // pinned-banding comparator measured in the SAME session so the
       // adaptive-vs-fixed delta is never a cross-run box artifact
       "dd_clusters_star_fixedbands" -> ((s, dir, _) =>
-        graft.operators.Dedup.ddClustersStarCfg(s, dir,
+        graft.operators.Dedup.ddClustersCfg(s, dir,
           nBands = 4, nRows = 4)),
       // the char-gram banding dial on the CAPPED stream (the round-14
       // watch item: dd_ngram_jaccard_lsh_capped's 30→100× tail rode

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.CrossHash
 import org.apache.spark.sql.expressions.Window
@@ -634,61 +634,31 @@ ORDER BY new_doc, corpus_doc"""
   // dd_clusters — duplicate clusters (connected components over pairs)
   // ------------------------------------------------------------------
 
-  /** Iteration cap for label propagation — a diameter bound, not a
-    * tuning knob: near-dup clusters are short chains (diameter ≪ 25)
-    * because similarity is near-transitive at these thresholds.
+  /** Round cap for the star loop of [[connectedComponents]] — a
+    * safety bound, not a tuning knob: the loop converges in O(log n)
+    * rounds on any graph (9 on a 200-node path).
     */
   val ClusterMaxIters = 25
 
   /** The step a pipeline runs AFTER pair generation: group near-dup
     * pairs into clusters and elect one survivor per cluster
-    * (`cluster_rep` = min doc_id, `is_survivor` marks the kept doc).
-    *
-    * Connected components via min-label propagation: every doc starts
-    * labeled with itself; each round pushes labels across LSH-pair
-    * edges (both directions) and keeps the per-doc min; fixpoint =
-    * every doc labeled with its component's min id. Iterative Spark
-    * idioms demonstrated: driver loop over lazy plans, convergence
-    * check on a count, and eager `localCheckpoint` per round so
-    * lineage doesn't grow exponentially. Each round is one equi-join
-    * + one groupBy — at 100 TB the same loop runs with the edge list
-    * hash-partitioned once and reused; for adversarial graphs (long
-    * chains) swap in large-star/small-star, which this fixture's
-    * short-chain clusters don't need.
+    * (`cluster_rep` = min doc_id, `is_survivor` marks the kept doc),
+    * through the one CC operator [[clusters]].
     */
-  def ddClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    // checkpoint the pair list BEFORE the symmetric union — both union
-    // branches would otherwise re-run the whole LSH query
-    val pairs = ddMinhashLsh(spark, sfDir)
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(true)
-    val edges = pairs.unionByName(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst")
-    var labels = docs(spark, sfDir)
-      .select(col("doc_id"), col("doc_id").as("lbl"))
-      .localCheckpoint(true)
-    var converged = false
-    var iters = 0
-    while (!converged && iters < ClusterMaxIters) {
-      val prop = labels.join(edges, col("doc_id") === col("src"))
-        .select(col("dst").as("doc_id"), col("lbl"))
-      val hop = labels.unionByName(prop)
-        .groupBy(col("doc_id")).agg(min(col("lbl")).as("lbl"))
-      // pointer jumping: also adopt the label OF my label, so chains
-      // collapse in O(log diameter) rounds instead of O(diameter)
-      val parents = hop.select(col("doc_id").as("lbl"),
-        col("lbl").as("parent"))
-      val next = hop.join(parents, Seq("lbl"), "left")
-        .select(col("doc_id"),
-          least(col("lbl"), coalesce(col("parent"), col("lbl"))).as("lbl"))
-        .localCheckpoint(true)
-      val changed = next.as("n").join(labels.as("o"), "doc_id")
-        .filter(col("n.lbl") < col("o.lbl")).limit(1).count()
-      labels = next
-      converged = changed == 0
-      iters += 1
-    }
+  def ddClusters(spark: SparkSession, sfDir: String): DataFrame =
+    ddClustersCfg(spark, sfDir, Bands, R)
+
+  /** The one connected-components operator: `(doc_id, cluster_rep,
+    * cluster_size, is_survivor)` for every node of the one-column
+    * `nodes` frame, where `cluster_rep` is the min id of the node's
+    * component under the `pairs` edges (two id columns, either
+    * direction), ordered by `doc_id`. Every cluster query of the
+    * dedup, graph, media and embedding families ends here;
+    * `driverBytes` is [[connectedComponents]]' bound.
+    */
+  def clusters(nodes: DataFrame, pairs: DataFrame,
+      driverBytes: Option[Long] = None): DataFrame = {
+    val (labels, _) = connectedComponents(nodes, pairs, driverBytes)
     val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lbl")
       .select(col("doc_id"), col("lbl").as("cluster_rep"),
@@ -697,15 +667,12 @@ ORDER BY new_doc, corpus_doc"""
       .orderBy(col("doc_id"))
   }
 
-  /** Alternating large-star/small-star connected components (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond", SoCC'14
-    * — public literature): the adversarial-graph fallback the
-    * min-label loop in [[ddClusters]] documents. Min-label + pointer
-    * jumping is O(log diameter) rounds but each round's join fans a
-    * hot label out to every member of a giant component; the star
-    * alternation keeps every intermediate edge set bounded by the
-    * input edge count and converges in O(log n) rounds on ANY graph,
-    * long chains included.
+  /** Connected-component labels: alternating large-star/small-star
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC'14 — public literature), finished on the driver when the
+    * edge set is small. The star alternation keeps every intermediate
+    * edge set bounded by the input edge count and converges in
+    * O(log n) rounds on ANY graph, long chains included.
     *
     * Per round (edges kept directed larger→smaller):
     *  - large-star: every node's strictly-larger neighbors re-point at
@@ -714,15 +681,23 @@ ORDER BY new_doc, corpus_doc"""
     *    re-point at its min smaller-neighbor (one groupBy + join).
     * Fixpoint = a star forest, each component collapsed onto its min
     * node; labels read directly off the final edges. Convergence is
-    * an exact set-equality probe (two anti-join limit-1 counts — the
-    * same driver-synchronized O(log n) loop class as [[ddClusters]]).
+    * an exact set-equality probe (a count, then an anti-join limit-1
+    * count).
+    *
+    * Driver finish: when the distinct edges take at most `driverBytes`
+    * (`edges.schema.defaultSize` per edge; default: the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, Spark's own bound for a
+    * relation the driver may hold; `0` or `-1` keeps the star rounds),
+    * one collect hands them to a union-find that builds the same star
+    * forest as a local relation, in zero rounds.
     *
     * Returns (labels `doc_id → lbl` covering every node, rounds run).
-    * `PropertySpec` pins equality with union-find ground truth on
-    * random graphs, cliques, and a 200-node path (which converges in
-    * 3 rounds; the un-jumped propagation loop would need ~200).
+    * `PropertySpec` pins both paths to union-find ground truth on
+    * random graphs, cliques, and a 200-node path (which the star
+    * rounds collapse in 9; label propagation would need ~200).
     */
-  def connectedComponentsStar(nodes: DataFrame, pairs: DataFrame,
+  def connectedComponents(nodes: DataFrame, pairs: DataFrame,
+      driverBytes: Option[Long] = None,
       maxIters: Int = ClusterMaxIters): (DataFrame, Int) = {
     var edges = pairs.toDF("src", "dst")
       .select(greatest(col("src"), col("dst")).as("u"),
@@ -735,6 +710,13 @@ ORDER BY new_doc, corpus_doc"""
     var nEdges = edges.count()
     var rounds = 0
     var converged = nEdges == 0L
+    val bound = driverBytes.getOrElse(edges.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold)
+    if (!converged && nEdges * edges.schema.defaultSize <= bound) {
+      edges = starForest(edges)
+      converged = true
+    }
     while (!converged && rounds < maxIters) {
       // large-star over the symmetric view: m = min(N(u) ∪ {u});
       // every neighbor v > u re-points at m (m ≤ u < v keeps the
@@ -782,13 +764,38 @@ ORDER BY new_doc, corpus_doc"""
     (labels, rounds)
   }
 
-  /** [[ddClusters]] semantics computed by [[connectedComponentsStar]]
-    * — identical output (same oracle SQL), adversarial-graph-safe
-    * mechanism. Ships as its own query so the fallback is
-    * hash-verified end-to-end, not just property-tested.
+  /** The star loop's fixpoint for the collected `edges` (u > v): union-
+    * find rooted at each component's min id, then one `u → min` row
+    * per non-min node, as a local relation with `edges.schema`. The
+    * ids stay the collected objects, so their types are unchanged.
+    */
+  private def starForest(edges: DataFrame): DataFrame = {
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.contains(r)) r = parent(r)
+      var c = x
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    def id(x: Any): Long = x.asInstanceOf[Number].longValue
+    edges.collect().foreach { e =>
+      val (a, b) = (find(e.get(0)), find(e.get(1)))
+      if (a != b) { if (id(a) < id(b)) parent(b) = a else parent(a) = b }
+    }
+    // every key is a non-root: union only ever re-points a root
+    val star = parent.keys.toSeq.map(u => Row(u, find(u)))
+    edges.sparkSession.createDataFrame(
+      java.util.Arrays.asList(star: _*), edges.schema)
+  }
+
+  /** [[ddClusters]] computed by the star rounds alone (a zero-byte
+    * driver bound) — identical output (same oracle SQL). Ships as its
+    * own query so the distributed path is hash-verified end-to-end,
+    * not just property-tested.
     */
   def ddClustersStar(spark: SparkSession, sfDir: String): DataFrame =
-    ddClustersStarCfg(spark, sfDir, Bands, R)
+    ddClustersCfg(spark, sfDir, Bands, R, driverBytes = Some(0L))
 
   /** [[ddClusters]] on the bucket-capped pair stream — the composition
     * tier a 100 TB dedup actually deploys. The round-13 100× soak
@@ -804,34 +811,23 @@ ORDER BY new_doc, corpus_doc"""
     * because capped pairs ⊆ uncapped pairs, the capped clustering
     * always REFINES the uncapped one (DedupSpec pins both properties
     * on the synthetic mega-family corpus the fixture cannot produce).
-    *
-    * Mechanism: star-CC ([[connectedComponentsStar]]) over the capped
-    * stream — the adversarial-graph-safe closure, since mega-bucket
-    * corpora are exactly where giant components would appear.
     */
   def ddClustersCapped(spark: SparkSession, sfDir: String): DataFrame =
-    ddClustersStarCfg(spark, sfDir, Bands, R, Some(LshMaxBucket))
+    ddClustersCfg(spark, sfDir, Bands, R, Some(LshMaxBucket))
 
-  /** [[ddClustersStar]] at ANY banding dial and bucket cap —
+  /** [[ddClusters]] at ANY banding dial and bucket cap —
     * ScaleSoak's handle for measuring the LSH granularity rule (see
     * [[ddMinhashLshCfg]]); the shipped queries pin (Bands × R,
     * uncapped) and (Bands × R, [[LshMaxBucket]]) for the oracle
     * proofs.
     */
-  private[graft] def ddClustersStarCfg(spark: SparkSession, sfDir: String,
-      nBands: Int, nRows: Int,
-      maxBucket: Option[Int] = None): DataFrame = {
+  private[graft] def ddClustersCfg(spark: SparkSession, sfDir: String,
+      nBands: Int, nRows: Int, maxBucket: Option[Int] = None,
+      driverBytes: Option[Long] = None): DataFrame = {
     val pairs = ddMinhashLshCfg(spark, sfDir, nBands, nRows, maxBucket)
       .select(col("doc_a"), col("doc_b"))
       .localCheckpoint(true)
-    val (labels, _) = connectedComponentsStar(
-      docs(spark, sfDir).select(col("doc_id")), pairs)
-    val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "lbl")
-      .select(col("doc_id"), col("lbl").as("cluster_rep"),
-        col("cluster_size"),
-        (col("doc_id") === col("lbl")).as("is_survivor"))
-      .orderBy(col("doc_id"))
+    clusters(docs(spark, sfDir).select(col("doc_id")), pairs, driverBytes)
   }
 
   /** Oracle closure over ANY LSH pair body: transitive closure of
@@ -1604,15 +1600,7 @@ ORDER BY vec_a, vec_b"""
         cos.as("c"))
       .filter(col("c") >= CosineMin)
       .select(col("doc_a"), col("doc_b"))
-    val (labels, _) =
-      connectedComponentsStar(e.select(col("vec_id")), pairs)
-    val sizes = labels.groupBy(col("lbl"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "lbl")
-      .select(col("doc_id"), col("lbl").as("cluster_rep"),
-        col("cluster_size"),
-        (col("doc_id") === col("lbl")).as("is_survivor"))
-      .orderBy(col("doc_id"))
+    clusters(e.select(col("vec_id")), pairs)
   }
 
   // LAZY: this val reaches into Similarity, whose init can re-enter
@@ -1713,15 +1701,7 @@ ORDER BY vec_a, vec_b"""
         cos.as("c"))
       .filter(col("c") >= CosineMin)
       .select(col("doc_a"), col("doc_b"))
-    val (labels, _) =
-      connectedComponentsStar(e.select(col("vec_id")), pairs)
-    val sizes = labels.groupBy(col("lbl"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "lbl")
-      .select(col("doc_id"), col("lbl").as("cluster_rep"),
-        col("cluster_size"),
-        (col("doc_id") === col("lbl")).as("is_survivor"))
-      .orderBy(col("doc_id"))
+    clusters(e.select(col("vec_id")), pairs)
   }
 
   /** At the shipped exhaustive dial the ANN assignment is

@@ -346,11 +346,11 @@ ORDER BY d.doc_id"""
   /** Weakly-connected components — the graph-tier form of the engine's
     * CC capability (dedup and media clustering already run it over
     * similarity pair streams; this runs it over citation edges, where
-    * a component is a topic/mirror neighborhood): star-CC
-    * ([[Dedup.connectedComponentsStar]] — ONE implementation across
-    * all three pair sources) over the symmetrized edge set, with the
-    * same output contract as dd_clusters (rep = min id, size,
-    * is_survivor). Oracle composes the SAME recursive-CTE closure
+    * a component is a topic/mirror neighborhood): the one CC operator
+    * ([[Dedup.clusters]], shared by every pair source) over the
+    * symmetrized edge set, with the same output contract as
+    * dd_clusters (rep = min id, size, is_survivor). Oracle composes
+    * the SAME recursive-CTE closure
     * fragment ([[Dedup.ddClustersClosureSql]]) over the shared
     * gedges CTEs — the fixpoint semantics literally cannot drift from
     * the dedup family's.
@@ -372,15 +372,7 @@ ORDER BY d.doc_id"""
         greatest(col("src"), col("dst")).as("doc_b"))
       .distinct()
       .localCheckpoint(true)
-    val (labels, _) = Dedup.connectedComponentsStar(
-      nodes0.select(col("doc_id")), pairs)
-    val sizes = labels.groupBy(col("lbl"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "lbl")
-      .select(col("doc_id"), col("lbl").as("cluster_rep"),
-        col("cluster_size"),
-        (col("doc_id") === col("lbl")).as("is_survivor"))
-      .orderBy(col("doc_id"))
+    Dedup.clusters(nodes0.select(col("doc_id")), pairs)
   }
 
   lazy val grComponentsSql: String = Dedup.ddClustersClosureSql(

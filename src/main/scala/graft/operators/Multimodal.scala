@@ -783,38 +783,31 @@ SELECT doc_a, doc_b, hamming FROM nd_pairs ORDER BY doc_a, doc_b"""
 
   /** Media duplicate clusters: connected components over the
     * [[mmNearDup]] pair graph — the dd_clusters contract applied to
-    * perceptual signatures, computed on the SAME large-star/small-star
-    * machinery ([[graft.operators.Dedup.connectedComponentsStar]]), so
-    * one CC implementation serves text and media dedup alike. Output
-    * matches the dd_clusters shape: every signed doc labeled with its
-    * component min, cluster sizes, min-id survivor election.
+    * perceptual signatures, computed by the one CC operator
+    * ([[Dedup.clusters]]), so one implementation serves text and
+    * media dedup alike. Output matches the dd_clusters shape: every
+    * signed doc labeled with its component min, cluster sizes, min-id
+    * survivor election.
     *
     * Scale: pair generation is the banded equi-join (never all-pairs);
-    * CC is O(log n) rounds bounded by the qualifying-pair count —
-    * duplicate-media graphs are near-clique per asset, exactly the
-    * shape the star alternation bounds.
+    * CC is a driver union-find while the pairs fit the broadcast
+    * bound, else O(log n) star rounds bounded by the qualifying-pair
+    * count — duplicate-media graphs are near-clique per asset, exactly
+    * the shape the star alternation bounds.
     */
   def mmClusters(spark: SparkSession, sfDir: String): DataFrame =
     mmClustersCfg(spark, sfDir, None)
 
   /** [[mmClusters]] over the pair stream at ANY bucket cap — the
     * shipped queries pin uncapped and [[MmMaxBucket]] for the oracle
-    * proofs (the ddClustersStarCfg discipline).
+    * proofs (the ddClustersCfg discipline).
     */
   private[graft] def mmClustersCfg(spark: SparkSession, sfDir: String,
       maxBucket: Option[Int]): DataFrame = {
     val pairs = nearDupPairsOfCfg(signatures(spark, sfDir), maxBucket)
       .select(col("doc_a"), col("doc_b"))
       .localCheckpoint(true)
-    val (labels, _) = graft.operators.Dedup.connectedComponentsStar(
-      signatures(spark, sfDir).select(col("doc_id")), pairs)
-    val sizes = labels.groupBy(col("lbl"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "lbl")
-      .select(col("doc_id"), col("lbl").as("cluster_rep"),
-        col("cluster_size"),
-        (col("doc_id") === col("lbl")).as("is_survivor"))
-      .orderBy(col("doc_id"))
+    Dedup.clusters(signatures(spark, sfDir).select(col("doc_id")), pairs)
   }
 
   /** Recursive-closure oracle over ANY nd_pairs body — ONE copy,

@@ -894,17 +894,18 @@ ${out}_sc AS (
 
   /** Oracle-side twin of one [[kmUpdate]]: emits `<out>_comp` and
     * `<out>` (cent_id, cv, cn) from an assignment CTE of `dim`-wide
-    * vectors.
+    * vectors; `materialized` declares `<out>` `AS MATERIALIZED`, for
+    * chains that read each round's centroids more than once.
     */
   private[graft] def kmUpdateSql(out: String, assigned: String,
-      dim: Int = Dim): String = s"""
+      dim: Int = Dim, materialized: Boolean = false): String = s"""
 ${out}_comp AS (
   SELECT a.cell, r.i AS pos,
     SUM(CAST(floor(a.v[r.i] * CAST($KmFp AS DOUBLE) + 0.5) AS BIGINT)) AS s,
     COUNT(*) AS n
   FROM $assigned a CROSS JOIN range(1, ${dim + 1}) r(i)
   GROUP BY a.cell, r.i
-), $out AS (
+), $out AS ${if (materialized) "MATERIALIZED " else ""}(
   SELECT cent_id, cv, ${dotSql("cv", "cv")} AS cn FROM (
     SELECT cell AS cent_id,
       list(CAST(s AS DOUBLE) / (CAST(n AS DOUBLE) * $KmFp) ORDER BY pos) AS cv
@@ -1611,13 +1612,14 @@ ORDER BY query_id, rank"""
       val rounds = (1 to PqIters).map { i =>
         val prev = if (i == 1) s"${pfx}seeds$b" else s"${pfx}b${b}c${i - 1}"
         kmAssignSql(s"${pfx}b${b}a$i", prev, s"${pfx}sub$b") + "," +
-          kmUpdateSql(s"${pfx}b${b}c$i", s"${pfx}b${b}a$i", PqSubDim)
+          kmUpdateSql(s"${pfx}b${b}c$i", s"${pfx}b${b}a$i", PqSubDim,
+            materialized = true)
       }.mkString(",")
       s"""${pfx}sub$b AS (
   SELECT vec_id, r[$lo:$hi] AS v,
     ${dotSql(s"(r[$lo:$hi])", s"(r[$lo:$hi])")} AS nrm
   FROM $src
-), ${pfx}seeds$b AS (
+), ${pfx}seeds$b AS MATERIALIZED (
   SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM ${pfx}sub$b
   WHERE vec_id >= $RpqSeedBase AND vec_id < ${RpqSeedBase + PqK}
 ),$rounds,${kmAssignSql(s"${pfx}fin$b", s"${pfx}b${b}c$PqIters", s"${pfx}sub$b")}"""
@@ -1633,14 +1635,15 @@ ORDER BY query_id, rank"""
   private lazy val residPrefixSql: String = {
     val kmRounds = (1 to KmIters).map { i =>
       val prev = if (i == 1) "rkseeds" else s"rkc${i - 1}"
-      kmAssignSql(s"rka$i", prev) + "," + kmUpdateSql(s"rkc$i", s"rka$i")
+      kmAssignSql(s"rka$i", prev) + "," +
+        kmUpdateSql(s"rkc$i", s"rka$i", materialized = true)
     }.mkString(",")
-    s"""rkseeds AS (
+    s"""rkseeds AS MATERIALIZED (
   SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
   WHERE vec_id >= $NQueries AND vec_id < ${NQueries + IvfCells}
-),$kmRounds, rcents AS (
+),$kmRounds, rcents AS MATERIALIZED (
   SELECT cent_id, cv, cn FROM rkc$KmIters
-), ${ivfScoredAssignedSql("rq", "rcents")}, resid AS (
+), ${ivfScoredAssignedSql("rq", "rcents")}, resid AS MATERIALIZED (
   SELECT a.vec_id, a.cell,
     list_transform(range(1, ${Dim + 1}), i -> a.v[i] - c.cv[i]) AS r
   FROM assigned_rq a JOIN rcents c ON c.cent_id = a.cell
@@ -2701,12 +2704,12 @@ GROUP BY e.label ORDER BY label"""
     * semantic-dedup survivor election step ("keep one doc per
     * meaning", where `dd_exact` keeps one per byte-form). PURE
     * composition: the edges ARE `dd_embed_cosine`'s pairs and the
-    * components come from the SAME large-star/small-star loop all
-    * three cluster families share (O(log n) rounds on any graph
-    * shape, property-tested once in DedupSpec).
+    * components come from the one CC operator every cluster family
+    * shares ([[Dedup.clusters]], property-tested once in
+    * PropertySpec).
     *
     * Scale shape: the block-matrix pair join is dd_embed_cosine's
-    * documented posture; the CC loop shuffles edge lists (bounded by
+    * documented posture; the CC step moves edge lists (bounded by
     * the near-dup rate), never vectors.
     */
   def simSemanticClusters(spark: SparkSession, sfDir: String): DataFrame = {
@@ -2718,23 +2721,15 @@ GROUP BY e.label ORDER BY label"""
 
   /** The cluster/census tail shared by the exact baseline
     * ([[simSemanticClusters]]) and the ANN-fronted form
-    * ([[simSemanticClustersAnn]]): threshold-surviving edges → the
-    * SAME large-star/small-star CC loop all three cluster families
-    * share → sizes + survivor election. ONE copy, so the two entries
-    * can only differ in how the near-dup pair graph is discovered.
+    * ([[simSemanticClustersAnn]]): threshold-surviving edges →
+    * [[Dedup.clusters]] over every vector, keyed `vec_id`. ONE copy,
+    * so the entries can only differ in how the near-dup pair graph is
+    * discovered.
     */
   private def semanticClustersTail(spark: SparkSession, sfDir: String,
-      pairs: DataFrame): DataFrame = {
-    val (labels, _) = graft.operators.Dedup.connectedComponentsStar(
-      embeddings(spark, sfDir).select(col("vec_id")), pairs)
-    val sizes = labels.groupBy(col("lbl"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, Seq("lbl"))
-      .select(col("doc_id").as("vec_id"), col("lbl").as("cluster_rep"),
-        col("cluster_size"),
-        (col("doc_id") === col("lbl")).as("is_survivor"))
-      .orderBy(col("vec_id"))
-  }
+      pairs: DataFrame): DataFrame =
+    Dedup.clusters(embeddings(spark, sfDir).select(col("vec_id")), pairs)
+      .withColumnRenamed("doc_id", "vec_id")
 
   /** The CC-closure + census + survivor tail every cluster oracle
     * shares, picking up from a `sel(vec_a, vec_b)` edge CTE — ONE

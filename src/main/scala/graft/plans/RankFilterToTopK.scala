@@ -112,9 +112,9 @@ object RankFilterToTopK extends Rule[LogicalPlan] {
     TopKPerGroup(part, order, k, rank.toAttribute, mode, inner)
 
   /** Cost sanity gate: decline the rewrite when available statistics
-    * estimate MORE groups than the partial phase can hold times
-    * `spark.graft.topk.costGateFactor` (default 8) — past that point
-    * the partial heaps flush pass-through on every batch and the
+    * estimate MORE groups than [[CostGateFactor]] times what the
+    * partial phase can hold — past that point the partial heaps flush
+    * pass-through on every batch and the
     * WindowGroupLimit plan this rule strips does strictly less work,
     * so keeping the built-in plan is the right call. The estimate is
     * the product of the partition attributes' distinct counts
@@ -141,15 +141,14 @@ object RankFilterToTopK extends Rule[LogicalPlan] {
     }
   }
 
+  private val CostGateFactor = 8
+
   private def withinCostGate(part: Seq[Expression],
       inner: LogicalPlan): Boolean = {
     val flushGroups = conf
       .getConfString("spark.graft.topk.partialFlushGroups", "65536").toInt
-    val factor = conf
-      .getConfString("spark.graft.topk.costGateFactor", "8").toInt
-    require(factor >= 1, "costGateFactor must be >= 1")
     estimatedGroups(part, inner)
-      .forall(_ <= BigInt(flushGroups) * factor)
+      .forall(_ <= BigInt(flushGroups) * CostGateFactor)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {

@@ -201,36 +201,52 @@ class PropertySpec extends SparkSpec {
     (0 until n).map(i => i.toLong -> find(i).toLong).toMap
   }
 
-  private def starLabels(n: Int, edges: Seq[(Long, Long)]): (Map[Long, Long], Int) = {
+  /** The two finishes of [[Dedup.connectedComponents]]: the session's
+    * broadcast bound (these graphs go to the driver union-find) and a
+    * zero-byte bound (star rounds only).
+    */
+  private val bounds = Seq(None, Some(0L))
+
+  private def ccInputs(n: Int, edges: Seq[(Long, Long)]) = {
     import spark.implicits._
     val nodes = (0L until n.toLong).toDF("doc_id")
     val pairs =
       if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("src", "dst")
       else edges.toDF("src", "dst")
-    val (labels, rounds) = Dedup.connectedComponentsStar(nodes, pairs)
+    (nodes, pairs)
+  }
+
+  private def starLabels(n: Int, edges: Seq[(Long, Long)],
+      driverBytes: Option[Long]): (Map[Long, Long], Int) = {
+    val (nodes, pairs) = ccInputs(n, edges)
+    val (labels, rounds) =
+      Dedup.connectedComponents(nodes, pairs, driverBytes)
     (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
   }
 
   test("large-star/small-star components equal union-find on random graphs") {
-    for (seed <- Seq(1, 7, 13)) {
+    for (bound <- bounds; seed <- Seq(1, 7, 13)) {
       val r = new Random(seed)
       val n = 60
       val edges = Seq.fill(50)(
         (r.nextInt(n).toLong, r.nextInt(n).toLong)).filter(e => e._1 != e._2)
-      val (got, _) = starLabels(n, edges)
-      assert(got == unionFind(n, edges), s"seed $seed")
+      val (got, _) = starLabels(n, edges, bound)
+      assert(got == unionFind(n, edges), s"seed $seed, bound $bound")
     }
   }
 
   test("large-star/small-star collapses a 200-node path in O(log n) rounds") {
     val n = 200
     val edges = (0L until (n - 1).toLong).map(i => (i, i + 1))
-    val (got, rounds) = starLabels(n, edges)
-    assert(got == (0L until n.toLong).map(_ -> 0L).toMap)
+    val path = (0L until n.toLong).map(_ -> 0L).toMap
+    val (got, rounds) = starLabels(n, edges, Some(0L))
+    assert(got == path)
     info(s"path(200) converged in $rounds rounds")
     // the whole point of the fallback: a diameter-200 chain must NOT
     // take ~diameter rounds
     assert(rounds <= 10, s"took $rounds rounds")
+    val (driver, rounds0) = starLabels(n, edges, None)
+    assert(driver == path && rounds0 == 0)
   }
 
   test("large-star/small-star handles cliques, isolated nodes, empty graphs") {
@@ -239,11 +255,28 @@ class PropertySpec extends SparkSpec {
       i <- 0 until 5; j <- i + 1 until 5
     } yield (base + i, base + j)
     val edges = clique(0L) ++ clique(5L)
-    val (got, _) = starLabels(13, edges)
-    assert(got == unionFind(13, edges))
-    val (empty, rounds0) = starLabels(4, Seq.empty)
-    assert(empty == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L))
-    assert(rounds0 == 0)
+    for (bound <- bounds) {
+      val (got, _) = starLabels(13, edges, bound)
+      assert(got == unionFind(13, edges), s"bound $bound")
+      val (empty, rounds0) = starLabels(4, Seq.empty, bound)
+      assert(empty == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L))
+      assert(rounds0 == 0)
+    }
+  }
+
+  test("below the driver bound, clusters starts as many jobs for one edge as for a 200-node path") {
+    // the same partition layout at both sizes, and every hop listed in
+    // both directions: a one-row input would let the optimizer drop the
+    // edge distinct, a job the graph's shape has nothing to do with
+    def jobs(n: Int): Int = {
+      val nodes = spark.range(0, n, 1, 4).toDF("doc_id")
+      val hops = spark.range(0, n - 1, 1, 4)
+      val pairs = hops.select(col("id"), col("id") + 1)
+        .union(hops.select(col("id") + 1, col("id")))
+      jobsStarted(Dedup.clusters(nodes, pairs).collect())
+    }
+    val (one, path) = (jobs(2), jobs(200))
+    assert(one == path, s"2 nodes: $one jobs, 200-node path: $path jobs")
   }
 
   test("dd_containment finds planted quotes and equals brute force on random docs") {

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,6 +16,34 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = Sessions.local(cpus = 4)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Spark jobs started on this thread while `body` runs. A marker job
+    * outside the probe runs last; the listener bus delivers its start
+    * after every event posted before it.
+    */
+  def jobsStarted(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.probe"
+    val started = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("probe") => started.incrementAndGet()
+          case Some("marker") => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "probe")
+      try body finally sc.setLocalProperty(key, "marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener bus stalled")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
 
   override protected def afterAll(): Unit = {
     // session is shared across suites — do not stop it here

@@ -1,11 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.schema.Tables
 
@@ -32,34 +28,6 @@ class TablesSpec extends SparkSpec {
   test("an unknown table name throws instead of inferring") {
     val e = intercept[IllegalArgumentException](Tables.read(spark, sf(), "posts"))
     assert(e.getMessage.contains("posts"))
-  }
-
-  /** Spark jobs started on this thread while `body` runs. A marker job
-    * outside the probe runs last; the listener bus delivers its start
-    * after every event posted before it.
-    */
-  private def jobsStarted(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.tables.probe"
-    val started = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some("probe") => started.incrementAndGet()
-          case Some("marker") => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "probe")
-      try body finally sc.setLocalProperty(key, "marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(key, null)
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener bus stalled")
-      started.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("a declared read starts no Spark job; an inferred read starts one") {

@@ -310,7 +310,6 @@ class TopKSpec extends SparkSpec {
       Filter(LessThanOrEqual(rank.toAttribute, Literal(10)), win)
     }
     spark.conf.set("spark.graft.topk.partialFlushGroups", "1000")
-    spark.conf.set("spark.graft.topk.costGateFactor", "8")
     try {
       // 1e9 estimated groups >> 8 * 1000: the pass-through partial
       // phase would do strictly more work than WindowGroupLimit — keep
@@ -327,7 +326,6 @@ class TopKSpec extends SparkSpec {
         s"low-cardinality estimate must rewrite:\n$accepted")
     } finally {
       spark.conf.unset("spark.graft.topk.partialFlushGroups")
-      spark.conf.unset("spark.graft.topk.costGateFactor")
     }
   }
 
