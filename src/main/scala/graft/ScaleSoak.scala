@@ -180,10 +180,10 @@ object ScaleSoak {
       // 120 s negative) and dd_semdedup_ksqrt (the exact winner).
       "dd_semdedup_ann_klin" -> ((s, dir, m) => {
         val k = graft.operators.Similarity.IvfCells * m
-        graft.operators.Dedup.ddSemDedupAnnCfg(s, dir, cells = k,
-          nCoarse = math.max(graft.operators.Dedup.SemDedupCoarse,
-            Math.toIntExact(Math.round(math.sqrt(k.toDouble)))),
-          probe = 4)
+        val nCoarse = math.max(graft.operators.Dedup.SemDedupCoarse,
+          Math.toIntExact(Math.round(math.sqrt(k.toDouble))))
+        graft.operators.Dedup.ddSemDedupCfg(s, dir, cells = k,
+          assign = graft.operators.Similarity.kmAssignAnn(_, _, nCoarse, 4))
       }),
       // the composed IVF+PQ serving index: candidates ∝ probe/cells of
       // the CODE table (never the vectors) — the α readout says the

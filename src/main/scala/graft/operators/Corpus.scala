@@ -1526,9 +1526,7 @@ FROM g ORDER BY ctx_len"""
   def cpDecontamEmbed(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Determinism.r6
     val gdot = graft.functions.DotProduct.dot _
-    val e = Dedup.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", gdot(col("v"), col("v")))
+    val e = Similarity.base(spark, sfDir)
     val evalSide = e.filter(col("vec_id") % EmbedEvalMod === 0)
       .select(col("vec_id").as("eval_id"), col("v").as("ve"),
         col("nrm").as("ne"))

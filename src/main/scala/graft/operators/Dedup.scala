@@ -1452,9 +1452,7 @@ ORDER BY i.doc_a, i.doc_b"""
     val blockPairs = broadcast(
       (for { i <- 0 until B; j <- i until B } yield (i, j))
         .toDF("blk_a", "blk_b"))
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", gdot(col("v"), col("v")))
+    val e = Similarity.base(spark, sfDir)
       .withColumn("blk", pmod(col("vec_id"), lit(B)).cast("int"))
     val a = e.select(col("vec_id").as("vec_a"), col("v").as("va"),
       col("nrm").as("na"), col("blk").as("blk_a")).join(blockPairs, "blk_a")
@@ -1485,9 +1483,7 @@ ORDER BY i.doc_a, i.doc_b"""
     */
   def ddEmbedCosineAllPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val gdot = graft.functions.DotProduct.dot _
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", gdot(col("v"), col("v")))
+    val e = Similarity.base(spark, sfDir)
     val a = e.select(col("vec_id").as("vec_a"), col("v").as("va"),
       col("nrm").as("na"))
     val b = e.select(col("vec_id").as("vec_b"), col("v").as("vb"),
@@ -1547,8 +1543,8 @@ ORDER BY vec_a, vec_b"""
     * WITHIN a cell — the published recipe that made embedding dedup
     * affordable at web scale, because the pair stream is bounded by
     * Σ cell² instead of corpus²): k-means cells come from
-    * [[Similarity.kmAssign]]/[[Similarity.kmUpdate]] — the SAME
-    * trained chain sim_kmeans/sim_ivf_trained ship (seeds, rounds,
+    * [[Similarity.lloyd]] — the SAME trained chain
+    * sim_kmeans/sim_ivf_trained ship (seeds, rounds,
     * fixed-point component sums: one copy of the semantics) — then
     * within-cell pairs at the [[CosineMin]] threshold (the SAME
     * threshold as the exact global pass, so dd_embed_cosine is this
@@ -1566,32 +1562,29 @@ ORDER BY vec_a, vec_b"""
   def ddSemDedup(spark: SparkSession, sfDir: String): DataFrame =
     ddSemDedupCfg(spark, sfDir, Similarity.IvfCells)
 
-  /** [[ddSemDedup]] with the cell count as a parameter — the scale
-    * dial of this family (SemDeDup holds CELL SIZE constant by
-    * growing k with the corpus; a fixed bucket cap would be the wrong
-    * mitigation here because k-means cells grow ∝ n/k with the
-    * corpus, unlike LSH buckets). The shipped query pins
-    * [[Similarity.IvfCells]] for the oracle; ScaleSoak measures the
-    * dial (fixed k vs k ∝ corpus) on the 1–100× axis.
+  /** [[ddSemDedup]] with the cell count and the assignment pass as
+    * parameters — the ONE SemDeDup body. `cells` is the scale dial of
+    * this family (SemDeDup holds CELL SIZE constant by growing k with
+    * the corpus; a fixed bucket cap would be the wrong mitigation here
+    * because k-means cells grow ∝ n/k with the corpus, unlike LSH
+    * buckets). The shipped query pins [[Similarity.IvfCells]] for the
+    * oracle; ScaleSoak measures the dial (fixed k vs k ∝ corpus) on
+    * the 1–100× axis. `assign` runs every assignment pass (both Lloyd
+    * rounds and the final cell assignment): [[Similarity.kmAssign]],
+    * or `Similarity.kmAssignAnn(_, _, nCoarse, probe)` for the ANN
+    * forms ([[ddSemDedupAnn]]).
     */
   private[graft] def ddSemDedupCfg(spark: SparkSession, sfDir: String,
-      cells: Int): DataFrame = {
-    val gdot = graft.functions.DotProduct.dot _
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", gdot(col("v"), col("v")))
-      .localCheckpoint(true)
-    var cents = e.filter(col("vec_id") >= Similarity.NQueries &&
-        col("vec_id") < Similarity.NQueries + cells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
-    for (_ <- 1 to Similarity.KmIters)
-      cents = Similarity.kmUpdate(Similarity.kmAssign(e, cents))
-    cents = cents.localCheckpoint(true)
-    val assigned = Similarity.kmAssign(e, cents)
+      cells: Int, assign: (DataFrame, DataFrame) => DataFrame =
+        Similarity.kmAssign): DataFrame = {
+    val e = Similarity.base(spark, sfDir).localCheckpoint(true)
+    val cents = Similarity.lloyd(e,
+      Similarity.seedCents(e, Similarity.NQueries, cells),
+      Similarity.KmIters, assign).localCheckpoint(true)
+    val assigned = assign(e, cents)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
       .localCheckpoint(true)
-    val cos = gdot(col("a.v"), col("b.v")) /
+    val cos = graft.functions.DotProduct.dot(col("a.v"), col("b.v")) /
       sqrt(col("a.nrm") * col("b.nrm"))
     val pairs = assigned.as("a").join(assigned.as("b"),
         col("a.cell") === col("b.cell") &&
@@ -1609,30 +1602,34 @@ ORDER BY vec_a, vec_b"""
   // life of the JVM (the round-11 Filters object-init lesson, now in
   // its cross-object form; measured as an order-dependent
   // cp_scrub_spans failure in the full suite run).
-  lazy val ddSemDedupSql: String = {
-    import Similarity.{kmAssignSql, kmUpdateSql, NQueries, IvfCells,
-      KmIters}
-    val rounds = (1 to KmIters).map { i =>
-      val prev = if (i == 1) "sdseeds" else s"sdc${i - 1}"
-      kmAssignSql(s"sda$i", prev) + "," + kmUpdateSql(s"sdc$i", s"sda$i")
-    }.mkString(",")
+  lazy val ddSemDedupSql: String =
+    semDedupSql("sd", Similarity.kmAssignSql)
+
+  /** Oracle twin of [[ddSemDedupCfg]] at [[Similarity.IvfCells]]
+    * cells, with CTE names under `pfx` and `assign(out, cents, src)`
+    * as every assignment pass ([[Similarity.kmAssignSql]] or a
+    * [[Similarity.kmAssignAnnSql]] dial) — ONE copy for the exact form
+    * and the probed ANN dial.
+    */
+  private def semDedupSql(pfx: String,
+      assign: (String, String, String) => String): String = {
+    import Similarity.{seedsSql, lloydSql, NQueries, IvfCells, KmIters}
     val prefix = s"""e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), n AS (
   SELECT vec_id, v, ${dotSql("v", "v")} AS nrm FROM e
-), sdseeds AS (
-  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
-  WHERE vec_id >= $NQueries AND vec_id < ${NQueries + IvfCells}
-),$rounds,${kmAssignSql("sd_assign", s"sdc$KmIters")}, sdpairs AS (
+), ${seedsSql(s"${pfx}seeds", "n", NQueries, IvfCells)},${lloydSql(pfx,
+      s"${pfx}seeds", KmIters, assign = assign)},${assign(s"${pfx}_assign",
+      s"${pfx}c$KmIters", "n")}, ${pfx}pairs AS (
   SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-  FROM sd_assign a JOIN sd_assign b
+  FROM ${pfx}_assign a JOIN ${pfx}_assign b
     ON b.cell = a.cell AND a.vec_id < b.vec_id
   WHERE ${dotSql("a.v", "b.v")} / sqrt(a.nrm * b.nrm) >= $CosineMin
-), sdnodes AS (
+), ${pfx}nodes AS (
   SELECT vec_id AS doc_id FROM embeddings
 ), """
-    ddClustersClosureSql("  SELECT doc_a, doc_b FROM sdpairs",
-      prefixCtes = prefix, nodes = "sdnodes")
+    ddClustersClosureSql(s"  SELECT doc_a, doc_b FROM ${pfx}pairs",
+      prefixCtes = prefix, nodes = s"${pfx}nodes")
   }
 
   // ------------------------------------------------------------------
@@ -1666,43 +1663,8 @@ ORDER BY vec_a, vec_b"""
     * the exact k ∝ √n winner on the 1–100× axis.
     */
   def ddSemDedupAnn(spark: SparkSession, sfDir: String): DataFrame =
-    ddSemDedupAnnCfg(spark, sfDir, Similarity.IvfCells,
-      SemDedupCoarse, SemDedupCoarse)
-
-  /** [[ddSemDedupAnn]] with (cells, nCoarse, probe) as parameters —
-    * the k ∝ n scale dial: at 100× the soak runs cells = 16m,
-    * nCoarse = √cells, probe = 4, paying ~2√k dots per vector where
-    * the exact dial pays k.
-    */
-  private[graft] def ddSemDedupAnnCfg(spark: SparkSession, sfDir: String,
-      cells: Int, nCoarse: Int, probe: Int): DataFrame = {
-    val gdot = graft.functions.DotProduct.dot _
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", gdot(col("v"), col("v")))
-      .localCheckpoint(true)
-    var cents = e.filter(col("vec_id") >= Similarity.NQueries &&
-        col("vec_id") < Similarity.NQueries + cells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
-    for (_ <- 1 to Similarity.KmIters)
-      cents = Similarity.kmUpdate(
-        Similarity.kmAssignAnn(e, cents, nCoarse, probe))
-    cents = cents.localCheckpoint(true)
-    val assigned = Similarity.kmAssignAnn(e, cents, nCoarse, probe)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-      .localCheckpoint(true)
-    val cos = gdot(col("a.v"), col("b.v")) /
-      sqrt(col("a.nrm") * col("b.nrm"))
-    val pairs = assigned.as("a").join(assigned.as("b"),
-        col("a.cell") === col("b.cell") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"),
-        cos.as("c"))
-      .filter(col("c") >= CosineMin)
-      .select(col("doc_a"), col("doc_b"))
-    clusters(e.select(col("vec_id")), pairs)
-  }
+    ddSemDedupCfg(spark, sfDir, Similarity.IvfCells,
+      Similarity.kmAssignAnn(_, _, SemDedupCoarse, SemDedupCoarse))
 
   /** At the shipped exhaustive dial the ANN assignment is
     * argmin-identical to the exact one, so the oracle IS the exact
@@ -1730,37 +1692,12 @@ ORDER BY vec_a, vec_b"""
     * moves.
     */
   def ddSemDedupAnnDial(spark: SparkSession, sfDir: String): DataFrame =
-    ddSemDedupAnnCfg(spark, sfDir, Similarity.IvfCells,
-      SemDedupCoarse, SemDedupDialProbe)
+    ddSemDedupCfg(spark, sfDir, Similarity.IvfCells,
+      Similarity.kmAssignAnn(_, _, SemDedupCoarse, SemDedupDialProbe))
 
-  lazy val ddSemDedupAnnDialSql: String = {
-    import Similarity.{kmAssignAnnSql, kmUpdateSql, NQueries, IvfCells,
-      KmIters}
-    val rounds = (1 to KmIters).map { i =>
-      val prev = if (i == 1) "adseeds" else s"adc${i - 1}"
-      kmAssignAnnSql(s"ada$i", prev, SemDedupCoarse,
-        SemDedupDialProbe) + "," +
-        kmUpdateSql(s"adc$i", s"ada$i")
-    }.mkString(",")
-    val prefix = s"""e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), n AS (
-  SELECT vec_id, v, ${dotSql("v", "v")} AS nrm FROM e
-), adseeds AS (
-  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
-  WHERE vec_id >= $NQueries AND vec_id < ${NQueries + IvfCells}
-),$rounds,${kmAssignAnnSql("ad_assign", s"adc$KmIters",
-      SemDedupCoarse, SemDedupDialProbe)}, adpairs AS (
-  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-  FROM ad_assign a JOIN ad_assign b
-    ON b.cell = a.cell AND a.vec_id < b.vec_id
-  WHERE ${dotSql("a.v", "b.v")} / sqrt(a.nrm * b.nrm) >= $CosineMin
-), adnodes AS (
-  SELECT vec_id AS doc_id FROM embeddings
-), """
-    ddClustersClosureSql("  SELECT doc_a, doc_b FROM adpairs",
-      prefixCtes = prefix, nodes = "adnodes")
-  }
+  lazy val ddSemDedupAnnDialSql: String =
+    semDedupSql("ad", Similarity.kmAssignAnnSql(_, _, SemDedupCoarse,
+      SemDedupDialProbe, _))
 
   // ------------------------------------------------------------------
   // dd_cosine_sweep — threshold tuning table for embedding dedup

@@ -63,7 +63,11 @@ object Similarity {
       when(DotProduct.dot(v, typedlit(p)) > 0, lit(1 << j)).otherwise(lit(0))
     }.reduce(_ + _)
 
-  private def base(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The (vec_id, v, nrm) embedding frame: doubles plus each vector's
+    * squared norm through [[DotProduct]]'s fold — ONE copy for every
+    * embedding operator on the Spark side.
+    */
+  private[graft] def base(spark: SparkSession, sfDir: String): DataFrame = {
     embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", DotProduct.dot(col("v"), col("v")))
@@ -211,10 +215,7 @@ ORDER BY query_id, rank"""
     */
   def simIvfAnn(spark: SparkSession, sfDir: String): DataFrame = {
     val e = base(spark, sfDir)
-    val cents = e.filter(col("vec_id") >= NQueries &&
-        col("vec_id") < NQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
+    val cents = seedCents(e, NQueries, IvfCells)
     ivfServe(e, cents)
   }
 
@@ -303,10 +304,7 @@ ORDER BY query_id, rank"""
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), n AS (
   SELECT vec_id, v, ${dotSql("v", "v")} AS nrm FROM e
-), cents AS (
-  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
-  WHERE vec_id >= $NQueries AND vec_id < ${NQueries + IvfCells}
-), scored AS (
+), ${seedsSql("cents", "n", NQueries, IvfCells)}, scored AS (
   SELECT n.vec_id, n.v, n.nrm, c.cent_id,
     ${dotSql("n.v", "c.cv")} / sqrt(n.nrm * c.cn) AS cs
   FROM n CROSS JOIN cents c
@@ -377,10 +375,7 @@ ORDER BY query_id, rank"""
     */
   def simIvfTuning(spark: SparkSession, sfDir: String): DataFrame = {
     val e = base(spark, sfDir).cache()
-    val cents = e.filter(col("vec_id") >= NQueries &&
-        col("vec_id") < NQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
+    val cents = seedCents(e, NQueries, IvfCells)
     val bf = simBruteforceTopk(spark, sfDir)
       .select(col("query_id"), col("neighbor_id")).cache()
     IvfTuneProbes.map { p =>
@@ -478,10 +473,6 @@ ORDER BY nprobe"""
   // eager init would read KmIters = 0 and emit zero Lloyd rounds (the
   // round-11 Filters object-init lesson, intra-object edition).
   lazy val simIvfTrainedSql: String = {
-    val rounds = (1 to KmIters).map { i =>
-      val prev = if (i == 1) "seeds" else s"c${i - 1}"
-      kmAssignSql(s"a$i", prev) + "," + kmUpdateSql(s"c$i", s"a$i")
-    }.mkString(",")
     val tails = IvfTuneProbes.map(p =>
       ivfServeTailSql(s"k$p", p, "scored_k", "assigned_k").trim)
     val arms = IvfTuneProbes.map { p =>
@@ -502,10 +493,8 @@ FROM ncells"""
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), n AS (
   SELECT vec_id, v, ${dotSql("v", "v")} AS nrm FROM e
-), seeds AS (
-  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
-  WHERE vec_id >= $NQueries AND vec_id < ${NQueries + IvfCells}
-),$rounds,
+), ${seedsSql("seeds", "n", NQueries, IvfCells)},${lloydSql("", "seeds",
+      KmIters)},
 ${ivfScoredAssignedSql("k", s"c$KmIters")},
 ${tails.mkString(", ")}, bf AS (
   $simBruteforceTopkSql
@@ -595,23 +584,38 @@ FROM q ORDER BY vec_id"""
     */
   val KmFp: Long = 1L << 24
 
-  /** Kmeans-TRAINED IVF centroid table: [[KmIters]] Lloyd rounds from
-    * the [[IvfCells]] deterministic seeds (the [[simKmeans]] chain —
-    * fixed-point integer component sums, bitwise-stable under any
-    * partitioning). Pinned with an eager localCheckpoint: the ≤k-row
-    * table is broadcast from several consumers, and an unpinned plan
-    * re-runs the whole Lloyd chain per reference (measured
-    * 4.7 s → 3.7 s at sf0.1 on sim_ivf_trained). ONE copy for the
-    * trained-dial sweep and the residual-encoded IVF+PQ tier.
+  /** The seed centroid table (cent_id, cv, cn): the vectors of a
+    * (vec_id, v, nrm) frame with vec_ids [lo, lo+k) — a deterministic
+    * corpus sample, so both engines start from identical centroids
+    * (the oracle twin is [[seedsSql]]).
     */
-  private def trainedCents(e: DataFrame): DataFrame = {
-    var cents = e.filter(col("vec_id") >= NQueries &&
-        col("vec_id") < NQueries + IvfCells)
+  private[graft] def seedCents(vecs: DataFrame, lo: Int, k: Int): DataFrame =
+    vecs.filter(col("vec_id") >= lo && col("vec_id") < lo + k)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"),
         col("nrm").as("cn"))
-    for (_ <- 1 to KmIters) cents = kmUpdate(kmAssign(e, cents))
-    cents.localCheckpoint(true)
-  }
+
+  /** Lloyd's k-means: `iters` rounds of `assign` then [[kmUpdate]]
+    * from `seeds`, returning the trained (cent_id, cv, cn) table — the
+    * ONE training loop on the Spark side (IVF cells, PQ codebooks,
+    * SemDeDup cells). `assign` is [[kmAssign]] or a two-level
+    * [[kmAssignAnn]]; the oracle twin is [[lloydSql]].
+    */
+  private[graft] def lloyd(vecs: DataFrame, seeds: DataFrame, iters: Int,
+      assign: (DataFrame, DataFrame) => DataFrame = kmAssign): DataFrame =
+    (1 to iters).foldLeft(seeds)((cents, _) => kmUpdate(assign(vecs, cents)))
+
+  /** Kmeans-TRAINED IVF centroid table: [[KmIters]] Lloyd rounds from
+    * the [[IvfCells]] deterministic seeds (fixed-point integer
+    * component sums, bitwise-stable under any partitioning). Pinned
+    * with an eager localCheckpoint: the ≤k-row table is broadcast from
+    * several consumers, and an unpinned plan re-runs the whole Lloyd
+    * chain per reference (measured 4.7 s → 3.7 s at sf0.1 on
+    * sim_ivf_trained). ONE copy for k-means training itself
+    * ([[simKmeans]]), the trained-dial sweep and the residual-encoded
+    * IVF+PQ tier.
+    */
+  private def trainedCents(e: DataFrame): DataFrame =
+    lloyd(e, seedCents(e, NQueries, IvfCells), KmIters).localCheckpoint(true)
 
   /** One assignment pass: every vector to its nearest centroid by
     * squared Euclidean distance, decomposed as |x|² − 2·x·c + |c|² so
@@ -734,9 +738,9 @@ FROM q ORDER BY vec_id"""
           vwin.getField("cv")) + vwin.getField("cn")).as("dist"))
   }
 
-  /** The training job SCALE.md's IVF note defers to: [[KmIters]]
-    * Lloyd rounds from the same deterministic seed sample
-    * [[simIvfAnn]] serves from, reported as per-centroid cell sizes,
+  /** The training job SCALE.md's IVF note defers to: [[trainedCents]]
+    * ([[KmIters]] Lloyd rounds from the same deterministic seed sample
+    * [[simIvfAnn]] serves from), reported as per-centroid cell sizes,
     * inertia (fixed-point-summed, parallelism-stable), and an
     * order-pinned component checksum. The trained table feeds
     * [[ivfServe]] unchanged — DedupSpec pins that plug-in.
@@ -744,18 +748,12 @@ FROM q ORDER BY vec_id"""
     * Scale shape per round: one broadcast of the (≤k-row) centroid
     * table, one map-side assignment with a partial-agg argmin, one
     * component aggregation whose shuffle is k × dim rows regardless of
-    * corpus size. Nothing iterates on the driver; `KmIters` controls
-    * plan depth (checkpoint between rounds past ~10, as dd_clusters
-    * does).
+    * corpus size. The trained table is pinned once (one eager
+    * localCheckpoint); `KmIters` controls plan depth.
     */
   def simKmeans(spark: SparkSession, sfDir: String): DataFrame = {
     val vecs = base(spark, sfDir)
-    val seeds = vecs.filter(col("vec_id") >= NQueries &&
-        col("vec_id") < NQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
-    var cents = seeds
-    for (_ <- 1 to KmIters) cents = kmUpdate(kmAssign(vecs, cents))
+    val cents = trainedCents(vecs)
     val fin = kmAssign(vecs, cents)
     val checksum = aggregate(
       zip_with(col("cv"),
@@ -894,23 +892,54 @@ ${out}_sc AS (
 
   /** Oracle-side twin of one [[kmUpdate]]: emits `<out>_comp` and
     * `<out>` (cent_id, cv, cn) from an assignment CTE of `dim`-wide
-    * vectors; `materialized` declares `<out>` `AS MATERIALIZED`, for
-    * chains that read each round's centroids more than once.
+    * vectors. Only [[lloydSql]] calls it.
     */
-  private[graft] def kmUpdateSql(out: String, assigned: String,
-      dim: Int = Dim, materialized: Boolean = false): String = s"""
+  private def kmUpdateSql(out: String, assigned: String,
+      dim: Int): String = s"""
 ${out}_comp AS (
   SELECT a.cell, r.i AS pos,
     SUM(CAST(floor(a.v[r.i] * CAST($KmFp AS DOUBLE) + 0.5) AS BIGINT)) AS s,
     COUNT(*) AS n
   FROM $assigned a CROSS JOIN range(1, ${dim + 1}) r(i)
   GROUP BY a.cell, r.i
-), $out AS ${if (materialized) "MATERIALIZED " else ""}(
+), $out AS MATERIALIZED (
   SELECT cent_id, cv, ${dotSql("cv", "cv")} AS cn FROM (
     SELECT cell AS cent_id,
       list(CAST(s AS DOUBLE) / (CAST(n AS DOUBLE) * $KmFp) ORDER BY pos) AS cv
     FROM ${out}_comp GROUP BY cell)
 )"""
+
+  /** Oracle-side twin of [[seedCents]]: the CTE `<out>` (cent_id, cv,
+    * cn) over the vec_ids [lo, lo+k) of a (vec_id, v, nrm) relation.
+    */
+  private[graft] def seedsSql(out: String, src: String, lo: Int,
+      k: Int): String = s"""$out AS MATERIALIZED (
+  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM $src
+  WHERE vec_id >= $lo AND vec_id < ${lo + k}
+)"""
+
+  /** Oracle-side twin of [[lloyd]]: `iters` rounds of `assign` CTEs
+    * `<pfx>a<i>` and [[kmUpdateSql]] centroid CTEs `<pfx>c<i>` from
+    * the `seeds` CTE over the `dim`-wide (vec_id, v, nrm) relation
+    * `src`; the trained table is `<pfx>c<iters>`. `assign(out, cents,
+    * src)` is [[kmAssignSql]] or a [[kmAssignAnnSql]] dial.
+    *
+    * The seed and every round's centroid CTE are declared
+    * `AS MATERIALIZED` (one policy, in [[seedsSql]] and
+    * [[kmUpdateSql]]): DuckDB inlines a plain CTE at every reference,
+    * and each round's centroids are read by the next assignment, its
+    * consumers and, through every later round, the whole chain again —
+    * inlined, the PQ/residual chains spilled ~18 GB per query. A plan
+    * hint only: the rows are the same.
+    */
+  private[graft] def lloydSql(pfx: String, seeds: String, iters: Int,
+      src: String = "n", dim: Int = Dim,
+      assign: (String, String, String) => String = kmAssignSql): String =
+    (1 to iters).map { i =>
+      val prev = if (i == 1) seeds else s"${pfx}c${i - 1}"
+      assign(s"${pfx}a$i", prev, src) + "," +
+        kmUpdateSql(s"${pfx}c$i", s"${pfx}a$i", dim)
+    }.mkString(",")
 
   // ------------------------------------------------------------------
   // sim_pq — product quantization (sub-block codebooks + codes)
@@ -962,12 +991,8 @@ ${out}_comp AS (
       seedLo: Int): Seq[(Int, DataFrame, DataFrame)] =
     Par.run((0 until PqM).map { b => () =>
       val sub = subOf(b)
-      var cb = sub
-        .filter(col("vec_id") >= seedLo && col("vec_id") < seedLo + PqK)
-        .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-      for (_ <- 1 to PqIters) cb = kmUpdate(kmAssign(sub, cb))
-      val pinned = cb.localCheckpoint(true)
+      val pinned = lloyd(sub, seedCents(sub, seedLo, PqK), PqIters)
+        .localCheckpoint(true)
       // the code table has exactly ONE consumer (the per-block join
       // into the served/audited code stream), so its checkpoint is
       // LAZY: no separate driver job — it materializes inside the
@@ -1020,11 +1045,7 @@ ${out}_comp AS (
     val vecs = base(spark, sfDir)
     val blocks = (0 until PqM).map { b =>
       val sub = pqSub(vecs, b)
-      var cents = sub
-        .filter(col("vec_id") >= NQueries && col("vec_id") < NQueries + PqK)
-        .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-          col("nrm").as("cn"))
-      for (_ <- 1 to PqIters) cents = kmUpdate(kmAssign(sub, cents))
+      val cents = lloyd(sub, seedCents(sub, NQueries, PqK), PqIters)
       kmAssign(sub, cents).select(col("vec_id"),
         (col("cell") - NQueries).as(s"code_$b"), col("dist").as(s"d_$b"))
     }
@@ -1036,36 +1057,10 @@ ${out}_comp AS (
       .orderBy(col("vec_id"))
   }
 
-  /** The shared PQ oracle chain — `e`, per-block sub-frames, seeds,
-    * Lloyd rounds and final assignments `fin0..fin{PqM-1}` (with the
-    * trained codebooks at `b{b}c{PqIters}`). ONE copy for the code
-    * table ([[simPqSql]]) and the ADC audit ([[simPqAdcSql]]).
-    */
-  private lazy val pqCtesSql: String = {
-    val blockCtes = (0 until PqM).map { b =>
-      val lo = b * PqSubDim + 1
-      val hi = (b + 1) * PqSubDim
-      val rounds = (1 to PqIters).map { i =>
-        val prev = if (i == 1) s"seeds$b" else s"b${b}c${i - 1}"
-        kmAssignSql(s"b${b}a$i", prev, s"sub$b") + "," +
-          kmUpdateSql(s"b${b}c$i", s"b${b}a$i", PqSubDim)
-      }.mkString(",")
-      s"""sub$b AS (
-  SELECT vec_id, v[$lo:$hi] AS v,
-    ${dotSql(s"(v[$lo:$hi])", s"(v[$lo:$hi])")} AS nrm
-  FROM e
-), seeds$b AS (
-  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM sub$b
-  WHERE vec_id >= $NQueries AND vec_id < ${NQueries + PqK}
-),$rounds,${kmAssignSql(s"fin$b", s"b${b}c$PqIters", s"sub$b")}"""
-    }.mkString(",")
-    s"""e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),$blockCtes"""
-  }
-
   lazy val simPqSql: String = {
-    s"""WITH $pqCtesSql
+    s"""WITH e AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+),${pqBlockTrainSql("e", "v", NQueries)}
 SELECT f0.vec_id,
   f0.cell - $NQueries AS code_0, f1.cell - $NQueries AS code_1,
   f2.cell - $NQueries AS code_2, f3.cell - $NQueries AS code_3,
@@ -1079,10 +1074,6 @@ ORDER BY f0.vec_id"""
   }
 
   lazy val simKmeansSql: String = {
-    val rounds = (1 to KmIters).map { i =>
-      val prev = if (i == 1) "seeds" else s"c${i - 1}"
-      kmAssignSql(s"a$i", prev) + "," + kmUpdateSql(s"c$i", s"a$i")
-    }.mkString(",")
     val checksum = s"""list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
       list_transform(range(1, len(c.cv) + 1), i -> c.cv[i] * i)),
       (acc, x) -> acc + x)"""
@@ -1090,10 +1081,8 @@ ORDER BY f0.vec_id"""
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), n AS (
   SELECT vec_id, v, ${dotSql("v", "v")} AS nrm FROM e
-), seeds AS (
-  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
-  WHERE vec_id >= $NQueries AND vec_id < ${NQueries + IvfCells}
-),$rounds,${kmAssignSql("fin", s"c$KmIters")},
+), ${seedsSql("seeds", "n", NQueries, IvfCells)},${lloydSql("", "seeds",
+      KmIters)},${kmAssignSql("fin", s"c$KmIters")},
 agg AS (
   SELECT cell AS cent_id, COUNT(*) AS n_assigned,
     SUM(CAST(floor(dist * 1000000.0 + 0.5) AS BIGINT)) AS ifp
@@ -1183,7 +1172,9 @@ ORDER BY a.cent_id"""
   FROM q CROSS JOIN b${b}c$PqIters c
 )"""
     }.mkString(", ")
-    s"""WITH $pqCtesSql,
+    s"""WITH e AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+),${pqBlockTrainSql("e", "v", NQueries)},
 codes AS (
   SELECT f0.vec_id, f0.cell AS cell_0, f1.cell AS cell_1,
     f2.cell AS cell_2, f3.cell AS cell_3
@@ -1302,10 +1293,7 @@ ORDER BY s.query_id"""
     * widest-probe stream the two-axis tuning grid filters per arm.
     */
   private def ivfPqScoredPr(vecs: DataFrame, probe: Int): DataFrame = {
-    val cents = vecs.filter(col("vec_id") >= NQueries &&
-        col("vec_id") < NQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
+    val cents = seedCents(vecs, NQueries, IvfCells)
     val assigned = ivfAssign(vecs, cents)
       .select(col("vec_id"), col("cell"))
     val probes = ivfProbeList(vecs.filter(col("vec_id") < NQueries)
@@ -1392,12 +1380,12 @@ ORDER BY s.query_id"""
   FROM q CROSS JOIN b${b}c$PqIters c
 )"""
     }.mkString(", ")
-    s"""$pqCtesSql, n AS (
+    s"""e AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+),${pqBlockTrainSql("e", "v", NQueries)}, n AS (
   SELECT vec_id, v, ${dotSql("v", "v")} AS nrm FROM e
-), icents AS (
-  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
-  WHERE vec_id >= $NQueries AND vec_id < ${NQueries + IvfCells}
-), ${ivfScoredAssignedSql("ipq", "icents")}, probes_ipq AS (
+), ${seedsSql("icents", "n", NQueries, IvfCells)},
+${ivfScoredAssignedSql("ipq", "icents")}, probes_ipq AS (
   SELECT vec_id AS query_id, cent_id AS cell$prSel FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id
       ORDER BY cs DESC, cent_id) AS pr
@@ -1592,37 +1580,27 @@ ORDER BY query_id, rank"""
       .select(col("query_id"), col("vec_id"), adc.as("adc"))
   }
 
-  /** Residual-chain oracle CTEs: IVF assignment (`assigned_rq`,
-    * cosine — the [[ivfAssign]] convention), residuals, per-block
-    * residual codebooks/codes (`rfin$b`, trained at `rb${b}c$PqIters`),
-    * query LUTs (`rlut$b`), the coarse q·c table (`qcr`), and the
-    * probed residual-ADC stream `scoredadc_rq`. Assumes `e`, `n`, `q`
-    * CTEs exist. ONE copy for the served ranking and the gain audit.
+  /** Per-block PQ training chain CTEs over the `vcol` vectors of
+    * `src`: sub-slices `${pfx}sub$b`, seeds (vec_ids [seedLo,
+    * seedLo+PqK)), the [[lloydSql]] rounds (trained codebook
+    * `${pfx}b${b}c$PqIters`) and the final assignment `${pfx}fin$b` —
+    * ONE copy for the raw codes (no prefix, src "e", seeds at
+    * [[NQueries]]), the residual codes (pfx "r", src "resid") and the
+    * OPQ-rotated codes (pfx "o", src "rres").
     */
-  /** Per-block PQ training chain CTEs over a (vec_id, …, r) frame
-    * `src`: sub-slices `${pfx}sub$b`, seeds, Lloyd rounds, and the
-    * final assignment `${pfx}fin$b` — ONE copy for the residual
-    * codes (pfx "r", src "resid") and the OPQ-rotated codes
-    * (pfx "o", src "rres").
-    */
-  private def pqBlockTrainSql(src: String, pfx: String): String =
+  private def pqBlockTrainSql(src: String, vcol: String, seedLo: Int,
+      pfx: String = ""): String =
     (0 until PqM).map { b =>
       val lo = b * PqSubDim + 1
       val hi = (b + 1) * PqSubDim
-      val rounds = (1 to PqIters).map { i =>
-        val prev = if (i == 1) s"${pfx}seeds$b" else s"${pfx}b${b}c${i - 1}"
-        kmAssignSql(s"${pfx}b${b}a$i", prev, s"${pfx}sub$b") + "," +
-          kmUpdateSql(s"${pfx}b${b}c$i", s"${pfx}b${b}a$i", PqSubDim,
-            materialized = true)
-      }.mkString(",")
-      s"""${pfx}sub$b AS (
-  SELECT vec_id, r[$lo:$hi] AS v,
-    ${dotSql(s"(r[$lo:$hi])", s"(r[$lo:$hi])")} AS nrm
+      val (sub, seeds) = (s"${pfx}sub$b", s"${pfx}seeds$b")
+      val rounds = lloydSql(s"${pfx}b$b", seeds, PqIters, sub, PqSubDim)
+      s"""$sub AS (
+  SELECT vec_id, $vcol[$lo:$hi] AS v,
+    ${dotSql(s"($vcol[$lo:$hi])", s"($vcol[$lo:$hi])")} AS nrm
   FROM $src
-), ${pfx}seeds$b AS MATERIALIZED (
-  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM ${pfx}sub$b
-  WHERE vec_id >= $RpqSeedBase AND vec_id < ${RpqSeedBase + PqK}
-),$rounds,${kmAssignSql(s"${pfx}fin$b", s"${pfx}b${b}c$PqIters", s"${pfx}sub$b")}"""
+), ${seedsSql(seeds, sub, seedLo, PqK)},$rounds,${kmAssignSql(
+        s"${pfx}fin$b", s"${pfx}b${b}c$PqIters", sub)}"""
     }.mkString(",")
 
   /** Residual-chain PREFIX CTEs: trained coarse cells (`rkseeds` →
@@ -1632,26 +1610,25 @@ ORDER BY query_id, rank"""
     * ([[residCtesSql]]) and the OPQ-rotated variant
     * ([[simOpqGainSql]]). Assumes `n` exists.
     */
-  private lazy val residPrefixSql: String = {
-    val kmRounds = (1 to KmIters).map { i =>
-      val prev = if (i == 1) "rkseeds" else s"rkc${i - 1}"
-      kmAssignSql(s"rka$i", prev) + "," +
-        kmUpdateSql(s"rkc$i", s"rka$i", materialized = true)
-    }.mkString(",")
-    s"""rkseeds AS MATERIALIZED (
-  SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM n
-  WHERE vec_id >= $NQueries AND vec_id < ${NQueries + IvfCells}
-),$kmRounds, rcents AS MATERIALIZED (
+  private lazy val residPrefixSql: String =
+    s"""${seedsSql("rkseeds", "n", NQueries, IvfCells)},${lloydSql("rk",
+      "rkseeds", KmIters)}, rcents AS MATERIALIZED (
   SELECT cent_id, cv, cn FROM rkc$KmIters
 ), ${ivfScoredAssignedSql("rq", "rcents")}, resid AS MATERIALIZED (
   SELECT a.vec_id, a.cell,
     list_transform(range(1, ${Dim + 1}), i -> a.v[i] - c.cv[i]) AS r
   FROM assigned_rq a JOIN rcents c ON c.cent_id = a.cell
 )"""
-  }
 
+  /** Residual-chain oracle CTEs: IVF assignment (`assigned_rq`,
+    * cosine — the [[ivfAssign]] convention), residuals, per-block
+    * residual codebooks/codes (`rfin$b`, trained at `rb${b}c$PqIters`),
+    * query LUTs (`rlut$b`), the coarse q·c table (`qcr`), and the
+    * probed residual-ADC stream `scoredadc_rq`. Assumes `e`, `n`, `q`
+    * CTEs exist. ONE copy for the served ranking and the gain audit.
+    */
   private def residCtesSql(probe: Int): String = {
-    val blockCtes = pqBlockTrainSql("resid", "r")
+    val blockCtes = pqBlockTrainSql("resid", "r", RpqSeedBase, "r")
     val lutCtes = (0 until PqM).map { b =>
       val lo = b * PqSubDim + 1
       val hi = (b + 1) * PqSubDim
@@ -2125,7 +2102,9 @@ SELECT '$tag' AS variant,
     (SELECT COUNT(*) FROM scored_$tag) / 1000000.0)""")} AS mean_abs_err,
   ${r6Sql(s"""(CAST((SELECT MAX(err_u) FROM scored_$tag) AS DOUBLE) /
     1000000.0)""")} AS max_abs_err"""
-    s"""WITH $pqCtesSql, n AS (
+    s"""WITH e AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+),${pqBlockTrainSql("e", "v", NQueries)}, n AS (
   SELECT vec_id, v, ${dotSql("v", "v")} AS nrm FROM e
 ), q AS (
   SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $NQueries
@@ -2328,7 +2307,7 @@ ORDER BY variant"""
   SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $NQueries
 ), $residPrefixSql, rres AS (
   SELECT vec_id, cell, ${opqRotateSql("r")} AS r FROM resid
-),${pqBlockTrainSql("rres", "o")}, ocodes AS (
+),${pqBlockTrainSql("rres", "r", RpqSeedBase, "o")}, ocodes AS (
   SELECT f0.vec_id, f0.cell AS cell_0, f1.cell AS cell_1,
     f2.cell AS cell_2, f3.cell AS cell_3
   FROM ofin0 f0
@@ -2671,10 +2650,7 @@ GROUP BY e.label ORDER BY label"""
     */
   def simLabelKnnAnn(spark: SparkSession, sfDir: String): DataFrame = {
     val e = base(spark, sfDir).cache()
-    val cents = e.filter(col("vec_id") >= NQueries &&
-        col("vec_id") < NQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
+    val cents = seedCents(e, NQueries, IvfCells)
     val assigned = ivfAssign(e, cents)
     val probes = ivfProbeList(
       e.select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -2815,10 +2791,7 @@ ORDER BY l.vec_id"""
   private[graft] def semanticClusterPairsAnn(spark: SparkSession,
       sfDir: String, probe: Int, cells: Int = IvfCells): DataFrame = {
     val e = base(spark, sfDir).cache()
-    val cents = e.filter(col("vec_id") >= NQueries &&
-        col("vec_id") < NQueries + cells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
+    val cents = seedCents(e, NQueries, cells)
     val assigned = ivfAssign(e, cents)
     val probes = ivfProbeList(
       e.select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -3224,10 +3197,7 @@ ORDER BY s.query_id"""
     */
   def simHybridRrfAnn(spark: SparkSession, sfDir: String): DataFrame = {
     val e = base(spark, sfDir).cache()
-    val cents = e.filter(col("vec_id") >= NQueries &&
-        col("vec_id") < NQueries + IvfCells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
+    val cents = seedCents(e, NQueries, IvfCells)
     val assigned = ivfAssign(e, cents)
     val probes = ivfProbeList(
       e.filter(col("vec_id") < NQueries)
@@ -3634,11 +3604,7 @@ ORDER BY c.prefix_dim, c.query_id"""
     * inliner from expanding the chain 2^K-fold).
     */
   def simKcenter(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val n = e.select(col("vec_id"), col("v"),
-      DotProduct.dot(col("v"), col("v")).as("nrm"))
-      .localCheckpoint(true)
+    val n = base(spark, sfDir).localCheckpoint(true)
     def d2(cv: Column, cn: Column): Column =
       col("nrm") + cn - lit(2.0) * DotProduct.dot(col("v"), cv)
     val c0 = n.filter(col("vec_id") === 0)

@@ -849,8 +849,8 @@ class DedupSpec extends SparkSpec {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    Dedup.ddSemDedupAnnCfg(spark, sf("sf0.01"),
-        cells = Similarity.IvfCells, nCoarse = 4, probe = 1)
+    Dedup.ddSemDedupCfg(spark, sf("sf0.01"), cells = Similarity.IvfCells,
+        assign = Similarity.kmAssignAnn(_, _, 4, 1))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._2).values.foreach { members =>
         assert(members.map(m => find(m._1)).distinct.length == 1,

@@ -66,4 +66,16 @@ class SessionsSpec extends SparkSpec {
     }
     assert(writers.isEmpty, writers.mkString("\n"))
   }
+
+  // k-means trains through Similarity.lloyd / lloydSql, one trainer per
+  // engine: no other file runs its own update rounds
+  test("no file under src/main but Similarity.scala runs a k-means " +
+    "update round") {
+    val trainers = mainSources.filterNot(_.endsWith("Similarity.scala"))
+      .filter { f =>
+        val src = Files.readString(f)
+        src.contains("kmUpdate(") || src.contains("kmUpdateSql(")
+      }
+    assert(trainers.isEmpty, trainers.mkString("\n"))
+  }
 }
