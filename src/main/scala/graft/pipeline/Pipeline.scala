@@ -16,20 +16,26 @@ import graft.transform.Enrich
   * isolated (one failure logs and continues, reference script.py:351-353).
   *
   * Stage shape per subreddit:
-  *   extract (source fetch) → guard → transform (Enrich, lazy Catalyst
-  *   plan) → load posts (K1) → top-10 by score → per-post comment fetch
-  *   (sequential, isolated, collected on the driver) → one K2 load per
-  *   subreddit → daily stats agg → upsert (K3).
+  *   extract (source fetch) → transform (Enrich, lazy Catalyst plan,
+  *   cached) → guard on the cached batch's count → load posts (K1) →
+  *   top-10 by score → one comment fetch for those posts (one call, one
+  *   collect on the driver) → one K2 load per subreddit → daily stats
+  *   agg → upsert (K3).
   *
-  * The per-post comment fan-out is driver-side by design, mirroring the
-  * API's sequential pagination (reference script.py:310-317); everything
-  * else is distributed. Each post's comments are collected inside that
-  * post's fail-soft guard and loaded together after the loop: one K2
-  * load costs a fixed handful of Spark jobs (existing-id scan, anti-join,
-  * write) whatever its size, and the rows are tiny — at most
-  * `topPosts × commentLimit` per subreddit. This deviates from the
+  * The comment stage asks the source for every top post's comments at
+  * once ([[RedditSource.fetchCommentsOf]]) and collects that one frame
+  * inside one fail-soft guard. What a failure skips depends on the
+  * binding. The file-backed sources serve the list with one read of
+  * their comment table, so the read is the unit of isolation: a failed
+  * scan skips this subreddit's comments, and its posts and stats still
+  * load. The API binding keeps the reference's per-post calls
+  * (reference script.py:310-317), each guarded on its own, so a failed
+  * post skips only that post. The rows are tiny — at most
+  * `topPosts × commentLimit` per subreddit — and load in one K2 write:
+  * a K2 load costs a fixed handful of Spark jobs (existing-id scan,
+  * anti-join, write) whatever its size. This deviates from the
   * reference, which loads after every post (script.py:316): a crash
-  * mid-loop loads none of that subreddit's comments, and K2's keyed,
+  * mid-stage loads none of that subreddit's comments, and K2's keyed,
   * idempotent append makes a re-run exact.
   */
 class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
@@ -46,58 +52,56 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
   def runPipeline(subreddit: String, limit: Int = 50, sort: String = "hot",
       extractComments: Boolean = false, commentLimit: Int = 20,
       topPosts: Int = 10): Try[Long] = Try {
-    // E — extract (reference script.py:294)
-    val raw = source.fetchPosts(spark, subreddit, limit, sort)
-    if (raw.isEmpty) { // P10 guard (reference script.py:296-298)
-      log(s"$subreddit: no posts extracted"); 0L
-    } else {
-      // T — transform (reference script.py:301); lazy column graph,
-      // cached before fan-out: four downstream actions (load, count,
-      // top-k, stats) must all see ONE extract — a live source would
-      // otherwise be re-fetched per action with different results
-      val posts = Enrich.enrichPosts(raw)
-        .withColumn("extracted_at", Enrich.extractedAt())
-        .dropDuplicates("id")
-        .cache()
-      try {
+    // E — extract (reference script.py:294), T — transform (reference
+    // script.py:301): a lazy column graph, cached before anything reads
+    // it. Every action below (the guard's count, load, top-k, stats) must
+    // see ONE extract — a live source would otherwise be re-fetched per
+    // action with different results
+    val posts = Enrich.enrichPosts(
+        source.fetchPosts(spark, subreddit, limit, sort))
+      .withColumn("extracted_at", Enrich.extractedAt())
+      .dropDuplicates("id")
+      .cache()
+    try {
+      val n = posts.count()
+      if (n == 0) { // P10 guard (reference script.py:296-298)
+        log(s"$subreddit: no posts extracted"); 0L
+      } else {
         // L — load posts (reference script.py:308)
         Load.appendPosts(posts, warehouse)
-        val n = posts.count()
         log(s"$subreddit: loaded $n posts")
         if (extractComments) {
-          // top-k fan-out (reference script.py:310-317): ids to the
-          // driver deliberately — the comment fetch is a sequential API
-          // call
+          // top-k fan-out (reference script.py:310-317): the ids go to
+          // the driver, and the source serves all their comments in one
+          // frame
           val top = posts.orderBy(col("score").desc, col("id"))
             .limit(topPosts).select(col("id")).collect()
-            .map(_.get(0).toString)
-          // the collect is the post's one job, inside its guard: a
-          // failure that only surfaces at the action still skips just
-          // this post
-          val fetched = top.flatMap { postId =>
-            Try {
-              val c = source.fetchComments(spark, postId, commentLimit)
-              (c.schema, c.collect())
-            } match {
-              case Success(r) => Some(r)
-              case Failure(e) => log(s"comments for $postId failed: $e"); None
-            }
-          }
-          val rows = fetched.flatMap(_._2)
-          if (rows.nonEmpty) { // the reference's `if comments:` guard
-            Try {
-              Load.appendComments(
-                spark.createDataFrame(rows.toSeq.asJava, fetched.head._1)
-                  .withColumn("extracted_at", Enrich.extractedAt()),
-                warehouse)
-            }.failed.foreach(e => log(s"$subreddit: comment load failed: $e"))
+            .map(_.get(0).toString).toSeq
+          // the collect is the stage's action, inside its guard: a read
+          // that fails, eagerly or at the action, skips this subreddit's
+          // comments
+          Try {
+            val c = source.fetchCommentsOf(spark, top, commentLimit)
+            (c.schema, c.collect())
+          } match {
+            case Failure(e) => log(s"$subreddit: comment fetch failed: $e")
+            case Success((schema, rows)) if rows.nonEmpty =>
+              // rows.nonEmpty is the reference's `if comments:` guard
+              Try {
+                Load.appendComments(
+                  spark.createDataFrame(rows.toSeq.asJava, schema)
+                    .withColumn("extracted_at", Enrich.extractedAt()),
+                  warehouse)
+              }.failed.foreach(e =>
+                log(s"$subreddit: comment load failed: $e"))
+            case Success(_) =>
           }
         }
         // stats (reference script.py:320 → §2.9) + upsert K3
         Load.upsertStats(dailyStats(posts, subreddit), spark, warehouse)
         n
-      } finally posts.unpersist()
-    }
+      }
+    } finally posts.unpersist()
   } match {
     case s @ Success(_) => s
     case f @ Failure(e) => // per-subreddit isolation

@@ -73,33 +73,3 @@ object Schemas {
     StructField("top_post_score", IntegerType)
   ))
 }
-
-/** Typed views for API boundaries where compile-time field checks help
-  * (Dataset[Post]); the engine itself stays DataFrame-first.
-  */
-case class Post(
-    id: String,
-    title: String,
-    author: String,
-    subreddit: String,
-    score: Int,
-    upvote_ratio: Double,
-    num_comments: Int,
-    created_utc: java.sql.Timestamp,
-    selftext: Option[String],
-    url: String,
-    is_video: Boolean,
-    is_original_content: Boolean,
-    over_18: Boolean,
-    stickied: Boolean,
-    locked: Boolean)
-
-case class Comment(
-    id: String,
-    post_id: String,
-    author: String,
-    body: String,
-    score: Int,
-    created_utc: java.sql.Timestamp,
-    parent_id: Option[String],
-    is_submitter: Boolean)

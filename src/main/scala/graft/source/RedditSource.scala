@@ -1,6 +1,10 @@
 package graft.source
 
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model.RedditModel
 import graft.schema.Schemas
@@ -22,6 +26,10 @@ import graft.schema.Schemas
   *  - [[HttpApiSource]] — the live-listing binding with the HTTP
   *    transport injected; production passes a real client, tests pass
   *    a canned fake (no client library exists in this environment).
+  *
+  * The two offline bindings serve a list of posts' comments with one
+  * read of their comment table ([[RedditSource.firstComments]]); their
+  * per-post `fetchComments` is its one-post case.
   */
 trait RedditSource {
 
@@ -35,6 +43,32 @@ trait RedditSource {
     * (reference script.py:159-185).
     */
   def fetchComments(spark: SparkSession, postId: String, limit: Int): DataFrame
+
+  /** S2 over a list of posts: up to `limit` raw comments of every post
+    * in `postIds`, as one frame. The default is the API's shape: one
+    * [[fetchComments]] per post, each collected inside its own
+    * fail-soft guard (a post whose fetch fails, eagerly or at the
+    * action, is logged and skipped), returned as one local relation.
+    * The file-backed bindings override it with one read of their
+    * comment table.
+    */
+  def fetchCommentsOf(spark: SparkSession, postIds: Seq[String],
+      limit: Int): DataFrame = {
+    val fetched = postIds.flatMap { postId =>
+      Try {
+        val c = fetchComments(spark, postId, limit)
+        (c.schema, c.collect())
+      } match {
+        case Success(r) => Some(r)
+        case Failure(e) =>
+          Console.err.println(s"[source] comments for $postId failed: $e")
+          None
+      }
+    }
+    fetched.headOption.fold(spark.emptyDataFrame) { case (schema, _) =>
+      spark.createDataFrame(fetched.flatMap(_._2).asJava, schema)
+    }
+  }
 }
 
 private object RedditSource {
@@ -50,6 +84,21 @@ private object RedditSource {
       case _ => col("num_comments")
     }
     raw.orderBy(key.desc, col("id")).limit(limit)
+  }
+
+  /** The offline cut of S2 over a comment table: the rows of the posts
+    * in `postIds` (compared as strings) that have a body (P9 guard),
+    * then the first `limit` of each post by `id`.
+    */
+  def firstComments(comments: DataFrame, postIds: Seq[String],
+      limit: Int): DataFrame = {
+    val n = row_number().over(Window.partitionBy(col("post_id"))
+      .orderBy(col("id")))
+    comments.filter(col("post_id").cast("string").isin(postIds: _*) &&
+        col("body").isNotNull)
+      .withColumn("_n", n)
+      .filter(col("_n") <= limit)
+      .drop("_n")
   }
 }
 
@@ -73,12 +122,13 @@ class JsonDumpSource(postsPath: String, commentsPath: String)
 
   override def fetchComments(spark: SparkSession, postId: String,
       limit: Int): DataFrame =
-    spark.read
+    fetchCommentsOf(spark, Seq(postId), limit)
+
+  override def fetchCommentsOf(spark: SparkSession, postIds: Seq[String],
+      limit: Int): DataFrame =
+    RedditSource.firstComments(spark.read
       .schema(org.apache.spark.sql.types.StructType(Schemas.comments.fields.dropRight(1)))
-      .json(commentsPath)
-      .filter(col("post_id") === postId && col("body").isNotNull) // P9 guard
-      .orderBy(col("id"))
-      .limit(limit)
+      .json(commentsPath), postIds, limit)
 }
 
 /** The deterministic fixture "API" over the shared TPC-H-ish parquet. */
@@ -91,9 +141,10 @@ class FixtureSource(sfDir: String) extends RedditSource {
 
   override def fetchComments(spark: SparkSession, postId: String,
       limit: Int): DataFrame =
-    RedditModel.comments(spark, sfDir)
-      .filter(col("post_id").cast("string") === postId &&
-        col("body").isNotNull)
-      .orderBy(col("id"))
-      .limit(limit)
+    fetchCommentsOf(spark, Seq(postId), limit)
+
+  override def fetchCommentsOf(spark: SparkSession, postIds: Seq[String],
+      limit: Int): DataFrame =
+    RedditSource.firstComments(RedditModel.comments(spark, sfDir), postIds,
+      limit)
 }

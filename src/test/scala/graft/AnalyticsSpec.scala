@@ -917,7 +917,7 @@ class AnalyticsSpec extends SparkSpec {
       (2L, ts(0), 2L, "view", -2.0, null: String),     // negative + null
       (3L, ts(3), 1L, "view", 1.0, "not json"))        // malformed + gap
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = java.nio.file.Files.createTempDirectory("evdq").toString
+    val dir = tmpDir("evdq")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val r = Analytics.evDq(spark, dir).collect().head
     assert(r.getAs[Long]("n_events") == 4L)

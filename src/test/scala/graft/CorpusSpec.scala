@@ -254,12 +254,12 @@ class CorpusSpec extends SparkSpec {
     import java.nio.file.Files
     // "rare" appears in 1 doc, "common" in all 3; within doc 0 both
     // have tf=1, so idf must put rare first
-    val dir = Files.createTempDirectory("graft_tfidf_")
+    val dir = tmpDir("graft_tfidf_")
     Seq((0L, "rare common filler1"), (1L, "common other filler2"),
       (2L, "common more filler3"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val rows = graft.operators.TextAnalysis.taKeywords(spark, dir.toString)
+    val rows = graft.operators.TextAnalysis.taKeywords(spark, dir)
       .collect()
     val doc0 = rows.filter(_.getAs[Long]("doc_id") == 0L)
       .sortBy(_.getAs[Int]("rank"))
@@ -302,7 +302,7 @@ class CorpusSpec extends SparkSpec {
     // crafted corpus: doc 0 (0 % 97 == 0) is the eval doc; doc 1 embeds
     // the same 8-token run; doc 2 is clean; doc 3 too short for grams
     val evalRun = "alpha beta gamma delta epsilon zeta eta theta"
-    val dir = java.nio.file.Files.createTempDirectory("graft_decontam_")
+    val dir = tmpDir("graft_decontam_")
     Seq(
       (0L, s"$evalRun iota kappa"),
       (1L, s"noise before $evalRun and after"),
@@ -310,7 +310,7 @@ class CorpusSpec extends SparkSpec {
       (3L, "too short"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Corpus.cpDecontam(spark, dir.toString).collect()
+    val out = Corpus.cpDecontam(spark, dir).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Boolean]("is_eval"), r.getAs[Long]("eval_grams_hit"),
           r.getAs[Boolean]("contaminated")))).toMap
@@ -394,7 +394,7 @@ class CorpusSpec extends SparkSpec {
   test("cp_scrub_spans removes exactly the duplicated spans, in order") {
     import spark.implicits._
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_scrub_").toString
+    val dir = tmpDir("graft_scrub_")
     val shared = (1 to 8).map(i => s"x$i").mkString(" ")
     Seq(
       (0L, "a b c d e f g h i j"), // 10 tokens, all grams unique w/ doc 1 dup
@@ -426,7 +426,7 @@ class CorpusSpec extends SparkSpec {
     "cp_scrub_spans'") {
     import spark.implicits._
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_scrubmax_").toString
+    val dir = tmpDir("graft_scrubmax_")
     val passage = (1 to 12).map(i => s"p$i").mkString(" ")
     val blockA = (1 to 8).map(i => s"s$i").mkString(" ")
     val blockB = (1 to 8).map(i => s"t$i").mkString(" ")
@@ -499,7 +499,7 @@ class CorpusSpec extends SparkSpec {
     "scrub's") {
     import spark.implicits._
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_scrubkf_").toString
+    val dir = tmpDir("graft_scrubkf_")
     val blockA = (1 to 8).map(i => s"s$i").mkString(" ")
     Seq(
       (0L, "a b c d e f g h i j"), // first occurrence of every gram

@@ -561,8 +561,7 @@ class DedupSpec extends SparkSpec {
   private lazy val megaFamilyN = Dedup.LshMaxBucket + 16
   private lazy val megaFamilyDir: String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_capped_")
-      .toString
+    val dir = tmpDir("graft_capped_")
     val giant = (1 to megaFamilyN).map(i => (i.toLong,
       "the quick brown fox jumps over the lazy dog again", "tmpl"))
     val longText = (1 to 59).map(i => s"w$i").mkString(" ")

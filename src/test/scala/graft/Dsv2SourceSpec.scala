@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** The DataSource V2 connector: options → scan → rows through the real
   * DSv2 contract.
@@ -8,7 +8,7 @@ import java.nio.file.Files
 class Dsv2SourceSpec extends SparkSpec {
 
   private def writeDump(): String = {
-    val dir = Files.createTempDirectory("graft_dsv2_")
+    val dir = Paths.get(tmpDir("graft_dsv2_"))
     val posts = Seq(
       """{"id":"p1","title":"one","author":"a","subreddit":"python","score":50,"upvote_ratio":0.9,"num_comments":10,"created_utc":1735725600,"selftext":"b","url":"u","is_video":false,"is_original_content":true,"over_18":false,"stickied":false,"locked":false}""",
       """{"id":"p2","title":"two","author":"b","subreddit":"python","score":9,"upvote_ratio":0.7,"num_comments":1,"created_utc":"2025-01-02T10:00:00Z","selftext":null,"url":"u","is_video":false,"is_original_content":false,"over_18":false,"stickied":false,"locked":false}""",
@@ -95,7 +95,7 @@ class Dsv2SourceSpec extends SparkSpec {
   }
 
   test("DSv2 ISO-8601 timestamps keep sub-millisecond precision") {
-    val dir = Files.createTempDirectory("graft_dsv2_us_")
+    val dir = Paths.get(tmpDir("graft_dsv2_us_"))
     val p = dir.resolve("posts.json")
     Files.write(p,
       """{"id":"p1","title":"t","author":"a","subreddit":"python","score":1,"upvote_ratio":0.5,"num_comments":0,"created_utc":"2025-01-02T10:00:00.123456Z","selftext":"s","url":"u","is_video":false,"is_original_content":false,"over_18":false,"stickied":false,"locked":false}"""

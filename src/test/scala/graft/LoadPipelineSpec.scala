@@ -13,13 +13,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.model.RedditModel
 import graft.pipeline.Pipeline
 import graft.sink.Load
-import graft.source.FixtureSource
+import graft.source.{FixtureSource, RedditSource}
 
 /** Sink semantics (K1–K3) and pipeline orchestration (§2.14). */
 class LoadPipelineSpec extends SparkSpec {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft_wh_").toString
 
   test("K3 upsert replaces on (subreddit, date) and re-runs idempotently") {
     import spark.implicits._
@@ -312,17 +309,22 @@ class LoadPipelineSpec extends SparkSpec {
     assert(comments.select("extracted_at").collect().forall(!_.isNullAt(0)))
   }
 
-  /** Fixture source that records the post ids its comments were asked
-    * for, in call order, and lets a test rewrite each post's frame.
+  /** Delegating source around the fixture that records the post ids its
+    * comments were asked for, in call order, and lets a test rewrite each
+    * post's frame. It keeps the per-post `fetchCommentsOf` default.
     */
   private class RecordingSource(
       rewrite: (Int, DataFrame) => DataFrame = (_, c) => c)
-      extends FixtureSource(sf()) {
+      extends RedditSource {
+    private val inner = new FixtureSource(sf())
     val asked = ArrayBuffer.empty[String]
+    override def fetchPosts(spark: SparkSession, subreddit: String,
+        limit: Int, sort: String): DataFrame =
+      inner.fetchPosts(spark, subreddit, limit, sort)
     override def fetchComments(spark: SparkSession, postId: String,
         limit: Int): DataFrame = {
       asked += postId
-      rewrite(asked.size - 1, super.fetchComments(spark, postId, limit))
+      rewrite(asked.size - 1, inner.fetchComments(spark, postId, limit))
     }
   }
 
@@ -404,6 +406,57 @@ class LoadPipelineSpec extends SparkSpec {
     assert(src.asked.size == 3)
     assert(!Files.exists(java.nio.file.Paths.get(s"$wh/comments")))
     assert(spark.read.parquet(s"$wh/subreddit_stats").count() > 0)
+  }
+
+  test("pipeline's comment stage starts as many jobs for one top post as for ten") {
+    def jobs(topPosts: Int): Int = {
+      val wh = tmpDir()
+      val n = jobsStarted {
+        new Pipeline(spark, new FixtureSource(sf()), wh).runPipeline(
+          "1-URGENT", limit = 40, extractComments = true,
+          topPosts = topPosts, commentLimit = 5).get
+      }
+      assert(spark.read.parquet(s"$wh/comments").count() > 0)
+      n
+    }
+    assert(jobs(1) == jobs(10))
+  }
+
+  test("pipeline skips a subreddit's comments when the batched read fails at the action") {
+    val wh = tmpDir()
+    val src = new FixtureSource(sf()) {
+      override def fetchCommentsOf(spark: SparkSession, postIds: Seq[String],
+          limit: Int): DataFrame = {
+        val c = super.fetchCommentsOf(spark, postIds, limit)
+        c.withColumn("body",
+          raise_error(lit("comment scan failed")).cast(c.schema("body").dataType))
+      }
+    }
+    val logged = ArrayBuffer.empty[String]
+    val p = new Pipeline(spark, src, wh) {
+      override def log(msg: String): Unit = logged += msg
+    }
+    assert(p.runPipeline("1-URGENT", limit = 40, extractComments = true,
+      topPosts = 3, commentLimit = 5).get == 40)
+    assert(logged.exists(m => m.startsWith("1-URGENT: comment fetch failed") &&
+      m.contains("comment scan failed")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$wh/comments")))
+    assert(spark.read.parquet(s"$wh/posts").count() == 40)
+    assert(spark.read.parquet(s"$wh/subreddit_stats").count() > 0)
+  }
+
+  test("pipeline evaluates the extracted frame once per subreddit") {
+    val extracted = spark.sparkContext.longAccumulator("extracted rows")
+    val bump = udf(() => { extracted.add(1); true }).asNondeterministic()
+    val src = new FixtureSource(sf()) {
+      override def fetchPosts(spark: SparkSession, subreddit: String,
+          limit: Int, sort: String): DataFrame =
+        super.fetchPosts(spark, subreddit, limit, sort).filter(bump())
+    }
+    assert(new Pipeline(spark, src, tmpDir()).runPipeline("1-URGENT",
+      limit = 40, extractComments = true, topPosts = 3, commentLimit = 5)
+      .get == 40)
+    assert(extracted.value == 40)
   }
 
   test("pipeline isolates per-subreddit failures (fail-soft, §2.14)") {

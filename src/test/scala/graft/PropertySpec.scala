@@ -64,7 +64,7 @@ class PropertySpec extends SparkSpec {
   test("upsert key invariant: distinct (subreddit, date) after any merge") {
     import spark.implicits._
     import java.nio.file.Files
-    val wh = Files.createTempDirectory("graft_prop_").toString
+    val wh = tmpDir("graft_prop_")
     (1 to 3).foreach { i =>
       val batch = Seq.fill(20)((s"r/${rnd.nextInt(4)}",
         s"2025-01-0${1 + rnd.nextInt(5)}", rnd.nextInt(100).toLong))
@@ -85,7 +85,7 @@ class PropertySpec extends SparkSpec {
     val base = Seq.fill(120)(Array.fill(dim)((rnd.nextDouble() * 2 - 1).toFloat))
     val dups = base.take(15).map(v => v.map(x => x * 1.5f))
     val all = (base ++ dups).zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    val dir = Files.createTempDirectory("graft_prop_cos_").toString
+    val dir = tmpDir("graft_prop_cos_")
     all.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val blocked = Dedup.ddEmbedCosine(spark, dir).collect().map(_.toSeq)
@@ -153,7 +153,7 @@ class PropertySpec extends SparkSpec {
       us += (rnd.nextInt(45) + 1).toLong * 60L * 1000000L // 1-45 min steps
       (i.toLong, us, 1L + rnd.nextInt(6), "e", rnd.nextInt(10000) / 100.0)
     }
-    val dir = Files.createTempDirectory("graft_prop_sess_").toString
+    val dir = tmpDir("graft_prop_sess_")
     events.toDF("event_id", "ts", "user_id", "event_type", "value")
       // micros -> the fixture's TIMESTAMP_NTZ
       .withColumn("ts", expr("timestamp_micros(ts)").cast("timestamp_ntz"))
@@ -296,7 +296,7 @@ class PropertySpec extends SparkSpec {
     val all = (bases ++ quotes).zipWithIndex
       .map { case (ws, i) => (i.toLong, ws.mkString(" "), "en", "synth",
         ws.mkString(" ").length.toLong) }
-    val dir = Files.createTempDirectory("graft_prop_contain_").toString
+    val dir = tmpDir("graft_prop_contain_")
     all.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.ddContainment(spark, dir)
@@ -469,7 +469,7 @@ class PropertySpec extends SparkSpec {
         types(rnd.nextInt(types.length)),
         rnd.nextInt(100000) / 100.0, "{}")
     }
-    val dir = java.nio.file.Files.createTempDirectory("randev").toString
+    val dir = tmpDir("randev")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir

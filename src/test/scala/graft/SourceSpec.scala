@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.source.{FixtureSource, HttpApiSource, JsonDumpSource}
+import graft.source.{FixtureSource, HttpApiSource, JsonDumpSource, RedditSource}
 
 /** The JSON-dump source binding: schema enforcement + sort/limit
   * semantics of the extract contract (S1/S2).
@@ -10,14 +10,18 @@ import graft.source.{FixtureSource, HttpApiSource, JsonDumpSource}
 class SourceSpec extends SparkSpec {
 
   private def writeDump(): (String, String) = {
-    val dir = Files.createTempDirectory("graft_dump_")
+    val dir = Paths.get(tmpDir("graft_dump_"))
     val posts = Seq(
       """{"id":"p1","title":"hot one","author":"a","subreddit":"r/x","score":50,"upvote_ratio":0.9,"num_comments":10,"created_utc":"2025-01-01T10:00:00.000Z","selftext":"body","url":"u","is_video":false,"is_original_content":true,"over_18":false,"stickied":false,"locked":false}""",
       """{"id":"p2","title":"top one","author":"b","subreddit":"r/x","score":99,"upvote_ratio":0.8,"num_comments":2,"created_utc":"2025-01-02T10:00:00.000Z","selftext":null,"url":"u","is_video":false,"is_original_content":false,"over_18":false,"stickied":false,"locked":false}""",
       """{"id":"p3","title":"other sub","author":"c","subreddit":"r/y","score":5,"upvote_ratio":0.5,"num_comments":1,"created_utc":"2025-01-03T10:00:00.000Z","selftext":"s","url":"u","is_video":true,"is_original_content":false,"over_18":false,"stickied":false,"locked":false}""")
     val comments = Seq(
       """{"id":"c1","post_id":"p1","author":"z","body":"hi","score":3,"created_utc":"2025-01-01T11:00:00.000Z","parent_id":"p1","is_submitter":false}""",
-      """{"id":"c2","post_id":"p1","author":"z","body":null,"score":1,"created_utc":"2025-01-01T12:00:00.000Z","parent_id":"p1","is_submitter":false}""")
+      """{"id":"c2","post_id":"p1","author":"z","body":null,"score":1,"created_utc":"2025-01-01T12:00:00.000Z","parent_id":"p1","is_submitter":false}""",
+      """{"id":"c3","post_id":"p2","author":"y","body":null,"score":0,"created_utc":"2025-01-02T11:00:00.000Z","parent_id":"p2","is_submitter":false}""",
+      """{"id":"c4","post_id":"p2","author":"y","body":"a","score":2,"created_utc":"2025-01-02T12:00:00.000Z","parent_id":"p2","is_submitter":false}""",
+      """{"id":"c5","post_id":"p2","author":"x","body":"b","score":4,"created_utc":"2025-01-02T13:00:00.000Z","parent_id":"c4","is_submitter":true}""",
+      """{"id":"c6","post_id":"p2","author":"x","body":"c","score":1,"created_utc":"2025-01-02T14:00:00.000Z","parent_id":"c5","is_submitter":true}""")
     val pPath = dir.resolve("posts.json")
     val cPath = dir.resolve("comments.json")
     Files.write(pPath, posts.mkString("\n").getBytes("UTF-8"))
@@ -62,6 +66,43 @@ class SourceSpec extends SparkSpec {
     val src = new JsonDumpSource(p, c)
     val out = src.fetchComments(spark, "p1", 10).collect()
     assert(out.length == 1 && out.head.getAs[String]("id") == "c1")
+  }
+
+  /** Distinct comment ids per post, from one `fetchCommentsOf` read and
+    * from one `fetchComments` per post. The fixture repeats some comment
+    * ids, so both sides compare distinct ids.
+    */
+  private def idsPerPost(src: RedditSource, posts: Seq[String],
+      limit: Int): (Map[String, Seq[String]], Map[String, Seq[String]]) = {
+    def distinct(ids: Seq[Any]) = ids.map(_.toString).distinct.sorted
+    val batched = src.fetchCommentsOf(spark, posts, limit)
+      .select("post_id", "id").collect().toSeq
+      .groupBy(_.get(0).toString).map { case (p, rs) => p -> distinct(rs.map(_.get(1))) }
+    val perPost = posts.map(p => p -> distinct(src.fetchComments(spark, p, limit)
+      .select("id").collect().toSeq.map(_.get(0)))).filter(_._2.nonEmpty).toMap
+    (batched, perPost)
+  }
+
+  test("fetchCommentsOf on a dump cuts each post like its own fetchComments") {
+    val (p, c) = writeDump()
+    // p1: one comment plus a body-less one; p2: a body-less comment, then
+    // three that the limit cuts to two; p3: none
+    val (batched, perPost) =
+      idsPerPost(new JsonDumpSource(p, c), Seq("p1", "p2", "p3"), 2)
+    assert(batched == Map("p1" -> Seq("c1"), "p2" -> Seq("c4", "c5")))
+    assert(batched == perPost)
+  }
+
+  test("fetchCommentsOf on the fixture cuts each post like its own fetchComments") {
+    val src = new FixtureSource(sf())
+    val posts = src.fetchPosts(spark, "1-URGENT", 20, "top")
+      .select("id").collect().map(_.get(0).toString).toSeq
+    val limit = 3
+    val (batched, perPost) = idsPerPost(src, posts, limit)
+    assert(batched == perPost)
+    // the limit cuts at least one post
+    assert(posts.exists(p =>
+      src.fetchComments(spark, p, 100).select("id").distinct().count() > limit))
   }
 
   // ---- HttpApiSource: the live-connector seam, driven by a fake ----

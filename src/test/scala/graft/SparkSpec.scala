@@ -1,8 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -16,6 +20,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = Sessions.local(cpus = 4)
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  private val tmpDirs = ArrayBuffer.empty[Path]
+
+  /** A fresh temp directory, deleted with its contents when the suite
+    * ends.
+    */
+  def tmpDir(prefix: String = "graft_"): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tmpDirs.synchronized(tmpDirs += dir)
+    dir.toString
+  }
 
   /** Spark jobs started on this thread while `body` runs. A marker job
     * outside the probe runs last; the listener bus delivers its start
@@ -47,6 +62,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override protected def afterAll(): Unit = {
     // session is shared across suites — do not stop it here
-    super.afterAll()
+    try tmpDirs.synchronized(tmpDirs.foreach(d =>
+      FileUtils.deleteQuietly(d.toFile)))
+    finally super.afterAll()
   }
 }

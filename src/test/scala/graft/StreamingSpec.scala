@@ -305,10 +305,8 @@ class StreamingSpec extends SparkSpec {
   test("CDC sink applies streamed upserts and deletes through mergeInto") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_cdc_").toString + "/items"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_cdc_ckpt_").toString
+    val table = tmpDir("graft_cdc_") + "/items"
+    val ckpt = tmpDir("graft_cdc_ckpt_")
     val mem = MemoryStream[(Long, String, String, String)]
     val q = StreamingStats.startCdcSink(
       mem.toDF().toDF("id", "date", "payload", "op"),
@@ -344,8 +342,8 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch bridge upserts closed windows into the warehouse") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val wh = java.nio.file.Files.createTempDirectory("graft_swh_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val wh = tmpDir("graft_swh_")
+    val ckpt = tmpDir("graft_ckpt_")
     val mem = MemoryStream[(Timestamp, String, Long, Double)]
     val q = StreamingStats.startUpsertSink(
       mem.toDF().toDF("ts", "event_type", "user_id", "value"), wh, ckpt)
@@ -396,8 +394,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     // the dd_incremental split, live: the corpus-only dir holds the
     // non-batch docs; the batch docs arrive as the stream
-    val dir = java.nio.file.Files.createTempDirectory("graft_ndi_")
-      .toString
+    val dir = tmpDir("graft_ndi_")
     val all = spark.read.parquet(sf("sf0.01") + "/documents.parquet")
     all.filter(col("doc_id") % Dedup.BatchMod =!= Dedup.BatchRem)
       .write.mode("overwrite").parquet(dir + "/documents.parquet")
@@ -430,16 +427,13 @@ class StreamingSpec extends SparkSpec {
     // across a crash — a restore bug re-admits an already-alerted pair
     // (duplicate alert) or loses one entirely
     def t(s: String) = Timestamp.valueOf(s)
-    val corpus = java.nio.file.Files
-      .createTempDirectory("graft_ndrs_c_").toString
+    val corpus = tmpDir("graft_ndrs_c_")
     val longText = (1 to 59).map(i => s"w$i").mkString(" ")
     Seq((100L, longText + " w60"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(corpus + "/documents.parquet")
-    val in = java.nio.file.Files.createTempDirectory("graft_ndrs_in_")
-      .toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ndrs_ck_")
-      .toString
+    val in = tmpDir("graft_ndrs_in_")
+    val ckpt = tmpDir("graft_ndrs_ck_")
     def feed(rows: Seq[(Timestamp, Long, String)]): Unit =
       rows.toDF("ts", "doc_id", "text")
         .coalesce(1).write.mode("append").parquet(in)
@@ -583,7 +577,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))
     val want = base.collect().map(_.toSeq.toList).toList
-    val dir = java.nio.file.Files.createTempDirectory("evts").toString
+    val dir = tmpDir("evts")
     // long nanos (the shape rounds 1-7 read)
     base.withColumn("ts", expr("unix_micros(ts) * 1000L"))
       .write.mode("overwrite").parquet(s"$dir/nanos/events.parquet")
@@ -762,8 +756,8 @@ class StreamingSpec extends SparkSpec {
   test("top-k sink restart with re-delivered batch keeps the single-run rows") {
     import spark.implicits._
     def t(day: String, h: Int) = Timestamp.valueOf(f"$day $h%02d:00:00")
-    val in = java.nio.file.Files.createTempDirectory("graft_tk_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tk_ck_").toString
+    val in = tmpDir("graft_tk_in_")
+    val ckpt = tmpDir("graft_tk_ck_")
     def feed(rows: Seq[(Timestamp, String, Long, Long, Double)]): Unit =
       rows.toDF("ts", "event_type", "event_id", "user_id", "value")
         .coalesce(1).write.mode("append").parquet(in)
@@ -800,10 +794,9 @@ class StreamingSpec extends SparkSpec {
 
   test("CDC sink restart re-applies its last merge idempotently") {
     import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft_cdc_in_").toString
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_cdc_rs_").toString + "/items"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ck_").toString
+    val in = tmpDir("graft_cdc_in_")
+    val table = tmpDir("graft_cdc_rs_") + "/items"
+    val ckpt = tmpDir("graft_cdc_ck_")
     def feed(rows: Seq[(Long, String, String, String)]): Unit =
       rows.toDF("id", "date", "payload", "op")
         .coalesce(1).write.mode("append").parquet(in)
@@ -830,9 +823,9 @@ class StreamingSpec extends SparkSpec {
 
   test("upsert sink restart re-delivers the emitting batch idempotently") {
     import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft_ups_in_").toString
-    val wh = java.nio.file.Files.createTempDirectory("graft_ups_wh_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ups_ck_").toString
+    val in = tmpDir("graft_ups_in_")
+    val wh = tmpDir("graft_ups_wh_")
+    val ckpt = tmpDir("graft_ups_ck_")
     def feed(rows: Seq[(Timestamp, String, Long, Double)]): Unit =
       rows.toDF("ts", "event_type", "user_id", "value")
         .coalesce(1).write.mode("append").parquet(in)
@@ -1055,8 +1048,8 @@ class StreamingSpec extends SparkSpec {
     // dedup states into a running aggregate — a rollback bug in any
     // branch double-counts ids/users/days or loses a violation
     def t(s: String) = Timestamp.valueOf(s)
-    val in = java.nio.file.Files.createTempDirectory("graft_dqrs_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dqrs_ck_").toString
+    val in = tmpDir("graft_dqrs_in_")
+    val ckpt = tmpDir("graft_dqrs_ck_")
     def feed(rows: Seq[(Long, Long, Double, String, Timestamp)]): Unit =
       rows.toDF("event_id", "user_id", "value", "props", "ts")
         .coalesce(1).write.mode("append").parquet(in)
@@ -1173,8 +1166,8 @@ class StreamingSpec extends SparkSpec {
     withoutNoDataBatches {
     import spark.implicits._
     def t(s: String) = Timestamp.valueOf(s)
-    val in = java.nio.file.Files.createTempDirectory("graft_srmrs_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_srmrs_ck_").toString
+    val in = tmpDir("graft_srmrs_in_")
+    val ckpt = tmpDir("graft_srmrs_ck_")
     def feed(rows: Seq[(String, Long, Timestamp)]): Unit =
       rows.toDF("event_type", "user_id", "ts")
         .coalesce(1).write.mode("append").parquet(in)
@@ -1219,8 +1212,8 @@ class StreamingSpec extends SparkSpec {
     withoutNoDataBatches {
     import spark.implicits._
     def t(i: Int) = new Timestamp(1700000000000L + i * 500L)
-    val in = java.nio.file.Files.createTempDirectory("graft_botrs_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_botrs_ck_").toString
+    val in = tmpDir("graft_botrs_in_")
+    val ckpt = tmpDir("graft_botrs_ck_")
     def feed(rows: Seq[(Long, Long, Timestamp)]): Unit =
       rows.toDF("user_id", "event_id", "ts")
         .coalesce(1).write.mode("append").parquet(in)
@@ -1397,8 +1390,8 @@ class StreamingSpec extends SparkSpec {
     // already-seen digest (the later duplicate's payload leaks
     // downstream) or lose a first-seen row entirely
     def t(s: String) = Timestamp.valueOf(s)
-    val in = java.nio.file.Files.createTempDirectory("graft_ddrs_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ddrs_ck_").toString
+    val in = tmpDir("graft_ddrs_in_")
+    val ckpt = tmpDir("graft_ddrs_ck_")
     def feed(rows: Seq[(Timestamp, String, Long)]): Unit =
       rows.toDF("ts", "digest", "payload")
         .coalesce(1).write.mode("append").parquet(in)
@@ -1446,9 +1439,9 @@ class StreamingSpec extends SparkSpec {
     // forgets a matched purchase (a spurious outer-null row), or
     // double-matches on the re-delivered batch
     def t(s: String) = Timestamp.valueOf(s)
-    val pIn = java.nio.file.Files.createTempDirectory("graft_atrs_p_").toString
-    val cIn = java.nio.file.Files.createTempDirectory("graft_atrs_c_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_atrs_ck_").toString
+    val pIn = tmpDir("graft_atrs_p_")
+    val cIn = tmpDir("graft_atrs_c_")
+    val ckpt = tmpDir("graft_atrs_ck_")
     def feedP(rows: Seq[(Long, Long, Timestamp)]): Unit =
       rows.toDF("event_id", "user_id", "ts")
         .coalesce(1).write.mode("append").parquet(pIn)
@@ -1552,8 +1545,8 @@ class StreamingSpec extends SparkSpec {
   private def sessionizerRestartScenario(): Unit = {
     withoutNoDataBatches {
     import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft_sessrs_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sessrs_ck_").toString
+    val in = tmpDir("graft_sessrs_in_")
+    val ckpt = tmpDir("graft_sessrs_ck_")
     def feed(rows: Seq[(Timestamp, Long, Double)]): Unit =
       rows.toDF("ts", "user_id", "value")
         .coalesce(1).write.mode("append").parquet(in)
@@ -1616,8 +1609,8 @@ class StreamingSpec extends SparkSpec {
     val maxMs = fixture.map(_._2.getTime).max
     def flush(days: Int) =
       types.map(t => (t, new Timestamp(maxMs + days * 86400000L)))
-    val in = java.nio.file.Files.createTempDirectory("graft_anomrs_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_anomrs_ck_").toString
+    val in = tmpDir("graft_anomrs_in_")
+    val ckpt = tmpDir("graft_anomrs_ck_")
     def feed(rows: Seq[(String, Timestamp)]): Unit =
       rows.toDF("event_type", "ts")
         .coalesce(1).write.mode("append").parquet(in)
@@ -1660,8 +1653,8 @@ class StreamingSpec extends SparkSpec {
     withoutNoDataBatches {
     import spark.implicits._
     def ts(day: Int) = new Timestamp(day * 86400000L + 43200000L)
-    val in = java.nio.file.Files.createTempDirectory("graft_grors_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_grors_ck_").toString
+    val in = tmpDir("graft_grors_in_")
+    val ckpt = tmpDir("graft_grors_ck_")
     def feed(rows: Seq[(Long, Timestamp)]): Unit =
       rows.toDF("user_id", "ts")
         .coalesce(1).write.mode("append").parquet(in)
@@ -1718,8 +1711,8 @@ class StreamingSpec extends SparkSpec {
   test("funnel stream quiet-flush timer fires after a checkpoint restart") {
     withoutNoDataBatches {
     import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft_funrs_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_funrs_ck_").toString
+    val in = tmpDir("graft_funrs_in_")
+    val ckpt = tmpDir("graft_funrs_ck_")
     def feed(rows: Seq[(Long, Long, String, Timestamp)]): Unit =
       rows.toDF("user_id", "event_id", "event_type", "ts")
         .coalesce(1).write.mode("append").parquet(in)
@@ -1764,8 +1757,8 @@ class StreamingSpec extends SparkSpec {
   test("markov stream re-delivers cross-batch transitions identically on restart") {
     withoutNoDataBatches {
     import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft_mkrs_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mkrs_ck_").toString
+    val in = tmpDir("graft_mkrs_in_")
+    val ckpt = tmpDir("graft_mkrs_ck_")
     def feed(rows: Seq[(Long, Long, String, Timestamp)]): Unit =
       rows.toDF("user_id", "event_id", "event_type", "ts")
         .coalesce(1).write.mode("append").parquet(in)
@@ -1809,8 +1802,8 @@ class StreamingSpec extends SparkSpec {
     withoutNoDataBatches {
     import spark.implicits._
     def ts(day: Int) = new Timestamp(day * 86400000L + 43200000L)
-    val in = java.nio.file.Files.createTempDirectory("graft_covrs_in_").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_covrs_ck_").toString
+    val in = tmpDir("graft_covrs_in_")
+    val ckpt = tmpDir("graft_covrs_ck_")
     def feed(rows: Seq[(String, Timestamp)]): Unit =
       rows.toDF("event_type", "ts")
         .coalesce(1).write.mode("append").parquet(in)

@@ -569,7 +569,7 @@ class TimeSeriesSpec extends SparkSpec {
       (7L, ts(0), 4L, "view", 1.0, "{}"),
       (8L, ts(8), 4L, "purchase", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = java.nio.file.Files.createTempDirectory("surv").toString
+    val dir = tmpDir("surv")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = TimeSeries.evSurvival(spark, dir).collect()
       .map(r => (r.getAs[Int]("t_days"), r.getAs[Long]("n_risk"),
@@ -767,7 +767,7 @@ class TimeSeriesSpec extends SparkSpec {
       (3L, ts(1), 2L, "click", 1.0, "{}"),
       (4L, ts(60), 1L, "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val dir = java.nio.file.Files.createTempDirectory("stick").toString
+    val dir = tmpDir("stick")
     events.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = TimeSeries.evStickiness(spark, dir).collect()
       .map(r => r.getString(0) -> r).toMap

@@ -145,8 +145,7 @@ class WarehouseSpec extends SparkSpec {
     // created_utc is derived in the plan, so a range filter cannot
     // reach parquet. Against a materialized posts table the same
     // predicate must push down — this pins that claim.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_pushdown_").toString
+    val dir = tmpDir("graft_pushdown_")
     RedditModel.posts(spark, sf()).write.mode("overwrite").parquet(dir)
     val mat = spark.read.parquet(dir)
     // a cutoff strictly inside the fixture's date range, so the

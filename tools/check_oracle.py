@@ -5,18 +5,51 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 
 For each query dumped by graft.Verify, runs the matching oracle SQL in
 DuckDB over the same parquet fixtures, sorts columns by name and rows by
-all values, and compares cell-by-cell (floats to 1e-9 relative).
+all values, and compares cell-by-cell (floats to 1e-9 relative). An
+oracle query that runs longer than QUERY_CAP_S is interrupted and
+reported as a failure, so one slow oracle cannot stall the compare.
 Dev tool only — NOT part of the engine.
 """
 import json
 import math
 import sys
+import threading
 
 import duckdb
 import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+# Per-query cap on an oracle's DuckDB run, in seconds: above the slowest
+# oracle that has finished at sf0.1 on 4 CPUs (mm_clusters, 333 s).
+QUERY_CAP_S = 900
+
+
+class QueryTimeout(Exception):
+    """An oracle query ran past QUERY_CAP_S; it counts as a failure."""
+
+
+def run_capped(con, sql: str) -> pd.DataFrame:
+    """Runs `sql` on `con` as a pandas frame, interrupting it after
+    QUERY_CAP_S and raising QueryTimeout."""
+    fired = threading.Event()
+
+    def stop():
+        fired.set()
+        con.interrupt()
+
+    timer = threading.Timer(QUERY_CAP_S, stop)
+    timer.start()
+    try:
+        return con.execute(sql).df()
+    except Exception:
+        if fired.is_set():
+            raise QueryTimeout("timeout") from None
+        raise
+    finally:
+        timer.cancel()
+        timer.join()
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -51,7 +84,7 @@ def main(sf_dir: str, out_dir: str) -> int:
     for name, sql in sorted(oracle.items()):
         try:
             got = canon(pd.read_parquet(f"{out_dir}/{name}"))
-            want = canon(con.execute(sql).df())
+            want = canon(run_capped(con, sql))
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: {e}")
             failures += 1

@@ -4,7 +4,9 @@ driver's exact value-hash gate (tools/check_oracle.py tolerates 1e-9,
 which can hide a last-ULP divergence the driver would flag).
 
 Usage: python3 tools/check_strict.py [sfDir] [dumpDir]
-Run graft.Verify into dumpDir first. Dev tool only — NOT the engine.
+Run graft.Verify into dumpDir first. Each oracle query runs under
+check_oracle's per-query cap; one that hits it is a failure.
+Dev tool only — NOT the engine.
 """
 import json
 import os
@@ -13,7 +15,8 @@ import sys
 import duckdb
 import pandas as pd
 
-from check_oracle import TABLES  # ONE fixture-table list, no drift
+# ONE fixture-table list and one per-query cap, no drift
+from check_oracle import TABLES, QueryTimeout, run_capped
 
 
 def main() -> int:
@@ -31,7 +34,7 @@ def main() -> int:
             bad.append((name, "MISSING dump directory"))
             continue
         try:
-            o = con.execute(sql).fetchdf()
+            o = run_capped(con, sql)
             s = pd.read_parquet(f"{dump}/{name}")  # whole dir, all parts
             o = o.reindex(sorted(o.columns), axis=1)
             s = s.reindex(sorted(s.columns), axis=1)
@@ -56,6 +59,8 @@ def main() -> int:
                     else:
                         continue
                     break
+        except QueryTimeout as e:
+            bad.append((name, str(e)))
         except Exception as e:  # noqa: BLE001 — report, keep checking
             bad.append((name, f"ERR {e}"))
     if bad:
