@@ -2398,9 +2398,11 @@ FROM t WHERE rank <= $BpeTopPairs ORDER BY rank"""
   /** Shared oracle fragments for the BPE loop — ONE copy of the
     * per-round SQL (census → election → merge → stats), consumed by
     * both [[cpBpeTrainSql]] and [[cpBpeTokenizeSql]] (the fragment
-    * rule: twins share text, they cannot drift).
+    * rule: twins share text, they cannot drift). Each round's corpus
+    * is read two or three times and is `AS MATERIALIZED`, since DuckDB
+    * inlines a plain CTE at every reference.
     */
-  private lazy val bpeCorpus0Sql: String = """corpus0 AS (
+  private lazy val bpeCorpus0Sql: String = """corpus0 AS MATERIALIZED (
   SELECT w, CAST(COUNT(*) AS BIGINT) AS freq,
     regexp_replace(w, '(.)', ' \1 ', 'g') AS seg
   FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w
@@ -2421,7 +2423,7 @@ FROM t WHERE rank <= $BpeTopPairs ORDER BY rank"""
   ) GROUP BY raw
 ), el$r AS (
   SELECT * FROM cens$r ORDER BY n_occurrences DESC, pair LIMIT 1
-), corpus$r AS (
+), corpus$r AS MATERIALIZED (
   SELECT c.w, c.freq,
     replace(c.seg, ' ' || e.raw || ' ', ' ' || e.merged || ' ') AS seg
   FROM corpus${r - 1} c, el$r e

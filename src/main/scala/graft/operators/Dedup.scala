@@ -830,23 +830,26 @@ ORDER BY new_doc, corpus_doc"""
     clusters(docs(spark, sfDir).select(col("doc_id")), pairs, driverBytes)
   }
 
-  /** Oracle closure over ANY LSH pair body: transitive closure of
-    * "label reachable along an edge" as a recursive CTE, then MIN per
-    * doc — the same fixpoint the Spark loops converge to. ONE copy,
-    * shared by the uncapped and bucket-capped cluster oracles so the
-    * closure semantics can never drift between them.
-    */
-  /** The ONE recursive-CTE min-label closure every CC oracle embeds —
-    * dd_clusters (capped/uncapped), and via `prefixCtes` any consumer
-    * whose pair stream needs leading CTEs (the citation graph's
-    * gr_components). One copy: the fixpoint semantics cannot drift
-    * between pair sources.
+  /** The ONE recursive-CTE min-label closure every CC oracle embeds:
+    * transitive closure of "label reachable along an edge", then MIN
+    * per doc — the fixpoint [[clusters]] converges to. `lshBody`
+    * selects the (doc_a, doc_b) pairs, `prefixCtes` holds any CTEs
+    * they read and `nodes` is the relation whose `doc_id` lists every
+    * labelled node. Consumers: dd_clusters (uncapped, star, capped),
+    * the three dd_semdedup forms, gr_components, mm_clusters
+    * (uncapped, capped) and mm_dedup_impact, and the three
+    * sim_semantic_clusters forms. One copy: the fixpoint semantics
+    * cannot drift between pair sources.
+    *
+    * `lsh` and `edges` are `AS MATERIALIZED`: DuckDB inlines a plain
+    * CTE at every reference, so each recursive step would re-derive
+    * the whole pair stream.
     */
   private[graft] def ddClustersClosureSql(lshBody: String,
       prefixCtes: String = "", nodes: String = "documents"): String =
-    s"""WITH RECURSIVE ${prefixCtes}lsh AS (
+    s"""WITH RECURSIVE ${prefixCtes}lsh AS MATERIALIZED (
 $lshBody
-), edges AS (
+), edges AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM lsh
   UNION ALL
   SELECT doc_b AS src, doc_a AS dst FROM lsh
@@ -1898,8 +1901,8 @@ ORDER BY d.doc_id"""
   }
 
   /** Source-census tail over ANY LSH pair body — ONE copy, shared by
-    * the uncapped and bucket-capped variants (the
-    * [[ddClustersClosureSql]] discipline).
+    * the uncapped and bucket-capped variants, so the census cannot
+    * drift between them.
     */
   private def ddDupSourcesSqlOf(lshSql: String): String = s"""
 WITH lsh AS (

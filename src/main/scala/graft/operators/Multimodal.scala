@@ -627,7 +627,9 @@ FROM documents ORDER BY doc_id"""
 
   /** Oracle-side signature: block sums over `ord(substr(text, i, 1))`
     * (== bytes; fixture is pure ASCII — the mm_decode_stub
-    * precondition), 60·s_k > total per bit.
+    * precondition), 60·s_k > total per bit. `sigs` is
+    * `AS MATERIALIZED`: the four band selects and the cluster closure
+    * read it five times, and DuckDB inlines a plain CTE at each.
     */
   private lazy val phashSigSql: String = {
     val blockSum = (k: Int) =>
@@ -646,7 +648,7 @@ FROM documents ORDER BY doc_id"""
     CAST(octet_length(encode(text)) AS INTEGER) AS n_bytes,
     [${(0 until PhashBits).map(blockSum).mkString(", ")}] AS s
   FROM documents
-), sigs AS (
+), sigs AS MATERIALIZED (
   SELECT doc_id, media_type, n_bytes,
     CAST($bits AS BIGINT) AS sig
   FROM (SELECT doc_id, media_type, n_bytes, s,
@@ -810,29 +812,13 @@ SELECT doc_a, doc_b, hamming FROM nd_pairs ORDER BY doc_a, doc_b"""
     Dedup.clusters(signatures(spark, sfDir).select(col("doc_id")), pairs)
   }
 
-  /** Recursive-closure oracle over ANY nd_pairs body — ONE copy,
-    * shared by the uncapped and bucket-capped cluster oracles (the
-    * ddClustersClosureSql discipline).
+  /** Cluster oracle over ANY nd_pairs body: the one CC closure
+    * ([[Dedup.ddClustersClosureSql]]) over the signed docs, shared by
+    * the uncapped and bucket-capped cluster oracles.
     */
   private def mmClustersSqlOf(bodySql: String): String =
-    s"""WITH RECURSIVE $phashSigSql,
-$bodySql, edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM nd_pairs
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM nd_pairs
-), reach(doc_id, lbl) AS (
-  SELECT doc_id, doc_id FROM sigs
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.doc_id
-), labels AS (
-  SELECT doc_id, MIN(lbl) AS lbl FROM reach GROUP BY doc_id
-), sizes AS (
-  SELECT lbl, COUNT(*) AS cluster_size FROM labels GROUP BY lbl
-)
-SELECT l.doc_id, l.lbl AS cluster_rep, s.cluster_size,
-  l.doc_id = l.lbl AS is_survivor
-FROM labels l JOIN sizes s ON s.lbl = l.lbl
-ORDER BY l.doc_id"""
+    Dedup.ddClustersClosureSql("  SELECT doc_a, doc_b FROM nd_pairs",
+      prefixCtes = s"$phashSigSql,\n$bodySql, ", nodes = "sigs")
 
   lazy val mmClustersSql: String = mmClustersSqlOf(mmNearDupBodySql)
 

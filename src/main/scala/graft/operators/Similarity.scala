@@ -2707,39 +2707,31 @@ GROUP BY e.label ORDER BY label"""
     Dedup.clusters(embeddings(spark, sfDir).select(col("vec_id")), pairs)
       .withColumnRenamed("doc_id", "vec_id")
 
-  /** The CC-closure + census + survivor tail every cluster oracle
-    * shares, picking up from a `sel(vec_a, vec_b)` edge CTE — ONE
-    * copy (the fragment rule), consumed by the exact, the
-    * exhaustive-ANN (shared verbatim), and the production-dial
-    * cluster oracles.
+  /** The one CC closure ([[Dedup.ddClustersClosureSql]]) over a
+    * `sel(vec_a, vec_b)` edge CTE that `prefixCtes` ends in, labelling
+    * every vector and keyed `vec_id` (the [[semanticClustersTail]]
+    * rename). ONE copy, consumed by the exact, the exhaustive-ANN
+    * (shared verbatim) and the production-dial cluster oracles.
     */
-  private lazy val ccClustersTailSql: String = s"""edges AS (
-  SELECT vec_a AS src, vec_b AS dst FROM sel
-  UNION ALL
-  SELECT vec_b AS src, vec_a AS dst FROM sel
-), reach(vec_id, lbl) AS (
-  SELECT vec_id, vec_id FROM embeddings
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.vec_id
-), labels AS (
-  SELECT vec_id, MIN(lbl) AS lbl FROM reach GROUP BY vec_id
-), sizes AS (
-  SELECT lbl, COUNT(*) AS cluster_size FROM labels GROUP BY lbl
-)
-SELECT l.vec_id, l.lbl AS cluster_rep, s.cluster_size,
-  l.vec_id = l.lbl AS is_survivor
-FROM labels l JOIN sizes s ON s.lbl = l.lbl
-ORDER BY l.vec_id"""
+  private def semanticClustersSqlOf(prefixCtes: String): String = {
+    val closure = Dedup.ddClustersClosureSql(
+      "  SELECT vec_a AS doc_a, vec_b AS doc_b FROM sel",
+      prefixCtes = s"""$prefixCtes, nodes AS (
+  SELECT vec_id AS doc_id FROM embeddings
+), """, nodes = "nodes")
+    s"""SELECT doc_id AS vec_id, cluster_rep, cluster_size, is_survivor
+FROM (
+$closure
+) ORDER BY vec_id"""
+  }
 
-  /** Oracle: the shared unthresholded pair CTE + the dd_clusters
-    * recursive-closure pattern at vec grain. */
-  lazy val simSemanticClustersSql: String =
-    "WITH RECURSIVE " +
-      graft.operators.Dedup.cosinePairsCteSql.stripPrefix("WITH ") +
-      s""", sel AS (
+  /** Oracle: the shared unthresholded pair CTE, thresholded, under
+    * the one CC closure at vec grain. */
+  lazy val simSemanticClustersSql: String = semanticClustersSqlOf(
+    Dedup.cosinePairsCteSql.stripPrefix("WITH ") + s""", sel AS (
   SELECT vec_a, vec_b FROM pairs
-  WHERE c >= ${graft.operators.Dedup.CosineMin}
-), $ccClustersTailSql"""
+  WHERE c >= ${Dedup.CosineMin}
+)""")
 
   // ------------------------------------------------------------------
   // sim_semantic_clusters_ann — the IVF-fronted form of the clusters
@@ -2865,11 +2857,11 @@ ORDER BY l.vec_id"""
       semanticClusterPairsAnn(spark, sfDir, ClusterDialProbe)
         .localCheckpoint(true))
 
-  /** Oracle: IVF core + full-corpus probe list at the dial + the
-    * shared CC tail.
+  /** Oracle: IVF core + full-corpus probe list at the dial, under
+    * the one CC closure.
     */
   lazy val simSemanticClustersDialSql: String =
-    s"""WITH RECURSIVE $ivfCoreCtesSql, probes_d AS (
+    semanticClustersSqlOf(s"""$ivfCoreCtesSql, probes_d AS (
   SELECT vec_id AS query_id, v AS qv, nrm AS qn, cent_id AS cell FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id
       ORDER BY cs DESC, cent_id) AS pr FROM scored)
@@ -2879,8 +2871,8 @@ ORDER BY l.vec_id"""
   FROM probes_d p JOIN assigned a ON a.cell = p.cell
     AND p.query_id < a.vec_id
   WHERE ${dotSql("p.qv", "a.v")} / sqrt(p.qn * a.nrm) >=
-    ${graft.operators.Dedup.CosineMin}
-), $ccClustersTailSql"""
+    ${Dedup.CosineMin}
+)""")
 
   // ------------------------------------------------------------------
   // sim_embed_drift — per-dimension train/val embedding drift

@@ -78,4 +78,27 @@ class SessionsSpec extends SparkSpec {
       }
     assert(trainers.isEmpty, trainers.mkString("\n"))
   }
+
+  // the recursive CTE `reach(`, not `foreach(`
+  private val reachCte = """\breach\(""".r
+
+  // connected-component oracles embed Dedup.ddClustersClosureSql, the
+  // one recursive min-label closure: no other file declares its own
+  test("no file under src/main but Dedup.scala declares the recursive " +
+    "reach closure") {
+    val closures = mainSources.filterNot(_.endsWith("Dedup.scala"))
+      .filter(f => reachCte.findFirstIn(Files.readString(f)).isDefined)
+    assert(closures.isEmpty, closures.mkString("\n"))
+  }
+
+  // DuckDB inlines a plain CTE at every reference, so the recursive
+  // step would re-derive the pair stream each round
+  test("every closure oracle materializes its edges") {
+    val closureOracles = SparkEntry.oracleSql
+      .filter(kv => reachCte.findFirstIn(kv._2).isDefined)
+    assert(closureOracles.size >= 13, closureOracles.keys)
+    val plain = closureOracles.keys
+      .filterNot(closureOracles(_).contains("edges AS MATERIALIZED"))
+    assert(plain.isEmpty, plain.mkString(", "))
+  }
 }

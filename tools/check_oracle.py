@@ -8,12 +8,15 @@ DuckDB over the same parquet fixtures, sorts columns by name and rows by
 all values, and compares cell-by-cell (floats to 1e-9 relative). An
 oracle query that runs longer than QUERY_CAP_S is interrupted and
 reported as a failure, so one slow oracle cannot stall the compare.
+Each result line carries the query's DuckDB seconds, and the last line
+their total.
 Dev tool only — NOT part of the engine.
 """
 import json
 import math
 import sys
 import threading
+import time
 
 import duckdb
 import pandas as pd
@@ -21,8 +24,9 @@ import pandas as pd
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-# Per-query cap on an oracle's DuckDB run, in seconds: above the slowest
-# oracle that has finished at sf0.1 on 4 CPUs (mm_clusters, 333 s).
+# Per-query cap on an oracle's DuckDB run, in seconds: far above the
+# slowest oracle at sf0.1 on 4 CPUs (dd_ngram_jaccard_lsh, about 38 s), so
+# only a runaway plan reaches it.
 QUERY_CAP_S = 900
 
 
@@ -50,6 +54,17 @@ def run_capped(con, sql: str) -> pd.DataFrame:
     finally:
         timer.cancel()
         timer.join()
+
+
+def run_timed(con, sql: str):
+    """run_capped, never raising: returns (frame, error, seconds), with
+    exactly one of frame and error set."""
+    t0 = time.perf_counter()
+    try:
+        df, err = run_capped(con, sql), None
+    except Exception as e:  # noqa: BLE001 — the caller reports it
+        df, err = None, e
+    return df, err, time.perf_counter() - t0
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -81,21 +96,27 @@ def main(sf_dir: str, out_dir: str) -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     failures = 0
+    total_s = 0.0
     for name, sql in sorted(oracle.items()):
+        want, err, oracle_s = run_timed(con, sql)
+        total_s += oracle_s
+        secs = f"[{oracle_s:.2f} s]"
         try:
+            if err is not None:
+                raise err
             got = canon(pd.read_parquet(f"{out_dir}/{name}"))
-            want = canon(run_capped(con, sql))
+            want = canon(want)
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: {e}")
+            print(f"FAIL {name} {secs}: {e}")
             failures += 1
             continue
         if list(got.columns) != list(want.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} != "
+            print(f"FAIL {name} {secs}: columns {list(got.columns)} != "
                   f"{list(want.columns)}")
             failures += 1
             continue
         if len(got) != len(want):
-            print(f"FAIL {name}: rows {len(got)} != {len(want)}")
+            print(f"FAIL {name} {secs}: rows {len(got)} != {len(want)}")
             failures += 1
             continue
         bad = None
@@ -109,12 +130,13 @@ def main(sf_dir: str, out_dir: str) -> int:
                 break
         if bad:
             col, i, x, y = bad
-            print(f"FAIL {name}: first diff at row {i} col {col}: "
+            print(f"FAIL {name} {secs}: first diff at row {i} col {col}: "
                   f"spark={x!r} oracle={y!r}")
             failures += 1
         else:
-            print(f"OK   {name} ({len(got)} rows)")
+            print(f"OK   {name} ({len(got)} rows) {secs}")
     print(f"\n{len(oracle) - failures}/{len(oracle)} queries match")
+    print(f"oracle DuckDB seconds, total: {total_s:.1f}")
     return 1 if failures else 0
 
 
