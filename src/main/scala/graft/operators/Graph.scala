@@ -1284,10 +1284,10 @@ ORDER BY d.doc_id"""
     //    with zero recompute; the star-CC loop already uses exactly
     //    this trick for its edge frames);
     //  - the [[KCoreKs]] peel chains never interact, so they
-    //    materialize CONCURRENTLY ([[graft.operators.Par]] — guide
-    //    §2.6): one chain's shuffle tail back-fills with the other's
-    //    tasks instead of idling the executor.
-    val perK = graft.operators.Par.run(KCoreKs.map { k => () =>
+    //    materialize CONCURRENTLY ([[graft.Par]]): one chain's
+    //    shuffle tail back-fills with the other's tasks instead of
+    //    idling the executor.
+    val perK = graft.Par.run(KCoreKs.map { k => () =>
       var alive = nodes
       var layers = Seq.empty[DataFrame]
       var r = 1

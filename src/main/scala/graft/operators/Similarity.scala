@@ -981,15 +981,15 @@ ${out}_comp AS (
     *
     * The [[PqM]] block chains are INDEPENDENT (each reads only its own
     * sub-vector slice), so their eager materializations run
-    * CONCURRENTLY ([[Par.run]] — guide §2.6): 2·PqM sequential driver
-    * jobs collapse to 2 parallel rounds, and one chain's shuffle tail
+    * CONCURRENTLY ([[graft.Par.run]]): 2·PqM sequential driver jobs
+    * collapse to 2 parallel rounds, and one chain's shuffle tail
     * back-fills with the next chain's tasks. Results keep input order;
     * values are unchanged (each chain's arithmetic is fixed-point and
     * chains never interact).
     */
   private def pqTrainOn(subOf: Int => DataFrame,
       seedLo: Int): Seq[(Int, DataFrame, DataFrame)] =
-    Par.run((0 until PqM).map { b => () =>
+    graft.Par.run((0 until PqM).map { b => () =>
       val sub = subOf(b)
       val pinned = lloyd(sub, seedCents(sub, seedLo, PqK), PqIters)
         .localCheckpoint(true)

@@ -5,6 +5,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Par
 import graft.functions.Determinism.r6
 import graft.sink.Load
 import graft.source.RedditSource
@@ -17,10 +18,25 @@ import graft.transform.Enrich
   *
   * Stage shape per subreddit:
   *   extract (source fetch) → transform (Enrich, lazy Catalyst plan,
-  *   cached) → guard on the cached batch's count → load posts (K1) →
-  *   top-10 by score → one comment fetch for those posts (one call, one
-  *   collect on the driver) → one K2 load per subreddit → daily stats
-  *   agg → upsert (K3).
+  *   cached) → guard on the cached batch's count, then two phases
+  *   ([[graft.Par]], each waiting for all of its stages):
+  *    1. load posts (K1) ‖ top-10 by score → one comment fetch for
+  *       those posts (one call, one collect on the driver);
+  *    2. one K2 load of those comments ‖ daily stats agg → upsert (K3).
+  *   Only K1 has to commit before K2 and K3; the comment read does not
+  *   depend on K1, and K2 and K3 write different tables.
+  *
+  * Failures, per stage:
+  *   - extract, enrich or the guard's count: the subreddit fails
+  *     (`Failure`), nothing is written;
+  *   - K1: the subreddit fails once phase 1 ends, before K2 or K3 write
+  *     anything. The one deviation from the sequential order: the
+  *     comment read may already have run, and its rows are dropped;
+  *   - the comment read or K2: logged and skipped (fail-soft, below);
+  *     posts and stats still load;
+  *   - K3: the subreddit fails (`Failure`) after phase 2 ends, so the
+  *     comments K2 loads beside it stay loaded, and no Spark job of the
+  *     subreddit is left running.
   *
   * The comment stage asks the source for every top post's comments at
   * once ([[RedditSource.fetchCommentsOf]]) and collects that one frame
@@ -67,38 +83,23 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
       if (n == 0) { // P10 guard (reference script.py:296-298)
         log(s"$subreddit: no posts extracted"); 0L
       } else {
-        // L — load posts (reference script.py:308)
-        Load.appendPosts(posts, warehouse)
-        log(s"$subreddit: loaded $n posts")
-        if (extractComments) {
-          // top-k fan-out (reference script.py:310-317): the ids go to
-          // the driver, and the source serves all their comments in one
-          // frame
-          val top = posts.orderBy(col("score").desc, col("id"))
-            .limit(topPosts).select(col("id")).collect()
-            .map(_.get(0).toString).toSeq
-          // the collect is the stage's action, inside its guard: a read
-          // that fails, eagerly or at the action, skips this subreddit's
-          // comments
-          Try {
-            val c = source.fetchCommentsOf(spark, top, commentLimit)
-            (c.schema, c.collect())
-          } match {
-            case Failure(e) => log(s"$subreddit: comment fetch failed: $e")
-            case Success((schema, rows)) if rows.nonEmpty =>
-              // rows.nonEmpty is the reference's `if comments:` guard
-              Try {
-                Load.appendComments(
-                  spark.createDataFrame(rows.toSeq.asJava, schema)
-                    .withColumn("extracted_at", Enrich.extractedAt()),
-                  warehouse)
-              }.failed.foreach(e =>
-                log(s"$subreddit: comment load failed: $e"))
-            case Success(_) =>
-          }
+        // phase 1: load posts (K1, reference script.py:308) while the
+        // comment stage reads; a K1 failure fails the subreddit here,
+        // before K2 or K3 writes, and the rows read are dropped
+        val loadPosts = () => {
+          Load.appendPosts(posts, warehouse); Option.empty[DataFrame]
         }
-        // stats (reference script.py:320 → §2.9) + upsert K3
-        Load.upsertStats(dailyStats(posts, subreddit), spark, warehouse)
+        val fetched = Par.run(loadPosts +: Option.when(extractComments)(
+            () => topComments(posts, subreddit, topPosts, commentLimit))
+          .toSeq).flatten.headOption
+        log(s"$subreddit: loaded $n posts")
+        // phase 2: the comment load (K2, fail-soft) beside the stats
+        // upsert (reference script.py:320 → §2.9, K3)
+        val loadComments = fetched.map(c => () =>
+          Try(Load.appendComments(c, warehouse)).failed.foreach(e =>
+            log(s"$subreddit: comment load failed: $e")))
+        Par.run(loadComments.toSeq :+ (() =>
+          Load.upsertStats(dailyStats(posts, subreddit), spark, warehouse)))
         n
       }
     } finally posts.unpersist()
@@ -106,6 +107,33 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
     case s @ Success(_) => s
     case f @ Failure(e) => // per-subreddit isolation
       log(s"$subreddit: pipeline failed: $e"); f
+  }
+
+  /** The comment stage (reference script.py:310-317): the top
+    * `topPosts` ids by score go to the driver, and the source serves
+    * all their comments in one frame, collected here. The collect is
+    * the stage's action, inside its guard: a read that fails, eagerly
+    * or at the action, skips this subreddit's comments. Returns the
+    * rows as a local frame stamped with `extracted_at`, or None when
+    * the read failed or found nothing (the reference's `if comments:`
+    * guard).
+    */
+  private def topComments(posts: DataFrame, subreddit: String,
+      topPosts: Int, commentLimit: Int): Option[DataFrame] = {
+    val top = posts.orderBy(col("score").desc, col("id"))
+      .limit(topPosts).select(col("id")).collect()
+      .map(_.get(0).toString).toSeq
+    Try {
+      val c = source.fetchCommentsOf(spark, top, commentLimit)
+      (c.schema, c.collect())
+    } match {
+      case Failure(e) =>
+        log(s"$subreddit: comment fetch failed: $e"); None
+      case Success((schema, rows)) =>
+        Option.when(rows.nonEmpty)(
+          spark.createDataFrame(rows.toSeq.asJava, schema)
+            .withColumn("extracted_at", Enrich.extractedAt()))
+    }
   }
 
   /** The §2.9 aggregation over one freshly-extracted batch

@@ -1,6 +1,14 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.io.IOException
+
+import scala.util.Using
+
+import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftPlanApi, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ExpressionSet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -13,33 +21,57 @@ import org.apache.spark.sql.types.StructType
   * where [[upsertStats]] becomes a `MERGE INTO`; on plain parquet every
   * keyed rewrite is a null-safe key anti-join plus a union
   * ([[replaceOnKey]]), the same algorithm a MERGE executes without a
-  * transaction log.
+  * transaction log. [[upsertStats]] commits its rewrite by swapping
+  * directories ([[swapIn]]); [[mergeInto]] still rewrites in place
+  * ([[stageThenRewrite]]).
   */
 object Load {
 
-  /** True iff the table directory holds a data file: one with no path
+  private def fsOf(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The first data file of a table directory: one with no path
     * component below the table that a Spark read skips (`_SUCCESS`,
     * `.crc`, `_temporary`; partition directories like `_c=1` count). A
     * write that fails leaves its directory without one; such a table is
-    * absent, so the next write replaces the directory instead of
-    * failing its read of the stored rows. A listing error still throws:
-    * a transient read error must NOT be treated as "table absent" —
-    * that would silently drop or duplicate data.
+    * absent ([[tableExists]]), so the next write replaces the directory
+    * instead of failing its read of the stored rows. A listing error
+    * still throws: a transient read error must NOT be treated as "table
+    * absent" — that would silently drop or duplicate data.
     */
-  private def tableExists(spark: SparkSession, path: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def firstDataFile(spark: SparkSession,
+      path: String): Option[LocatedFileStatus] = {
+    val root = new Path(path)
+    val fs = fsOf(spark, root)
     val rootPath = fs.makeQualified(root).toUri.getPath
     def hidden(n: String) =
       n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
-    fs.exists(root) && {
+    if (!fs.exists(root)) None
+    else {
       val files = fs.listFiles(root, true)
-      var found = false
-      while (!found && files.hasNext)
-        found = !files.next().getPath.toUri.getPath.stripPrefix(rootPath)
-          .split('/').exists(hidden)
+      var found = Option.empty[LocatedFileStatus]
+      while (found.isEmpty && files.hasNext) {
+        val f = files.next()
+        if (!f.getPath.toUri.getPath.stripPrefix(rootPath)
+            .split('/').exists(hidden)) found = Some(f)
+      }
       found
     }
+  }
+
+  private def tableExists(spark: SparkSession, path: String): Boolean =
+    firstDataFile(spark, path).isDefined
+
+  /** The schema Spark wrote into one data file's footer, read in this
+    * JVM without a Spark job: declaring it skips the schema-inference
+    * job a bare `spark.read.parquet` starts, and yields the same schema
+    * (inference reads one footer too, with the same converter).
+    */
+  private def footerSchema(spark: SparkSession,
+      file: LocatedFileStatus): StructType = {
+    val meta = Using.resource(ParquetFileReader.open(HadoopInputFile
+      .fromStatus(file, spark.sparkContext.hadoopConfiguration)))(_.getFooter)
+    GraftPlanApi.parquetSchema(spark, new Footer(file.getPath, meta))
   }
 
   /** K1 — append posts (reference script.py:226-239). The reference's
@@ -57,9 +89,25 @@ object Load {
   def appendComments(df: DataFrame, warehouse: String): Unit =
     appendKeyed(df, df.sparkSession, s"$warehouse/comments")
 
+  /** True iff the optimizer proves `df` unique on `id`: its optimized
+    * plan lists `{id}` among its distinct keys, as the aggregate of a
+    * `dropDuplicates("id")` does. The plan is optimized from the
+    * analyzed one, without the cache substitution: a cached batch reads
+    * as an `InMemoryRelation`, which reports no distinct keys of the
+    * plan it holds.
+    */
+  private def uniqueOnId(df: DataFrame): Boolean = {
+    val session = df.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val plan = session.sessionState.optimizer
+      .execute(df.queryExecution.analyzed.clone())
+    plan.output.find(_.name == "id")
+      .exists(id => plan.distinctKeys.contains(ExpressionSet(Seq(id))))
+  }
+
   private def appendKeyed(df: DataFrame, spark: SparkSession,
       path: String): Unit = {
-    val batch = df.dropDuplicates("id")
+    val batch = if (uniqueOnId(df)) df else df.dropDuplicates("id")
     // the stored ids are read with the batch's declared id type: no
     // schema-inference job, and a stored id of another type fails here
     // instead of being cast
@@ -71,12 +119,14 @@ object Load {
     fresh.write.mode(SaveMode.Append).parquet(path)
   }
 
-  /** Parquet has no transactional overwrite-while-reading, and a
-    * cached plan is NOT durable (evicted partitions would recompute
-    * from the deleted files mid-overwrite): stage the merged result to
-    * a sibling directory, rewrite the table from the durable staging
-    * copy via `write`, then clean up. A table format (Delta/Iceberg)
-    * makes this atomic.
+  /** [[mergeInto]]'s in-place rewrite. Parquet has no transactional
+    * overwrite-while-reading, and a cached plan is NOT durable (evicted
+    * partitions would recompute from the deleted files mid-overwrite):
+    * stage the merged result to a sibling directory, rewrite the table
+    * from the durable staging copy via `write`, then clean up. The
+    * rewrite clears the partitions it replaces before writing them, so
+    * a crash inside it loses them; [[upsertStats]] commits by
+    * [[swapIn]] instead.
     */
   private def stageThenRewrite(merged: DataFrame, spark: SparkSession,
       path: String)(write: DataFrame => Unit): Unit = {
@@ -85,9 +135,55 @@ object Load {
     // the staging files were just written from `merged`: declare its
     // schema rather than infer it again
     write(spark.read.schema(merged.schema).parquet(staging))
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(sp, true)
+    val sp = new Path(staging)
+    fsOf(spark, sp).delete(sp, true)
+  }
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new IOException(s"rename $from -> $to failed")
+
+  /** A table's directory and its two swap siblings, `._staging` and
+    * `._old`.
+    */
+  private def swapPaths(spark: SparkSession,
+      path: String): (FileSystem, Path, Path, Path) = {
+    val target = new Path(path)
+    (fsOf(spark, target), target, new Path(s"$path._staging"),
+      new Path(s"$path._old"))
+  }
+
+  /** Commits a table rewrite staged in `<path>._staging` by two
+    * renames, `<path>` → `<path>._old` and `._staging` → `<path>`, then
+    * deletes `._old`. No step clears the table before its successor is
+    * complete on disk: a crash leaves a state [[recoverSwap]] repairs.
+    */
+  private def swapIn(spark: SparkSession, path: String): Unit = {
+    val (fs, target, staging, old) = swapPaths(spark, path)
+    rename(fs, target, old)
+    rename(fs, staging, target)
+    fs.delete(old, true)
+  }
+
+  /** Repairs a [[swapIn]] that a crash interrupted. When `<path>` holds
+    * no data file, the table is restored from `._staging` if its write
+    * completed (it holds `_SUCCESS`: the crash came after the staging
+    * write), else from `._old` (the crash came between the renames).
+    * Any `._old` or `._staging` left over is then deleted: a staging
+    * copy beside a live table is an upsert that never committed.
+    */
+  private def recoverSwap(spark: SparkSession, path: String): Unit = {
+    val (fs, target, staging, old) = swapPaths(spark, path)
+    if (!tableExists(spark, path)) {
+      val from =
+        if (fs.exists(new Path(staging, "_SUCCESS"))) Some(staging)
+        else Some(old).filter(fs.exists)
+      from.foreach { f =>
+        fs.delete(target, true)
+        rename(fs, f, target)
+      }
+    }
+    Seq(staging, old).foreach(fs.delete(_, true))
   }
 
   /** The one conflict policy of every keyed rewrite — replace on key,
@@ -106,23 +202,33 @@ object Load {
   /** K3 — upsert daily stats on PK (subreddit, date), the parquet
     * equivalent of the reference's `INSERT OR REPLACE`
     * (reference script.py:264-280): replace on key, null-safe
-    * ([[replaceOnKey]]), then rewrite the table. Re-running the same
-    * day is idempotent — the reference's observable PK-replace
+    * ([[replaceOnKey]]), write the merged table once to
+    * `<path>._staging`, and commit it by [[swapIn]]. Re-running the
+    * same day is idempotent — the reference's observable PK-replace
     * semantics. The batch holds at most one row per key, as
     * `Pipeline.dailyStats` and `StreamingStats.dailyEventStats` do by
     * grouping on it.
+    *
+    * Every call first repairs a swap a crash interrupted
+    * ([[recoverSwap]]), so a failure at any step loses no committed
+    * row. The stored table is read with the schema of one data file's
+    * footer ([[footerSchema]]); `unionByName` still fails when its
+    * columns differ from the batch's.
     *
     * Rewriting the whole table is O(table); [[upsertStatsPartitioned]]
     * is the layout that rewrites only the batch's date partitions.
     */
   def upsertStats(batch: DataFrame, spark: SparkSession, warehouse: String): Unit = {
     val path = s"$warehouse/subreddit_stats"
-    if (!tableExists(spark, path))
-      batch.write.mode(SaveMode.Overwrite).parquet(path)
-    else
-      stageThenRewrite(replaceOnKey(spark.read.parquet(path), batch, batch,
-        Seq("subreddit", "date")), spark, path)(
-        _.write.mode(SaveMode.Overwrite).parquet(path))
+    recoverSwap(spark, path)
+    firstDataFile(spark, path) match {
+      case None => batch.write.mode(SaveMode.Overwrite).parquet(path)
+      case Some(file) =>
+        replaceOnKey(spark.read.schema(footerSchema(spark, file)).parquet(path),
+            batch, batch, Seq("subreddit", "date"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$path._staging")
+        swapIn(spark, path)
+    }
   }
 
   /** The 100 TB layout of [[upsertStats]]: the stats table partitioned
@@ -197,8 +303,7 @@ object Load {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partitionCol)
         .parquet(path))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, new Path(path))
     emptied.foreach { v =>
       // a NULL partition value lives under the Hive default-partition
       // directory name, not "null"
@@ -207,8 +312,7 @@ object Load {
           .ExternalCatalogUtils.DEFAULT_PARTITION_NAME
         else org.apache.spark.sql.catalyst.catalog
           .ExternalCatalogUtils.escapePathName(String.valueOf(v))
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/$partitionCol=$dirName"), true)
+      fs.delete(new Path(s"$path/$partitionCol=$dirName"), true)
     }
   }
 

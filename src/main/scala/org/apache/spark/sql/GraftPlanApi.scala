@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 
 /** Access point for building a DataFrame from a custom LogicalPlan
   * and a Column from a custom Expression — the established public
@@ -26,4 +28,14 @@ object GraftPlanApi {
     */
   def column(e: catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** The schema `spark.read.parquet` infers from one parquet footer:
+    * Spark's own footer reader, which is `private[sql]`.
+    */
+  def parquetSchema(spark: SparkSession, footer: Footer): StructType = {
+    import execution.datasources.parquet._
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(
+        spark.asInstanceOf[classic.SparkSession].sessionState.conf))
+  }
 }

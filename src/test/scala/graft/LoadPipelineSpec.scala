@@ -5,7 +5,9 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
@@ -92,6 +94,65 @@ class LoadPipelineSpec extends SparkSpec {
       Seq("subreddit", "date"), "date"))
     Load.mergeInto(spark, table, good, Seq("subreddit", "date"), "date")
     assert(stored(table) == Seq(("r/a", 1L)))
+  }
+
+  /** The stats table's rows as (subreddit, date, total_posts), sorted,
+    * after checking that no swap sibling is left beside it.
+    */
+  private def storedStats(wh: String): Seq[(String, String, Long)] = {
+    import spark.implicits._
+    val table = s"$wh/subreddit_stats"
+    Seq("._staging", "._old").foreach(s =>
+      assert(!Files.exists(java.nio.file.Paths.get(table + s)), s))
+    spark.read.parquet(table).select("subreddit", "date", "total_posts")
+      .as[(String, String, Long)].collect().toSeq.sorted
+  }
+
+  private def stats(rows: (String, String, Long)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("subreddit", "date", "total_posts")
+  }
+
+  // the state an in-place rewrite leaves when it fails after clearing
+  // the table: the merged rows sit complete in ._staging
+  test("K3 upsert after a crash that cleared the table keeps every earlier row") {
+    val wh = tmpDir()
+    val table = s"$wh/subreddit_stats"
+    Load.upsertStats(stats(("r/a", "2025-01-01", 1L), ("r/b", "2025-01-01", 2L)),
+      spark, wh)
+    stats(("r/a", "2025-01-01", 1L), ("r/b", "2025-01-01", 2L),
+      ("r/c", "2025-01-02", 3L)).write.parquet(s"$table._staging")
+    FileUtils.cleanDirectory(new java.io.File(table))
+    Load.upsertStats(stats(("r/d", "2025-01-03", 4L)), spark, wh)
+    assert(storedStats(wh) == Seq(("r/a", "2025-01-01", 1L),
+      ("r/b", "2025-01-01", 2L), ("r/c", "2025-01-02", 3L),
+      ("r/d", "2025-01-03", 4L)))
+  }
+
+  // the state a swap leaves when it fails between its renames, here
+  // with a staging write that never completed (no _SUCCESS)
+  test("K3 upsert after a crash that moved the table to ._old keeps every earlier row") {
+    val wh = tmpDir()
+    val table = s"$wh/subreddit_stats"
+    Load.upsertStats(stats(("r/a", "2025-01-01", 1L), ("r/b", "2025-01-01", 2L)),
+      spark, wh)
+    Files.move(java.nio.file.Paths.get(table),
+      java.nio.file.Paths.get(s"$table._old"))
+    Files.createDirectories(java.nio.file.Paths.get(s"$table._staging/_temporary"))
+    Load.upsertStats(stats(("r/a", "2025-01-01", 5L), ("r/c", "2025-01-02", 3L)),
+      spark, wh)
+    assert(storedStats(wh) == Seq(("r/a", "2025-01-01", 5L),
+      ("r/b", "2025-01-01", 2L), ("r/c", "2025-01-02", 3L)))
+  }
+
+  test("K3 upsert fails on a stored table whose columns differ, and keeps it") {
+    import spark.implicits._
+    val wh = tmpDir()
+    Load.upsertStats(stats(("r/a", "2025-01-01", 1L)), spark, wh)
+    intercept[Exception](Load.upsertStats(
+      Seq(("r/a", "2025-01-02", 2.0)).toDF("subreddit", "date", "avg_score"),
+      spark, wh))
+    assert(storedStats(wh) == Seq(("r/a", "2025-01-01", 1L)))
   }
 
   test("K3-partitioned upsert rewrites only dirty date partitions") {
@@ -252,6 +313,42 @@ class LoadPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$wh/posts").count() == 2)
   }
 
+  test("K1 append skips its dedup only for a batch proven unique on id") {
+    import spark.implicits._
+    val aggregates = ArrayBuffer.empty[Int]
+    val seen = new CountDownLatch(2)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = qe.optimizedPlan.foreach {
+        case i: InsertIntoHadoopFsRelationCommand =>
+          aggregates.synchronized(aggregates +=
+            i.query.collect { case a: Aggregate => a }.size)
+          seen.countDown()
+        case _ =>
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    // cached, as the pipeline's batch is: the write's optimized plan
+    // reads the cache, which hides the dropDuplicates below it
+    val unique = Seq(("p1", 5), ("p1", 5), ("p2", 7)).toDF("id", "score")
+      .dropDuplicates("id").cache()
+    val dups = Seq(("p3", 1), ("p3", 1)).toDF("id", "score")
+    val (wh1, wh2) = (tmpDir(), tmpDir())
+    spark.listenerManager.register(listener)
+    try {
+      Load.appendPosts(unique, wh1)
+      Load.appendPosts(dups, wh2)
+      assert(seen.await(60, TimeUnit.SECONDS), "writes not seen")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      unique.unpersist()
+    }
+    assert(aggregates.synchronized(aggregates.sorted.toSeq) == Seq(0, 1))
+    assert(spark.read.parquet(s"$wh1/posts").count() == 2)
+    assert(spark.read.parquet(s"$wh2/posts").count() == 1)
+  }
+
   test("K1 append is idempotent across batches (table-wide PK contract)") {
     import spark.implicits._
     val wh = tmpDir()
@@ -372,13 +469,14 @@ class LoadPipelineSpec extends SparkSpec {
   test("pipeline loads the top posts' comments in one keyed write") {
     val wh = tmpDir()
     val writes = ArrayBuffer.empty[String]
-    val statsWritten = new CountDownLatch(1)
+    val commentsWritten, statsWritten = new CountDownLatch(1)
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
           durationNs: Long): Unit = qe.analyzed.foreach {
         case i: InsertIntoHadoopFsRelationCommand =>
           val path = i.outputPath.toUri.getPath
           writes.synchronized(writes += path)
+          if (path == s"$wh/comments") commentsWritten.countDown()
           if (path == s"$wh/subreddit_stats") statsWritten.countDown()
         case _ =>
       }
@@ -390,7 +488,10 @@ class LoadPipelineSpec extends SparkSpec {
     try {
       new Pipeline(spark, src, wh).runPipeline("1-URGENT", limit = 40,
         extractComments = true, topPosts = 3, commentLimit = 5).get
-      // the stats upsert writes last; the listener bus delivers in order
+      // the comment load and the stats upsert run side by side and
+      // are the last writes: wait for both
+      assert(commentsWritten.await(60, TimeUnit.SECONDS),
+        "comments write not seen")
       assert(statsWritten.await(60, TimeUnit.SECONDS), "stats write not seen")
     } finally spark.listenerManager.unregister(listener)
     assert(src.asked.size == 3)
@@ -457,6 +558,38 @@ class LoadPipelineSpec extends SparkSpec {
       limit = 40, extractComments = true, topPosts = 3, commentLimit = 5)
       .get == 40)
     assert(extracted.value == 40)
+  }
+
+  test("pipeline fails a subreddit whose posts load fails, before any comment or stats write") {
+    import spark.implicits._
+    val wh = tmpDir()
+    // a stored post id of another type fails K1's read of the stored ids
+    Seq(("p1", 5)).toDF("id", "score").write.parquet(s"$wh/posts")
+    val res = new Pipeline(spark, new FixtureSource(sf()), wh).runPipeline(
+      "1-URGENT", limit = 40, extractComments = true, topPosts = 3,
+      commentLimit = 5)
+    assert(res.isFailure)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$wh/comments")))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$wh/subreddit_stats")))
+  }
+
+  test("pipeline loads the comments when the stats upsert fails, and returns after both") {
+    import spark.implicits._
+    val wh = tmpDir()
+    // a stored stats table whose columns differ fails K3's merge
+    Seq(("r/a", 1)).toDF("subreddit", "other").write
+      .parquet(s"$wh/subreddit_stats")
+    val src = new RecordingSource()
+    var res: scala.util.Try[Long] = null
+    val (started, running) = jobsRun {
+      res = new Pipeline(spark, src, wh).runPipeline("1-URGENT", limit = 40,
+        extractComments = true, topPosts = 3, commentLimit = 5)
+    }
+    assert(res.isFailure)
+    assert(started > 0 && running == 0, (started, running))
+    assert(src.asked.size == 3)
+    assertStoredComments(wh, src.asked.toSeq, 5)
+    assert(spark.read.parquet(s"$wh/posts").count() == 40)
   }
 
   test("pipeline isolates per-subreddit failures (fail-soft, §2.14)") {

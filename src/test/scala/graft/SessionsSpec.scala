@@ -101,4 +101,44 @@ class SessionsSpec extends SparkSpec {
       .filterNot(closureOracles(_).contains("edges AS MATERIALIZED"))
     assert(plain.isEmpty, plain.mkString(", "))
   }
+
+  // Par is the one concurrency helper: a fresh daemon pool per call,
+  // shut down in a finally
+  private val threadMaker = ("""new Thread\b|Executors\.|ExecutionContext""" +
+    """|ForkJoinPool|ThreadPoolExecutor|\bFuture\s*[({]""").r
+
+  test("no file under src/main but Par.scala creates a thread or executor") {
+    val (par, others) = mainSources.partition(_.endsWith("Par.scala"))
+    assert(par.exists(f => threadMaker.findFirstIn(Files.readString(f)).isDefined),
+      "the guard must match Par's own pool")
+    val makers = others
+      .filter(f => threadMaker.findFirstIn(Files.readString(f)).isDefined)
+    assert(makers.isEmpty, makers.mkString("\n"))
+  }
+
+  test("Par.run waits for every thunk, then rethrows the first failure") {
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException](Par.run(Seq(
+      () => throw new IllegalStateException("first"),
+      () => { Thread.sleep(300); finished.set(true) },
+      () => throw new IllegalArgumentException("third"))))
+    assert(e.getMessage == "first")
+    assert(finished.get, "returned before a sibling thunk finished")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("third"))
+    assert(Par.run(Seq(() => 1, () => 2, () => 3)) == Seq(1, 2, 3))
+  }
+
+  test("Par.run's threads are daemons that carry the caller's local properties") {
+    val sc = spark.sparkContext
+    val key = "graft.spec.par"
+    def seen() = Par.run(Seq.fill(2)(() =>
+      (Thread.currentThread.isDaemon, sc.getLocalProperty(key))))
+    try {
+      sc.setLocalProperty(key, "a")
+      assert(seen() == Seq.fill(2)((true, "a")))
+      // a fresh pool per call: the next call sees the property as it is now
+      sc.setLocalProperty(key, "b")
+      assert(seen() == Seq.fill(2)((true, "b")))
+    } finally sc.setLocalProperty(key, null)
+  }
 }

@@ -7,7 +7,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,22 +33,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     dir.toString
   }
 
-  /** Spark jobs started on this thread while `body` runs. A marker job
-    * outside the probe runs last; the listener bus delivers its start
-    * after every event posted before it.
+  /** Spark jobs started while `body` runs, on this thread or on a
+    * thread it creates (Spark's local properties are inherited at
+    * thread creation), and how many of them were still running after
+    * `body` returned. A marker job outside the probe runs last; the
+    * listener bus delivers its start after every event posted before
+    * it, and Spark posts a job's end before its action returns, so a
+    * job whose end arrives after the marker's start outlived `body`.
     */
-  def jobsStarted(body: => Unit): Int = {
+  def jobsRun(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val key = "graft.spec.probe"
-    val started = new AtomicInteger
+    val started, ended = new AtomicInteger
     val markerSeen = new CountDownLatch(1)
+    val probed = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some("probe") => started.incrementAndGet()
+          case Some("probe") =>
+            probed.add(e.jobId); started.incrementAndGet()
           case Some("marker") => markerSeen.countDown()
           case _ =>
         }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (probed.contains(e.jobId) && markerSeen.getCount > 0)
+          ended.incrementAndGet()
     }
     sc.addSparkListener(listener)
     try {
@@ -56,9 +66,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(key, null)
       assert(markerSeen.await(60, TimeUnit.SECONDS), "listener bus stalled")
-      started.get
+      (started.get, started.get - ended.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Spark jobs started while `body` runs ([[jobsRun]]). */
+  def jobsStarted(body: => Unit): Int = jobsRun(body)._1
 
   override protected def afterAll(): Unit = {
     // session is shared across suites — do not stop it here
