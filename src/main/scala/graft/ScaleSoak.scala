@@ -110,20 +110,6 @@ object ScaleSoak {
       "dd_ngram_lsh_capped_b2w" -> ((s, dir, _) =>
         graft.operators.Dedup.ddNgramJaccardLshCfg(s, dir,
           Some(graft.operators.Dedup.LshMaxBucket), nBands = 2, nRows = 8)),
-      // BPE trainers at a production-ish merge depth (32): the delta
-      // trainer's census work ∝ touched words must flatten the gap
-      // the full trainer's 2-scans-per-round cost opens
-      "cp_bpe_train_full32" -> ((s, dir, _) =>
-        graft.operators.Corpus.cpBpeTrainAt(s, dir, 32)),
-      "cp_bpe_train_delta32" -> ((s, dir, _) =>
-        graft.operators.Corpus.cpBpeTrainDeltaAt(s, dir, 32)),
-      // the same pair on a 300k-type synthetic word table (fixture
-      // docs have ~30 types — there, wall-clock is pure job
-      // overhead); fixture-independent, run at mult 1
-      "cp_bpe_widevocab_full32" -> ((s, _, _) =>
-        graft.operators.Corpus.bpeTrainWideAt(s, 32, delta = false)),
-      "cp_bpe_widevocab_delta32" -> ((s, _, _) =>
-        graft.operators.Corpus.bpeTrainWideAt(s, 32, delta = true)),
       // graph tier: the soak fixture shifts doc_ids by 10⁹ per copy,
       // which breaks gr_*'s dense-id mod-n target contract — densify
       // first ((copy · n₀) + offset-within-copy), then run the SAME

@@ -17,6 +17,14 @@ object Determinism {
   /** Oracle-side (DuckDB) twin of [[r6]]. */
   def r6Sql(e: String): String = s"(round($e, 6) + 0.0)"
 
+  /** Oracle-side (DuckDB) HUGEINT→DOUBLE cast through VARCHAR. DuckDB's
+    * direct cast is NOT correctly rounded (measured: 172/20000 random
+    * 60–100-bit values off by 1 ulp); the VARCHAR round-trip parses
+    * correctly rounded (0/20000), matching Spark's BigDecimal→double.
+    * The moment sums it wraps pass 2^53 even at gate SF.
+    */
+  def dblSql(e: String): String = s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
+
   /** Driver/JVM twin of [[r6]] for stateful streaming outputs that
     * must row-compare equal to an r6'd batch column: Spark's `Round`
     * on DOUBLE goes through `BigDecimal.valueOf(x).setScale(6,

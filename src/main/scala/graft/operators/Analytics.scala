@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-import graft.functions.Determinism.{r6, r6Sql}
+import graft.functions.Determinism.{dblSql, r6, r6Sql}
 import graft.schema.Tables
 import graft.streaming.StreamingStats
 
@@ -588,12 +588,6 @@ FROM lineitem GROUP BY 1, 2, 3""" }
   lazy val profCorrSql: String = {
     val pairs = CorrPairs
     def v(c: String) = s"CAST(CAST(round($c * 100) AS BIGINT) AS HUGEINT)"
-    // DuckDB's direct HUGEINT→DOUBLE cast is NOT correctly rounded
-    // (measured: 172/20000 random 60–100-bit values off by 1 ulp);
-    // the VARCHAR round-trip parses correctly-rounded (0/20000),
-    // matching Spark's BigDecimal→double. The moments here exceed
-    // 2^53 even at gate SF, so this is load-bearing.
-    def dbl(e: String) = s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
     val momentCols =
       "CAST(COUNT(*) AS HUGEINT) AS n" +:
         (CorrCols.map(c => s"SUM(${v(c)}) AS s_$c") ++
@@ -606,7 +600,7 @@ FROM lineitem GROUP BY 1, 2, 3""" }
       s"""SELECT '$a~$b' AS pair,
   CASE WHEN $d1 > 0 AND $d2 > 0 THEN
     ${graft.functions.Determinism.r6Sql(
-        s"(${dbl(num)} / sqrt(${dbl(d1)} * ${dbl(d2)}))")}
+        s"(${dblSql(num)} / sqrt(${dblSql(d1)} * ${dblSql(d2)}))")}
   END AS corr FROM m"""
     }
     s"""WITH m AS (
@@ -896,15 +890,13 @@ FROM terms GROUP BY event_type ORDER BY event_type"""
   }
 
   lazy val evAbtestSql: String = {
-    // correctly-rounded HUGEINT→DOUBLE via VARCHAR (see profCorrSql)
-    def dbl(e: String) = s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
     val h = graft.functions.CrossHash
       .md5LongSql("('ab-v1:' || CAST(user_id AS VARCHAR))")
     def arm(c: Int, e: String) =
       s"SUM(CASE WHEN cohort = $c THEN $e ELSE CAST(0 AS HUGEINT) END)"
-    def mean(s: String, n: String) = s"(${dbl(s)} / $n / 100.0)"
+    def mean(s: String, n: String) = s"(${dblSql(s)} / $n / 100.0)"
     def va(n: String, s: String, ss: String) =
-      s"(${dbl(s"(CAST($n AS HUGEINT) * $ss - $s * $s)")} / " +
+      s"(${dblSql(s"(CAST($n AS HUGEINT) * $ss - $s * $s)")} / " +
         s"(CAST($n AS DOUBLE) * ($n - 1)))"
     val t = s"((${mean("s_a", "n_a")} - ${mean("s_b", "n_b")}) / " +
       s"(sqrt(${va("n_a", "s_a", "ss_a")} / n_a + " +
@@ -1180,7 +1172,6 @@ SELECT
 
   lazy val profMomentsSql: String = {
     def v(c: String) = s"CAST(CAST(round($c * 100) AS BIGINT) AS HUGEINT)"
-    def dbl(e: String) = s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
     val momentCols = "CAST(COUNT(*) AS HUGEINT) AS n" +:
       MomentCols.flatMap { c =>
         Seq(s"SUM(${v(c)}) AS s1_$c", s"SUM(${v(c)} * ${v(c)}) AS s2_$c",
@@ -1188,11 +1179,11 @@ SELECT
           s"SUM(${v(c)} * ${v(c)} * ${v(c)} * ${v(c)}) AS s4_$c")
       }
     val arms = MomentCols.map { c =>
-      val n = dbl("n")
-      val r1 = s"(${dbl(s"s1_$c")} / $n)"
-      val r2 = s"(${dbl(s"s2_$c")} / $n)"
-      val r3 = s"(${dbl(s"s3_$c")} / $n)"
-      val r4 = s"(${dbl(s"s4_$c")} / $n)"
+      val n = dblSql("n")
+      val r1 = s"(${dblSql(s"s1_$c")} / $n)"
+      val r2 = s"(${dblSql(s"s2_$c")} / $n)"
+      val r3 = s"(${dblSql(s"s3_$c")} / $n)"
+      val r4 = s"(${dblSql(s"s4_$c")} / $n)"
       val m2 = s"($r2 - $r1 * $r1)"
       val m3 = s"($r3 - 3.0 * $r1 * $r2 + 2.0 * $r1 * $r1 * $r1)"
       val m4 = s"($r4 - 4.0 * $r1 * $r3 + 6.0 * $r1 * $r1 * $r2 - " +
@@ -2316,7 +2307,6 @@ FROM f GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""
   }
 
   lazy val whHhiSql: String = {
-    def dbl(e: String) = s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
     s"""
 WITH li AS (
   SELECT l_partkey, l_suppkey,
@@ -2334,11 +2324,11 @@ WITH li AS (
   FROM per_supp GROUP BY 1
 )
 SELECT p_type, n_suppliers,
-  ${r6Sql(s"(${dbl("s")} / 10000.0)")} AS revenue,
-  ${r6Sql(s"(${dbl("ssq")} / (${dbl("s")} * ${dbl("s")}))")} AS hhi,
-  ${r6Sql(s"((${dbl("s")} * ${dbl("s")}) / ${dbl("ssq")})")}
+  ${r6Sql(s"(${dblSql("s")} / 10000.0)")} AS revenue,
+  ${r6Sql(s"(${dblSql("ssq")} / (${dblSql("s")} * ${dblSql("s")}))")} AS hhi,
+  ${r6Sql(s"((${dblSql("s")} * ${dblSql("s")}) / ${dblSql("ssq")})")}
     AS eff_suppliers,
-  ${r6Sql(s"(${dbl("mx")} / ${dbl("s")})")} AS top_share
+  ${r6Sql(s"(${dblSql("mx")} / ${dblSql("s")})")} AS top_share
 FROM g ORDER BY p_type"""
   }
 
@@ -2391,7 +2381,6 @@ FROM g ORDER BY p_type"""
   }
 
   lazy val whReturnsSql: String = {
-    def dbl(e: String) = s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
     s"""
 WITH li AS (
   SELECT l_suppkey,
@@ -2411,9 +2400,9 @@ WITH li AS (
 SELECT g.l_suppkey AS suppkey, s.s_name AS supplier, n.n_name AS nation,
   g.n_lines, g.n_returned,
   ${r6Sql("(CAST(g.n_returned AS DOUBLE) / g.n_lines)")} AS return_rate,
-  ${r6Sql(s"(${dbl("g.rev")} / 10000.0)")} AS revenue,
-  ${r6Sql(s"(${dbl("g.ret_rev")} / 10000.0)")} AS returned_revenue,
-  ${r6Sql(s"(${dbl("g.ret_rev")} / ${dbl("g.rev")})")}
+  ${r6Sql(s"(${dblSql("g.rev")} / 10000.0)")} AS revenue,
+  ${r6Sql(s"(${dblSql("g.ret_rev")} / 10000.0)")} AS returned_revenue,
+  ${r6Sql(s"(${dblSql("g.ret_rev")} / ${dblSql("g.rev")})")}
     AS returned_rev_share
 FROM g
 JOIN supplier s ON s.s_suppkey = g.l_suppkey
@@ -2484,12 +2473,11 @@ ORDER BY suppkey"""
   }
 
   lazy val profGiniSql: String = {
-    def dbl(e: String) = s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
     GiniCols.map { case (table, c) =>
       s"""
 SELECT '$table.$c' AS "column", CAST(n AS BIGINT) AS n,
-  ${r6Sql(s"(${dbl("s")} / ${dbl("n")} / 100.0)")} AS mean,
-  ${r6Sql(s"(${dbl("(t2 - (n + 1) * s)")} / ${dbl("(n * s)")})")}
+  ${r6Sql(s"(${dblSql("s")} / ${dblSql("n")} / 100.0)")} AS mean,
+  ${r6Sql(s"(${dblSql("(t2 - (n + 1) * s)")} / ${dblSql("(n * s)")})")}
     AS gini
 FROM (
   SELECT SUM(v * c * (2 * cb + c + 1)) AS t2,
@@ -3126,9 +3114,8 @@ FROM c, t ORDER BY rank"""
   }
 
   lazy val evPowerSql: String = {
-    def dbl(e: String) = s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
-    val meanC = s"(${dbl("s")} / n)"
-    val varC = s"(${dbl(s"(CAST(n AS HUGEINT) * ss - s * s)")} / " +
+    val meanC = s"(${dblSql("s")} / n)"
+    val varC = s"(${dblSql(s"(CAST(n AS HUGEINT) * ss - s * s)")} / " +
       s"(CAST(n AS DOUBLE) * (n - 1)))"
     val sd = s"(sqrt($varC) / 100.0)"
     val mdeAbs = s"($PowerZSum * $sd * sqrt(4.0 / CAST(n AS DOUBLE)))"

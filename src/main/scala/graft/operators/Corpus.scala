@@ -2211,27 +2211,19 @@ FROM t WHERE rank <= $BpeTopPairs ORDER BY rank"""
     *
     * Determinism: every output column is an integer count or a string
     * — no float anywhere; election ties break on the pair string
-    * (binary UTF8 on both engines). A production 50k-merge trainer
-    * incrementally maintains the pair census across merges instead of
-    * re-scanning (only pairs touching the merged symbol change); the
-    * per-round full census here keeps the oracle twin exact, and the
-    * loop shape is identical.
+    * (binary UTF8 on both engines). Each round re-scans the word
+    * table in full: an incremental (touched-words delta) census
+    * measured slower at every locally-runnable scale (SCALE.md, "BPE
+    * delta maintenance at 32 merges").
     */
   def cpBpeTrain(spark: SparkSession, sfDir: String): DataFrame =
-    cpBpeTrainAt(spark, sfDir, BpeTrainMerges)
+    bpeTrainOf(bpeWords(spark, sfDir), BpeTrainMerges)
 
-  /** ≥2-char lowercased word stream both trainers consume. */
+  /** ≥2-char lowercased word stream [[cpBpeTrain]] consumes. */
   private def bpeWords(spark: SparkSession, sfDir: String): DataFrame =
     docs(spark, sfDir)
       .select(explode(TextAnalysis.tokens(lower(col("text")))).as("w"))
       .filter(length(col("w")) >= 2)
-
-  /** [[cpBpeTrain]] at ANY merge count — ScaleSoak's handle for the
-    * deeper-merge cost comparison against the delta trainer.
-    */
-  private[graft] def cpBpeTrainAt(spark: SparkSession, sfDir: String,
-      merges: Int): DataFrame =
-    bpeTrainOf(bpeWords(spark, sfDir), merges)
 
   /** Character-grain starting corpus: the word-frequency table with
     * each word's initial segmentation.
@@ -2243,8 +2235,7 @@ FROM t WHERE rank <= $BpeTopPairs ORDER BY rank"""
         regexp_replace(col("w"), "(.)", " $1 ").as("seg"))
 
   /** Frequency census of adjacent symbol pairs over a (freq, seg)
-    * corpus — the loop's per-round scan, and the thing
-    * [[bpeCensusDelta]] maintains incrementally in production.
+    * corpus — the loop's per-round full scan.
     */
   private[graft] def bpePairCensus(corpus: DataFrame): DataFrame =
     corpus
@@ -2273,93 +2264,6 @@ FROM t WHERE rank <= $BpeTopPairs ORDER BY rank"""
       .select(col("w"), col("freq"),
         replace(col("seg"), concat(lit(" "), col("eraw"), lit(" ")),
           concat(lit(" "), col("emerged"), lit(" "))).as("seg"))
-
-  /** INCREMENTAL census maintenance across one merge — the move that
-    * makes a production 50k-merge trainer feasible: a merge only
-    * changes the pair contributions of words CONTAINING the elected
-    * pair (for real vocabularies a shrinking sliver of the word
-    * table), so the next census is
-    * `prev − census(touched_before) + census(touched_after)` instead
-    * of a full corpus re-scan. Counts that drop to zero (always
-    * including the merged pair itself) leave the census. The shipped
-    * [[cpBpeTrain]] keeps the full per-round scan so its oracle twin
-    * stays exact; CorpusSpec pins delta == full recompute across all
-    * [[BpeTrainMerges]] fixture rounds, chained (each round's delta
-    * feeds the next), plus a touched-fraction vacuity guard.
-    */
-  private[graft] def bpeCensusDelta(prevCensus: DataFrame,
-      corpusBefore: DataFrame, elected: DataFrame): DataFrame =
-    bpeCensusDeltaBy(bpePairCensus)(prevCensus, corpusBefore, elected)
-
-  /** [[bpeCensusDelta]] generalized over the census definition — the
-    * identical touched-words algebra maintains BOTH the pair census
-    * (training elections) and the symbol census (the vocab_size /
-    * n_symbols readout), so the delta trainer never re-scans the
-    * corpus for either.
-    */
-  private[graft] def bpeCensusDeltaBy(censusOf: DataFrame => DataFrame)(
-      prevCensus: DataFrame, corpusBefore: DataFrame,
-      elected: DataFrame): DataFrame = {
-    val touched = bpeTouched(corpusBefore, elected)
-    censusMinusPlus(prevCensus,
-      censusOf(touched.select(col("freq"), col("seg"))),
-      censusOf(bpeTouchedAfter(touched)))
-  }
-
-  /** The words CONTAINING the elected pair — the per-round sliver all
-    * delta maintenance aggregates over. Carries the elected (eraw,
-    * emerged) columns so consumers never re-reference the election.
-    */
-  private def bpeTouched(corpusBefore: DataFrame,
-      elected: DataFrame): DataFrame =
-    corpusBefore
-      .crossJoin(broadcast(elected.select(col("raw").as("eraw"),
-        col("merged").as("emerged"))))
-      .filter(col("seg").contains(
-        concat(lit(" "), col("eraw"), lit(" "))))
-
-  /** The touched sliver with the merge applied. */
-  private def bpeTouchedAfter(touched: DataFrame): DataFrame =
-    touched.select(col("freq"),
-      replace(col("seg"), concat(lit(" "), col("eraw"), lit(" ")),
-        concat(lit(" "), col("emerged"), lit(" "))).as("seg"))
-
-  /** ONE census carrying BOTH grains the delta trainer maintains:
-    * pair rows (raw = "x  y", contains spaces) and symbol rows
-    * (space-free) coexist keyed by raw — they can never collide — so
-    * a single explode + groupBy + one delta per round replaces two;
-    * elections filter the pair rows, the vocab_size/n_symbols readout
-    * filters the symbol rows.
-    */
-  private[graft] def bpeCombinedCensus(corpus: DataFrame): DataFrame =
-    corpus
-      .select(col("freq"), explode(concat(
-        regexp_extract_all(col("seg"),
-          lit("(?= ([^ ]+  [^ ]+) )"), lit(1)),
-        split(trim(col("seg")), "  "))).as("raw"))
-      .groupBy(col("raw")).agg(sum(col("freq")).as("n_occurrences"))
-
-  /** `prev − before + after`, zero-count rows dropped. */
-  private def censusMinusPlus(prev: DataFrame, before: DataFrame,
-      after: DataFrame): DataFrame =
-    prev
-      .unionByName(before
-        .withColumn("n_occurrences", -col("n_occurrences")))
-      .unionByName(after)
-      .groupBy(col("raw"))
-      .agg(sum(col("n_occurrences")).as("n_occurrences"))
-      .filter(col("n_occurrences") > 0)
-
-  /** Freq-weighted SYMBOL census of a (freq, seg) corpus — row count =
-    * vocab_size, value sum = n_symbols; the other census the delta
-    * trainer maintains so its per-round stats readout is vocab-sized,
-    * never a corpus re-scan.
-    */
-  private[graft] def bpeSymCensus(corpus: DataFrame): DataFrame =
-    corpus
-      .select(col("freq"),
-        explode(split(trim(col("seg")), "  ")).as("raw"))
-      .groupBy(col("raw")).agg(sum(col("freq")).as("n_occurrences"))
 
   /** The training loop over any (w: string) word stream — split out
     * so the spec can pin hand-computed merges on a tiny corpus, and so
@@ -2445,124 +2349,6 @@ WITH $bpeCorpus0Sql, ${bpeRoundsSql(BpeTrainMerges)}
 $out
 ORDER BY merge_rank"""
   }
-
-  // ------------------------------------------------------------------
-  // cp_bpe_train_delta — the production 50k-merge training path
-  // ------------------------------------------------------------------
-
-  /** [[cpBpeTrain]] computed by INCREMENTAL census maintenance — the
-    * production 50k-merge trainer's loop body, shipped as its own
-    * query so delta == full is driver-HASH-verified every round (the
-    * dd_ngram_jaccard_lsh / cp_decontam_bloom contract: the oracle SQL
-    * is [[cpBpeTrainSql]] VERBATIM). Per round, instead of two full
-    * word-table re-scans (pair census for the election, symbol census
-    * for the vocab readout — vocab-sized here, but billions of word
-    * types at a 100 TB corpus), both censuses advance by
-    * `prev − census(touched_before) + census(touched_after)` over
-    * only the words CONTAINING the elected pair
-    * ([[bpeCensusDeltaBy]]) — for real vocabularies a sliver that
-    * shrinks as merges specialize, which is what makes 50k merges
-    * feasible where 2·50k corpus scans are not. The merge itself
-    * stays one map-only literal-replace pass (no shuffle); the
-    * election and stats readout run on the maintained vocab-sized
-    * censuses. ScaleSoak measures the sliver claim at a deeper merge
-    * count (SCALE.md).
-    */
-  def cpBpeTrainDelta(spark: SparkSession, sfDir: String): DataFrame =
-    cpBpeTrainDeltaAt(spark, sfDir, BpeTrainMerges)
-
-  /** [[cpBpeTrainDelta]] at ANY merge count (the ScaleSoak dial). */
-  private[graft] def cpBpeTrainDeltaAt(spark: SparkSession, sfDir: String,
-      merges: Int): DataFrame =
-    bpeTrainLoopDelta(bpeWords(spark, sfDir), merges)
-      .reduce(_ unionByName _).orderBy(col("merge_rank"))
-
-  /** Synthetic wide-vocabulary word stream (`types` distinct
-    * 8-hex-char words × `occ` occurrences each) — the fixture
-    * documents carry only ~30 word types, so trainer wall-clock there
-    * measures pure per-round job overhead; this stream gives the
-    * censuses a word table big enough that census WORK (the thing the
-    * delta trainer shrinks to the touched sliver) is what the clock
-    * sees. ScaleSoak's widevocab pair runs both trainers on it.
-    */
-  private[graft] def wideVocabWords(spark: SparkSession, types: Int,
-      occ: Int): DataFrame =
-    spark.range(types.toLong * occ)
-      .select(substring(md5((col("id") % types).cast("string")), 1, 8)
-        .as("w"))
-
-  /** The (full, delta) trainer pair over [[wideVocabWords]] — soak
-    * handles; `delta` picks the loop.
-    */
-  private[graft] def bpeTrainWideAt(spark: SparkSession, merges: Int,
-      delta: Boolean): DataFrame = {
-    val words = wideVocabWords(spark, 300000, 4)
-    (if (delta) bpeTrainLoopDelta(words, merges)
-     else bpeTrainLoop(words, merges)._1)
-      .reduce(_ unionByName _).orderBy(col("merge_rank"))
-  }
-
-  /** The delta-maintenance training loop — same outputs as
-    * [[bpeTrainLoop]], census work ∝ touched words per round.
-    */
-  private[graft] def bpeTrainLoopDelta(
-      words: DataFrame, merges: Int): Seq[DataFrame] = {
-    var corpus = bpeInitialCorpus(words).localCheckpoint(true)
-    // the ONLY full-word-table census: round 0; every later round is
-    // a touched-words delta over the ONE combined (pair + symbol)
-    // census
-    var cens = bpeCombinedCensus(corpus).localCheckpoint(false)
-    (1 to merges).map { r =>
-      // job/scan discipline — where the delta actually saves: the
-      // full loop pays TWO word-table scans per round (the census
-      // explode+agg and the merge rewrite). Here touched-detection is
-      // FUSED into the merge rewrite (the pass keeps the pre-merge
-      // seg; a word is touched iff the rewrite changed it), so each
-      // round scans the word table ONCE, and the census explode —
-      // the expensive half — runs only over the changed sliver. The
-      // delta census is a LAZY checkpoint that materializes under
-      // the NEXT round's election job; per round the only actions
-      // are the election and the rewrite, the full loop's own two.
-      // (Rejected shapes, each measured slower at 32 merges: eager
-      // per-census checkpoints = 2 extra jobs/round; separate lazy
-      // pair/symbol chains = the symbol chain replays all rounds at
-      // the final stats collection; a standalone contains()-filter
-      // touched pass = a second corpus scan per round, the very cost
-      // the delta exists to avoid.)
-      // LAZY pin (round 19, same move as the full loop): the merge
-      // rewrite's broadcast build is the first evaluation, the output
-      // row reads stored blocks — one driver job per round, not two.
-      // The prior round's lazy census now ALSO materializes under the
-      // rewrite job rather than a standalone election job.
-      val elected = bpeElect(cens.filter(col("raw").contains(" ")))
-        .localCheckpoint(false)
-      val applied = corpus
-        .crossJoin(broadcast(elected.select(col("raw").as("eraw"),
-          col("merged").as("emerged"))))
-        .select(col("w"), col("freq"), col("seg").as("seg_old"),
-          replace(col("seg"), concat(lit(" "), col("eraw"), lit(" ")),
-            concat(lit(" "), col("emerged"), lit(" "))).as("seg"))
-        .localCheckpoint(true)
-      corpus = applied.select(col("w"), col("freq"), col("seg"))
-      val touched = applied.filter(col("seg_old") =!= col("seg"))
-      cens = censusMinusPlus(cens,
-        bpeCombinedCensus(touched.select(col("freq"),
-          col("seg_old").as("seg"))),
-        bpeCombinedCensus(touched.select(col("freq"), col("seg"))))
-        .localCheckpoint(false)
-      // stats from the maintained symbol rows: count = vocab_size,
-      // value sum = n_symbols — vocab-sized, not a word-table re-scan
-      val symRows = cens.filter(!col("raw").contains(" "))
-      val stats = symRows.agg(count(lit(1)).as("vocab_size"),
-        sum(col("n_occurrences")).as("n_symbols"))
-      elected.select(lit(r).as("merge_rank"), col("pair"), col("merged"),
-          col("n_occurrences"))
-        .crossJoin(broadcast(stats))
-    }
-  }
-
-  /** delta == full is the contract — ONE oracle definition. */
-  lazy val cpBpeTrainDeltaSql: String = cpBpeTrainSql
 
   // ------------------------------------------------------------------
   // cp_bpe_tokenize — apply the trained merge table at document grain

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.CrossHash
 import graft.functions.CrossHash.{md5ModSql, P}
-import graft.functions.Determinism.{r6, r6Sql}
+import graft.functions.Determinism.{dblSql, r6, r6Sql}
 import graft.operators.TextAnalysis.docs
 
 /** Link-graph analytics over the document corpus — the curation tier
@@ -1023,10 +1023,6 @@ ORDER BY d.source"""
 
   lazy val grAssortativitySql: String = {
     def h(x: String) = s"CAST($x AS HUGEINT)"
-    // HUGEINT→DOUBLE via VARCHAR: the correctly-rounded path
-    // (profCorrSql's measured finding; these moments pass 2^53 at
-    // soak scale)
-    def dbl(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     s"""
 WITH $grEdgesSql, und AS (
   SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
@@ -1057,7 +1053,7 @@ WITH $grEdgesSql, und AS (
 )
 SELECT n_edges, CAST(n AS BIGINT) AS n_stubs,
   CASE WHEN den > 0 THEN
-    ${r6Sql(s"(${dbl("num")} / ${dbl("den")})")}
+    ${r6Sql(s"(${dblSql("num")} / ${dblSql("den")})")}
   END AS assortativity
 FROM f"""
   }
@@ -1561,9 +1557,6 @@ ORDER BY l.doc_id"""
 
   lazy val grModularitySql: String = {
     def h(x: String) = s"CAST($x AS HUGEINT)"
-    // HUGEINT→DOUBLE via VARCHAR: the correctly-rounded path (the
-    // gr_assortativity / profCorr finding)
-    def dbl(x: String) = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     s"""
 WITH $lpaCtesSql, deg AS (
   SELECT v, COUNT(*) AS dg
@@ -1589,9 +1582,9 @@ SELECT n.lbl AS community, n.n_nodes,
   CAST(COALESCE(i.e_c, 0) AS BIGINT) AS internal_edges,
   d.d_c AS degree_sum,
   CASE WHEN mm.m > 0 THEN ${r6Sql(
-      s"(${dbl(s"(4 * ${h("mm.m")} * ${h("COALESCE(i.e_c, 0)")}" +
+      s"(${dblSql(s"(4 * ${h("mm.m")} * ${h("COALESCE(i.e_c, 0)")}" +
         s" - ${h("d.d_c")} * ${h("d.d_c")})")}" +
-      s" / ${dbl(s"(4 * ${h("mm.m")} * ${h("mm.m")})")})")}
+      s" / ${dblSql(s"(4 * ${h("mm.m")} * ${h("mm.m")})")})")}
   END AS contribution
 FROM ncom n
 JOIN dsum d ON d.lbl = n.lbl

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{DotProduct, KmArgmin, KmArgminAnn}
-import graft.functions.Determinism.{r6, r6Sql}
+import graft.functions.Determinism.{dblSql, r6, r6Sql}
 import graft.operators.Dedup.embeddings
 
 /** Similarity search (approximate nearest neighbor) over the
@@ -2486,9 +2486,6 @@ ORDER BY query_id, rank"""
   }
 
   lazy val simDimStatsSql: String = {
-    // HUGEINT→DOUBLE via VARCHAR round-trip: correctly rounded where
-    // the direct cast is not (see profCorrSql's measured note)
-    def dbl(e: String) = s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
     s"""WITH e AS (
   SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ), expl AS (
@@ -2502,8 +2499,8 @@ ORDER BY query_id, rank"""
   FROM expl GROUP BY pos
 ), st AS (
   SELECT pos, n, mn, mx,
-    ${dbl("s")} / (CAST(n AS DOUBLE) * ${DimFp}.0) AS mean,
-    ${dbl(s"(CAST(n AS HUGEINT) * ss - s * s)")} /
+    ${dblSql("s")} / (CAST(n AS DOUBLE) * ${DimFp}.0) AS mean,
+    ${dblSql(s"(CAST(n AS HUGEINT) * ss - s * s)")} /
       (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) /
       (${DimFp}.0 * ${DimFp}.0) AS variance
   FROM m
@@ -2942,11 +2939,10 @@ $closure
   }
 
   lazy val simEmbedDriftSql: String = {
-    def dbl(e: String) = s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
     def mean(t: String) =
-      s"(${dbl(s"s_$t")} / (CAST(n_$t AS DOUBLE) * ${DimFp}.0))"
+      s"(${dblSql(s"s_$t")} / (CAST(n_$t AS DOUBLE) * ${DimFp}.0))"
     def variance(t: String) =
-      s"(${dbl(s"(CAST(n_$t AS HUGEINT) * ss_$t - s_$t * s_$t)")} / " +
+      s"(${dblSql(s"(CAST(n_$t AS HUGEINT) * ss_$t - s_$t * s_$t)")} / " +
         s"(CAST(n_$t AS DOUBLE) * CAST(n_$t AS DOUBLE)) / " +
         s"(${DimFp}.0 * ${DimFp}.0))"
     val se2 = s"(${variance("train")} / n_train + ${variance("val")} / n_val)"

@@ -145,10 +145,8 @@ object RankFilterToTopK extends Rule[LogicalPlan] {
 
   private def withinCostGate(part: Seq[Expression],
       inner: LogicalPlan): Boolean = {
-    val flushGroups = conf
-      .getConfString("spark.graft.topk.partialFlushGroups", "65536").toInt
     estimatedGroups(part, inner)
-      .forall(_ <= BigInt(flushGroups) * CostGateFactor)
+      .forall(_ <= BigInt(TopK.partialFlushGroups(conf)) * CostGateFactor)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {

@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.classic.Strategy
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.IntegerType
 
 /** Rank semantics of [[TopKPerGroup]] — the three SQL window-rank
@@ -275,8 +276,7 @@ case class TopKPerGroupExec(
     val isPartial = partial
     val outAttrs = output
     val m = mode
-    val flushGroups = conf
-      .getConfString("spark.graft.topk.partialFlushGroups", "65536").toInt
+    val flushGroups = TopK.partialFlushGroups(conf)
     require(flushGroups >= 1, "partialFlushGroups must be >= 1")
     child.execute().mapPartitions { it =>
       val keyProj = UnsafeProjection.create(groupExprs, childOutput)
@@ -362,6 +362,13 @@ case class TopKPerGroupExec(
 
 /** Column-API entry point. */
 object TopK {
+
+  /** Live groups a partial pass buffers before it flushes
+    * (`spark.graft.topk.partialFlushGroups`); [[RankFilterToTopK]]'s
+    * cost gate reads the same bound.
+    */
+  private[plans] def partialFlushGroups(conf: SQLConf): Int =
+    conf.getConfString("spark.graft.topk.partialFlushGroups", "65536").toInt
 
   /** Idempotently add [[TopKStrategy]] to the session (the public
     * `experimental.extraStrategies` seam — works on any session, no

@@ -41,9 +41,7 @@ class PlanLintSpec extends SparkSpec {
     *    cp_bpe_tokenize (per training round: the 1-row elected-merge
     *    anchor replayed onto the corpus and the 1-row vocab-stats
     *    readout — both limit-1/global-agg by construction; tokenize
-    *    embeds the same loop), cp_bpe_train_delta (the same two
-    *    anchors; its touched-word filter replays the identical 1-row
-    *    elected merge onto the word table).
+    *    embeds the same loop).
     *  - fixed NQueries-row query sets / ≤k-row centroid-or-threshold
     *    tables: sim_hard_negatives and sim_mrl (the NQueries-row
     *    anchor side against the corpus — the scored-pass shape of
@@ -69,7 +67,7 @@ class PlanLintSpec extends SparkSpec {
     *    footer-pruning BNLJ).
     */
   private val bnljOk: Set[String] = Set(
-    "cp_bpe_train", "cp_bpe_train_delta", "cp_bpe_tokenize",
+    "cp_bpe_train", "cp_bpe_tokenize",
     "cp_curriculum", "cp_dataset_card", "cp_dataset_card_approx",
     "cp_decontam_embed", "cp_dedup_impact", "cp_dedup_impact_capped",
     // cp_dsir: 1-row target-source / corpus-total / quartile anchors

@@ -171,4 +171,11 @@ class QueriesSpec extends SparkSpec {
     val o = SparkEntry.oracleSql.keySet
     assert(o.subsetOf(q), s"oracle-only keys: ${o -- q}")
   }
+
+  // the documented rows-only checks: dumped by Verify, no oracle
+  test("the queries without an oracle are exactly the five rows-only ones") {
+    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    assert(rowsOnly == Set("prof_summary_approx", "cp_stats_approx",
+      "cp_sample_approx", "cp_dataset_card_approx", "prof_heavy_hitters"))
+  }
 }

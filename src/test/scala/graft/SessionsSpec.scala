@@ -79,6 +79,28 @@ class SessionsSpec extends SparkSpec {
     assert(trainers.isEmpty, trainers.mkString("\n"))
   }
 
+  // a call, not the definition
+  private val bpeMergeCall = """(?<!def )\bbpe(?:Elect|ApplyMerge)\(""".r
+
+  // BPE trains through Corpus.bpeTrainLoop, the one trainer: no other
+  // code elects or applies a merge
+  test("no code under src/main but Corpus.bpeTrainLoop elects or " +
+    "applies a BPE merge") {
+    val (corpus, others) = mainSources.partition(_.endsWith("Corpus.scala"))
+    val src = Files.readString(corpus.head)
+    val loop = src.indexOf("def bpeTrainLoop(")
+    val loopEnd = src.indexOf("\n  }\n", loop)
+    assert(loop >= 0 && loopEnd > loop, "the guard must see the trainer")
+    val calls = bpeMergeCall.findAllMatchIn(src).toSeq
+    assert(calls.map(_.matched).toSet == Set("bpeElect(", "bpeApplyMerge("),
+      "the guard must match the loop's own calls")
+    val outside = calls.filterNot(m => m.start > loop && m.start < loopEnd)
+    assert(outside.isEmpty, outside.map(m => s"Corpus.scala@${m.start}"))
+    val elsewhere = others
+      .filter(f => bpeMergeCall.findFirstIn(Files.readString(f)).isDefined)
+    assert(elsewhere.isEmpty, elsewhere.mkString("\n"))
+  }
+
   // the recursive CTE `reach(`, not `foreach(`
   private val reachCte = """\breach\(""".r
 
