@@ -17,9 +17,10 @@ import graft.transform.Enrich
   * isolated (one failure logs and continues, reference script.py:351-353).
   *
   * Stage shape per subreddit:
-  *   extract (source fetch) → transform (Enrich, lazy Catalyst plan,
-  *   cached) → guard on the cached batch's count, then two phases
-  *   ([[graft.Par]], each waiting for all of its stages):
+  *   extract (source fetch) → transform (Enrich), collected once, at
+  *   most `limit` rows, as a local relation: duplicate ids keep their
+  *   first row in listing order → guard on the row count, then two
+  *   phases ([[graft.Par]], each waiting for all of its stages):
   *    1. load posts (K1) ‖ top-10 by score → one comment fetch for
   *       those posts (one call, one collect on the driver);
   *    2. one K2 load of those comments ‖ daily stats agg → upsert (K3).
@@ -27,7 +28,7 @@ import graft.transform.Enrich
   *   depend on K1, and K2 and K3 write different tables.
   *
   * Failures, per stage:
-  *   - extract, enrich or the guard's count: the subreddit fails
+  *   - extract or enrich (the one collect): the subreddit fails
   *     (`Failure`), nothing is written;
   *   - K1: the subreddit fails once phase 1 ends, before K2 or K3 write
   *     anything. The one deviation from the sequential order: the
@@ -64,45 +65,49 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
   def log(msg: String): Unit =
     Console.err.println(s"[pipeline] $msg")
 
+  /** The extract and its enrichment as one frame: the listing, the
+    * enriched columns, then `extracted_at`. It plans as one top-K
+    * ([[Enrich.enrichPosts]] is one projection), so collecting it is one
+    * Spark job that returns at most `limit` rows.
+    */
+  def extracted(subreddit: String, limit: Int, sort: String): DataFrame =
+    Enrich.enrichPosts(source.fetchPosts(spark, subreddit, limit, sort))
+      .withColumn("extracted_at", Enrich.extractedAt())
+
   /** One subreddit end-to-end; returns the number of posts loaded. */
   def runPipeline(subreddit: String, limit: Int = 50, sort: String = "hot",
       extractComments: Boolean = false, commentLimit: Int = 20,
       topPosts: Int = 10): Try[Long] = Try {
     // E — extract (reference script.py:294), T — transform (reference
-    // script.py:301): a lazy column graph, cached before anything reads
-    // it. Every action below (the guard's count, load, top-k, stats) must
-    // see ONE extract — a live source would otherwise be re-fetched per
-    // action with different results
-    val posts = Enrich.enrichPosts(
-        source.fetchPosts(spark, subreddit, limit, sort))
-      .withColumn("extracted_at", Enrich.extractedAt())
-      .dropDuplicates("id")
-      .cache()
-    try {
-      val n = posts.count()
-      if (n == 0) { // P10 guard (reference script.py:296-298)
-        log(s"$subreddit: no posts extracted"); 0L
-      } else {
-        // phase 1: load posts (K1, reference script.py:308) while the
-        // comment stage reads; a K1 failure fails the subreddit here,
-        // before K2 or K3 writes, and the rows read are dropped
-        val loadPosts = () => {
-          Load.appendPosts(posts, warehouse); Option.empty[DataFrame]
-        }
-        val fetched = Par.run(loadPosts +: Option.when(extractComments)(
-            () => topComments(posts, subreddit, topPosts, commentLimit))
-          .toSeq).flatten.headOption
-        log(s"$subreddit: loaded $n posts")
-        // phase 2: the comment load (K2, fail-soft) beside the stats
-        // upsert (reference script.py:320 → §2.9, K3)
-        val loadComments = fetched.map(c => () =>
-          Try(Load.appendComments(c, warehouse)).failed.foreach(e =>
-            log(s"$subreddit: comment load failed: $e")))
-        Par.run(loadComments.toSeq :+ (() =>
-          Load.upsertStats(dailyStats(posts, subreddit), spark, warehouse)))
-        n
+    // script.py:301): collected once, so every stage below (load, top-k,
+    // stats) sees ONE extract with one `extracted_at` — a live source
+    // would otherwise be re-fetched per action with different results
+    val extract = extracted(subreddit, limit, sort)
+    val rows = extract.collect().distinctBy(_.getAs[Any]("id"))
+    if (rows.isEmpty) { // P10 guard (reference script.py:296-298)
+      log(s"$subreddit: no posts extracted"); 0L
+    } else {
+      val posts = spark.createDataFrame(rows.toSeq.asJava, extract.schema)
+      val n = rows.length.toLong
+      // phase 1: load posts (K1, reference script.py:308) while the
+      // comment stage reads; a K1 failure fails the subreddit here,
+      // before K2 or K3 writes, and the rows read are dropped
+      val loadPosts = () => {
+        Load.appendPosts(posts, warehouse); Option.empty[DataFrame]
       }
-    } finally posts.unpersist()
+      val fetched = Par.run(loadPosts +: Option.when(extractComments)(
+          () => topComments(posts, subreddit, topPosts, commentLimit))
+        .toSeq).flatten.headOption
+      log(s"$subreddit: loaded $n posts")
+      // phase 2: the comment load (K2, fail-soft) beside the stats
+      // upsert (reference script.py:320 → §2.9, K3)
+      val loadComments = fetched.map(c => () =>
+        Try(Load.appendComments(c, warehouse)).failed.foreach(e =>
+          log(s"$subreddit: comment load failed: $e")))
+      Par.run(loadComments.toSeq :+ (() =>
+        Load.upsertStats(dailyStats(posts, subreddit), spark, warehouse)))
+      n
+    }
   } match {
     case s @ Success(_) => s
     case f @ Failure(e) => // per-subreddit isolation

@@ -8,7 +8,6 @@ import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, GraftPlanApi, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.ExpressionSet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -89,25 +88,9 @@ object Load {
   def appendComments(df: DataFrame, warehouse: String): Unit =
     appendKeyed(df, df.sparkSession, s"$warehouse/comments")
 
-  /** True iff the optimizer proves `df` unique on `id`: its optimized
-    * plan lists `{id}` among its distinct keys, as the aggregate of a
-    * `dropDuplicates("id")` does. The plan is optimized from the
-    * analyzed one, without the cache substitution: a cached batch reads
-    * as an `InMemoryRelation`, which reports no distinct keys of the
-    * plan it holds.
-    */
-  private def uniqueOnId(df: DataFrame): Boolean = {
-    val session = df.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val plan = session.sessionState.optimizer
-      .execute(df.queryExecution.analyzed.clone())
-    plan.output.find(_.name == "id")
-      .exists(id => plan.distinctKeys.contains(ExpressionSet(Seq(id))))
-  }
-
   private def appendKeyed(df: DataFrame, spark: SparkSession,
       path: String): Unit = {
-    val batch = if (uniqueOnId(df)) df else df.dropDuplicates("id")
+    val batch = df.dropDuplicates("id")
     // the stored ids are read with the batch's declared id type: no
     // schema-inference job, and a stored id of another type fails here
     // instead of being cast

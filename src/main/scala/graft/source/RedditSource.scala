@@ -35,6 +35,8 @@ trait RedditSource {
 
   /** S1: up to `limit` raw posts of one subreddit, sort ∈ {hot, new,
     * top}. Columns = the 15 extracted fields (reference script.py:131-147).
+    * The listing must stay bounded by `limit`: the pipeline collects it
+    * to the driver in one action (`Pipeline.extracted`).
     */
   def fetchPosts(spark: SparkSession, subreddit: String, limit: Int,
       sort: String): DataFrame

@@ -76,18 +76,30 @@ object Enrich {
   /** T12 — load-time timestamp (script.py:71, :86). */
   def extractedAt(): Column = current_timestamp()
 
-  /** Full post enrichment, in the reference's source order
-    * (script.py:196-217). Input: the 15 raw extracted columns.
+  /** Full post enrichment (script.py:196-217), one projection: the
+    * input's columns in place, `title` and `selftext` cleaned, then the
+    * 7 derived columns, each computed from the RAW inputs (so T1/T2
+    * measure the uncleaned text). Input: the 15 raw extracted columns.
+    *
+    * One Project keeps a listing's `Limit(Sort)` plannable as a single
+    * top-K (`TakeOrderedAndProjectExec`): a `withColumn` chain leaves
+    * Projects that `CollapseProject` will not merge, and the planner then
+    * falls back to a range-partitioned global sort.
     */
-  def enrichPosts(raw: DataFrame): DataFrame = raw
-    .withColumn("title_length", strLength(col("title")))
-    .withColumn("selftext_length", strLength(col("selftext")))
-    .withColumn("has_selftext", hasText(col("selftext_length")))
-    .withColumn("hour_posted", hourPosted(col("created_utc")))
-    .withColumn("day_of_week", dayOfWeekMon0(col("created_utc")))
-    .withColumn("engagement_rate", engagementRate(col("num_comments"), col("score")))
-    .withColumn("score_category", scoreCategory(col("score")))
-    // cleaning happens AFTER the length/derivation columns (order matters)
-    .withColumn("title", cleanTitle(col("title")))
-    .withColumn("selftext", fillSelftext(col("selftext")))
+  def enrichPosts(raw: DataFrame): DataFrame = {
+    val cleaned = raw.columns.toSeq.map {
+      case "title" => cleanTitle(col("title")).as("title")
+      case "selftext" => fillSelftext(col("selftext")).as("selftext")
+      case c => col(c)
+    }
+    val selftextLength = strLength(col("selftext"))
+    raw.select(cleaned ++ Seq(
+      strLength(col("title")).as("title_length"),
+      selftextLength.as("selftext_length"),
+      hasText(selftextLength).as("has_selftext"),
+      hourPosted(col("created_utc")).as("hour_posted"),
+      dayOfWeekMon0(col("created_utc")).as("day_of_week"),
+      engagementRate(col("num_comments"), col("score")).as("engagement_rate"),
+      scoreCategory(col("score")).as("score_category")): _*)
+  }
 }

@@ -2,7 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import graft.schema.Schemas
 import graft.transform.Enrich
 
 /** T1–T12 formula tests (SURVEY.md §2.4, traps §7.4). */
@@ -20,6 +22,28 @@ class EnrichSpec extends SparkSpec {
 
   private def enriched(df: org.apache.spark.sql.DataFrame) =
     Enrich.enrichPosts(df).collect().head
+
+  /** A scan of the 15 raw columns as declared: a leaf relation with no
+    * Project of its own.
+    */
+  private def rawScan() =
+    spark.read.schema(Schemas.rawPosts).json(tmpDir("graft_raw_"))
+
+  test("enrichPosts yields the stored posts columns minus extracted_at, in order") {
+    def shape(fields: Seq[org.apache.spark.sql.types.StructField]) =
+      fields.map(f => (f.name, f.dataType))
+    assert(shape(Enrich.enrichPosts(rawScan()).schema.fields.toSeq) ==
+      shape(Schemas.posts.fields.toSeq.filterNot(_.name == "extracted_at")))
+  }
+
+  test("enrichPosts adds exactly one Project over its input") {
+    val raw = rawScan()
+    Enrich.enrichPosts(raw).queryExecution.optimizedPlan match {
+      case Project(_, child) =>
+        assert(child.sameResult(raw.queryExecution.optimizedPlan), child)
+      case other => fail(s"not one Project over the input:\n$other")
+    }
+  }
 
   test("T5 weekday is Monday=0 (pandas convention, not Spark dayofweek)") {
     // 2025-01-06 is a Monday, 2025-01-12 a Sunday

@@ -7,15 +7,18 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{QueryExecution, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.model.RedditModel
 import graft.pipeline.Pipeline
 import graft.sink.Load
-import graft.source.{FixtureSource, RedditSource}
+import graft.source.{FixtureSource, JsonDumpSource, RedditSource}
+import graft.transform.Enrich
 
 /** Sink semantics (K1–K3) and pipeline orchestration (§2.14). */
 class LoadPipelineSpec extends SparkSpec {
@@ -313,42 +316,6 @@ class LoadPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$wh/posts").count() == 2)
   }
 
-  test("K1 append skips its dedup only for a batch proven unique on id") {
-    import spark.implicits._
-    val aggregates = ArrayBuffer.empty[Int]
-    val seen = new CountDownLatch(2)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = qe.optimizedPlan.foreach {
-        case i: InsertIntoHadoopFsRelationCommand =>
-          aggregates.synchronized(aggregates +=
-            i.query.collect { case a: Aggregate => a }.size)
-          seen.countDown()
-        case _ =>
-      }
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    // cached, as the pipeline's batch is: the write's optimized plan
-    // reads the cache, which hides the dropDuplicates below it
-    val unique = Seq(("p1", 5), ("p1", 5), ("p2", 7)).toDF("id", "score")
-      .dropDuplicates("id").cache()
-    val dups = Seq(("p3", 1), ("p3", 1)).toDF("id", "score")
-    val (wh1, wh2) = (tmpDir(), tmpDir())
-    spark.listenerManager.register(listener)
-    try {
-      Load.appendPosts(unique, wh1)
-      Load.appendPosts(dups, wh2)
-      assert(seen.await(60, TimeUnit.SECONDS), "writes not seen")
-    } finally {
-      spark.listenerManager.unregister(listener)
-      unique.unpersist()
-    }
-    assert(aggregates.synchronized(aggregates.sorted.toSeq) == Seq(0, 1))
-    assert(spark.read.parquet(s"$wh1/posts").count() == 2)
-    assert(spark.read.parquet(s"$wh2/posts").count() == 1)
-  }
-
   test("K1 append is idempotent across batches (table-wide PK contract)") {
     import spark.implicits._
     val wh = tmpDir()
@@ -544,6 +511,52 @@ class LoadPipelineSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(s"$wh/comments")))
     assert(spark.read.parquet(s"$wh/posts").count() == 40)
     assert(spark.read.parquet(s"$wh/subreddit_stats").count() > 0)
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  test("the extract is one top-K job on the fixture and the JSON-dump sources") {
+    val dump = tmpDir()
+    RedditModel.rawPosts(spark, sf()).withColumn("id", col("id").cast("string"))
+      .write.json(s"$dump/posts")
+    Seq(new FixtureSource(sf()),
+        new JsonDumpSource(s"$dump/posts", s"$dump/comments")).foreach { src =>
+      val extract = new Pipeline(spark, src, tmpDir())
+        .extracted("1-URGENT", 40, "hot")
+      var rows = 0
+      assert(jobsStarted { rows = extract.collect().length } == 1, src)
+      assert(rows == 40, src)
+      val plan = extract.queryExecution.executedPlan
+      assert(Aqe.collect(plan) { case t: TakeOrderedAndProjectExec => t }
+        .size == 1, plan)
+      assert(Aqe.collect(plan) { case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }
+        .isEmpty, plan)
+    }
+  }
+
+  test("pipeline keeps the first row of a listed id and leaves no cache behind") {
+    val marked = "a repeated listing row"
+    val listing = new FixtureSource(sf()) {
+      override def fetchPosts(spark: SparkSession, subreddit: String,
+          limit: Int, sort: String): DataFrame = {
+        val l = super.fetchPosts(spark, subreddit, limit, sort)
+        l.union(l.limit(5).withColumn("title", lit(marked)))
+      }
+    }
+    val wh = tmpDir()
+    val p = new Pipeline(spark, listing, wh)
+    val cachedBefore = spark.sharedState.cacheManager.isEmpty
+    assert(p.runPipeline("1-URGENT", limit = 40).get == 40)
+    assert(spark.sharedState.cacheManager.isEmpty == cachedBefore)
+    val distinct = Enrich.enrichPosts(
+      new FixtureSource(sf()).fetchPosts(spark, "1-URGENT", 40, "hot"))
+    val stored = spark.read.parquet(s"$wh/posts").drop("extracted_at")
+    def sorted(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+    assert(stored.count() == 40)
+    assert(sorted(stored) == sorted(distinct.select(stored.columns.map(col): _*)))
+    assert(sorted(spark.read.parquet(s"$wh/subreddit_stats")) ==
+      sorted(p.dailyStats(distinct, "1-URGENT")))
   }
 
   test("pipeline evaluates the extracted frame once per subreddit") {

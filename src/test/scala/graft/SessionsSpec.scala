@@ -124,6 +124,16 @@ class SessionsSpec extends SparkSpec {
     assert(plain.isEmpty, plain.mkString(", "))
   }
 
+  // the pipeline collects its batch once to the driver (at most `limit`
+  // rows) and runs every stage over that local relation
+  test("pipeline/Pipeline.scala caches, persists or checkpoints no batch") {
+    val pipeline = mainSources.filter(_.endsWith("pipeline/Pipeline.scala"))
+    assert(pipeline.size == 1, "the guard must see the pipeline")
+    val held = """\.cache\(\)|persist|localCheckpoint""".r
+      .findAllIn(Files.readString(pipeline.head)).toSeq
+    assert(held.isEmpty, held)
+  }
+
   // Par is the one concurrency helper: a fresh daemon pool per call,
   // shut down in a finally
   private val threadMaker = ("""new Thread\b|Executors\.|ExecutionContext""" +
