@@ -1,10 +1,11 @@
 package graft.pipeline
 
-import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Par
 import graft.functions.Determinism.r6
 import graft.sink.Load
@@ -16,28 +17,44 @@ import graft.transform.Enrich
   * (SURVEY.md §2.14) — each stage guards empty input, each subreddit is
   * isolated (one failure logs and continues, reference script.py:351-353).
   *
-  * Stage shape per subreddit:
-  *   extract (source fetch) → transform (Enrich), collected once, at
-  *   most `limit` rows, as a local relation: duplicate ids keep their
-  *   first row in listing order → guard on the row count, then two
-  *   phases ([[graft.Par]], each waiting for all of its stages):
-  *    1. load posts (K1) ‖ top-10 by score → one comment fetch for
-  *       those posts (one call, one collect on the driver);
-  *    2. one K2 load of those comments ‖ daily stats agg → upsert (K3).
-  *   Only K1 has to commit before K2 and K3; the comment read does not
-  *   depend on K1, and K2 and K3 write different tables.
+  * Stage graph per subreddit. Extract (source fetch) → transform
+  * (Enrich) is collected once, at most `limit` rows, and stamped with
+  * `extracted_at` on the driver; the batch keeps the first row of each
+  * id ([[Load.Batch]]). After the guard on its row count, two branches
+  * run side by side ([[graft.Par]]), each stage starting as soon as its
+  * input exists:
+  *   - A: [load posts (K1) ‖ comment read] → load comments (K2). The
+  *     comment read takes the top-10 ids from the batch on the driver
+  *     ([[Pipeline.topIds]]) and asks the source for all their comments
+  *     in one call, collected on the driver;
+  *   - B: the daily stats agg merged into the stats table and written to
+  *     `subreddit_stats._staging` (K3 stage, [[Load.stageStats]]).
+  * K3 commits (the swap) only after both branches end and K1 succeeded.
+  * K2 waits for K1, so the comments of posts that failed to load are
+  * never written; K3 writes a different table, so its merge needs no
+  * wait, only its commit does.
   *
   * Failures, per stage:
   *   - extract or enrich (the one collect): the subreddit fails
   *     (`Failure`), nothing is written;
-  *   - K1: the subreddit fails once phase 1 ends, before K2 or K3 write
-  *     anything. The one deviation from the sequential order: the
-  *     comment read may already have run, and its rows are dropped;
+  *   - K1: the subreddit fails once both branches end. No comment is
+  *     written, and the staged K3 is deleted before `runPipeline`
+  *     returns, so the stats table is unchanged. The comment read and
+  *     the K3 merge may already have run; their results are dropped;
   *   - the comment read or K2: logged and skipped (fail-soft, below);
   *     posts and stats still load;
-  *   - K3: the subreddit fails (`Failure`) after phase 2 ends, so the
-  *     comments K2 loads beside it stay loaded, and no Spark job of the
-  *     subreddit is left running.
+  *   - K3 (stage or commit): the subreddit fails (`Failure`) after
+  *     branch A ends, so the comments K2 loads stay loaded.
+  * No Spark job of the subreddit is left running when `runPipeline`
+  * returns.
+  *
+  * Each stage that runs logs one JSON record ([[log]]):
+  * `{"sub","stage","rows","ms","outcome","start_ms"}` for `extract`,
+  * `K1`, `comment_read`, `K2`, `K3_stage` and `K3_commit`. `rows` counts
+  * the driver-held rows the stage produced or wrote (for K3, the posts
+  * the stats aggregate), 0 when it failed; `outcome` is `ok`, `failed`
+  * or, for a K3 commit after a K1 failure, `discarded`; `start_ms` is
+  * the stage's start since the subreddit's, so overlapping stages show.
   *
   * The comment stage asks the source for every top post's comments at
   * once ([[RedditSource.fetchCommentsOf]]) and collects that one frame
@@ -65,47 +82,70 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
   def log(msg: String): Unit =
     Console.err.println(s"[pipeline] $msg")
 
-  /** The extract and its enrichment as one frame: the listing, the
-    * enriched columns, then `extracted_at`. It plans as one top-K
-    * ([[Enrich.enrichPosts]] is one projection), so collecting it is one
-    * Spark job that returns at most `limit` rows.
+  /** The extract and its enrichment as one frame: the listing, then the
+    * enriched columns. It plans as one top-K ([[Enrich.enrichPosts]] is
+    * one projection), so collecting it is one Spark job that returns at
+    * most `limit` rows.
     */
   def extracted(subreddit: String, limit: Int, sort: String): DataFrame =
     Enrich.enrichPosts(source.fetchPosts(spark, subreddit, limit, sort))
-      .withColumn("extracted_at", Enrich.extractedAt())
+
+  /** Runs one stage and logs its record (see the class doc): `rows` of
+    * its result and the outcome `ok`, or 0 rows and `failed` when it
+    * throws.
+    */
+  private def stage[A](sub: String, name: String, t0: Long,
+      ok: String = "ok")(body: => A)(rows: A => Long): A = {
+    val start = System.nanoTime()
+    val result = Try(body)
+    val rec = new java.util.LinkedHashMap[String, Any]()
+    rec.put("sub", sub); rec.put("stage", name)
+    rec.put("rows", result.map(rows).getOrElse(0L))
+    rec.put("ms", (System.nanoTime() - start) / 1000000)
+    rec.put("outcome", if (result.isSuccess) ok else "failed")
+    rec.put("start_ms", (start - t0) / 1000000)
+    log(Pipeline.json.writeValueAsString(rec))
+    result.get
+  }
 
   /** One subreddit end-to-end; returns the number of posts loaded. */
   def runPipeline(subreddit: String, limit: Int = 50, sort: String = "hot",
       extractComments: Boolean = false, commentLimit: Int = 20,
       topPosts: Int = 10): Try[Long] = Try {
+    val t0 = System.nanoTime()
     // E — extract (reference script.py:294), T — transform (reference
     // script.py:301): collected once, so every stage below (load, top-k,
     // stats) sees ONE extract with one `extracted_at` — a live source
     // would otherwise be re-fetched per action with different results
-    val extract = extracted(subreddit, limit, sort)
-    val rows = extract.collect().distinctBy(_.getAs[Any]("id"))
-    if (rows.isEmpty) { // P10 guard (reference script.py:296-298)
+    val posts = stage(subreddit, "extract", t0) {
+      val extract = extracted(subreddit, limit, sort)
+      val (schema, rows) =
+        Enrich.withExtractedAt(extract.schema, extract.collect().toSeq)
+      Load.Batch(schema, rows)
+    }(_.rows.size)
+    if (posts.rows.isEmpty) { // P10 guard (reference script.py:296-298)
       log(s"$subreddit: no posts extracted"); 0L
     } else {
-      val posts = spark.createDataFrame(rows.toSeq.asJava, extract.schema)
-      val n = rows.length.toLong
-      // phase 1: load posts (K1, reference script.py:308) while the
-      // comment stage reads; a K1 failure fails the subreddit here,
-      // before K2 or K3 writes, and the rows read are dropped
-      val loadPosts = () => {
-        Load.appendPosts(posts, warehouse); Option.empty[DataFrame]
+      val n = posts.rows.size.toLong
+      val branchA = () => Try(loadPostsThenComments(posts, subreddit, t0,
+          extractComments, topPosts, commentLimit))
+        .map(_ => Option.empty[Load.StagedStats])
+      // the stats merge (reference script.py:320 → §2.9, K3)
+      val branchB = () => Try(Some(stage(subreddit, "K3_stage", t0)(
+        Load.stageStats(dailyStats(posts.frame(spark), subreddit), spark,
+          warehouse))(_ => n)))
+      val Seq(loaded, staged) = Par.run(Seq(branchA, branchB))
+      loaded.failed.foreach { e => // K1 failed: K3 must not commit
+        staged match {
+          case Success(s) => Try(stage(subreddit, "K3_commit", t0,
+              "discarded")(s.foreach(_.discard()))(_ => 0L))
+            .failed.foreach(e.addSuppressed)
+          case Failure(k3) => e.addSuppressed(k3)
+        }
+        throw e
       }
-      val fetched = Par.run(loadPosts +: Option.when(extractComments)(
-          () => topComments(posts, subreddit, topPosts, commentLimit))
-        .toSeq).flatten.headOption
-      log(s"$subreddit: loaded $n posts")
-      // phase 2: the comment load (K2, fail-soft) beside the stats
-      // upsert (reference script.py:320 → §2.9, K3)
-      val loadComments = fetched.map(c => () =>
-        Try(Load.appendComments(c, warehouse)).failed.foreach(e =>
-          log(s"$subreddit: comment load failed: $e")))
-      Par.run(loadComments.toSeq :+ (() =>
-        Load.upsertStats(dailyStats(posts, subreddit), spark, warehouse)))
+      staged.get.foreach(s =>
+        stage(subreddit, "K3_commit", t0)(s.commit())(_ => n))
       n
     }
   } match {
@@ -114,30 +154,50 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
       log(s"$subreddit: pipeline failed: $e"); f
   }
 
-  /** The comment stage (reference script.py:310-317): the top
-    * `topPosts` ids by score go to the driver, and the source serves
-    * all their comments in one frame, collected here. The collect is
-    * the stage's action, inside its guard: a read that fails, eagerly
-    * or at the action, skips this subreddit's comments. Returns the
-    * rows as a local frame stamped with `extracted_at`, or None when
-    * the read failed or found nothing (the reference's `if comments:`
-    * guard).
+  /** Branch A of the stage graph: K1 beside the comment read; then, if
+    * K1 committed, K2 (fail-soft). A K1 failure throws once the comment
+    * read has ended, and its rows are dropped.
     */
-  private def topComments(posts: DataFrame, subreddit: String,
-      topPosts: Int, commentLimit: Int): Option[DataFrame] = {
-    val top = posts.orderBy(col("score").desc, col("id"))
-      .limit(topPosts).select(col("id")).collect()
-      .map(_.get(0).toString).toSeq
-    Try {
-      val c = source.fetchCommentsOf(spark, top, commentLimit)
-      (c.schema, c.collect())
-    } match {
-      case Failure(e) =>
-        log(s"$subreddit: comment fetch failed: $e"); None
-      case Success((schema, rows)) =>
-        Option.when(rows.nonEmpty)(
-          spark.createDataFrame(rows.toSeq.asJava, schema)
-            .withColumn("extracted_at", Enrich.extractedAt()))
+  private def loadPostsThenComments(posts: Load.Batch, subreddit: String,
+      t0: Long, extractComments: Boolean, topPosts: Int,
+      commentLimit: Int): Unit = {
+    val loadPosts = () => {
+      stage(subreddit, "K1", t0)(Load.appendPosts(posts, spark, warehouse))(
+        _ => posts.rows.size)
+      Option.empty[Load.Batch]
+    }
+    val readComments = () =>
+      Try(stage(subreddit, "comment_read", t0)(
+          topComments(posts, topPosts, commentLimit))(_.fold(0L)(_.rows.size)))
+        .recover { case e =>
+          log(s"$subreddit: comment fetch failed: $e"); None
+        }.get
+    val fetched = Par.run(loadPosts +: Option.when(extractComments)(
+      readComments).toSeq).flatten.headOption
+    fetched.foreach(c =>
+      Try(stage(subreddit, "K2", t0)(
+          Load.appendComments(c, spark, warehouse))(_ => c.rows.size))
+        .failed.foreach(e => log(s"$subreddit: comment load failed: $e")))
+  }
+
+  /** The comment stage (reference script.py:310-317): the top
+    * `topPosts` ids by score, taken from the batch on the driver
+    * ([[Pipeline.topIds]]), go to the source, which serves all their
+    * comments in one frame, collected here. The collect is the stage's
+    * action, so a read that fails, eagerly or at the action, throws here
+    * and the caller's guard skips this subreddit's comments. Returns the
+    * rows stamped with `extracted_at`, or None when the read found
+    * nothing (the reference's `if comments:` guard).
+    */
+  private def topComments(posts: Load.Batch, topPosts: Int,
+      commentLimit: Int): Option[Load.Batch] = {
+    val top = Pipeline.topIds(posts.schema, posts.rows, topPosts)
+      .map(_.toString)
+    val c = source.fetchCommentsOf(spark, top, commentLimit)
+    val rows = c.collect().toSeq
+    Option.when(rows.nonEmpty) {
+      val (schema, stamped) = Enrich.withExtractedAt(c.schema, rows)
+      Load.Batch(schema, stamped)
     }
   }
 
@@ -166,6 +226,33 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
 }
 
 object Pipeline {
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Spark's ascending order of two non-null atomic values: strings by
+    * their UTF-8 bytes (`UTF8String.compareTo`, which differs from
+    * `String.compareTo` once a character lies outside the BMP), anything
+    * else by its own `compareTo`.
+    */
+  private val sparkAscending: Ordering[Any] = {
+    case (x: String, y: String) =>
+      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+  }
+
+  /** The `id`s of the `k` first rows in the order of Spark's
+    * `orderBy(col("score").desc, col("id"))`: score descending, nulls
+    * last, then id ascending, nulls first. The top-K of a batch already
+    * on the driver, without a Spark job.
+    */
+  private[graft] def topIds(schema: StructType, rows: Seq[Row],
+      k: Int): Seq[Any] = {
+    val (score, id) = (schema.fieldIndex("score"), schema.fieldIndex("id"))
+    val order = Ordering.Tuple2(Ordering.Option(sparkAscending).reverse,
+      Ordering.Option(sparkAscending))
+    rows.sortBy(r => (Option(r.get(score)), Option(r.get(id))))(order)
+      .take(k).map(_.get(id))
+  }
 
   /** The four §2.9 daily aggregates (reference script.py:264-276), shared
     * by [[Pipeline.dailyStats]] and the `stats_daily` query. The means

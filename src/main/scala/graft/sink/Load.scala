@@ -2,12 +2,13 @@ package graft.sink
 
 import java.io.IOException
 
+import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, GraftPlanApi, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanApi, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -20,9 +21,22 @@ import org.apache.spark.sql.types.StructType
   * where [[upsertStats]] becomes a `MERGE INTO`; on plain parquet every
   * keyed rewrite is a null-safe key anti-join plus a union
   * ([[replaceOnKey]]), the same algorithm a MERGE executes without a
-  * transaction log. [[upsertStats]] commits its rewrite by swapping
-  * directories ([[swapIn]]); [[mergeInto]] still rewrites in place
-  * ([[stageThenRewrite]]).
+  * transaction log. [[upsertStats]] is [[stageStats]] then
+  * [[StagedStats.commit]]: the merged table is written beside the live
+  * one and swapped in by renames ([[swapIn]]); [[mergeInto]] still
+  * rewrites in place ([[stageThenRewrite]]).
+  *
+  * Crash states each path repairs on its next call:
+  *  - K1/K2 ([[appendPosts]], [[appendComments]]): a writer that died
+  *    leaves its committed task files under `<table>/_temporary`, which
+  *    a read skips and the next job commit would merge in; every append
+  *    first deletes them ([[clearLeftovers]]);
+  *  - K3: a swap cut between its renames ([[recoverSwap]]). One state
+  *    comes from the pipeline's stage graph: a first write staged
+  *    completely in `._staging` before the crash, whose K1 had not
+  *    committed. The next K3 call commits it, and a re-run of that
+  *    subreddit replaces those keys with its own rows, so the re-run
+  *    stays exact.
   */
 object Load {
 
@@ -73,31 +87,66 @@ object Load {
     GraftPlanApi.parquetSchema(spark, new Footer(file.getPath, meta))
   }
 
+  /** A K1/K2 batch held on the driver: its schema and its rows, at most
+    * one per `id`, the first of each id kept. The pipeline's batches fit
+    * on the driver (at most `limit` posts, `topPosts × commentLimit`
+    * comments), so the dedup costs no shuffle.
+    */
+  final class Batch private (val schema: StructType, val rows: Seq[Row]) {
+
+    /** The rows as a local relation. */
+    def frame(spark: SparkSession): DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
+  }
+
+  object Batch {
+    def apply(schema: StructType, rows: Seq[Row]): Batch = {
+      val id = schema.fieldIndex("id")
+      new Batch(schema, rows.distinctBy(_.get(id)))
+    }
+  }
+
   /** K1 — append posts (reference script.py:226-239). The reference's
     * SQLite PRIMARY KEY rejects duplicate ids table-wide; here the
-    * invariant is enforced explicitly: within-batch dedup plus an
-    * anti-join against already-loaded ids, so re-running a batch (the
-    * retry path) cannot double-load. At scale the anti-join broadcasts
-    * the batch's ids against the table, or the table is a key-enforcing
-    * format (Delta with a merge) — either way the contract is the same.
+    * invariant is enforced explicitly: the batch holds one row per id
+    * ([[Batch]]), and an anti-join against the already-loaded ids keeps
+    * a re-run (the retry path) from double-loading. At scale the
+    * anti-join broadcasts the stored ids, or the table is a
+    * key-enforcing format (Delta with a merge) — either way the contract
+    * is the same.
     */
-  def appendPosts(df: DataFrame, warehouse: String): Unit =
-    appendKeyed(df, df.sparkSession, s"$warehouse/posts")
+  def appendPosts(batch: Batch, spark: SparkSession, warehouse: String): Unit =
+    appendKeyed(batch, spark, s"$warehouse/posts")
 
   /** K2 — append comments (reference script.py:241-257). */
-  def appendComments(df: DataFrame, warehouse: String): Unit =
-    appendKeyed(df, df.sparkSession, s"$warehouse/comments")
+  def appendComments(batch: Batch, spark: SparkSession,
+      warehouse: String): Unit =
+    appendKeyed(batch, spark, s"$warehouse/comments")
 
-  private def appendKeyed(df: DataFrame, spark: SparkSession,
+  /** Deletes what a dead writer left inside a table directory: the job
+    * committer's `_temporary` (committed task files a read skips and the
+    * next job commit would merge in) and Spark's `.spark-staging-*`
+    * directories. Safe because each table has one writer at a time.
+    */
+  private def clearLeftovers(spark: SparkSession, path: String): Unit = {
+    val root = new Path(path)
+    val fs = fsOf(spark, root)
+    fs.delete(new Path(root, "_temporary"), true)
+    Option(fs.globStatus(new Path(root, ".spark-staging-*")))
+      .foreach(_.foreach(s => fs.delete(s.getPath, true)))
+  }
+
+  private def appendKeyed(batch: Batch, spark: SparkSession,
       path: String): Unit = {
-    val batch = df.dropDuplicates("id")
+    clearLeftovers(spark, path)
+    val rows = batch.frame(spark)
     // the stored ids are read with the batch's declared id type: no
     // schema-inference job, and a stored id of another type fails here
     // instead of being cast
     val fresh =
-      if (!tableExists(spark, path)) batch
-      else batch.join(
-        spark.read.schema(StructType(Seq(df.schema("id")))).parquet(path),
+      if (!tableExists(spark, path)) rows
+      else rows.join(
+        spark.read.schema(StructType(Seq(batch.schema("id")))).parquet(path),
         Seq("id"), "left_anti")
     fresh.write.mode(SaveMode.Append).parquet(path)
   }
@@ -136,37 +185,43 @@ object Load {
       new Path(s"$path._old"))
   }
 
-  /** Commits a table rewrite staged in `<path>._staging` by two
-    * renames, `<path>` → `<path>._old` and `._staging` → `<path>`, then
-    * deletes `._old`. No step clears the table before its successor is
-    * complete on disk: a crash leaves a state [[recoverSwap]] repairs.
+  /** Commits a table rewrite staged in `<path>._staging`: moves a live
+    * `<path>` to `<path>._old`, renames `._staging` to `<path>`, then
+    * deletes `._old`. A first write is the one rename. No step clears
+    * the table before its successor is complete on disk: a crash leaves
+    * a state [[recoverSwap]] repairs.
     */
   private def swapIn(spark: SparkSession, path: String): Unit = {
     val (fs, target, staging, old) = swapPaths(spark, path)
-    rename(fs, target, old)
+    if (fs.exists(target)) rename(fs, target, old)
     rename(fs, staging, target)
     fs.delete(old, true)
   }
 
-  /** Repairs a [[swapIn]] that a crash interrupted. When `<path>` holds
-    * no data file, the table is restored from `._staging` if its write
+  /** Repairs a [[swapIn]] that a crash interrupted, and returns the
+    * table's first data file after the repair. When `<path>` holds no
+    * data file, the table is restored from `._staging` if its write
     * completed (it holds `_SUCCESS`: the crash came after the staging
     * write), else from `._old` (the crash came between the renames).
     * Any `._old` or `._staging` left over is then deleted: a staging
-    * copy beside a live table is an upsert that never committed.
+    * copy beside a live table is an upsert that never committed. The
+    * table is listed once, and again only after a restore.
     */
-  private def recoverSwap(spark: SparkSession, path: String): Unit = {
+  private def recoverSwap(spark: SparkSession,
+      path: String): Option[LocatedFileStatus] = {
     val (fs, target, staging, old) = swapPaths(spark, path)
-    if (!tableExists(spark, path)) {
+    val live = firstDataFile(spark, path).orElse {
       val from =
         if (fs.exists(new Path(staging, "_SUCCESS"))) Some(staging)
         else Some(old).filter(fs.exists)
-      from.foreach { f =>
+      from.flatMap { f =>
         fs.delete(target, true)
         rename(fs, f, target)
+        firstDataFile(spark, path)
       }
     }
     Seq(staging, old).foreach(fs.delete(_, true))
+    live
   }
 
   /** The one conflict policy of every keyed rewrite — replace on key,
@@ -182,15 +237,33 @@ object Load {
         "left_anti")
       .unionByName(upserts)
 
+  /** A K3 upsert written to `<table>._staging` and not committed yet:
+    * [[commit]] swaps it in ([[swapIn]]), [[discard]] deletes it and
+    * leaves the table as it was.
+    */
+  final class StagedStats private[sink] (spark: SparkSession, path: String) {
+    def commit(): Unit = swapIn(spark, path)
+    def discard(): Unit = {
+      val (fs, _, staging, _) = swapPaths(spark, path)
+      fs.delete(staging, true)
+    }
+  }
+
   /** K3 — upsert daily stats on PK (subreddit, date), the parquet
     * equivalent of the reference's `INSERT OR REPLACE`
-    * (reference script.py:264-280): replace on key, null-safe
-    * ([[replaceOnKey]]), write the merged table once to
-    * `<path>._staging`, and commit it by [[swapIn]]. Re-running the
-    * same day is idempotent — the reference's observable PK-replace
-    * semantics. The batch holds at most one row per key, as
-    * `Pipeline.dailyStats` and `StreamingStats.dailyEventStats` do by
-    * grouping on it.
+    * (reference script.py:264-280): [[stageStats]], then commit.
+    * Re-running the same day is idempotent — the reference's observable
+    * PK-replace semantics.
+    */
+  def upsertStats(batch: DataFrame, spark: SparkSession, warehouse: String): Unit =
+    stageStats(batch, spark, warehouse).commit()
+
+  /** K3's stage step: replace on key, null-safe ([[replaceOnKey]]), and
+    * write the merged table once to `<path>._staging`; a first write
+    * stages the batch itself. The batch holds at most one row per key,
+    * as `Pipeline.dailyStats` and `StreamingStats.dailyEventStats` do by
+    * grouping on it. Nothing is visible until the returned
+    * [[StagedStats]] commits.
     *
     * Every call first repairs a swap a crash interrupted
     * ([[recoverSwap]]), so a failure at any step loses no committed
@@ -201,17 +274,14 @@ object Load {
     * Rewriting the whole table is O(table); [[upsertStatsPartitioned]]
     * is the layout that rewrites only the batch's date partitions.
     */
-  def upsertStats(batch: DataFrame, spark: SparkSession, warehouse: String): Unit = {
+  def stageStats(batch: DataFrame, spark: SparkSession,
+      warehouse: String): StagedStats = {
     val path = s"$warehouse/subreddit_stats"
-    recoverSwap(spark, path)
-    firstDataFile(spark, path) match {
-      case None => batch.write.mode(SaveMode.Overwrite).parquet(path)
-      case Some(file) =>
-        replaceOnKey(spark.read.schema(footerSchema(spark, file)).parquet(path),
-            batch, batch, Seq("subreddit", "date"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$path._staging")
-        swapIn(spark, path)
-    }
+    val merged = recoverSwap(spark, path).fold(batch)(file =>
+      replaceOnKey(spark.read.schema(footerSchema(spark, file)).parquet(path),
+        batch, batch, Seq("subreddit", "date")))
+    merged.write.mode(SaveMode.Overwrite).parquet(s"$path._staging")
+    new StagedStats(spark, path)
   }
 
   /** The 100 TB layout of [[upsertStats]]: the stats table partitioned

@@ -1,7 +1,11 @@
 package graft.transform
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.sql.Timestamp
+import java.time.Instant
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** The T of the ETL: every derived-column formula of the reference's
   * `transform_data` (reference script.py:187-224), re-expressed as
@@ -73,8 +77,18 @@ object Enrich {
     */
   def epochToTs(epoch: Column): Column = timestamp_seconds(epoch)
 
-  /** T12 — load-time timestamp (script.py:71, :86). */
-  def extractedAt(): Column = current_timestamp()
+  /** T12 — load-time timestamp (script.py:71, :86), stamped on rows
+    * already collected to the driver: one instant per call, appended as
+    * `extracted_at`. Stamped inside a query instead,
+    * `current_timestamp()` folds into a literal that whole-stage codegen
+    * inlines, so every extract compiled new code.
+    */
+  def withExtractedAt(schema: StructType,
+      rows: Seq[Row]): (StructType, Seq[Row]) = {
+    val now = Timestamp.from(Instant.now())
+    (schema.add("extracted_at", TimestampType),
+      rows.map(r => Row.fromSeq(r.toSeq :+ now)))
+  }
 
   /** Full post enrichment (script.py:196-217), one projection: the
     * input's columns in place, `title` and `selftext` cleaned, then the

@@ -4,14 +4,18 @@ import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{QueryExecution, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan,
+  TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.model.RedditModel
@@ -86,7 +90,8 @@ class LoadPipelineSpec extends SparkSpec {
       .select("subreddit", "total_posts").as[(String, Long)].collect().toSeq
     val wh = tmpDir()
     intercept[Exception](Load.upsertStats(bad, spark, wh))
-    assert(new java.io.File(s"$wh/subreddit_stats").isDirectory)
+    // the failed write is the stage step's: its directory stays behind
+    assert(new java.io.File(s"$wh/subreddit_stats._staging").isDirectory)
     Load.upsertStats(good, spark, wh)
     assert(stored(s"$wh/subreddit_stats") == Seq(("r/a", 1L)))
     intercept[Exception](Load.upsertStatsPartitioned(bad, spark, wh))
@@ -308,39 +313,67 @@ class LoadPipelineSpec extends SparkSpec {
     }
   }
 
+  /** A frame's rows collected to the driver, as a K1/K2 batch. */
+  private def batchOf(df: DataFrame): Load.Batch =
+    Load.Batch(df.schema, df.collect().toSeq)
+
   test("K1 append dedups the batch on id before write") {
     import spark.implicits._
     val wh = tmpDir()
-    val batch = Seq(("p1", 5), ("p1", 5), ("p2", 7)).toDF("id", "score")
-    Load.appendPosts(batch, wh)
-    assert(spark.read.parquet(s"$wh/posts").count() == 2)
+    val batch = batchOf(Seq(("p1", 5), ("p1", 6), ("p2", 7)).toDF("id", "score"))
+    Load.appendPosts(batch, spark, wh)
+    // the first row of an id is the one kept
+    assert(spark.read.parquet(s"$wh/posts").as[(String, Int)].collect()
+      .toSeq.sorted == Seq(("p1", 5), ("p2", 7)))
   }
 
   test("K1 append is idempotent across batches (table-wide PK contract)") {
     import spark.implicits._
     val wh = tmpDir()
-    val batch = Seq(("p1", 5), ("p2", 7)).toDF("id", "score")
-    Load.appendPosts(batch, wh)
-    Load.appendPosts(batch, wh) // retry/re-run must not double-load
+    val batch = batchOf(Seq(("p1", 5), ("p2", 7)).toDF("id", "score"))
+    Load.appendPosts(batch, spark, wh)
+    Load.appendPosts(batch, spark, wh) // retry/re-run must not double-load
     assert(spark.read.parquet(s"$wh/posts").count() == 2)
     // a later batch with one new and one known id loads only the new row
-    Load.appendPosts(Seq(("p2", 9), ("p3", 1)).toDF("id", "score"), wh)
+    Load.appendPosts(batchOf(Seq(("p2", 9), ("p3", 1)).toDF("id", "score")),
+      spark, wh)
     val out = spark.read.parquet(s"$wh/posts")
     assert(out.count() == 3)
+  }
+
+  // the state a writer that died inside its job commit leaves: task
+  // files committed under _temporary/0, which a read does not see
+  test("K1 append after a crashed append stores each id once") {
+    import spark.implicits._
+    val wh = tmpDir()
+    val table = s"$wh/posts"
+    val rows = Seq(("p1", 5), ("p2", 7), ("p3", 1))
+    Load.appendPosts(batchOf(Seq(("p0", 3)).toDF("id", "score")), spark, wh)
+    val planted = s"${tmpDir()}/planted"
+    rows.toDF("id", "score").coalesce(1).write.parquet(planted)
+    val task = java.nio.file.Paths.get(
+      s"$table/_temporary/0/task_202601010000_0001_m_000000")
+    Files.createDirectories(task)
+    new java.io.File(planted).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.copy(f.toPath, task.resolve(f.getName)))
+    Load.appendPosts(batchOf(rows.toDF("id", "score")), spark, wh)
+    assert(spark.read.parquet(table).select("id").as[String].collect()
+      .toSeq.sorted == Seq("p0", "p1", "p2", "p3"))
+    assert(!Files.exists(java.nio.file.Paths.get(s"$table/_temporary")))
   }
 
   test("K2 append succeeds after a failed write left the table without data files") {
     val wh = tmpDir()
     val good = RedditModel.comments(spark, sf()).orderBy(col("id")).limit(20)
       .withColumn("extracted_at", current_timestamp())
-    // same schema, but the action fails on the first row
+    // same schema, but the write fails on the first row
     val bad = good.withColumn("body",
       raise_error(lit("comment page failed")).cast(good.schema("body").dataType))
-    intercept[Exception](Load.appendComments(bad, wh))
+    intercept[Exception](bad.write.mode("append").parquet(s"$wh/comments"))
     val dir = new java.io.File(s"$wh/comments")
     assert(dir.isDirectory)
     assert(!dir.listFiles().exists(_.getName.endsWith(".parquet")))
-    Load.appendComments(good.union(good), wh)
+    Load.appendComments(batchOf(good.union(good)), spark, wh)
     def ids(df: DataFrame) =
       df.select("id").distinct().collect().map(_.getLong(0)).toSeq.sorted
     val stored = spark.read.parquet(s"$wh/comments")
@@ -351,9 +384,9 @@ class LoadPipelineSpec extends SparkSpec {
   test("K1 append fails loudly on a stored id of another type") {
     import spark.implicits._
     val wh = tmpDir()
-    Load.appendPosts(Seq((1L, 5)).toDF("id", "score"), wh)
-    intercept[Exception](
-      Load.appendPosts(Seq(("2", 7)).toDF("id", "score"), wh))
+    Load.appendPosts(batchOf(Seq((1L, 5)).toDF("id", "score")), spark, wh)
+    intercept[Exception](Load.appendPosts(
+      batchOf(Seq(("2", 7)).toDF("id", "score")), spark, wh))
     assert(spark.read.parquet(s"$wh/posts").count() == 1)
   }
 
@@ -444,7 +477,7 @@ class LoadPipelineSpec extends SparkSpec {
           val path = i.outputPath.toUri.getPath
           writes.synchronized(writes += path)
           if (path == s"$wh/comments") commentsWritten.countDown()
-          if (path == s"$wh/subreddit_stats") statsWritten.countDown()
+          if (path == s"$wh/subreddit_stats._staging") statsWritten.countDown()
         case _ =>
       }
       override def onFailure(funcName: String, qe: QueryExecution,
@@ -455,8 +488,8 @@ class LoadPipelineSpec extends SparkSpec {
     try {
       new Pipeline(spark, src, wh).runPipeline("1-URGENT", limit = 40,
         extractComments = true, topPosts = 3, commentLimit = 5).get
-      // the comment load and the stats upsert run side by side and
-      // are the last writes: wait for both
+      // the comment load and the stats stage run side by side and are
+      // the last writes (the commit is a rename): wait for both
       assert(commentsWritten.await(60, TimeUnit.SECONDS),
         "comments write not seen")
       assert(statsWritten.await(60, TimeUnit.SECONDS), "stats write not seen")
@@ -627,5 +660,147 @@ class LoadPipelineSpec extends SparkSpec {
     val p = new Pipeline(spark, new FixtureSource(sf()), wh)
     assert(p.runPipeline("no-such-subreddit").get == 0L)
     assert(!Files.exists(java.nio.file.Paths.get(s"$wh/posts")))
+  }
+
+  test("driver top-K orders like Spark's orderBy(score desc, id)") {
+    import spark.implicits._
+    // U+FF21 sorts after U+1F600 in UTF-16 and before it in UTF-8
+    val (fullA, smiley) = ("\uFF21", "\uD83D\uDE00")
+    assert(fullA.compareTo(smiley) > 0)
+    val frames = Seq(
+      Seq((5L, Option(10)), (3L, None), (4L, Some(10)), (1L, Some(7)),
+        (2L, Some(10)), (6L, None), (7L, Some(-1))).toDF("id", "score"),
+      Seq((fullA, Option(3)), ("b", Some(3)), (smiley, Some(3)),
+        ("a", None), ("B", Some(3)), ("\u00e9", Some(5)), ("", Some(3)),
+        ("z", None)).toDF("id", "score"))
+    frames.foreach { df =>
+      val rows = df.collect().toSeq
+      (0 to rows.size + 1).foreach { k =>
+        val expected = df.orderBy(col("score").desc, col("id")).limit(k)
+          .select("id").collect().map(_.get(0)).toSeq
+        assert(Pipeline.topIds(df.schema, rows, k) == expected, (df.schema, k))
+      }
+    }
+  }
+
+  /** Runs `body` and returns the executed plans of its writes to the
+    * `paths`, waiting for one per path.
+    */
+  private def writePlans(paths: Set[String])(body: => Unit): Map[String, SparkPlan] = {
+    val plans = scala.collection.concurrent.TrieMap.empty[String, SparkPlan]
+    val seen = new CountDownLatch(paths.size)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = qe.analyzed.foreach {
+        case i: InsertIntoHadoopFsRelationCommand
+            if paths(i.outputPath.toUri.getPath) =>
+          if (plans.put(i.outputPath.toUri.getPath, qe.executedPlan).isEmpty)
+            seen.countDown()
+        case _ =>
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      assert(seen.await(60, TimeUnit.SECONDS), s"writes seen: ${plans.keys}")
+    } finally spark.listenerManager.unregister(listener)
+    plans.toMap
+  }
+
+  test("pipeline writes posts and comments without a shuffle over an existing warehouse") {
+    val wh = tmpDir()
+    val p = new Pipeline(spark, new FixtureSource(sf()), wh)
+    def run(sub: String) = p.runPipeline(sub, limit = 40,
+      extractComments = true, topPosts = 3, commentLimit = 5).get
+    run("1-URGENT")
+    val plans = writePlans(Set(s"$wh/posts", s"$wh/comments"))(run("3-MEDIUM"))
+    plans.foreach { case (path, plan) =>
+      // the anti-join against the stored ids is there, the dedup is not
+      assert(Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }.size == 1,
+        s"$path: $plan")
+      assert(Aqe.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"$path: $plan")
+    }
+  }
+
+  test("pipeline runs a subreddit over an existing warehouse in at most 11 jobs") {
+    val wh = tmpDir()
+    val p = new Pipeline(spark, new FixtureSource(sf()), wh)
+    def run(sub: String) = p.runPipeline(sub, limit = 40,
+      extractComments = true, topPosts = 10, commentLimit = 5).get
+    run("1-URGENT")
+    val (started, running) = jobsRun(run("3-MEDIUM"))
+    assert(started <= 11 && running == 0, (started, running))
+  }
+
+  /** Every file under `dir` with its bytes and modification time. */
+  private def snapshot(dir: String): Map[String, (Seq[Byte], Long)] =
+    FileUtils.listFiles(new java.io.File(dir), null, true).asScala
+      .map(f => f.getPath -> (Files.readAllBytes(f.toPath).toSeq,
+        f.lastModified())).toMap
+
+  /** A pipeline whose log lines are kept, in order. */
+  private class LoggedPipeline(wh: String) extends Pipeline(spark,
+      new FixtureSource(sf()), wh) {
+    val logged = ArrayBuffer.empty[String]
+    override def log(msg: String): Unit = logged.synchronized(logged += msg)
+    def records: Seq[Map[String, Any]] = logged.synchronized(logged.toSeq)
+      .filter(_.startsWith("{")).map(l =>
+        new com.fasterxml.jackson.databind.ObjectMapper()
+          .readValue(l, classOf[java.util.Map[String, Any]]).asScala.toMap)
+  }
+
+  test("pipeline's K1 failure leaves the stats table unchanged and nothing staged") {
+    import spark.implicits._
+    val wh = tmpDir()
+    val p = new LoggedPipeline(wh)
+    p.runPipeline("1-URGENT", limit = 40).get
+    val stats = s"$wh/subreddit_stats"
+    val before = snapshot(stats)
+    // a stored post id of another type fails K1's read of the stored ids
+    FileUtils.deleteDirectory(new java.io.File(s"$wh/posts"))
+    Seq(("p1", 5)).toDF("id", "score").write.parquet(s"$wh/posts")
+    assert(p.runPipeline("3-MEDIUM", limit = 40, extractComments = true,
+      topPosts = 3, commentLimit = 5).isFailure)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$stats._staging")))
+    assert(snapshot(stats) == before)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$wh/comments")))
+    // the merge had been staged: its commit is the discard
+    val last = p.records.filter(_("sub") == "3-MEDIUM")
+    assert(last.exists(r => r("stage") == "K3_stage" && r("outcome") == "ok"))
+    assert(last.exists(r => r("stage") == "K3_commit" &&
+      r("outcome") == "discarded"))
+    assert(last.exists(r => r("stage") == "K1" && r("outcome") == "failed"))
+  }
+
+  test("pipeline logs one JSON record per stage, in dependency order") {
+    val p = new LoggedPipeline(tmpDir())
+    p.runPipeline("1-URGENT", limit = 40, extractComments = true,
+      topPosts = 3, commentLimit = 5).get
+    val recs = p.records.map(r => r("stage") -> r).toMap
+    assert(p.records.size == 6 && recs.keySet == Set("extract", "K1",
+      "comment_read", "K2", "K3_stage", "K3_commit"), p.records)
+    assert(p.records.forall(r => r("sub") == "1-URGENT" && r("outcome") == "ok"))
+    Seq("extract", "K1", "K3_stage", "K3_commit").foreach(s =>
+      assert(recs(s)("rows") == 40, recs(s)))
+    def long(s: String, f: String) = recs(s)(f).toString.toLong
+    def end(s: String) = long(s, "start_ms") + long(s, "ms")
+    Seq("K1" -> "K2", "comment_read" -> "K2", "extract" -> "K1",
+        "extract" -> "comment_read", "extract" -> "K3_stage",
+        "K2" -> "K3_commit", "K3_stage" -> "K3_commit").foreach {
+      case (a, b) => assert(end(a) <= long(b, "start_ms"), (a, b, p.records))
+    }
+  }
+
+  test("pipeline compiles no new code when it re-runs a subreddit") {
+    def run() = new Pipeline(spark, new FixtureSource(sf()), tmpDir())
+      .runPipeline("1-URGENT", limit = 40, extractComments = true,
+        topPosts = 3, commentLimit = 5).get
+    run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
   }
 }
