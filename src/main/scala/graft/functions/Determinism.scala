@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Output canonicalization shared by every oracle-checked query. */
 object Determinism {
@@ -34,4 +35,16 @@ object Determinism {
   def r6Jvm(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() + 0.0
+
+  /** Driver twin of Spark's ascending order of two non-null atomic
+    * values: strings by their UTF-8 bytes (`UTF8String.compareTo`, which
+    * differs from `String.compareTo` once a character lies outside the
+    * BMP), anything else by its own `compareTo`. Wrap it in
+    * `Ordering.Option` for Spark's nulls-first ascending order.
+    */
+  val sparkAscending: Ordering[Any] = {
+    case (x: String, y: String) =>
+      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+  }
 }

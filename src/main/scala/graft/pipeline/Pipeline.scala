@@ -5,9 +5,8 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 import graft.Par
-import graft.functions.Determinism.r6
+import graft.functions.Determinism.{r6, sparkAscending}
 import graft.sink.Load
 import graft.source.RedditSource
 import graft.transform.Enrich
@@ -20,41 +19,44 @@ import graft.transform.Enrich
   * Stage graph per subreddit. Extract (source fetch) → transform
   * (Enrich) is collected once, at most `limit` rows, and stamped with
   * `extracted_at` on the driver; the batch keeps the first row of each
-  * id ([[Load.Batch]]). After the guard on its row count, two branches
-  * run side by side ([[graft.Par]]), each stage starting as soon as its
-  * input exists:
-  *   - A: [load posts (K1) ‖ comment read] → load comments (K2). The
-  *     comment read takes the top-10 ids from the batch on the driver
-  *     ([[Pipeline.topIds]]) and asks the source for all their comments
-  *     in one call, collected on the driver;
-  *   - B: the daily stats agg merged into the stats table and written to
-  *     `subreddit_stats._staging` (K3 stage, [[Load.stageStats]]).
-  * K3 commits (the swap) only after both branches end and K1 succeeded.
-  * K2 waits for K1, so the comments of posts that failed to load are
-  * never written; K3 writes a different table, so its merge needs no
-  * wait, only its commit does.
+  * id ([[Load.Batch]]). After the guard on its row count, three
+  * branches run side by side ([[graft.Par]]), each stage starting as
+  * soon as its input exists:
+  *   - K1: load posts, staged and committed at once
+  *     ([[Load.appendPosts]]);
+  *   - comment read → K2 stage: the comment read takes the top-10 ids
+  *     from the batch on the driver ([[Pipeline.topIds]]) and asks the
+  *     source for all their comments in one call, collected on the
+  *     driver; K2 writes the new ones to `comments._staging`
+  *     ([[Load.stageComments]]);
+  *   - K3 stage: the daily stats agg merged into the stats table and
+  *     written to `subreddit_stats._staging` ([[Load.stageStats]]).
+  * Each write is one single-task job that writes one file. K2 and K3
+  * commit (a rename) only after every branch ended and K1 committed,
+  * so the comments and stats of posts that failed to load are never
+  * written.
   *
   * Failures, per stage:
   *   - extract or enrich (the one collect): the subreddit fails
   *     (`Failure`), nothing is written;
-  *   - K1: the subreddit fails once both branches end. No comment is
-  *     written, and the staged K3 is deleted before `runPipeline`
-  *     returns, so the stats table is unchanged. The comment read and
-  *     the K3 merge may already have run; their results are dropped;
-  *   - the comment read or K2: logged and skipped (fail-soft, below);
-  *     posts and stats still load;
-  *   - K3 (stage or commit): the subreddit fails (`Failure`) after
-  *     branch A ends, so the comments K2 loads stay loaded.
+  *   - K1: the subreddit fails once every branch ended. The staged K2
+  *     and K3 outputs are deleted before `runPipeline` returns, so the
+  *     comments and stats tables are unchanged;
+  *   - the comment read or K2 (stage or commit): logged and skipped
+  *     (fail-soft, below); posts and stats still load;
+  *   - K3 (stage or commit): the subreddit fails (`Failure`) after K2
+  *     committed, so the comments K2 loads stay loaded.
   * No Spark job of the subreddit is left running when `runPipeline`
   * returns.
   *
   * Each stage that runs logs one JSON record ([[log]]):
   * `{"sub","stage","rows","ms","outcome","start_ms"}` for `extract`,
-  * `K1`, `comment_read`, `K2`, `K3_stage` and `K3_commit`. `rows` counts
-  * the driver-held rows the stage produced or wrote (for K3, the posts
-  * the stats aggregate), 0 when it failed; `outcome` is `ok`, `failed`
-  * or, for a K3 commit after a K1 failure, `discarded`; `start_ms` is
-  * the stage's start since the subreddit's, so overlapping stages show.
+  * `K1`, `comment_read`, `K2_stage`, `K2_commit`, `K3_stage` and
+  * `K3_commit`. `rows` counts the driver-held rows the stage produced or
+  * wrote (for K3, the posts the stats aggregate), 0 when it failed;
+  * `outcome` is `ok`, `failed` or, for a K2 or K3 commit after a K1
+  * failure, `discarded`; `start_ms` is the stage's start since the
+  * subreddit's, so overlapping stages show.
   *
   * The comment stage asks the source for every top post's comments at
   * once ([[RedditSource.fetchCommentsOf]]) and collects that one frame
@@ -66,8 +68,8 @@ import graft.transform.Enrich
   * (reference script.py:310-317), each guarded on its own, so a failed
   * post skips only that post. The rows are tiny — at most
   * `topPosts × commentLimit` per subreddit — and load in one K2 write:
-  * a K2 load costs a fixed handful of Spark jobs (existing-id scan,
-  * anti-join, write) whatever its size. This deviates from the
+  * a K2 load costs a fixed two Spark jobs (existing-id scan, anti-join
+  * and write) whatever its size. This deviates from the
   * reference, which loads after every post (script.py:316): a crash
   * mid-stage loads none of that subreddit's comments, and K2's keyed,
   * idempotent append makes a re-run exact.
@@ -127,25 +129,35 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
       log(s"$subreddit: no posts extracted"); 0L
     } else {
       val n = posts.rows.size.toLong
-      val branchA = () => Try(loadPostsThenComments(posts, subreddit, t0,
-          extractComments, topPosts, commentLimit))
-        .map(_ => Option.empty[Load.StagedStats])
+      val loadPosts = () => Try(stage(subreddit, "K1", t0)(
+          Load.appendPosts(posts, spark, warehouse))(_ => n))
+        .map(_ => Option.empty[(Load.Staged, Long)])
+      val stageComments = () => Try(Option.when(extractComments)(
+          readThenStageComments(posts, subreddit, t0, topPosts,
+            commentLimit)).flatten)
       // the stats merge (reference script.py:320 → §2.9, K3)
-      val branchB = () => Try(Some(stage(subreddit, "K3_stage", t0)(
-        Load.stageStats(dailyStats(posts.frame(spark), subreddit), spark,
-          warehouse))(_ => n)))
-      val Seq(loaded, staged) = Par.run(Seq(branchA, branchB))
-      loaded.failed.foreach { e => // K1 failed: K3 must not commit
-        staged match {
-          case Success(s) => Try(stage(subreddit, "K3_commit", t0,
-              "discarded")(s.foreach(_.discard()))(_ => 0L))
-            .failed.foreach(e.addSuppressed)
-          case Failure(k3) => e.addSuppressed(k3)
+      val stageStats = () => Try(Some(stage(subreddit, "K3_stage", t0)(
+          Load.stageStats(dailyStats(posts.frame(spark), subreddit), spark,
+            warehouse))(_ => n) -> n))
+      val Seq(loaded, comments, stats) =
+        Par.run(Seq(loadPosts, stageComments, stageStats))
+      loaded.failed.foreach { e => // K1 failed: K2 and K3 must not commit
+        Seq("K2_commit" -> comments, "K3_commit" -> stats).foreach {
+          case (name, Success(s)) => s.foreach { case (pending, _) =>
+            Try(stage(subreddit, name, t0, "discarded")(pending.discard())(
+              _ => 0L)).failed.foreach(e.addSuppressed)
+          }
+          case (_, Failure(failed)) => e.addSuppressed(failed)
         }
         throw e
       }
-      staged.get.foreach(s =>
-        stage(subreddit, "K3_commit", t0)(s.commit())(_ => n))
+      comments.get.foreach { case (pending, rows) =>
+        Try(stage(subreddit, "K2_commit", t0)(pending.commit())(_ => rows))
+          .failed.foreach(e => log(s"$subreddit: comment load failed: $e"))
+      }
+      stats.get.foreach { case (pending, rows) =>
+        stage(subreddit, "K3_commit", t0)(pending.commit())(_ => rows)
+      }
       n
     }
   } match {
@@ -154,30 +166,24 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
       log(s"$subreddit: pipeline failed: $e"); f
   }
 
-  /** Branch A of the stage graph: K1 beside the comment read; then, if
-    * K1 committed, K2 (fail-soft). A K1 failure throws once the comment
-    * read has ended, and its rows are dropped.
+  /** The comment branch of the stage graph: the comment read, then K2's
+    * stage step. Fail-soft: a failure of either is logged and skipped,
+    * and the branch returns None, as it does when the read found
+    * nothing. Otherwise it returns the staged write and its row count.
     */
-  private def loadPostsThenComments(posts: Load.Batch, subreddit: String,
-      t0: Long, extractComments: Boolean, topPosts: Int,
-      commentLimit: Int): Unit = {
-    val loadPosts = () => {
-      stage(subreddit, "K1", t0)(Load.appendPosts(posts, spark, warehouse))(
-        _ => posts.rows.size)
-      Option.empty[Load.Batch]
-    }
-    val readComments = () =>
-      Try(stage(subreddit, "comment_read", t0)(
-          topComments(posts, topPosts, commentLimit))(_.fold(0L)(_.rows.size)))
-        .recover { case e =>
-          log(s"$subreddit: comment fetch failed: $e"); None
-        }.get
-    val fetched = Par.run(loadPosts +: Option.when(extractComments)(
-      readComments).toSeq).flatten.headOption
-    fetched.foreach(c =>
-      Try(stage(subreddit, "K2", t0)(
-          Load.appendComments(c, spark, warehouse))(_ => c.rows.size))
-        .failed.foreach(e => log(s"$subreddit: comment load failed: $e")))
+  private def readThenStageComments(posts: Load.Batch, subreddit: String,
+      t0: Long, topPosts: Int,
+      commentLimit: Int): Option[(Load.Staged, Long)] = {
+    def orSkip[A](what: String)(body: => Option[A]): Option[A] =
+      Try(body).recover { case e =>
+        log(s"$subreddit: $what failed: $e"); None
+      }.get
+    orSkip("comment fetch")(stage(subreddit, "comment_read", t0)(
+        topComments(posts, topPosts, commentLimit))(_.fold(0L)(_.rows.size)))
+      .flatMap(c => orSkip("comment load")(Some(
+        stage(subreddit, "K2_stage", t0)(
+          Load.stageComments(c, spark, warehouse))(_ => c.rows.size) ->
+          c.rows.size.toLong)))
   }
 
   /** The comment stage (reference script.py:310-317): the top
@@ -228,17 +234,6 @@ class Pipeline(spark: SparkSession, source: RedditSource, warehouse: String) {
 object Pipeline {
 
   private val json = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** Spark's ascending order of two non-null atomic values: strings by
-    * their UTF-8 bytes (`UTF8String.compareTo`, which differs from
-    * `String.compareTo` once a character lies outside the BMP), anything
-    * else by its own `compareTo`.
-    */
-  private val sparkAscending: Ordering[Any] = {
-    case (x: String, y: String) =>
-      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
-    case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
-  }
 
   /** The `id`s of the `k` first rows in the order of Spark's
     * `orderBy(col("score").desc, col("id"))`: score descending, nulls

@@ -21,16 +21,24 @@ import org.apache.spark.sql.types.StructType
   * where [[upsertStats]] becomes a `MERGE INTO`; on plain parquet every
   * keyed rewrite is a null-safe key anti-join plus a union
   * ([[replaceOnKey]]), the same algorithm a MERGE executes without a
-  * transaction log. [[upsertStats]] is [[stageStats]] then
-  * [[StagedStats.commit]]: the merged table is written beside the live
-  * one and swapped in by renames ([[swapIn]]); [[mergeInto]] still
-  * rewrites in place ([[stageThenRewrite]]).
+  * transaction log.
+  *
+  * Every pipeline write is a stage step, one single-task job that
+  * writes one file into `<table>._staging` ([[writeStaged]]), and a
+  * commit by rename ([[Staged]]):
+  *  - K1/K2 ([[appendPosts]], [[stageComments]]): the batch's new rows;
+  *    the commit renames the one file into the table ([[moveIn]]);
+  *  - K3 ([[stageStats]]): the merged stats table; the commit swaps the
+  *    staged directory in by renames ([[swapIn]]).
+  * [[mergeInto]] still rewrites in place ([[stageThenRewrite]]).
   *
   * Crash states each path repairs on its next call:
-  *  - K1/K2 ([[appendPosts]], [[appendComments]]): a writer that died
-  *    leaves its committed task files under `<table>/_temporary`, which
-  *    a read skips and the next job commit would merge in; every append
-  *    first deletes them ([[clearLeftovers]]);
+  *  - K1/K2: a staged file that never committed is deleted by the next
+  *    stage of that table and never committed; after the commit rename
+  *    only an empty `._staging` is left. A direct append into the
+  *    table that died inside its job commit leaves committed task files
+  *    under `<table>/_temporary`, which a read skips; every stage first
+  *    deletes them ([[clearLeftovers]]);
   *  - K3: a swap cut between its renames ([[recoverSwap]]). One state
   *    comes from the pipeline's stage graph: a first write staged
   *    completely in `._staging` before the crash, whose K1 had not
@@ -43,12 +51,17 @@ object Load {
   private def fsOf(spark: SparkSession, path: Path): FileSystem =
     path.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The first data file of a table directory: one with no path
-    * component below the table that a Spark read skips (`_SUCCESS`,
-    * `.crc`, `_temporary`; partition directories like `_c=1` count). A
-    * write that fails leaves its directory without one; such a table is
-    * absent ([[tableExists]]), so the next write replaces the directory
-    * instead of failing its read of the stored rows. A listing error
+  /** A file or directory name a Spark read skips (`_SUCCESS`, `.crc`,
+    * `_temporary`; partition directories like `_c=1` count).
+    */
+  private def hidden(name: String): Boolean =
+    name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+
+  /** The first data file of a table directory: one with no [[hidden]]
+    * path component below the table. A write that fails leaves its
+    * directory without one; such a table is absent ([[tableExists]]),
+    * so the next write replaces the directory instead of failing its
+    * read of the stored rows. A listing error
     * still throws: a transient read error must NOT be treated as "table
     * absent" — that would silently drop or duplicate data.
     */
@@ -57,8 +70,6 @@ object Load {
     val root = new Path(path)
     val fs = fsOf(spark, root)
     val rootPath = fs.makeQualified(root).toUri.getPath
-    def hidden(n: String) =
-      n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
     if (!fs.exists(root)) None
     else {
       val files = fs.listFiles(root, true)
@@ -94,9 +105,12 @@ object Load {
     */
   final class Batch private (val schema: StructType, val rows: Seq[Row]) {
 
-    /** The rows as a local relation. */
+    /** The rows as a local relation in one partition: a batch is small,
+      * so a job over it is one task, and an aggregate over it plans no
+      * exchange.
+      */
     def frame(spark: SparkSession): DataFrame =
-      spark.createDataFrame(rows.asJava, schema)
+      spark.createDataFrame(rows.asJava, schema).coalesce(1)
   }
 
   object Batch {
@@ -106,22 +120,23 @@ object Load {
     }
   }
 
-  /** K1 — append posts (reference script.py:226-239). The reference's
-    * SQLite PRIMARY KEY rejects duplicate ids table-wide; here the
-    * invariant is enforced explicitly: the batch holds one row per id
-    * ([[Batch]]), and an anti-join against the already-loaded ids keeps
-    * a re-run (the retry path) from double-loading. At scale the
-    * anti-join broadcasts the stored ids, or the table is a
-    * key-enforcing format (Delta with a merge) — either way the contract
-    * is the same.
+  /** K1 — append posts (reference script.py:226-239): [[stageKeyed]],
+    * then commit.
     */
   def appendPosts(batch: Batch, spark: SparkSession, warehouse: String): Unit =
-    appendKeyed(batch, spark, s"$warehouse/posts")
+    stageKeyed(batch, spark, s"$warehouse/posts").commit()
 
-  /** K2 — append comments (reference script.py:241-257). */
+  /** K2 — append comments (reference script.py:241-257):
+    * [[stageComments]], then commit.
+    */
   def appendComments(batch: Batch, spark: SparkSession,
       warehouse: String): Unit =
-    appendKeyed(batch, spark, s"$warehouse/comments")
+    stageComments(batch, spark, warehouse).commit()
+
+  /** K2's stage step ([[stageKeyed]]). */
+  def stageComments(batch: Batch, spark: SparkSession,
+      warehouse: String): Staged =
+    stageKeyed(batch, spark, s"$warehouse/comments")
 
   /** Deletes what a dead writer left inside a table directory: the job
     * committer's `_temporary` (committed task files a read skips and the
@@ -136,8 +151,18 @@ object Load {
       .foreach(_.foreach(s => fs.delete(s.getPath, true)))
   }
 
-  private def appendKeyed(batch: Batch, spark: SparkSession,
-      path: String): Unit = {
+  /** K1/K2's stage step. The reference's SQLite PRIMARY KEY rejects
+    * duplicate ids table-wide; here the invariant is enforced
+    * explicitly: the batch holds one row per id ([[Batch]]), and an
+    * anti-join against the already-loaded ids keeps a re-run (the retry
+    * path) from double-loading. At scale the anti-join broadcasts the
+    * stored ids, or the table is a key-enforcing format (Delta with a
+    * merge) — either way the contract is the same. The new rows are
+    * written as one file to `<path>._staging` ([[writeStaged]]); nothing
+    * is visible until the returned [[Staged]] commits ([[moveIn]]).
+    */
+  private def stageKeyed(batch: Batch, spark: SparkSession,
+      path: String): Staged = {
     clearLeftovers(spark, path)
     val rows = batch.frame(spark)
     // the stored ids are read with the batch's declared id type: no
@@ -148,7 +173,8 @@ object Load {
       else rows.join(
         spark.read.schema(StructType(Seq(batch.schema("id")))).parquet(path),
         Seq("id"), "left_anti")
-    fresh.write.mode(SaveMode.Append).parquet(path)
+    writeStaged(fresh, path)
+    new Staged(spark, path, moveIn)
   }
 
   /** [[mergeInto]]'s in-place rewrite. Parquet has no transactional
@@ -175,14 +201,36 @@ object Load {
     if (!fs.rename(from, to))
       throw new IOException(s"rename $from -> $to failed")
 
-  /** A table's directory and its two swap siblings, `._staging` and
-    * `._old`.
+  /** A table's directory and its two siblings, `._staging` (every
+    * stage step's output) and `._old` (a swap's).
     */
   private def swapPaths(spark: SparkSession,
       path: String): (FileSystem, Path, Path, Path) = {
     val target = new Path(path)
     (fsOf(spark, target), target, new Path(s"$path._staging"),
       new Path(s"$path._old"))
+  }
+
+  /** Writes `df` as one file to `<path>._staging` in one single-task
+    * job, replacing whatever a dead or failed writer left there: a
+    * staged write that never committed is never committed later, except
+    * a first K3 write that [[recoverSwap]] restores.
+    */
+  private def writeStaged(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path._staging")
+
+  /** Commits an append staged in `<path>._staging`: renames its data
+    * file into `<path>`, made on a first write, then deletes the staging
+    * directory. The one rename is the commit: a crash before it leaves
+    * the table as it was, and one after it leaves only an empty
+    * `._staging`, which the next stage deletes.
+    */
+  private def moveIn(spark: SparkSession, path: String): Unit = {
+    val (fs, target, staging, _) = swapPaths(spark, path)
+    fs.mkdirs(target)
+    fs.listStatus(staging).map(_.getPath).filterNot(f => hidden(f.getName))
+      .foreach(f => rename(fs, f, new Path(target, f.getName)))
+    fs.delete(staging, true)
   }
 
   /** Commits a table rewrite staged in `<path>._staging`: moves a live
@@ -237,12 +285,14 @@ object Load {
         "left_anti")
       .unionByName(upserts)
 
-  /** A K3 upsert written to `<table>._staging` and not committed yet:
-    * [[commit]] swaps it in ([[swapIn]]), [[discard]] deletes it and
-    * leaves the table as it was.
+  /** A write staged in `<table>._staging` and not committed yet:
+    * [[commit]] publishes it by rename ([[moveIn]] for an append,
+    * [[swapIn]] for the stats table), [[discard]] deletes it and leaves
+    * the table as it was.
     */
-  final class StagedStats private[sink] (spark: SparkSession, path: String) {
-    def commit(): Unit = swapIn(spark, path)
+  final class Staged private[sink] (spark: SparkSession, path: String,
+      publish: (SparkSession, String) => Unit) {
+    def commit(): Unit = publish(spark, path)
     def discard(): Unit = {
       val (fs, _, staging, _) = swapPaths(spark, path)
       fs.delete(staging, true)
@@ -259,11 +309,11 @@ object Load {
     stageStats(batch, spark, warehouse).commit()
 
   /** K3's stage step: replace on key, null-safe ([[replaceOnKey]]), and
-    * write the merged table once to `<path>._staging`; a first write
-    * stages the batch itself. The batch holds at most one row per key,
-    * as `Pipeline.dailyStats` and `StreamingStats.dailyEventStats` do by
-    * grouping on it. Nothing is visible until the returned
-    * [[StagedStats]] commits.
+    * write the merged table as one file to `<path>._staging`
+    * ([[writeStaged]]); a first write stages the batch itself. The batch
+    * holds at most one row per key, as `Pipeline.dailyStats` and
+    * `StreamingStats.dailyEventStats` do by grouping on it. Nothing is
+    * visible until the returned [[Staged]] commits ([[swapIn]]).
     *
     * Every call first repairs a swap a crash interrupted
     * ([[recoverSwap]]), so a failure at any step loses no committed
@@ -275,13 +325,13 @@ object Load {
     * is the layout that rewrites only the batch's date partitions.
     */
   def stageStats(batch: DataFrame, spark: SparkSession,
-      warehouse: String): StagedStats = {
+      warehouse: String): Staged = {
     val path = s"$warehouse/subreddit_stats"
     val merged = recoverSwap(spark, path).fold(batch)(file =>
       replaceOnKey(spark.read.schema(footerSchema(spark, file)).parquet(path),
         batch, batch, Seq("subreddit", "date")))
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$path._staging")
-    new StagedStats(spark, path)
+    writeStaged(merged, path)
+    new Staged(spark, path, swapIn)
   }
 
   /** The 100 TB layout of [[upsertStats]]: the stats table partitioned

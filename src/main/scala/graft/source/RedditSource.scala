@@ -4,8 +4,13 @@ import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.Determinism
 import graft.model.RedditModel
 import graft.schema.Schemas
 
@@ -89,18 +94,43 @@ private object RedditSource {
   }
 
   /** The offline cut of S2 over a comment table: the rows of the posts
-    * in `postIds` (compared as strings) that have a body (P9 guard),
-    * then the first `limit` of each post by `id`.
+    * in `postIds` that have a body (P9 guard), collected in one job,
+    * then the first `limit` of each post by `id`, cut on the driver (the
+    * reference cuts `comments.list()[:limit]` on the client too,
+    * reference script.py:167) and returned as a local relation. The ids
+    * are compared in `post_id`'s own type ([[typedIds]]), so the filter
+    * reaches the scan.
     */
   def firstComments(comments: DataFrame, postIds: Seq[String],
       limit: Int): DataFrame = {
-    val n = row_number().over(Window.partitionBy(col("post_id"))
-      .orderBy(col("id")))
-    comments.filter(col("post_id").cast("string").isin(postIds: _*) &&
-        col("body").isNotNull)
-      .withColumn("_n", n)
-      .filter(col("_n") <= limit)
-      .drop("_n")
+    val schema = comments.schema
+    val ids = typedIds(postIds, schema("post_id").dataType,
+      comments.sparkSession.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    val rows = comments.filter(col("post_id").isin(ids: _*) &&
+      col("body").isNotNull).collect().toSeq
+    val (post, id) = (schema.fieldIndex("post_id"), schema.fieldIndex("id"))
+    val first = rows.sortBy(r => Option(r.get(id)))(
+        Ordering.Option(Determinism.sparkAscending))
+      .groupBy(_.get(post)).values.flatMap(_.take(limit)).toSeq
+    comments.sparkSession.createDataFrame(first.asJava, schema)
+  }
+
+  /** `ids` as values of `post_id`'s type `dt`, each kept only when the
+    * cast back to a string renders it as the same string. An id that is
+    * not the canonical rendering of a value of `dt` ("007", "+7" or
+    * "abc" for a bigint) can never equal `cast(post_id as string)`, so
+    * it is dropped rather than cast: under ANSI the cast would throw.
+    */
+  private def typedIds(ids: Seq[String], dt: DataType,
+      timeZone: String): Seq[Any] = {
+    def cast(v: Any, from: DataType, to: DataType, mode: EvalMode.Value) =
+      Cast(Literal(v, from), to, Some(timeZone), mode).eval()
+    ids.flatMap { s =>
+      val str = UTF8String.fromString(s)
+      Option(cast(str, StringType, dt, EvalMode.TRY))
+        .filter(v => cast(v, dt, StringType, EvalMode.LEGACY) == str)
+        .map(CatalystTypeConverters.convertToScala(_, dt))
+    }
   }
 }
 

@@ -362,6 +362,31 @@ class LoadPipelineSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(s"$table/_temporary")))
   }
 
+  // the state a K1 or K2 writer that died between its stage step and its
+  // commit leaves: a complete one-file write in <table>._staging
+  test("K1/K2 append after a dead writer's complete staging never commits it") {
+    import spark.implicits._
+    val wh = tmpDir()
+    def batch(rows: (String, Int)*) = batchOf(rows.toDF("id", "score"))
+    def ids(table: String) = spark.read.parquet(s"$wh/$table").select("id")
+      .as[String].collect().toSeq.sorted
+    Load.appendPosts(batch("p0" -> 3), spark, wh)
+    Load.appendComments(batch("p0" -> 3), spark, wh)
+    // a dead K1: its one file staged, never renamed in
+    Seq(("p1", 5), ("p9", 9)).toDF("id", "score").coalesce(1).write
+      .parquet(s"$wh/posts._staging")
+    // a dead K2: its stage step ran, its commit did not
+    Load.stageComments(batch("p1" -> 5, "p9" -> 9), spark, wh)
+    assert(ids("posts") == Seq("p0") && ids("comments") == Seq("p0"))
+    // the re-run
+    Load.appendPosts(batch("p1" -> 5, "p2" -> 7), spark, wh)
+    Load.appendComments(batch("p1" -> 5, "p2" -> 7), spark, wh)
+    Seq("posts", "comments").foreach { t =>
+      assert(ids(t) == Seq("p0", "p1", "p2"), t)
+      assert(!Files.exists(java.nio.file.Paths.get(s"$wh/$t._staging")), t)
+    }
+  }
+
   test("K2 append succeeds after a failed write left the table without data files") {
     val wh = tmpDir()
     val good = RedditModel.comments(spark, sf()).orderBy(col("id")).limit(20)
@@ -476,7 +501,7 @@ class LoadPipelineSpec extends SparkSpec {
         case i: InsertIntoHadoopFsRelationCommand =>
           val path = i.outputPath.toUri.getPath
           writes.synchronized(writes += path)
-          if (path == s"$wh/comments") commentsWritten.countDown()
+          if (path == s"$wh/comments._staging") commentsWritten.countDown()
           if (path == s"$wh/subreddit_stats._staging") statsWritten.countDown()
         case _ =>
       }
@@ -488,15 +513,15 @@ class LoadPipelineSpec extends SparkSpec {
     try {
       new Pipeline(spark, src, wh).runPipeline("1-URGENT", limit = 40,
         extractComments = true, topPosts = 3, commentLimit = 5).get
-      // the comment load and the stats stage run side by side and are
-      // the last writes (the commit is a rename): wait for both
+      // the comment and stats stages run side by side and are the last
+      // writes (each commit is a rename): wait for both
       assert(commentsWritten.await(60, TimeUnit.SECONDS),
         "comments write not seen")
       assert(statsWritten.await(60, TimeUnit.SECONDS), "stats write not seen")
     } finally spark.listenerManager.unregister(listener)
     assert(src.asked.size == 3)
     assertStoredComments(wh, src.asked.toSeq, 5)
-    assert(writes.synchronized(writes.count(_ == s"$wh/comments")) == 1)
+    assert(writes.synchronized(writes.count(_ == s"$wh/comments._staging")) == 1)
   }
 
   test("pipeline writes no comments table when every comment frame is empty") {
@@ -715,7 +740,8 @@ class LoadPipelineSpec extends SparkSpec {
     def run(sub: String) = p.runPipeline(sub, limit = 40,
       extractComments = true, topPosts = 3, commentLimit = 5).get
     run("1-URGENT")
-    val plans = writePlans(Set(s"$wh/posts", s"$wh/comments"))(run("3-MEDIUM"))
+    val plans = writePlans(Set(s"$wh/posts._staging",
+      s"$wh/comments._staging"))(run("3-MEDIUM"))
     plans.foreach { case (path, plan) =>
       // the anti-join against the stored ids is there, the dedup is not
       assert(Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }.size == 1,
@@ -725,14 +751,37 @@ class LoadPipelineSpec extends SparkSpec {
     }
   }
 
-  test("pipeline runs a subreddit over an existing warehouse in at most 11 jobs") {
+  test("each pipeline run of a subreddit adds one data file per table") {
+    val wh = tmpDir()
+    val p = new Pipeline(spark, new FixtureSource(sf()), wh)
+    def dataFiles(table: String) = new java.io.File(s"$wh/$table").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    Seq("1-URGENT", "3-MEDIUM").zipWithIndex.foreach { case (sub, i) =>
+      p.runPipeline(sub, limit = 40, extractComments = true, topPosts = 3,
+        commentLimit = 5).get
+      assert(Seq("posts", "comments", "subreddit_stats").map(dataFiles) ==
+        Seq(i + 1, i + 1, 1), sub)
+      assert(!new java.io.File(wh).list().exists(_.contains("._")), sub)
+    }
+  }
+
+  test("the stats aggregate over a driver-held batch plans no shuffle") {
+    val p = new Pipeline(spark, new FixtureSource(sf()), tmpDir())
+    val extract = p.extracted("1-URGENT", 40, "hot")
+    val stats = p.dailyStats(batchOf(extract).frame(spark), "1-URGENT")
+    assert(stats.collect().nonEmpty)
+    val plan = stats.queryExecution.executedPlan
+    assert(Aqe.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+  }
+
+  test("pipeline runs a subreddit over an existing warehouse in at most 8 jobs") {
     val wh = tmpDir()
     val p = new Pipeline(spark, new FixtureSource(sf()), wh)
     def run(sub: String) = p.runPipeline(sub, limit = 40,
       extractComments = true, topPosts = 10, commentLimit = 5).get
     run("1-URGENT")
     val (started, running) = jobsRun(run("3-MEDIUM"))
-    assert(started <= 11 && running == 0, (started, running))
+    assert(started <= 8 && running == 0, (started, running))
   }
 
   /** Every file under `dir` with its bytes and modification time. */
@@ -764,14 +813,18 @@ class LoadPipelineSpec extends SparkSpec {
     Seq(("p1", 5)).toDF("id", "score").write.parquet(s"$wh/posts")
     assert(p.runPipeline("3-MEDIUM", limit = 40, extractComments = true,
       topPosts = 3, commentLimit = 5).isFailure)
-    assert(!Files.exists(java.nio.file.Paths.get(s"$stats._staging")))
     assert(snapshot(stats) == before)
-    assert(!Files.exists(java.nio.file.Paths.get(s"$wh/comments")))
-    // the merge had been staged: its commit is the discard
+    Seq(s"$stats._staging", s"$wh/comments", s"$wh/comments._staging")
+      .foreach(d => assert(!Files.exists(java.nio.file.Paths.get(d)), d))
+    // the comments and the merge had been staged: their commits are the
+    // discards
     val last = p.records.filter(_("sub") == "3-MEDIUM")
-    assert(last.exists(r => r("stage") == "K3_stage" && r("outcome") == "ok"))
-    assert(last.exists(r => r("stage") == "K3_commit" &&
-      r("outcome") == "discarded"))
+    Seq("K2", "K3").foreach { k =>
+      assert(last.exists(r => r("stage") == s"${k}_stage" &&
+        r("outcome") == "ok"), k)
+      assert(last.exists(r => r("stage") == s"${k}_commit" &&
+        r("outcome") == "discarded"), k)
+    }
     assert(last.exists(r => r("stage") == "K1" && r("outcome") == "failed"))
   }
 
@@ -780,16 +833,19 @@ class LoadPipelineSpec extends SparkSpec {
     p.runPipeline("1-URGENT", limit = 40, extractComments = true,
       topPosts = 3, commentLimit = 5).get
     val recs = p.records.map(r => r("stage") -> r).toMap
-    assert(p.records.size == 6 && recs.keySet == Set("extract", "K1",
-      "comment_read", "K2", "K3_stage", "K3_commit"), p.records)
+    assert(p.records.size == 7 && recs.keySet == Set("extract", "K1",
+      "comment_read", "K2_stage", "K2_commit", "K3_stage", "K3_commit"),
+      p.records)
     assert(p.records.forall(r => r("sub") == "1-URGENT" && r("outcome") == "ok"))
     Seq("extract", "K1", "K3_stage", "K3_commit").foreach(s =>
       assert(recs(s)("rows") == 40, recs(s)))
+    assert(recs("K2_stage")("rows") == recs("K2_commit")("rows"))
     def long(s: String, f: String) = recs(s)(f).toString.toLong
     def end(s: String) = long(s, "start_ms") + long(s, "ms")
-    Seq("K1" -> "K2", "comment_read" -> "K2", "extract" -> "K1",
-        "extract" -> "comment_read", "extract" -> "K3_stage",
-        "K2" -> "K3_commit", "K3_stage" -> "K3_commit").foreach {
+    Seq("extract" -> "K1", "extract" -> "comment_read",
+        "extract" -> "K3_stage", "comment_read" -> "K2_stage",
+        "K2_stage" -> "K2_commit", "K1" -> "K2_commit",
+        "K3_stage" -> "K3_commit", "K1" -> "K3_commit").foreach {
       case (a, b) => assert(end(a) <= long(b, "start_ms"), (a, b, p.records))
     }
   }

@@ -1,7 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicReference
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.model.RedditModel
 import graft.source.{FixtureSource, HttpApiSource, JsonDumpSource, RedditSource}
 
 /** The JSON-dump source binding: schema enforcement + sort/limit
@@ -103,6 +111,54 @@ class SourceSpec extends SparkSpec {
     // the limit cuts at least one post
     assert(posts.exists(p =>
       src.fetchComments(spark, p, 100).select("id").distinct().count() > limit))
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** The executed plan of the first query `body` runs that scans a
+    * file.
+    */
+  private def scanPlan(body: => Unit): SparkPlan = {
+    val plan = new AtomicReference[SparkPlan]
+    val seen = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (Aqe.find(qe.executedPlan)(_.isInstanceOf[FileSourceScanExec])
+            .isDefined && plan.compareAndSet(null, qe.executedPlan))
+          seen.countDown()
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      assert(seen.await(60, TimeUnit.SECONDS), "no scan seen")
+    } finally spark.listenerManager.unregister(listener)
+    plan.get
+  }
+
+  test("fetchCommentsOf on the fixture compares ids in post_id's type, at the scan") {
+    val src = new FixtureSource(sf())
+    val Seq(a, b) = src.fetchPosts(spark, "1-URGENT", 2, "top")
+      .select("id").collect().map(_.get(0).toString).toSeq
+    // two canonical ids, then ids whose string no bigint renders as
+    val ids = Seq(a, b, s"0$a", s"+$b", s" $a", "abc")
+    var rows = Seq.empty[String]
+    val plan = scanPlan {
+      rows = src.fetchCommentsOf(spark, ids, 1000).collect().map(_.toString)
+        .toSeq.sorted
+    }
+    val pushed = Aqe.collect(plan) { case s: FileSourceScanExec =>
+      s.metadata.getOrElse("PushedFilters", "") }
+    assert(pushed.exists(_.contains("In(")), plan)
+    assert(Aqe.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+    // the rows of the string compare
+    val byString = RedditModel.comments(spark, sf())
+      .filter(col("post_id").cast("string").isin(ids: _*) &&
+        col("body").isNotNull)
+      .collect().map(_.toString).toSeq.sorted
+    assert(rows.nonEmpty && rows == byString)
   }
 
   // ---- HttpApiSource: the live-connector seam, driven by a fake ----
