@@ -3,8 +3,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import scala.util.control.NonFatal
 
@@ -79,6 +80,7 @@ object PlanLint {
 
   /** Node counts of `df`'s static executed plan, over the same node
     * walk as [[findings]]: file scans, shuffle + broadcast exchanges,
+    * the range-partitioned shuffles among them (a global sort's),
     * reused exchanges, windows, sorts and whole-stage codegen stages.
     * Like [[findings]] it does not enter a cached relation's plan
     * (run once, when the cache fills) or a subquery's.
@@ -94,6 +96,11 @@ object PlanLint {
       finally conf.set("spark.sql.adaptive.enabled", aqe)
     Seq("scans" -> nodes.count(_.isInstanceOf[FileSourceScanExec]),
       "exchanges" -> nodes.count(_.isInstanceOf[Exchange]),
+      "range" -> nodes.count {
+        case e: ShuffleExchangeExec =>
+          e.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      },
       "reused" -> nodes.count(_.isInstanceOf[ReusedExchangeExec]),
       "windows" -> nodes.count(_.isInstanceOf[WindowExec]),
       "sorts" -> nodes.count(_.isInstanceOf[SortExec]),

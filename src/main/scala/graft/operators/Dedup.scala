@@ -90,27 +90,15 @@ FROM comments GROUP BY md5(body) ORDER BY body_key"""
           element_at(toks, i + 2)))))
       .otherwise(array().cast("array<string>"))
 
-  /** One row per (doc, distinct shingle hash). The md5 is computed ONCE
-    * per shingle here; a pure array-lambda formulation would let
-    * Catalyst's CollapseProject inline the hash array into each of the
-    * 16 minhash expressions and recompute md5 16× (measured 18 s at
-    * sf0.1 → ~2 s in this shape).
-    */
-  private def shingleRows(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
-      .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
-      .select(col("doc_id"), explode(shingles(col("toks"))).as("sh"))
-      .select(col("doc_id"), CrossHash.md5Mod(col("sh")).as("h"))
-
   /** Map-only MinHash signature via the custom expressions: shingle
     * hash set + 16 mins in two evals per row, ZERO shuffle — the
-    * groupBy twin below shuffles the exploded shingle stream
+    * groupBy twin in DedupSpec shuffles the exploded shingle stream
     * (measured: dd_minhash 0.98 s → 0.60 s, dd_minhash_lsh 1.48 s →
     * 0.68 s, dd_clusters 2.86 s → 1.70 s at sf0.1; at 100 TB the
     * saving is the signature's entire exchange). The empty-set filter
     * reproduces the groupBy form's no-row-for-shingle-less-docs
-    * behavior; DedupSpec pins signature equality and coefficient
-    * agreement.
+    * behavior; DedupSpec pins signature equality to that form and
+    * coefficient agreement.
     */
   private def signature(spark: SparkSession, sfDir: String): DataFrame = {
     docs(spark, sfDir)
@@ -129,18 +117,6 @@ FROM comments GROUP BY md5(body) ORDER BY body_key"""
       .select(col("doc_id") +:
         (0 until K).map(i => element_at(col("mh"), i + 1).as(s"mh_$i")): _*)
   }
-
-  /** The groupBy formulation [[signature]]'s expressions are pinned
-    * against (spec-only — the shape the oracle SQL evaluates).
-    */
-  private[graft] def signatureDeclarative(spark: SparkSession,
-      sfDir: String): DataFrame =
-    shingleRows(spark, sfDir)
-      .groupBy(col("doc_id"))
-      .agg(
-        min((col("h") * lit(As(0)) + lit(Bs(0))) % lit(P)).as("mh_0"),
-        (1 until K).map(i =>
-          min((col("h") * lit(As(i)) + lit(Bs(i))) % lit(P)).as(s"mh_$i")): _*)
 
   def ddMinhash(spark: SparkSession, sfDir: String): DataFrame =
     signature(spark, sfDir).orderBy(col("doc_id"))
@@ -878,36 +854,17 @@ ORDER BY l.doc_id"""
 
   /** Map-only signatures via the custom [[graft.functions.SimHash60]]
     * expression: one eval per document, ZERO shuffle — the declarative
-    * twin below is a Generate + 60-aggregate groupBy that shuffles the
-    * whole exploded token stream (measured 1.32 s → 0.52 s here and
-    * 1.86 s → 0.86 s for dd_simhash_pairs at sf0.1; at 100 TB the
-    * saving is an entire shuffle stage). DedupSpec pins sig equality.
+    * twin in DedupSpec is a Generate + 60-aggregate groupBy that
+    * shuffles the whole exploded token stream (measured 1.32 s →
+    * 0.52 s here and 1.86 s → 0.86 s for dd_simhash_pairs at sf0.1; at
+    * 100 TB the saving is an entire shuffle stage). DedupSpec pins sig
+    * equality.
     */
   def ddSimhash(spark: SparkSession, sfDir: String): DataFrame = {
     docs(spark, sfDir).select(
       col("doc_id"),
       size(tokens(lower(col("text")))).cast("int").as("n_tokens"),
       graft.functions.SimHash60.sig(lower(col("text"))).as("simhash"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** The declarative formulation [[ddSimhash]]'s expression is pinned
-    * against (spec-only — the exact shape the oracle SQL evaluates).
-    */
-  private[graft] def simhashDeclarative(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val hs = transform(tokens(lower(col("text"))), t => CrossHash.md5Long(t))
-    val exploded = docs(spark, sfDir)
-      .select(col("doc_id"), explode(hs).as("h"))
-    val bitSums = (0 until SimhashBits).map(j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1)
-        .otherwise(-1)).as(s"b$j"))
-    val agged = exploded.groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("int").as("n_tokens"), bitSums: _*)
-    val sim = (0 until SimhashBits)
-      .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    agged.select(col("doc_id"), col("n_tokens"), sim.as("simhash"))
       .orderBy(col("doc_id"))
   }
 
@@ -995,18 +952,6 @@ ORDER BY doc_a, doc_b"""
     * distance (hence length delta) is small by definition of the op.
     */
   val BucketW = 16
-
-  /** Declarative twin of [[graft.functions.CharGramHashSet]] (kept for
-    * the property test that pins the custom expression to the built-in
-    * formulation): distinct character 5-grams as sorted md5-derived
-    * longs. The query path uses the custom expression — per-element
-    * lambda interpretation made this form ~10 s of the sf0.1 bench.
-    */
-  def charGramHashesDeclarative(c: Column): Column =
-    when(length(c) >= 5,
-      sort_array(array_distinct(transform(sequence(lit(1), length(c) - 4),
-        i => CrossHash.md5Mod(c.substr(i, lit(5)))))))
-      .otherwise(array().cast("array<bigint>"))
 
   /** Round-half-up boundary of [[NgramJaccardMin]]: an unrounded j at
     * or above this rounds to ≥ 0.6 — passing it as the fused

@@ -260,15 +260,6 @@ FROM w ORDER BY lang, predicted_lang"""
       .orderBy(col("doc_id"))
   }
 
-  /** The declarative twin [[taFingerprint]]'s custom expression is
-    * pinned against (spec-only — never shipped; kept so the
-    * equivalence test exercises the exact formula the oracle uses).
-    */
-  private[graft] def fingerprintDeclarative(text: Column): Column = {
-    val hashes = transform(tokens(text), t => CrossHash.md5Mod(t))
-    aggregate(hashes, lit(0L), (acc, x) => (acc * lit(31L) + x) % lit(P))
-  }
-
   lazy val taFingerprintSql: String = {
     val toks = "regexp_split_to_array(trim(lower(text)), '\\s+')"
     s"""

@@ -334,11 +334,26 @@ class LoadPipelineSpec extends SparkSpec {
     Load.appendPosts(batch, spark, wh)
     Load.appendPosts(batch, spark, wh) // retry/re-run must not double-load
     assert(spark.read.parquet(s"$wh/posts").count() == 2)
+    // the re-run's batch had no new id: it commits no file
+    assert(new java.io.File(s"$wh/posts").listFiles()
+      .count(_.getName.endsWith(".parquet")) == 1)
     // a later batch with one new and one known id loads only the new row
     Load.appendPosts(batchOf(Seq(("p2", 9), ("p3", 1)).toDF("id", "score")),
       spark, wh)
     val out = spark.read.parquet(s"$wh/posts")
     assert(out.count() == 3)
+  }
+
+  test("K1 append of an empty first batch commits no file") {
+    import spark.implicits._
+    val wh = tmpDir()
+    Load.appendPosts(batchOf(Seq.empty[(String, Int)].toDF("id", "score")),
+      spark, wh)
+    assert(new java.io.File(s"$wh/posts").list().isEmpty)
+    // a table without a data file is absent: the next append creates it
+    Load.appendPosts(batchOf(Seq(("p1", 5)).toDF("id", "score")), spark, wh)
+    assert(spark.read.parquet(s"$wh/posts").as[(String, Int)].collect()
+      .toSeq == Seq(("p1", 5)))
   }
 
   // the state a writer that died inside its job commit leaves: task
@@ -763,6 +778,24 @@ class LoadPipelineSpec extends SparkSpec {
         Seq(i + 1, i + 1, 1), sub)
       assert(!new java.io.File(wh).list().exists(_.contains("._")), sub)
     }
+  }
+
+  test("re-running a subreddit over the same warehouse adds no data file") {
+    val wh = tmpDir()
+    val p = new Pipeline(spark, new FixtureSource(sf()), wh)
+    def stored() = Seq("posts", "comments").map { t =>
+      (new java.io.File(s"$wh/$t").listFiles()
+        .count(_.getName.endsWith(".parquet")),
+        spark.read.parquet(s"$wh/$t").count())
+    }
+    def run() = p.runPipeline("3-MEDIUM", limit = 40, extractComments = true,
+      topPosts = 3, commentLimit = 5).get
+    run()
+    val first = stored()
+    assert(first.forall { case (files, rows) => files == 1 && rows > 0 })
+    run()
+    assert(stored() == first)
+    assert(!new java.io.File(wh).list().exists(_.contains("._")))
   }
 
   test("the stats aggregate over a driver-held batch plans no shuffle") {

@@ -211,10 +211,11 @@ class PlanLintSpec extends SparkSpec {
 
   test("summary counts q01_overview's static plan and restores AQE") {
     // one scan → partial/final hash aggregate (one shuffle) → the
-    // presentation sort (one range exchange), in three codegen stages
+    // presentation sort over one partition (OneTaskSort: no range
+    // exchange), in three codegen stages
     val got = PlanLint.summary(SparkEntry.queries("q01_overview")(spark, sf()))
-    assert(got == Seq("scans" -> 1, "exchanges" -> 2, "reused" -> 0,
-      "windows" -> 0, "sorts" -> 1, "wholestage" -> 3))
+    assert(got == Seq("scans" -> 1, "exchanges" -> 1, "range" -> 0,
+      "reused" -> 0, "windows" -> 0, "sorts" -> 1, "wholestage" -> 3))
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 

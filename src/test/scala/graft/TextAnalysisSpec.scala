@@ -1,13 +1,23 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.functions.TokenRollingHash
+import graft.functions.{CrossHash, TokenRollingHash}
 import graft.operators.TextAnalysis
 
 /** Text-analysis custom expressions: each pinned to its declarative
   * twin (the formula the DuckDB oracle evaluates).
   */
 class TextAnalysisSpec extends SparkSpec {
+
+  /** [[TokenRollingHash]]'s declarative twin: the order-sensitive
+    * rolling hash `TextAnalysis.taFingerprint`'s oracle evaluates.
+    */
+  private def fingerprintDeclarative(text: Column): Column = {
+    val hashes = transform(TextAnalysis.tokens(text), t => CrossHash.md5Mod(t))
+    aggregate(hashes, lit(0L),
+      (acc, x) => (acc * lit(31L) + x) % lit(CrossHash.P))
+  }
 
   test("TokenRollingHash equals the declarative aggregate/transform fold") {
     import spark.implicits._
@@ -23,7 +33,7 @@ class TextAnalysisSpec extends SparkSpec {
     val rows = (adversarial ++ fixture).toDF("text")
       .select(
         TokenRollingHash.fp(lower(col("text"))).as("custom"),
-        TextAnalysis.fingerprintDeclarative(lower(col("text")))
+        fingerprintDeclarative(lower(col("text")))
           .as("declarative"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
