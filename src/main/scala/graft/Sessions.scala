@@ -21,22 +21,11 @@ object Sessions {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 
-  /** Dev-only experiment confs as "k=v;k=v" (no test or benchmark sets
-    * it): lets an A/B toggle AQE skew handling or broadcast thresholds
-    * through the identical timing loop without forking the harness.
-    */
-  def extraConf(raw: Option[String]): Seq[(String, String)] =
-    raw.toSeq.flatMap(_.split(";")).filter(_.contains("=")).map { kv =>
-      val Array(k, v) = kv.split("=", 2); k -> v
-    }
-
-  /** The local session: [[settings]], then `extra`, then
-    * `SPARK_GRAFT_EXTRA_CONF`, each later entry winning.
+  /** The local session: [[settings]], then `extra`, each later entry
+    * winning.
     */
   def local(cpus: Int = Sessions.cpus, extra: Seq[(String, String)] = Nil): SparkSession = {
-    val confs = settings(cpus) ++ extra ++
-      extraConf(sys.env.get("SPARK_GRAFT_EXTRA_CONF"))
-    val spark = confs.foldLeft(SparkSession.builder()) {
+    val spark = (settings(cpus) ++ extra).foldLeft(SparkSession.builder()) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

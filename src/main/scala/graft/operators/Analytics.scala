@@ -2104,7 +2104,7 @@ FROM g ORDER BY l_returnflag, l_linestatus"""
     * warehouse grain.
     *
     * Scale shape: the orders⋈lineitem equi-join is the engine's
-    * standard big join (bucketed co-location in sink/Warehouse when
+    * standard big join (bucketed co-location applies when
     * materialized); after it, everything lives on (month, distinct
     * lag) rows — the quantile relation is bounded by the lag domain,
     * not by line items.
@@ -2193,7 +2193,7 @@ FROM cw GROUP BY month ORDER BY month"""
     * Scale shape: the two fact-side joins (lineitem⋈orders on the
     * order key; the result ⋈ customer / ⋈ supplier on their keys) are
     * the standard shuffle equi-joins — bucketed co-location applies to
-    * the first exactly as in sink/Warehouse. nation and region are
+    * the first when materialized. nation and region are
     * CONSTANT-size dimensions (25 / 5 rows) and broadcast; the
     * nationkey equality is a post-join filter that Catalyst pushes
     * into the join condition. Everything after the joins is one
@@ -2947,7 +2947,7 @@ FROM g ORDER BY c_mktsegment"""
     * defect `ev_dq`/`wh_dq` exist to surface.
     *
     * Scale shape: the standard orders⋈lineitem equi-join (bucketed
-    * co-location in sink/Warehouse when materialized), then ONE
+    * co-location applies when materialized), then ONE
     * partial-agg'd reduce to the 5-row priority relation. The two
     * DISTINCTs share one orderkey-grain Expand — bounded by orders,
     * not line items, after partial aggregation.
@@ -3248,9 +3248,7 @@ FROM m ORDER BY event_type"""
         s" + (${idiv(b, (1L << i).toString)} % 2) * $pb)"
     }.mkString("(", " + ", ")")
 
-  // private[graft]: Warehouse.writeZordered promotes the same
-  // interleave into the production write path (one definition)
-  private[graft] def zInterleave(a: String, b: String): String =
+  private def zInterleave(a: String, b: String): String =
     zInterleaveWith(a, b, (x, y) => s"(($x) div $y)")
 
   private def zInterleaveSql(a: String, b: String): String =

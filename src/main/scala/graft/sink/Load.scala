@@ -10,6 +10,7 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, GraftPlanApi, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,21 +19,24 @@ import org.apache.spark.sql.types.StructType
 /** The L of the ETL: the reference's three load paths re-expressed as
   * Spark write-path algorithms (SURVEY.md §2.2).
   *
-  * Warehouse layout: one parquet directory per table under a base dir.
+  * Layout: one parquet directory per table under a base dir.
   * At 100 TB the same code runs against a table format (Delta/Iceberg)
   * where [[upsertStats]] becomes a `MERGE INTO`; on plain parquet every
   * keyed rewrite is a null-safe key anti-join plus a union
   * ([[replaceOnKey]]), the same algorithm a MERGE executes without a
   * transaction log.
   *
-  * Every pipeline write is a stage step, one single-task job that
-  * writes one file into `<table>._staging` ([[writeStaged]]), and a
-  * commit by rename ([[Staged]]):
-  *  - K1/K2 ([[appendPosts]], [[stageComments]]): the batch's new rows;
-  *    the commit renames the one file into the table ([[moveIn]]);
-  *  - K3 ([[stageStats]]): the merged stats table; the commit swaps the
-  *    staged directory in by renames ([[swapIn]]).
-  * [[mergeInto]] still rewrites in place ([[stageThenRewrite]]).
+  * Every write is a stage step into `<table>._staging` and a commit by
+  * rename:
+  *  - K1/K2 ([[appendPosts]], [[stageComments]]): the batch's new rows,
+  *    one file from one single-task job ([[writeStaged]]); the commit
+  *    renames the file into the table ([[moveIn]]);
+  *  - K3 ([[stageStats]]): the merged stats table, one file
+  *    ([[writeStaged]]); the commit swaps the staged directory in by
+  *    renames ([[swapIn]]);
+  *  - [[mergeInto]]: the merged dirty partitions, one job partitioned
+  *    by the table's partition column; the commit swaps each dirty
+  *    partition directory by renames ([[swapPartitions]]).
   *
   * Crash states each path repairs on its next call:
   *  - K1/K2: a staged file that never committed is deleted by the next
@@ -46,7 +50,9 @@ import org.apache.spark.sql.types.StructType
   *    completely in `._staging` before the crash, whose K1 had not
   *    committed. The next K3 call commits it, and a re-run of that
   *    subreddit replaces those keys with its own rows, so the re-run
-  *    stays exact.
+  *    stays exact;
+  *  - [[mergeInto]]: a partition swap cut before its commit point is
+  *    rolled back, one cut after it is finished ([[recoverPartitions]]).
   */
 object Load {
 
@@ -183,32 +189,12 @@ object Load {
     new Staged(spark, path, moveIn)
   }
 
-  /** [[mergeInto]]'s in-place rewrite. Parquet has no transactional
-    * overwrite-while-reading, and a cached plan is NOT durable (evicted
-    * partitions would recompute from the deleted files mid-overwrite):
-    * stage the merged result to a sibling directory, rewrite the table
-    * from the durable staging copy via `write`, then clean up. The
-    * rewrite clears the partitions it replaces before writing them, so
-    * a crash inside it loses them; [[upsertStats]] commits by
-    * [[swapIn]] instead.
-    */
-  private def stageThenRewrite(merged: DataFrame, spark: SparkSession,
-      path: String)(write: DataFrame => Unit): Unit = {
-    val staging = s"$path._staging"
-    merged.write.mode(SaveMode.Overwrite).parquet(staging)
-    // the staging files were just written from `merged`: declare its
-    // schema rather than infer it again
-    write(spark.read.schema(merged.schema).parquet(staging))
-    val sp = new Path(staging)
-    fsOf(spark, sp).delete(sp, true)
-  }
-
   private def rename(fs: FileSystem, from: Path, to: Path): Unit =
     if (!fs.rename(from, to))
       throw new IOException(s"rename $from -> $to failed")
 
   /** A table's directory and its two siblings, `._staging` (every
-    * stage step's output) and `._old` (a swap's).
+    * stage step's output) and `._old` (what a swap moved out).
     */
   private def swapPaths(spark: SparkSession,
       path: String): (FileSystem, Path, Path, Path) = {
@@ -368,13 +354,17 @@ object Load {
     *    statically prunes to the source's distinct partition values
     *    (driver traffic is partition ids, never data), survivors come
     *    from the null-safe key anti-join of [[replaceOnKey]] on
-    *    `keyCols` (a NULL key component matches a NULL), and the staged
-    *    result writes back with dynamic partition overwrite — untouched
+    *    `keyCols` (a NULL key component matches a NULL), and one job
+    *    stages the merged dirty partitions in `<path>._staging`;
+    *    [[swapPartitions]] commits them by renames, so untouched
     *    partitions stay byte-identical (spec-pinned);
-    *  - a partition whose rows are ALL deleted vanishes: dynamic
-    *    overwrite cannot rewrite an empty partition, so emptied dirty
-    *    partition directories are removed explicitly (the classic
-    *    dynamic-overwrite delete pitfall, handled not documented).
+    *  - a partition whose rows are ALL deleted stages no directory, so
+    *    the commit only moves it out.
+    *
+    * Every call first repairs a commit a crash interrupted
+    * ([[recoverPartitions]]), so after a failure at any step the next
+    * call finds the table as it was before the failed call or after it
+    * (one writer per table, as on every sink path).
     *
     * Source must not contain duplicate keys (the upsert contract);
     * `source` carries the full target schema for upserts.
@@ -382,51 +372,85 @@ object Load {
   def mergeInto(spark: SparkSession, path: String, source: DataFrame,
       keyCols: Seq[String], partitionCol: String,
       opCol: Option[String] = None): Unit = {
+    recoverPartitions(spark, path)
     val upserts = opCol.map(c => source.filter(col(c) =!= "delete").drop(c))
       .getOrElse(source)
     val allKeys = opCol.map(c => source.drop(c)).getOrElse(source)
       .select(keyCols.map(col): _*)
-    if (!tableExists(spark, path)) {
-      upserts.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCol).parquet(path)
-      return
+    // each dirty partition value, and the string Spark's writer names
+    // its directory by
+    val dirty = source.select(col(partitionCol),
+        col(partitionCol).cast("string")).distinct()
+      .collect().map(r => (r.get(0), r.getString(1))).toSeq
+    val merged = if (!tableExists(spark, path)) upserts else {
+      // isin never matches NULL (three-valued logic): the null partition
+      // needs its own isNull branch or its survivors are silently lost
+      val (nullDirty, valDirty) = dirty.map(_._1).partition(_ == null)
+      val dirtyPred = {
+        val vals = if (valDirty.nonEmpty) col(partitionCol).isin(valDirty: _*)
+          else lit(false)
+        if (nullDirty.nonEmpty) vals || col(partitionCol).isNull else vals
+      }
+      // read with the source's schema: the partition column keeps its
+      // type instead of one inferred from the directory names (`p=01`
+      // would read as 1 and stage as `p=1`), and no inference job runs
+      val existing = spark.read.schema(upserts.schema).parquet(path)
+        .filter(dirtyPred)
+      replaceOnKey(existing, allKeys, upserts, keyCols)
     }
-    val dirtyVals = source.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)).toSeq
-    // isin never matches NULL (three-valued logic): the null partition
-    // needs its own isNull branch or its survivors are silently lost
-    val (nullDirty, valDirty) = dirtyVals.partition(_ == null)
-    val dirtyPred = {
-      val vals = if (valDirty.nonEmpty) col(partitionCol).isin(valDirty: _*)
-        else lit(false)
-      if (nullDirty.nonEmpty) vals || col(partitionCol).isNull else vals
+    merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
+      .parquet(s"$path._staging")
+    swapPartitions(spark, path, dirty.map { case (_, s) =>
+      ExternalCatalogUtils.getPartitionPathString(partitionCol, s) }.distinct)
+  }
+
+  /** Commits [[mergeInto]]'s partitions staged in `<path>._staging`.
+    * Each `dirty` partition directory of the table moves to `<path>._old`
+    * (an empty directory there stands for one the table did not have),
+    * and each staged partition directory, named as the staging write
+    * listed it, is renamed into the table. Deleting the staging's
+    * `_SUCCESS` is the commit point; `._old` and `._staging` are deleted
+    * after it. A staged name that is not dirty fails the commit before
+    * it moves anything.
+    */
+  private def swapPartitions(spark: SparkSession, path: String,
+      dirty: Seq[String]): Unit = {
+    val (fs, target, staging, old) = swapPaths(spark, path)
+    val staged = fs.listStatus(staging)
+      .filter(s => s.isDirectory && !hidden(s.getPath.getName))
+      .map(_.getPath.getName).toSeq
+    val stray = staged.diff(dirty)
+    if (stray.nonEmpty)
+      throw new IOException(s"staged partitions $stray of $path are not " +
+        s"among the merge's dirty partitions $dirty")
+    Seq(old, target).foreach(fs.mkdirs)
+    dirty.foreach { d =>
+      val live = new Path(target, d)
+      if (fs.exists(live)) rename(fs, live, new Path(old, d))
+      else fs.mkdirs(new Path(old, d))
     }
-    val existing = spark.read.parquet(path)
-      .filter(dirtyPred)
-      .select(upserts.schema.fields
-        .map(f => col(f.name).cast(f.dataType)): _*)
-    val merged = replaceOnKey(existing, allKeys, upserts, keyCols)
-    // partitions all of whose rows were deleted won't appear in the
-    // dynamic overwrite output — collect them for explicit removal
-    val liveDirty = merged.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)).toSet
-    val emptied = dirtyVals.filterNot(liveDirty)
-    stageThenRewrite(merged, spark, path)(
-      _.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(path))
-    val fs = fsOf(spark, new Path(path))
-    emptied.foreach { v =>
-      // a NULL partition value lives under the Hive default-partition
-      // directory name, not "null"
-      val dirName =
-        if (v == null) org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-        else org.apache.spark.sql.catalyst.catalog
-          .ExternalCatalogUtils.escapePathName(String.valueOf(v))
-      fs.delete(new Path(s"$path/$partitionCol=$dirName"), true)
-    }
+    staged.foreach(d => rename(fs, new Path(staging, d), new Path(target, d)))
+    fs.delete(new Path(staging, "_SUCCESS"), false)
+    Seq(old, staging).foreach(fs.delete(_, true))
+  }
+
+  /** Repairs a [[swapPartitions]] that a crash interrupted. While the
+    * staging's `_SUCCESS` is there, the commit had not reached its
+    * commit point: every partition in `._old` goes back into the table,
+    * replacing whatever the commit had renamed in under its name (an
+    * empty one only deletes that). Then `._old` and an uncommitted
+    * `._staging` are deleted.
+    */
+  private def recoverPartitions(spark: SparkSession, path: String): Unit = {
+    val (fs, target, staging, old) = swapPaths(spark, path)
+    if (fs.exists(old) && fs.exists(new Path(staging, "_SUCCESS")))
+      fs.listStatus(old).foreach { moved =>
+        val live = new Path(target, moved.getPath.getName)
+        fs.delete(live, true)
+        if (fs.listStatus(moved.getPath).nonEmpty)
+          rename(fs, moved.getPath, live)
+      }
+    Seq(old, staging).foreach(fs.delete(_, true))
   }
 
   /** K4 — the `post_performance` view (reference analysis.sql:173-183):

@@ -270,47 +270,18 @@ class LoadPipelineSpec extends SparkSpec {
       rest.collect().head.getAs[Long]("id") == 3L)
   }
 
-  test("K5 JSONL export shards round-trip with bounded, ordered shards") {
-    val dir = tmpDir()
-    val docs = graft.operators.TextAnalysis.docs(spark, sf("sf0.001"))
-      .select(col("doc_id"), col("text"))
-    val shards = graft.sink.Export.exportJsonl(docs, "doc_id",
-      s"$dir/corpus", maxPerShard = 100L)
-    assert(shards == 5) // 500 docs / 100
-    val shardDirs = new java.io.File(s"$dir/corpus").listFiles()
-      .filter(_.getName.startsWith("shard=")).sortBy(_.getName)
-    assert(shardDirs.length == shards)
-    // round-trip: same rows, readable by any JSONL consumer
-    val back = spark.read.schema(docs.schema).json(s"$dir/corpus/shard=*")
-    assert(back.count() == 500)
-    assert(back.select(sum(col("doc_id"))).collect().head.getLong(0) ==
-      docs.select(sum(col("doc_id"))).collect().head.getLong(0))
-    // shards are bounded, contiguous key ranges (resumable-loader
-    // contract), gzip-compressed
-    val ranges = shardDirs
-      .sortBy(f => f.getName.stripPrefix("shard=").toInt)
-      .map { d =>
-        val fs = d.listFiles().filter(_.getName.endsWith(".json.gz"))
-        assert(fs.nonEmpty, s"no gzip jsonl in ${d.getName}")
-        val ids = spark.read.schema(docs.schema).json(d.getPath)
-          .select(col("doc_id")).collect().map(_.getLong(0))
-        assert(ids.length <= 100)
-        (ids.min, ids.max)
-      }
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo, _)) => assert(hi < lo)
-      case _ => ()
-    }
-    // determinism: re-export places every row in the same shard
-    val dir2 = tmpDir()
-    graft.sink.Export.exportJsonl(docs, "doc_id", s"$dir2/corpus", 100L)
-    (0 until shards).foreach { k =>
-      val a = spark.read.schema(docs.schema).json(s"$dir/corpus/shard=$k")
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-      val b = spark.read.schema(docs.schema).json(s"$dir2/corpus/shard=$k")
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(a == b, s"shard $k membership differs across exports")
-    }
+  test("mergeInto keeps a zero-padded partition value in its own directory") {
+    import spark.implicits._
+    val table = s"${tmpDir()}/padded"
+    Load.mergeInto(spark, table,
+      Seq((1L, "01", "a"), (2L, "01", "b")).toDF("id", "p", "v"), Seq("id"), "p")
+    Load.mergeInto(spark, table, Seq((1L, "01", "A")).toDF("id", "p", "v"),
+      Seq("id"), "p")
+    assert(new java.io.File(table).list()
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq == Seq("p=01"))
+    assert(spark.read.schema("id BIGINT, v STRING, p STRING").parquet(table)
+      .as[(Long, String, String)].collect().toSeq.sorted ==
+      Seq((1L, "A", "01"), (2L, "b", "01")))
   }
 
   /** A frame's rows collected to the driver, as a K1/K2 batch. */

@@ -26,12 +26,6 @@ class SessionsSpec extends SparkSpec {
     assert(spark.conf.get(nanos) == "false")
   }
 
-  test("SPARK_GRAFT_EXTRA_CONF parses k=v pairs and skips malformed entries") {
-    assert(Sessions.extraConf(None).isEmpty)
-    assert(Sessions.extraConf(Some("a.b=1;junk;c=x=y;")) ==
-      Seq("a.b" -> "1", "c" -> "x=y"))
-  }
-
   test("Bench.timeRun returns a failure with its cause and clears the cache") {
     import org.apache.spark.sql.functions.{col, raise_error, lit}
     val cached = spark.range(10).toDF("id").cache()
